@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from restructure_hdfs_topic_spark.functions.text import HASH_BASE, HASH_MOD, poly_hash
 
@@ -34,16 +35,68 @@ def keep_last_dedup(
 
     ``key_cols=[]`` means "all columns except order/ignored" (the
     reference's default full-row key, format/CsvAvroConverterFactory.kt:158-171).
+    Map-valued keys compare by their sorted entries (``_orderable``).
     One shuffle on the key; no driver-side state.
     """
     if not key_cols:
         excluded = set(ignore_cols or []) | {order_col}
         key_cols = [c for c in df.columns if c not in excluded]
-    w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
+    keys = [_orderable(F.col(c), _field_type(df.schema, c)) for c in key_cols]
+    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+def _field_type(schema: StructType, name: str):
+    """Type of ``name`` — a top-level column or a dotted struct path like
+    ``value.tags`` — or None when it does not resolve."""
+    if name in schema.fieldNames():
+        return schema[name].dataType
+    dtype = schema
+    for part in name.split("."):
+        if not isinstance(dtype, StructType) or part not in dtype.fieldNames():
+            return None
+        dtype = dtype[part].dataType
+    return dtype
+
+
+def _has_map(dtype) -> bool:
+    if isinstance(dtype, MapType):
+        return True
+    if isinstance(dtype, ArrayType):
+        return _has_map(dtype.elementType)
+    if isinstance(dtype, StructType):
+        return any(_has_map(f.dataType) for f in dtype.fields)
+    return False
+
+
+def _orderable(col: F.Column, dtype) -> F.Column:
+    """Grouping form of a key column: maps are not orderable, so a window
+    cannot partition on them (EXPRESSION_TYPE_IS_NOT_ORDERABLE).  A map
+    becomes its entries sorted by key — records whose maps differ only in
+    entry order key together — recursing through map values, arrays and
+    structs that hold maps.  Columns without maps pass through unchanged."""
+    if not _has_map(dtype):
+        return col
+    if isinstance(dtype, MapType):
+        entries = F.map_entries(col)
+        if _has_map(dtype.valueType):
+            entries = F.transform(
+                entries,
+                lambda e: F.struct(
+                    e["key"].alias("key"),
+                    _orderable(e["value"], dtype.valueType).alias("value"),
+                ),
+            )
+        return F.array_sort(entries)
+    if isinstance(dtype, ArrayType):
+        return F.transform(col, lambda x: _orderable(x, dtype.elementType))
+    return F.when(
+        col.isNotNull(),
+        F.struct(*[_orderable(col[f.name], f.dataType).alias(f.name) for f in dtype.fields]),
     )
 
 

@@ -8,17 +8,19 @@ Reference semantics (format/CsvAvroDataConverter.kt:16-91):
 - bytes/fixed → base64 WITHOUT padding; null → "" (CSV);
 - JSON output (format/JsonAvroDataConverter.kt:10-51) keeps nesting.
 
-Spark-first: struct flattening is a pure ``select`` projection; the
-data-dependent map-key/array-length discovery is ONE aggregation pass
-(``map_keys`` union + max ``size``) and the projection is built from its
-result — two Catalyst-optimized jobs, no per-record Python
-(SURVEY §4 "custom work" item 2).
+Spark-first: struct flattening is a pure ``select`` projection.  The
+data-dependent map keys and array lengths come from one aggregation
+(``discover_dynamic_columns``) or, in the restructure job, from the header
+fingerprints that attempt routing already collected; the projection is
+built from them, with no per-record Python (SURVEY §4 "custom work"
+item 2).
 
 The reference's "attempt" mechanism (worker/RestructureWorker.kt:148-163):
 records whose flattened header mismatches an existing file get suffix
 ``_1``, ``_2``…  Here: every record carries a deterministic header
-fingerprint column; each fingerprint group is written to its own suffixed
-directory — same result, computed declaratively in one pass.
+fingerprint column; one aggregation collects the distinct fingerprints,
+and each attempt's records are written to their own suffixed directory
+with the header its fingerprints define.
 """
 
 from __future__ import annotations
@@ -96,13 +98,17 @@ def base64_nopad(col: Column) -> Column:
     return F.rtrim(F.base64(col), F.lit("="))
 
 
-def flatten_for_csv(df: DataFrame, sep: str = ".") -> DataFrame:
+def flatten_for_csv(
+    df: DataFrame, sep: str = ".", dynamic: dict[str, list] | None = None
+) -> DataFrame:
     """O7 full CSV flattening: recurse structs, expand maps to per-key
-    columns and arrays to per-index columns (data-dependent, discovered in
-    one aggregation), bytes → unpadded base64, null → "" — everything a
-    string, like the reference's CSV rows."""
+    columns and arrays to per-index columns (data-dependent: ``dynamic``
+    as ``discover_dynamic_columns`` returns it, discovered in one
+    aggregation when not given), bytes → unpadded base64, null → "" —
+    everything a string, like the reference's CSV rows."""
     flat = flatten_struct_columns(df, sep)
-    dynamic = discover_dynamic_columns(flat)
+    if dynamic is None:
+        dynamic = discover_dynamic_columns(flat)
     cols: list[Column] = []
     # _qcol(name), not F.col(name): flattened names carry literal dots.
     for field in flat.schema.fields:
@@ -191,7 +197,21 @@ def _header_contains(wide: dict, narrow: dict) -> bool:
     return True
 
 
-def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _dynamic_columns(headers: list[dict]) -> dict[str, list]:
+    """``discover_dynamic_columns`` of the records whose header fingerprints
+    are ``headers``: per map column the sorted union of the keys, per array
+    column the indices below the largest length."""
+    out: dict[str, list] = {}
+    for h in headers:
+        for col, v in h.items():
+            if isinstance(v, list):
+                out[col] = sorted(set(out.get(col, [])) | set(v))
+            else:
+                out[col] = list(range(max(len(out.get(col, [])), v)))
+    return out
+
+
+def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame, dict[int, dict]]:
     """Assign each record its attempt index, mirroring
     RecordPathFactory.kt:56-75's retry loop set-wise: distinct header
     shapes are processed in first-occurrence order, each routed to the
@@ -211,10 +231,14 @@ def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     (plans/layout.py); a cross-run canonical-header store is the remaining
     divergence from the reference's on-disk header check.
 
-    Returns ``(routed, persisted)``: the routed frame plus the persisted
-    intermediate it is built on.  The CALLER must ``persisted.unpersist()``
-    after the last action over ``routed`` (in a try/finally — a failed sink
-    must not leak one cached lineage per topic iteration)."""
+    Returns ``(routed, persisted, headers)``: the routed frame, the
+    persisted intermediate it is built on, and per attempt its dynamic
+    columns (``discover_dynamic_columns`` of that attempt's records, for
+    ``flatten_for_csv(..., dynamic=...)``) — derived from the collected
+    fingerprints, so neither the attempt list nor the headers need another
+    pass over the data.  The CALLER must ``persisted.unpersist()`` after
+    the last action over ``routed`` (in a try/finally — a failed sink must
+    not leak one cached lineage per topic iteration)."""
     import json as _json
 
     from pyspark import StorageLevel
@@ -223,7 +247,7 @@ def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         "__mid", F.monotonically_increasing_id()
     )
     # Two consumers — the distinct-header collect below AND the returned
-    # joined plan — would each re-run the whole upstream decode/flatten
+    # routed plan — would each re-run the whole upstream decode/flatten
     # lineage (ADVICE r4: one extra full pass per topic write).  Persist
     # spill-safely so the pipeline materializes once; also pins
     # monotonically_increasing_id, which is partition-dependent and must
@@ -234,7 +258,8 @@ def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         key=lambda r: r["m"],
     )
     canonicals: list[dict] = []
-    rows: list[tuple[str, int]] = []
+    attempt_of: dict[str, int] = {}
+    members: dict[int, list[dict]] = {}
     for r in firsts:
         h = _json.loads(r["__fp"])
         attempt = next(
@@ -243,7 +268,11 @@ def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         if attempt is None:
             canonicals.append(h)
             attempt = len(canonicals) - 1
-        rows.append((r["__fp"], attempt))
-    mapping = df.sparkSession.createDataFrame(rows, "__fp string, attempt int")
-    out = fp.join(F.broadcast(mapping), "__fp").drop("__fp", "__mid")
-    return out, fp
+        attempt_of[r["__fp"]] = attempt
+        members.setdefault(attempt, []).append(h)
+    mapping = F.create_map(
+        *[F.lit(x) for kv in attempt_of.items() for x in kv]
+    )
+    out = fp.withColumn("attempt", mapping[F.col("__fp")]).drop("__fp", "__mid")
+    headers = {a: _dynamic_columns(hs) for a, hs in members.items()}
+    return out, fp, headers

@@ -119,19 +119,17 @@ def _covering_interval(probes: DataFrame, state: DataFrame, pos_col: str) -> Dat
         sel.append(F.unix_micros("last_processed").alias("mt_us"))
     by_part: dict[tuple, list[tuple]] = {}
     for r in state.select(*sel).collect():
+        mt = r[4] if has_mtime else None
         by_part.setdefault((r[0], r[1]), []).append(
-            (r[2], r[3], (r[4] if has_mtime else None))
+            (r[2], r[3], _MTIME_UNKNOWN_US if mt is None else mt)
         )
     index: dict[tuple, tuple] = {}
     for key, ivs in by_part.items():
+        # Same order as committed_range_index: (from, to, mtime), with the
+        # unknown-mtime sentinel already in place (None does not compare).
         ivs.sort()
-        index[key] = (
-            np.array([v[0] for v in ivs], dtype=np.int64),
-            np.array([v[1] for v in ivs], dtype=np.int64),
-            np.array(
-                [(_MTIME_UNKNOWN_US if v[2] is None else v[2]) for v in ivs],
-                dtype=np.int64,
-            ),
+        index[key] = tuple(
+            np.array([v[i] for v in ivs], dtype=np.int64) for i in range(3)
         )
 
     fields = "f long, t long" + (", m long" if has_mtime else "")
@@ -209,6 +207,73 @@ def filter_unseen_files(manifest: DataFrame, state: DataFrame) -> DataFrame:
             F.unix_micros(F.col("mtime")) <= F.col("__c_mtime_us"), F.lit(False)
         )
     return annotated.filter(~seen).select(*manifest.columns)
+
+
+def file_micros(mtime_s: float) -> int:
+    """A walked file's mtime (epoch seconds, double) in unix micros — the
+    exact value of ``unix_micros(timestamp_seconds(mtime_s))``: Spark
+    multiplies the double by 1e6 and truncates toward zero, as ``int`` does."""
+    return int(mtime_s * 1_000_000)
+
+
+def committed_intervals(state: DataFrame) -> list[tuple]:
+    """The committed state as driver rows ``(topic, partition, offset_from,
+    offset_to, last_processed_us)`` — one collect, no Spark job when
+    ``read_offsets`` found no version (its empty state is a local
+    relation).  ``last_processed_us`` is None when unknown."""
+    mt = (
+        F.unix_micros("last_processed")
+        if "last_processed" in state.columns
+        else F.lit(None).cast("long")
+    )
+    return [
+        tuple(r)
+        for r in state.select("topic", "partition", "offset_from", "offset_to", mt).collect()
+    ]
+
+
+def committed_range_index(rows) -> "callable":
+    """Containment test over a committed interval set, O(log intervals) per
+    probe: per (topic, partition) sorted interval starts + aligned ends,
+    probed with ``bisect`` — replaces the O(files × intervals) linear driver
+    scan (VERDICT r4 #2: sf1 interval sets reach ~70k rows, the same shape
+    that made the O4/O5 broadcast range join quadratic).  Committed state is
+    merged (disjoint per partition) at every commit, so the interval whose
+    start is the latest <= lo is the only one that can contain [lo, hi] —
+    the same interval ``_covering_interval`` picks, ties included.
+
+    ``rows``: iterable of (topic, partition, offset_from, offset_to[,
+    last_processed_us]).  Returns ``contains(topic, partition, lo, hi,
+    mtime_us=None) -> bool`` — true when that interval covers [lo, hi]
+    entirely and, when ``mtime_us`` is given, the O4 mtime rule holds too:
+    the interval's last_processed is known and not older than the file
+    (a re-uploaded file, or an interval of unknown last_processed,
+    reprocesses).  The driver-side twin of ``filter_unseen_files``.
+    """
+    from bisect import bisect_right
+
+    by_tp: dict[tuple, list[tuple[int, int, int]]] = {}
+    for t, p, lo, hi, *mt in rows:
+        lp = mt[0] if mt else None
+        by_tp.setdefault((t, p), []).append(
+            (lo, hi, _MTIME_UNKNOWN_US if lp is None else lp)
+        )
+    index: dict[tuple, tuple[list[int], list[int], list[int]]] = {}
+    for k, ivs in by_tp.items():
+        ivs.sort()
+        index[k] = tuple([iv[i] for iv in ivs] for i in range(3))
+
+    def contains(topic: str, partition: int, lo: int, hi: int, mtime_us: int | None = None) -> bool:
+        arr = index.get((topic, partition))
+        if arr is None:
+            return False
+        froms, tos, mts = arr
+        i = bisect_right(froms, lo) - 1
+        if i < 0 or hi > tos[i]:
+            return False
+        return mtime_us is None or mtime_us <= mts[i]
+
+    return contains
 
 
 def filter_unseen_records(records: DataFrame, state: DataFrame) -> DataFrame:
@@ -837,7 +902,9 @@ def _read_state_at(
     legacy = os.path.join(state_dir, "offsets.parquet")
     if "://" not in state_dir and os.path.exists(legacy):
         return spark.read.parquet(legacy)
-    return spark.createDataFrame([], STATE_SCHEMA)
+    from restructure_hdfs_topic_spark.session import local_frame
+
+    return local_frame(spark, [], STATE_SCHEMA)
 
 
 def remove_offsets(state: DataFrame, to_remove: DataFrame) -> DataFrame:

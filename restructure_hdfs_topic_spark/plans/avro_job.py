@@ -10,11 +10,20 @@ own integration fixtures
 (src/integrationTest/resources/*/partition=*/*.avro, golden output in
 RestructureS3IntegrationTest.kt).
 
-Scale shape: the ONLY driver-side state is the file listing (same as the
-reference's TopicFileList); committed files are pruned before any byte of
-data is read (the reference's scan-pruning, worker/RadarKafkaRestructure.kt:118-122);
-decode + organize + write is one distributed plan per topic with a single
-shuffle (the pre-write repartition on output partition columns).
+Scale shape: the driver holds the file listing (same as the reference's
+TopicFileList), the committed offset intervals (merged, so metadata-scale;
+the reference keeps its whole OffsetRangeSet in memory too) and the
+distinct header shapes of the records being written (bounded by schema
+variance).  Committed files are pruned on the driver, from the listing and
+a bisect index over the intervals, before any byte of data is read (the
+reference's scan-pruning, worker/RadarKafkaRestructure.kt:118-122) — no
+Spark job.  For CSV, decode + organize + dedup is persisted once for
+attempt routing, whose one aggregation yields both the attempts and each
+attempt's header; each attempt (JSON: the whole topic) is then written in
+one plan with a single shuffle (the pre-write repartition on output
+partition columns).
+Frames the driver builds (commit ranges, rollbacks, the empty state) are
+local relations, so no Python worker runs outside the decode.
 """
 
 from __future__ import annotations
@@ -32,10 +41,16 @@ from restructure_hdfs_topic_spark.operators.dedup import keep_last_dedup
 from restructure_hdfs_topic_spark.operators.flatten import flatten_for_csv
 from restructure_hdfs_topic_spark.operators.offsets import (
     commit_offsets,
+    committed_intervals,
+    committed_range_index,
+    file_micros,
+    # Not called here any more (the seen filter runs on the driver), but
+    # perfbench/layers.py wraps this name in this module.
     filter_unseen_files,
     read_offsets,
 )
 from restructure_hdfs_topic_spark.plans.restructure import PARTITION_COLS
+from restructure_hdfs_topic_spark.session import local_frame
 from restructure_hdfs_topic_spark.sources.avro import (
     SourceFile,
     manifest_df,
@@ -175,18 +190,19 @@ def _write_topic(
             route_by_schema_attempt,
         )
 
-        routed, persisted = route_by_schema_attempt(flatten_struct_columns(payload))
+        routed, persisted, headers = route_by_schema_attempt(
+            flatten_struct_columns(payload)
+        )
         try:
-            # One write PER ATTEMPT: dynamic-column discovery (map keys /
-            # array lengths) must run per attempt group, or every attempt's
-            # files would carry the identical union header and the schema
-            # split would be pointless — the reference writes each attempt
-            # file with ITS OWN header (RecordPathFactory.kt:56-75).
-            # Attempt count is bounded by schema variance (almost always 1).
-            attempts = sorted(
-                r["attempt"] for r in routed.select("attempt").distinct().collect()
-            )
-            for a in attempts:
+            # One write PER ATTEMPT, each with its own dynamic columns (map
+            # keys / array lengths of that attempt's records), or every
+            # attempt's files would carry the identical union header and
+            # the schema split would be pointless — the reference writes
+            # each attempt file with ITS OWN header
+            # (RecordPathFactory.kt:56-75).  Routing already collected both
+            # the attempts and their headers.  Attempt count is bounded by
+            # schema variance (almost always 1).
+            for a in sorted(headers):
                 sub = routed.filter(F.col("attempt") == a)
                 if template_mode:
                     # Keep ``attempt`` as its own staging partition column:
@@ -202,7 +218,7 @@ def _write_topic(
                         ),
                     ).drop("attempt")
                     part_cols = PARTITION_COLS
-                flat = flatten_for_csv(sub)
+                flat = flatten_for_csv(sub, dynamic=headers[a])
                 writer = (
                     flat.repartition(*[F.col(f"`{c}`") for c in part_cols])
                     .write.mode("append")
@@ -454,40 +470,6 @@ def _read_zip_target_times(
     ).distinct()
 
 
-def committed_range_index(rows) -> "callable":
-    """Containment test over a committed interval set, O(log intervals) per
-    probe: per (topic, partition) sorted interval starts + aligned ends,
-    probed with ``bisect`` — replaces the O(files × intervals) linear driver
-    scan (VERDICT r4 #2: sf1 interval sets reach ~70k rows, the same shape
-    that made the O4/O5 broadcast range join quadratic).  Committed state is
-    merged (disjoint per partition) at every commit, so the interval whose
-    start is the latest <= lo is the only one that can contain [lo, hi].
-
-    ``rows``: iterable of (topic, partition, offset_from, offset_to).
-    Returns ``contains(topic, partition, lo, hi) -> bool`` — true when some
-    interval covers [lo, hi] entirely.
-    """
-    from bisect import bisect_right
-
-    by_tp: dict[tuple, list[tuple[int, int]]] = {}
-    for t, p, lo, hi in rows:
-        by_tp.setdefault((t, p), []).append((lo, hi))
-    index: dict[tuple, tuple[list[int], list[int]]] = {}
-    for k, ivs in by_tp.items():
-        ivs.sort()
-        index[k] = ([iv[0] for iv in ivs], [iv[1] for iv in ivs])
-
-    def contains(topic: str, partition: int, lo: int, hi: int) -> bool:
-        arr = index.get((topic, partition))
-        if arr is None:
-            return False
-        froms, tos = arr
-        i = bisect_right(froms, lo) - 1
-        return i >= 0 and hi <= tos[i]
-
-    return contains
-
-
 def run_avro_cleaner_job(
     spark: SparkSession,
     input_root: str,
@@ -520,10 +502,8 @@ def run_avro_cleaner_job(
     }
     topics = walk_topics(input_root, exclude=excluded, spark=spark)
     counters: dict = {"deleted": [], "rolled_back": [], "kept": [], "locked": []}
-    state = read_offsets(spark, config.state_dir)
     contains = committed_range_index(
-        (r["topic"], r["partition"], r["offset_from"], r["offset_to"])
-        for r in state.collect()
+        committed_intervals(read_offsets(spark, config.state_dir))
     )
 
     def committed(f: SourceFile) -> bool:
@@ -596,8 +576,8 @@ def run_avro_cleaner_job(
             if lock is not None:
                 lock.close()
     if rollback_ranges:
-        rb = spark.createDataFrame(
-            rollback_ranges, "topic string, partition int, offset_from long, offset_to long"
+        rb = local_frame(
+            spark, rollback_ranges, "topic string, partition int, offset_from long, offset_to long"
         )
         # Subtract the rollbacks from the CURRENT state, not the snapshot
         # read at job start: a concurrent restructure app (the two-apps
@@ -691,30 +671,39 @@ def _process_topic(spark, topic, aged, config, mode, counters) -> None:
     a try/finally)."""
     from restructure_hdfs_topic_spark.progress import timer
 
+    # O4 on the driver: the walked listing is already here, and the
+    # committed intervals are metadata-scale, so the seen filter is a
+    # bisect probe per file — no manifest frame, no Spark job for it.
     with timer.time("restructure.readOffsets"):
-        state = read_offsets(spark, config.state_dir)
-    manifest = manifest_df(spark, aged)
-    # Join output order is nondeterministic — sort NUMERICALLY by
-    # (partition, offset) so the maxFilesPerTopic cap always takes the
-    # EARLIEST pending files, like the reference's ordered walk + take
-    # (lexicographic path order would put `+10000.avro` before
+        committed = committed_range_index(
+            committed_intervals(read_offsets(spark, config.state_dir))
+        )
+    # Sort NUMERICALLY by (partition, offset) so the maxFilesPerTopic cap
+    # always takes the EARLIEST pending files, like the reference's ordered
+    # walk + take (lexicographic path order would put `+10000.avro` before
     # `+9000.avro`, inverting keep-last-by-offset across iterations).
     all_pending = sorted(
-        filter_unseen_files(manifest, state).collect(),
-        key=lambda r: (r["partition"], r["offset_from"], r["path"]),
+        (
+            f
+            for f in aged
+            if not committed(
+                f.topic, f.partition, f.offset_from, f.offset_to, file_micros(f.mtime)
+            )
+        ),
+        key=lambda f: (f.partition, f.offset_from, f.path),
     )
-    pending_rows = all_pending
+    pending = all_pending
     if config.worker.max_files_per_topic:
-        pending_rows = all_pending[: config.worker.max_files_per_topic]
-    remaining = len(all_pending) - len(pending_rows)
-    if not pending_rows:
+        pending = all_pending[: config.worker.max_files_per_topic]
+    remaining = len(all_pending) - len(pending)
+    if not pending:
         counters["topics"][topic] = {
             "records_written": 0,
             "files_processed": 0,
             "files_pending": 0,
         }
         return
-    paths = [r["path"] for r in pending_rows]
+    paths = [f.path for f in pending]
     with timer.time("restructure.readAvro"):
         records = read_avro(spark, paths, mode=mode)
     organized = organize_avro_records(records, config.paths.bin_format)
@@ -743,20 +732,20 @@ def _process_topic(spark, topic, aged, config, mode, counters) -> None:
     with timer.time("restructure.write"):
         _write_topic(organized, config, topic)
     n_records = int(obs.get["n"])
-    new_ranges = spark.createDataFrame(
-        [
-            (r["topic"], r["partition"], r["offset_from"], r["offset_to"], r["mtime"])
-            for r in pending_rows
-        ],
-        "topic string, partition int, offset_from long, offset_to long, last_processed timestamp",
+    # last_processed is built in Spark from the double mtime (manifest_df's
+    # timestamp_seconds), so committed state matches the seen filter's
+    # file_micros bit for bit.
+    new_ranges = manifest_df(spark, pending).select(
+        "topic", "partition", "offset_from", "offset_to",
+        F.col("mtime").alias("last_processed"),
     )
     with timer.time("restructure.commitOffsets"):
         commit_offsets(spark, config.state_dir, new_ranges)
     counters["topics"][topic] = {
         "records_written": n_records,
-        "files_processed": len(pending_rows),
+        "files_processed": len(pending),
         "files_pending": remaining,
     }
     counters["records_written"] += n_records
-    counters["files_processed"] += len(pending_rows)
+    counters["files_processed"] += len(pending)
     counters["files_pending"] += remaining

@@ -55,6 +55,34 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str):
+    """Driver-held rows as a local relation (``LocalTableScan``): actions
+    on it run no Spark job and spawn no Python worker.  A
+    ``createDataFrame(list)`` frame is a Python RDD instead — every action
+    on it launches Python workers.  Non-empty rows go through pandas and
+    Arrow (``spark.sql.execution.arrow.pyspark.enabled``, set by
+    ``get_spark``; without it Spark falls back to a Python RDD).  PySpark
+    skips Arrow for an empty pandas frame, so the empty case is a
+    constant-false filter that the optimizer folds into an empty
+    ``LocalRelation``.  Build timestamps in Spark from numeric columns
+    (``F.timestamp_seconds``), never from Python datetimes."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    if rows:
+        import pandas as pd
+
+        return spark.createDataFrame(
+            pd.DataFrame.from_records(rows, columns=struct.fieldNames()), struct
+        )
+    return (
+        spark.range(1)
+        .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in struct.fields])
+        .where(F.lit(False))
+    )
+
+
 def session_epoch(spark: SparkSession | None = None) -> str:
     """Identity of the live Spark runtime, for module-level memo keys
     (ADVICE r13 #1).  Memoized DataFrames (groups closures, soft-dedup

@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import io
 import json
+import logging
 import os
 import re
 import struct
@@ -59,6 +60,8 @@ from pyspark.sql.types import (
 )
 
 MAGIC = b"Obj\x01"
+
+_log = logging.getLogger(__name__)
 
 # Kafka Connect S3 sink filename: <topic>+<partition>+<offsetFrom>[+<offsetTo>].avro
 # (accounting/TopicPartitionOffsetRange.kt:50-61)
@@ -762,6 +765,37 @@ def union_avro_schemas(schemas: list) -> Any:
     return merged
 
 
+# session_epoch -> whether the session resolves the ``avro`` data source.
+_SPARK_AVRO: dict[str, bool] = {}
+
+
+def spark_avro_available(spark: SparkSession) -> bool:
+    """Whether ``spark.read.format("avro")`` resolves, asked once per
+    session (keyed by ``session_epoch``); a miss logs one WARN.  The probe
+    is Spark's own data-source lookup, not a class lookup: Spark 4.1 ships
+    ``org.apache.spark.sql.avro.AvroFileFormat`` inside spark-sql, while
+    only the external spark-avro module registers the ``avro`` source."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    from restructure_hdfs_topic_spark.session import session_epoch
+
+    key = session_epoch(spark)
+    if key not in _SPARK_AVRO:
+        try:
+            spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+                "avro", spark._jsparkSession.sessionState().conf()
+            )
+            _SPARK_AVRO[key] = True
+        except (AnalysisException, Py4JJavaError):
+            _SPARK_AVRO[key] = False
+            _log.warning(
+                "spark-avro data source not found; read_avro(mode='auto') "
+                "decodes with the pure-Python reader in this session"
+            )
+    return _SPARK_AVRO[key]
+
+
 def read_avro(
     spark: SparkSession,
     paths: list[str],
@@ -771,13 +805,15 @@ def read_avro(
     (filename, topic, partition, offset, mtime) appended.
 
     mode="spark-avro" requires the external datasource module; "python"
-    forces the pure-Python decoder; "auto" tries spark-avro then falls
-    back.  Offsets are exact per-record Kafka offsets
-    (offset_from + index-in-file, worker/RestructureWorker.kt:116-131).
+    forces the pure-Python decoder; "auto" uses spark-avro when the
+    session resolves it (``spark_avro_available``) and otherwise falls
+    back, with a WARN, to the pure-Python decoder.  Offsets are exact
+    per-record Kafka offsets (offset_from + index-in-file,
+    worker/RestructureWorker.kt:116-131).
     """
     if not paths:
         raise ValueError("read_avro: empty path list")
-    if mode in ("auto", "spark-avro"):
+    if mode == "spark-avro" or (mode == "auto" and spark_avro_available(spark)):
         try:
             df = spark.read.format("avro").load(paths)
             fname = F.input_file_name()
@@ -795,8 +831,10 @@ def read_avro(
             from pyspark.sql import Window
 
             w = Window.partitionBy(fname).orderBy(F.monotonically_increasing_id())
-            mtimes = spark.createDataFrame(
-                _path_mtimes(spark, paths), "filename string, __mtime_ms long"
+            from restructure_hdfs_topic_spark.session import local_frame
+
+            mtimes = local_frame(
+                spark, _path_mtimes(spark, paths), "filename string, __mtime_ms long"
             )
             return (
                 df.withColumn("filename", base)
@@ -814,6 +852,10 @@ def read_avro(
         except Exception:
             if mode == "spark-avro":
                 raise
+            _log.warning(
+                "read_avro: spark-avro read failed; decoding with the pure-Python reader",
+                exc_info=True,
+            )
     # --- pure-Python distributed decode -----------------------------------
     schema = union_schema_for_paths(spark, paths)
     decode, out_schema = make_avro_decoder(schema)
@@ -933,12 +975,18 @@ def read_topic(
 
 
 def manifest_df(spark: SparkSession, files: list[SourceFile]) -> DataFrame:
-    """O3/O4 manifest DataFrame from a walked file list."""
+    """O3/O4 manifest DataFrame from a walked file list — a local relation
+    (no Python RDD).  ``mtime`` is built in Spark as
+    ``timestamp_seconds(mtime_s)``, so a committed ``last_processed`` taken
+    from it equals ``offsets.file_micros(f.mtime)`` exactly."""
+    from restructure_hdfs_topic_spark.session import local_frame
+
     rows = [
         (f.path, f.topic, f.partition, f.offset_from, f.offset_to, f.mtime)
         for f in files
     ]
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
         "path string, topic string, partition int, offset_from long, offset_to long, mtime_s double",
     )

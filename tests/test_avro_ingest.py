@@ -22,6 +22,7 @@ from restructure_hdfs_topic_spark.sources.avro import (
     read_avro,
     walk_topics,
 )
+from tests.avro_tree import build_container as _build_container
 
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
@@ -475,30 +476,6 @@ def test_streaming_avro_restructure(spark, tmp_path):
     assert bins == {"20200128_1300", "20200128_1400"}
     drain()  # checkpoint: nothing re-ingested
     assert spark.read.option("basePath", out).json(f"{out}/projectId=*").count() == 6
-
-
-def _build_container(schema: dict, encoded_datums: bytes, n: int) -> bytes:
-    import json as _json
-
-    def zz(v: int) -> bytes:
-        v = (v << 1) ^ (v >> 63)
-        out = b""
-        while True:
-            b7 = v & 0x7F
-            v >>= 7
-            if v:
-                out += bytes([b7 | 0x80])
-            else:
-                out += bytes([b7])
-                return out
-
-    meta = {"avro.schema": _json.dumps(schema).encode(), "avro.codec": b"null"}
-    hdr = b"Obj\x01" + zz(len(meta))
-    for k, v in meta.items():
-        hdr += zz(len(k.encode())) + k.encode() + zz(len(v)) + v
-    hdr += zz(0)
-    sync = bytes(range(16))
-    return hdr + sync + zz(n) + zz(len(encoded_datums)) + encoded_datums + sync
 
 
 def test_read_avro_schema_evolution_union(spark, tmp_path):

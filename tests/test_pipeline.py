@@ -103,14 +103,14 @@ def test_attempt_routing_groups_by_header_shape(spark):
         ],
         "id int, x string, m map<string,double>, arr array<int>",
     )
-    out, persisted = route_by_schema_attempt(df)
+    out, persisted, _headers = route_by_schema_attempt(df)
     attempts = {r.id: r.attempt for r in out.collect()}
     persisted.unpersist()
     assert attempts[1] == attempts[2] == 0
     assert sorted({attempts[3], attempts[4]}) == [1, 2]
     # Schema-constant headers (no maps/arrays) never split.
     flat = spark.createDataFrame([(1, "a", None), (2, None, "z")], "id int, x string, y string")
-    out2, persisted2 = route_by_schema_attempt(flat)
+    out2, persisted2, _headers2 = route_by_schema_attempt(flat)
     assert {r.attempt for r in out2.collect()} == {0}
     persisted2.unpersist()
 
@@ -414,37 +414,68 @@ def test_streaming_stateful_state_survives_restart(spark, tmp_path):
     got = sorted(r["offset"] for r in spark.read.parquet(out).collect())
     assert got == list(range(15))  # 0-9 from run 1, 10-14 from run 2, no dups
 
-def test_cli_main_one_shot_and_clean(spark, tmp_path):
-    """The CLI application surface (Application.kt/CommandLineArgs.kt):
-    one-shot restructure over the reference fixtures via parsed flags,
-    then a --clean --no-restructure run that deletes the fully-extracted
-    committed file."""
-    import shutil
-
+def _cli_one_shot_and_clean(spark, work, src: str, n_records: int, deletable: list[str]):
+    """Run the CLI one-shot over ``src``, then a --clean --no-restructure
+    run; the restructure writes ``n_records`` and the cleaner deletes
+    exactly the ``deletable`` (fully extracted, committed) files."""
     from restructure_hdfs_topic_spark.__main__ import main
 
-    fixtures = "/root/reference/src/integrationTest/resources"
-    src = str(tmp_path / "in")
-    shutil.copytree(fixtures, src)
-    conf = tmp_path / "restructure.yml"
+    work.mkdir(parents=True)
+    conf = work / "restructure.yml"
     conf.write_text(
         "worker:\n  minimum_file_age_s: 0\ncleaner:\n  age_days: 0\n"
     )
     argv = [
         src,
         "-F", str(conf),
-        "-o", str(tmp_path / "out"),
-        "--state-directory", str(tmp_path / "state"),
+        "-o", str(work / "out"),
+        "--state-directory", str(work / "state"),
         "-f", "csv",
     ]
     res = main(argv, spark=spark)
     assert [r["job"] for r in res["runs"]] == ["restructure"]
-    assert res["runs"][0]["records_written"] == 1006
+    assert res["runs"][0]["records_written"] == n_records
 
     res2 = main(argv + ["--clean", "--no-restructure"], spark=spark)
     assert [r["job"] for r in res2["runs"]] == ["clean"]
     deleted = [p.rsplit("/", 1)[-1] for p in res2["runs"][0]["deleted"]]
-    assert deleted == ["application_server_status+1+0000000018+0000000020.avro"]
+    assert deleted == deletable
+
+
+def test_cli_main_one_shot_and_clean(spark, tmp_path):
+    """The CLI application surface (Application.kt/CommandLineArgs.kt):
+    one-shot restructure over a generated Kafka-Connect tree via parsed
+    flags, then a --clean --no-restructure run that deletes the
+    fully-extracted committed file.  Only a file whose successor offset
+    is committed may go (the never-delete-the-max-offset +1 rule), so the
+    last file of each partition stays.  With the reference's integration
+    fixtures present, the same flow runs over them too."""
+    import shutil
+
+    from tests.avro_tree import reading, write_topic_file
+
+    src = str(tmp_path / "in")
+    t0 = 1_580_216_400.0  # 2020-01-28 13:00 UTC
+    write_topic_file(
+        src, "android_phone_acceleration", 0, 0,
+        [reading("radar-test", "u1", t0 + 7 * i, samples=[0.1 * i]) for i in range(40)],
+    )
+    status = "application_server_status"
+    write_topic_file(src, status, 1, 18, [reading("radar-test", "u1", t0 + 60 * i) for i in range(3)])
+    write_topic_file(src, status, 1, 21, [reading("radar-test", "u2", t0 + 3600 + i) for i in range(3)])
+    _cli_one_shot_and_clean(
+        spark, tmp_path / "generated", src, 46, [f"{status}+1+0000000018+0000000020.avro"]
+    )
+
+    from tests.test_avro_ingest import FIXTURES
+
+    if os.path.isdir(FIXTURES):
+        ref_src = str(tmp_path / "ref_in")
+        shutil.copytree(FIXTURES, ref_src)
+        _cli_one_shot_and_clean(
+            spark, tmp_path / "reference", ref_src, 1006,
+            ["application_server_status+1+0000000018+0000000020.avro"],
+        )
 
 def test_config_env_overrides(tmp_path, monkeypatch):
     """Env vars override YAML values (RestructureConfig.withEnv analogue)."""
@@ -658,7 +689,7 @@ def test_attempt_routing_absorbs_sub_schema(spark):
         ],
         "id int, m map<string,double>, arr array<int>",
     )
-    routed, persisted = route_by_schema_attempt(df)
+    routed, persisted, _headers = route_by_schema_attempt(df)
     attempts = {r.id: r.attempt for r in routed.collect()}
     persisted.unpersist()
     assert attempts[1] == attempts[2] == attempts[3] == 0
