@@ -296,24 +296,6 @@ def filter_unseen_records(records: DataFrame, state: DataFrame) -> DataFrame:
     return annotated.filter(~seen).select(*records.columns)
 
 
-def assign_record_offsets(
-    records: DataFrame,
-    file_col: str = "filename",
-    from_col: str = "offset_from",
-    order_col: str = "__record_index",
-) -> DataFrame:
-    """O12: offset = offset_from + (0-based record index within the file).
-
-    File order in the reference is Avro container order; here the caller
-    supplies a deterministic ``order_col`` (e.g. monotonically increasing id
-    captured at read, or a natural record key).
-    """
-    w = Window.partitionBy(file_col).orderBy(order_col)
-    return records.withColumn(
-        "offset", F.col(from_col) + F.row_number().over(w) - 1
-    )
-
-
 _POINTER = "offsets.CURRENT"
 
 

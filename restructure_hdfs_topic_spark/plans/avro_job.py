@@ -28,6 +28,7 @@ local relations, so no Python worker runs outside the decode.
 
 from __future__ import annotations
 
+import json
 import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,7 +50,6 @@ from restructure_hdfs_topic_spark.operators.offsets import (
     filter_unseen_files,
     read_offsets,
 )
-from restructure_hdfs_topic_spark.plans.restructure import PARTITION_COLS
 from restructure_hdfs_topic_spark.session import local_frame
 from restructure_hdfs_topic_spark.sources.avro import (
     SourceFile,
@@ -57,6 +57,10 @@ from restructure_hdfs_topic_spark.sources.avro import (
     read_avro,
     walk_topics,
 )
+
+# Write partition columns of the reference's output layout
+# ``projectId/userId/topic/yyyyMMdd_HH00`` (path/FormattedPathFactory.kt:111).
+PARTITION_COLS = ["projectId", "userId", "topic", "bin"]
 
 # Event-time candidate fields in reference priority order
 # (util/TimeUtil.kt:21-50), with their physical interpretation.
@@ -160,15 +164,9 @@ def _write_topic(
             and "sourceId" in organized.schema["key"].dataType.fieldNames()
             else F.lit(None).cast("string")
         )
-        # Event time lives in "time" on the batch path
-        # (organize_avro_records) and in "ts" on the streaming path
-        # (streaming_restructure); absent both, ${time:...} renders
-        # unknown-time (FormattedPathFactory.kt:94-98).
-        time_col = next(
-            (F.col(c) for c in ("time", "ts") if c in organized.columns),
-            F.lit(None).cast("timestamp"),
-        )
-        extras = extra_staging_cols(config.paths.template, time_col, src_col)
+        # Event time is organize_avro_records' "time"; a NULL one renders
+        # ${time:...} as unknown-time (FormattedPathFactory.kt:94-98).
+        extras = extra_staging_cols(config.paths.template, F.col("time"), src_col)
         for name, col in extras.items():
             organized = organized.withColumn(name, col)
         extra_names = list(extras)
@@ -256,11 +254,9 @@ def _write_topic(
     if config.compression == "zip":
         repack_to_zip(dest, spark=organized.sparkSession)
     if template_mode:
-        import json as _json
-
         from restructure_hdfs_topic_spark.plans.layout import finalize_template_layout
 
-        schema_json = _json.dumps(
+        schema_json = json.dumps(
             payload.drop(*PARTITION_COLS, "attempt", *extra_names).schema.jsonValue(),
             indent=2,
         )
@@ -280,9 +276,35 @@ def _write_topic(
             local_group_id=config.target.local_group_id,
         )
     else:
-        from restructure_hdfs_topic_spark.plans.restructure import _write_schema_sidecar
+        _write_schema_sidecar(payload.drop(*PARTITION_COLS), config.target_dir, topic)
 
-        _write_schema_sidecar(payload.drop(*PARTITION_COLS), config.target_dir, [topic])
+
+def _write_schema_sidecar(payload: DataFrame, output_dir: str, topic: str) -> None:
+    """``schema-<topic>.json`` once per topic dir (worker/FileCacheStore.kt:100-116),
+    written through the Hadoop FileSystem API so the sidecar lands on
+    whatever store the output does (file://, s3a://, …)."""
+    from py4j.protocol import Py4JJavaError
+
+    schema_json = json.dumps(payload.schema.jsonValue(), indent=2)
+    spark = payload.sparkSession
+    jvm = spark._jvm
+    out_path = jvm.org.apache.hadoop.fs.Path(output_dir)
+    fs = out_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.mkdirs(out_path)
+    path = jvm.org.apache.hadoop.fs.Path(output_dir, f"schema-{topic}.json")
+    if fs.exists(path):
+        return
+    try:
+        stream = fs.create(path, False)
+    except Py4JJavaError:
+        # Exists-then-create is a TOCTOU window: a concurrent instance
+        # winning the sidecar create is benign — the data write already
+        # succeeded and the sidecar content is identical.
+        return
+    try:
+        stream.write(bytearray(schema_json, "utf-8"))
+    finally:
+        stream.close()
 
 
 def extract_time_seconds(df: DataFrame, flattened: bool) -> F.Column:
@@ -533,7 +555,7 @@ def run_avro_cleaner_job(
             lock = None
         try:
             target_times = read_target_times(spark, config, topic)
-            records = read_avro(spark, [f.path for f in candidates], mode="python")
+            records = read_avro(spark, [f.path for f in candidates])
             organized = organize_avro_records(records, config.paths.bin_format)
             src = organized.select(
                 "filename",
@@ -598,7 +620,6 @@ def run_avro_restructure_job(
     spark: SparkSession,
     input_root: str,
     config: RestructureConfig,
-    mode: str = "auto",
     now_s: float | None = None,
 ) -> dict:
     """One restructure iteration over an Avro source tree.  Returns O26-style
@@ -644,9 +665,7 @@ def run_avro_restructure_job(
             continue
         try:
             with timer.time("restructure.topic"):
-                _process_topic(
-                    spark, topic, aged, config, mode, counters
-                )
+                _process_topic(spark, topic, aged, config, counters)
         finally:
             if lock is not None:
                 lock.close()
@@ -666,7 +685,7 @@ def run_avro_restructure_job(
     return counters
 
 
-def _process_topic(spark, topic, aged, config, mode, counters) -> None:
+def _process_topic(spark, topic, aged, config, counters) -> None:
     """Body of one topic iteration (extracted so the O19 lock wraps it in
     a try/finally)."""
     from restructure_hdfs_topic_spark.progress import timer
@@ -705,7 +724,7 @@ def _process_topic(spark, topic, aged, config, mode, counters) -> None:
         return
     paths = [f.path for f in pending]
     with timer.time("restructure.readAvro"):
-        records = read_avro(spark, paths, mode=mode)
+        records = read_avro(spark, paths)
     organized = organize_avro_records(records, config.paths.bin_format)
     organized = organized.withColumn("topic", F.lit(topic))
     # Dedup keys are the WRITTEN row's columns (the reference dedups the

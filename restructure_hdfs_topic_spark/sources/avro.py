@@ -3,25 +3,20 @@ record source, and filename→offset parsing — the reference's entire input
 side (source/GeneralSourceStorageWalker.kt:18-33, worker/RestructureWorker.kt:178-191,
 accounting/TopicPartitionOffsetRange.kt:50-61).
 
-Spark-first design:
-- When the ``spark-avro`` datasource module is on the classpath,
-  ``spark.read.format("avro")`` is used directly (mode="spark-avro" or
-  "auto").
-- Otherwise (this container ships pyspark without the external avro
-  module) records are decoded by a pure-Python implementation of the
-  PUBLIC Avro 1.x object-container spec
-  (https://avro.apache.org/docs/1.11.1/specification/) running INSIDE
-  executors: ``spark.read.format("binaryFile")`` distributes the files,
-  ``mapInPandas`` decodes each file to Arrow record batches.  Kafka
-  Connect S3 sink files are bounded (one offset range each), so
-  whole-file bytes per task is the natural unit — the reference does
-  exactly the same download-then-read (source/S3SourceStorage.kt:76-100).
+Spark-first design, with no dependency on the external spark-avro
+module: records are decoded by a pure-Python implementation of the
+PUBLIC Avro 1.x object-container spec
+(https://avro.apache.org/docs/1.11.1/specification/) running INSIDE
+executors: ``spark.read.format("binaryFile")`` distributes the files,
+``mapInPandas`` decodes each file to Arrow record batches.  Kafka
+Connect S3 sink files are bounded (one offset range each), so
+whole-file bytes per task is the natural unit — the reference does
+exactly the same download-then-read (source/S3SourceStorage.kt:76-100).
 
 Per-record offsets (O12) are assigned AT THE SOURCE: the decoder knows
 each record's index within its file, so ``offset = offset_from + index``
-costs nothing — where the generic column-expression form
-(row_number over a per-file window, operators/offsets.py:assign_record_offsets)
-would shuffle the whole corpus.
+costs nothing — a column-expression form (row_number over a per-file
+window) would shuffle the whole corpus.
 
 Scale: one task per source file (binaryFile splits at file granularity);
 1000 executors chew a million files without driver involvement beyond the
@@ -32,7 +27,6 @@ from __future__ import annotations
 
 import io
 import json
-import logging
 import os
 import re
 import struct
@@ -60,8 +54,6 @@ from pyspark.sql.types import (
 )
 
 MAGIC = b"Obj\x01"
-
-_log = logging.getLogger(__name__)
 
 # Kafka Connect S3 sink filename: <topic>+<partition>+<offsetFrom>[+<offsetTo>].avro
 # (accounting/TopicPartitionOffsetRange.kt:50-61)
@@ -765,98 +757,15 @@ def union_avro_schemas(schemas: list) -> Any:
     return merged
 
 
-# session_epoch -> whether the session resolves the ``avro`` data source.
-_SPARK_AVRO: dict[str, bool] = {}
-
-
-def spark_avro_available(spark: SparkSession) -> bool:
-    """Whether ``spark.read.format("avro")`` resolves, asked once per
-    session (keyed by ``session_epoch``); a miss logs one WARN.  The probe
-    is Spark's own data-source lookup, not a class lookup: Spark 4.1 ships
-    ``org.apache.spark.sql.avro.AvroFileFormat`` inside spark-sql, while
-    only the external spark-avro module registers the ``avro`` source."""
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import AnalysisException
-
-    from restructure_hdfs_topic_spark.session import session_epoch
-
-    key = session_epoch(spark)
-    if key not in _SPARK_AVRO:
-        try:
-            spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
-                "avro", spark._jsparkSession.sessionState().conf()
-            )
-            _SPARK_AVRO[key] = True
-        except (AnalysisException, Py4JJavaError):
-            _SPARK_AVRO[key] = False
-            _log.warning(
-                "spark-avro data source not found; read_avro(mode='auto') "
-                "decodes with the pure-Python reader in this session"
-            )
-    return _SPARK_AVRO[key]
-
-
-def read_avro(
-    spark: SparkSession,
-    paths: list[str],
-    mode: str = "auto",
-) -> DataFrame:
+def read_avro(spark: SparkSession, paths: list[str]) -> DataFrame:
     """O2: DataFrame of Avro records with accounting columns
-    (filename, topic, partition, offset, mtime) appended.
-
-    mode="spark-avro" requires the external datasource module; "python"
-    forces the pure-Python decoder; "auto" uses spark-avro when the
-    session resolves it (``spark_avro_available``) and otherwise falls
-    back, with a WARN, to the pure-Python decoder.  Offsets are exact
+    (filename, topic, partition, offset, mtime) appended, decoded by the
+    pure-Python container reader inside executors.  Offsets are exact
     per-record Kafka offsets (offset_from + index-in-file,
     worker/RestructureWorker.kt:116-131).
     """
     if not paths:
         raise ValueError("read_avro: empty path list")
-    if mode == "spark-avro" or (mode == "auto" and spark_avro_available(spark)):
-        try:
-            df = spark.read.format("avro").load(paths)
-            fname = F.input_file_name()
-            from restructure_hdfs_topic_spark.functions.paths import (
-                parse_source_filename,
-            )
-
-            # Expose the BASENAME, matching the pure-Python decode mode —
-            # a full input URI here would silently break every
-            # filename-keyed consumer (offset assignment, cleaner verdict
-            # maps, persisted state) whenever `auto` flips modes between
-            # runs.  The window still partitions on the full path.
-            base = F.element_at(F.split(fname, "/"), -1)
-            parsed = parse_source_filename(base)
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(fname).orderBy(F.monotonically_increasing_id())
-            from restructure_hdfs_topic_spark.session import local_frame
-
-            mtimes = local_frame(
-                spark, _path_mtimes(spark, paths), "filename string, __mtime_ms long"
-            )
-            return (
-                df.withColumn("filename", base)
-                .select("*", *parsed)
-                .withColumn("offset", F.col("offset_from") + F.row_number().over(w) - 1)
-                .drop("offset_from", "offset_to")
-                # Real file mtimes (driver-side stat, path count bounded by
-                # maxFilesPerTopic): a NULL mtime would leave the O5
-                # seen-record filter's mtime dimension inoperative in this
-                # mode (NULL comparison ⇒ never seen ⇒ duplicates on rerun).
-                .join(F.broadcast(mtimes), "filename", "left")
-                .withColumn("mtime", F.timestamp_millis(F.col("__mtime_ms")))
-                .drop("__mtime_ms")
-            )
-        except Exception:
-            if mode == "spark-avro":
-                raise
-            _log.warning(
-                "read_avro: spark-avro read failed; decoding with the pure-Python reader",
-                exc_info=True,
-            )
-    # --- pure-Python distributed decode -----------------------------------
     schema = union_schema_for_paths(spark, paths)
     decode, out_schema = make_avro_decoder(schema)
     binary = (
@@ -865,37 +774,6 @@ def read_avro(
         .select("path", "modificationTime", "content")
     )
     return binary.mapInPandas(decode, schema=out_schema)
-
-
-def _path_mtimes(spark: SparkSession, paths: list[str]) -> list[tuple[str, int]]:
-    """(basename, mtime-millis) per input file — driver-side stat, URI
-    paths through the cluster FileSystem.
-
-    The result joins records on BASENAME (the filename column the decode
-    modes agree on), so basenames must be unique within one read_avro
-    call: a duplicate key would fan out every record of that file through
-    the broadcast join, silently duplicating data.  Two distinct paths
-    sharing a basename (the same Kafka file mirrored under two roots)
-    raise instead."""
-    seen: dict[str, tuple[str, int]] = {}
-    for p in dict.fromkeys(paths):
-        if _URI_RE.match(p):
-            jvm = spark._jvm
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-            ms = int(fs.getFileStatus(hp).getModificationTime())
-        else:
-            ms = int(os.path.getmtime(p) * 1000)
-        base = p.rsplit("/", 1)[-1]
-        if base in seen and seen[base][0] != p:
-            raise ValueError(
-                f"read_avro: duplicate basename {base!r} across input roots "
-                f"({seen[base][0]!r} vs {p!r}) — records would duplicate "
-                "through the basename-keyed mtime join; pass each mirrored "
-                "root in its own read_avro call"
-            )
-        seen[base] = (p, ms)
-    return [(b, ms) for b, (_p, ms) in seen.items()]
 
 
 def union_schema_for_paths(spark: SparkSession, paths: list[str]):
@@ -957,21 +835,6 @@ def make_avro_decoder(avro_schema):
                     yield pd.DataFrame(rows)
 
     return decode, out_schema
-
-
-def read_topic(
-    spark: SparkSession,
-    root: str,
-    topic: str,
-    files: list[SourceFile] | None = None,
-    mode: str = "auto",
-) -> DataFrame:
-    """Read every record of one topic under ``root`` (or only ``files``)."""
-    if files is None:
-        # Forward the session so Hadoop-FS URI roots (hdfs://, s3a://) walk
-        # through the cluster FileSystem — os.walk finds nothing there.
-        files = walk_topics(root, spark=spark).get(topic, [])
-    return read_avro(spark, [f.path for f in files], mode=mode)
 
 
 def manifest_df(spark: SparkSession, files: list[SourceFile]) -> DataFrame:

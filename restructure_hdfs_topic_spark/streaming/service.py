@@ -1,56 +1,32 @@
-"""Service mode as Structured Streaming (SURVEY O27, M5).
+"""Service mode (SURVEY O27, M5).
 
 Reference (Application.kt:100-119, worker/Job.kt:12-46): a scheduled
 executor polls the source every ``service.interval`` seconds (default
 300 s) and runs the restructure pipeline; ``minimumFileAge`` (60 s) is a
 crude late-data guard.
 
-Spark-first: a file-source ``readStream`` with
-``trigger(processingTime=...)`` (service loop) or ``availableNow`` (one
-shot that drains the backlog then stops).  ``maxFilesPerTrigger``
-reproduces ``maxFilesPerTopic``; the principled replacement for
-``minimumFileAge`` is a WATERMARK on event time — late records are
-handled by the engine, not by guessing file ages.  Checkpointing gives
-the exactly-once file tracking the reference built by hand with Redis
-offsets (O16-O18) — in streaming mode the engine's own commit log is the
-offset store.
+Two forms here:
+
+- ``run_service``: the driver-loop scheduler over the batch Avro job and
+  the cleaner, the reference's own shape.
+- Structured Streaming: ``read_avro_stream`` is a ``binaryFile`` file
+  stream decoded by the batch reader's container kernel; feed it through
+  ``plans.avro_job.organize_avro_records`` into ``start_service`` (Hive
+  layout) or ``start_template_service`` (the reference's rendered tree),
+  with ``trigger(processingTime=...)`` (service loop) or ``availableNow``
+  (one shot that drains the backlog then stops).  ``maxFilesPerTrigger``
+  reproduces ``maxFilesPerTopic``.  The stream's checkpoint gives the
+  exactly-once file tracking the reference built by hand with Redis
+  offsets (O16-O18) — in streaming mode the engine's own commit log is
+  the offset store.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from restructure_hdfs_topic_spark.functions.time import time_bin
-from restructure_hdfs_topic_spark.functions.paths import sanitize_id
-from restructure_hdfs_topic_spark.plans.restructure import PARTITION_COLS
-
-
-def streaming_restructure(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    source_format: str = "parquet",
-    max_files_per_trigger: int | None = None,
-    user_col: str = "user_id",
-    time_col: str = "ts",
-    topic: str = "events",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """readStream → record organization (O9-O11) with a watermark replacing
-    the reference's minimumFileAge late-data guard."""
-    reader = spark.readStream.format(source_format).schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.load(source_dir)
-    return (
-        df.withWatermark(time_col, watermark)
-        .withColumn("projectId", F.lit("unknown-project"))
-        .withColumn("userId", sanitize_id(F.col(user_col), "unknown-user"))
-        .withColumn("topic", F.lit(topic))
-        .withColumn("bin", time_bin(F.col(time_col)))
-    )
+from restructure_hdfs_topic_spark.plans.avro_job import PARTITION_COLS
 
 
 def start_service(
@@ -244,20 +220,3 @@ def run_service(
             break
         sleep_fn(config.service.interval_s)
     return results
-
-
-def windowed_rate(
-    organized: DataFrame,
-    time_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stateful extension beyond the reference: watermarked windowed counts
-    per (user, window) — the streaming analogue of time binning with true
-    late-data semantics."""
-    return (
-        organized.withWatermark(time_col, watermark)
-        .groupBy(F.window(F.col(time_col), window).alias("win"), F.col("userId"))
-        .agg(F.count("*").alias("n_records"))
-        .select(F.col("win.start").alias("bin_start"), "userId", "n_records")
-    )

@@ -120,16 +120,18 @@ def write_topic_file(
     offset_from: int,
     records: list[dict],
     mtime_s: float | None = None,
+    schema: dict = RECORD_SCHEMA,
 ) -> str:
-    """Write ``records`` as the Kafka-Connect file covering offsets
-    ``offset_from .. offset_from + len(records) - 1``; returns its path."""
+    """Write ``records`` (``schema`` datums) as the Kafka-Connect file
+    covering offsets ``offset_from .. offset_from + len(records) - 1``;
+    returns its path."""
     part_dir = os.path.join(root, topic, f"partition={partition}")
     os.makedirs(part_dir, exist_ok=True)
     offset_to = offset_from + len(records) - 1
     path = os.path.join(part_dir, f"{topic}+{partition}+{offset_from:010d}+{offset_to:010d}.avro")
-    datums = b"".join(encode(RECORD_SCHEMA, r) for r in records)
+    datums = b"".join(encode(schema, r) for r in records)
     with open(path, "wb") as fh:
-        fh.write(build_container(RECORD_SCHEMA, datums, len(records)))
+        fh.write(build_container(schema, datums, len(records)))
     if mtime_s is not None:
         os.utime(path, ns=(int(mtime_s * 1e9), int(mtime_s * 1e9)))
     return path

@@ -168,7 +168,7 @@ def test_avro_multi_branch_union_decodes_to_member_struct(spark, tmp_path):
     os.makedirs(top)
     path = top / "union_topic+0+0000000000+0000000002.avro"
     path.write_bytes(_build_container(schema, datums, 3))
-    df = read_avro(spark, [str(path)], mode="python")
+    df = read_avro(spark, [str(path)])
     assert dict(df.select("u").dtypes)["u"] == "struct<member0:string,member1:bigint>"
     rows = {r["offset"]: r["u"] for r in df.collect()}
     assert rows[0] is not None and rows[0]["member0"] == "x" and rows[0]["member1"] is None
@@ -374,24 +374,6 @@ def test_dedup_distinct_fields_not_narrowed_by_accounting(tmp_path):
     assert cfg2.dedup_key_for("t", cols, default_exclude=acct) == [
         "user_id", "value"
     ]
-
-
-def test_path_mtimes_basename_collision_raises(spark, tmp_path):
-    """ADVICE r5 #4: duplicate basenames across roots would fan out the
-    broadcast mtime join — raise instead; a literally duplicated path
-    dedupes silently."""
-    from restructure_hdfs_topic_spark.sources.avro import _path_mtimes
-
-    a = tmp_path / "rootA" / "f+0+1+2.avro"
-    b = tmp_path / "rootB" / "f+0+1+2.avro"
-    for p in (a, b):
-        p.parent.mkdir(parents=True)
-        p.write_bytes(b"x")
-    # Same path twice: fine, deduped.
-    got = _path_mtimes(spark, [str(a), str(a)])
-    assert len(got) == 1 and got[0][0] == "f+0+1+2.avro"
-    with pytest.raises(ValueError, match="duplicate basename"):
-        _path_mtimes(spark, [str(a), str(b)])
 
 
 def test_stalled_committer_cannot_clobber_peer_commit(spark, tmp_path):

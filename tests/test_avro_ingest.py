@@ -26,11 +26,12 @@ from tests.avro_tree import build_container as _build_container
 
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
-pytestmark = pytest.mark.skipif(
+needs_fixtures = pytest.mark.skipif(
     not os.path.isdir(FIXTURES), reason="reference fixtures unavailable"
 )
 
 
+@needs_fixtures
 def test_container_decode_counts_and_values():
     # android file: null codec, 1000 records; status files: snappy, 3 each.
     by_name = {
@@ -55,6 +56,7 @@ def test_container_decode_counts_and_values():
     }
 
 
+@needs_fixtures
 def test_walk_topics_and_filename_parse():
     topics = walk_topics(FIXTURES)
     assert set(topics) == {"application_server_status", "android_phone_acceleration"}
@@ -68,6 +70,7 @@ def test_walk_topics_and_filename_parse():
     ]
 
 
+@needs_fixtures
 def test_single_offset_filename_commits_true_range(spark, tmp_path):
     """O3 tail: processing the single-offset fixture must commit [21, 23]
     (record-count end offset), so the cleaner's `offset_to + 1 <= hi` check
@@ -93,7 +96,7 @@ def test_single_offset_filename_commits_true_range(spark, tmp_path):
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    result = run_avro_restructure_job(spark, str(tmp_path / "in"), cfg, mode="python")
+    result = run_avro_restructure_job(spark, str(tmp_path / "in"), cfg)
     assert result["records_written"] == 3
     state = read_offsets(spark, cfg.state_dir).collect()
     assert [(r["topic"], r["partition"], r["offset_from"], r["offset_to"]) for r in state] == [
@@ -101,6 +104,7 @@ def test_single_offset_filename_commits_true_range(spark, tmp_path):
     ]
 
 
+@needs_fixtures
 def test_read_avro_distributed_offsets(spark):
     topics = walk_topics(FIXTURES)
     df = read_avro(spark, [f.path for f in topics["application_server_status"]])
@@ -112,6 +116,7 @@ def test_read_avro_distributed_offsets(spark):
     assert all(r["partition"] == 1 for r in rows)
 
 
+@needs_fixtures
 def test_avro_restructure_end_to_end_golden(spark, tmp_path):
     cfg = RestructureConfig(
         target_dir=str(tmp_path / "out"),
@@ -120,7 +125,7 @@ def test_avro_restructure_end_to_end_golden(spark, tmp_path):
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    result = run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    result = run_avro_restructure_job(spark, FIXTURES, cfg)
     assert result["records_written"] == 1006
     # Golden layout (RestructureS3IntegrationTest.kt): two participants,
     # bins 20200128_1300 + 20200128_1400 for server status, 20200528_1000
@@ -168,7 +173,7 @@ def test_avro_restructure_end_to_end_golden(spark, tmp_path):
     assert os.path.exists(os.path.join(cfg.target_dir, "schema-application_server_status.json"))
     assert os.path.exists(os.path.join(cfg.target_dir, "schema-android_phone_acceleration.json"))
     # Idempotent rerun: nothing new written.
-    result2 = run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    result2 = run_avro_restructure_job(spark, FIXTURES, cfg)
     assert result2["records_written"] == 0
     assert (
         read_topic_csv("application_server_status").count()
@@ -177,6 +182,7 @@ def test_avro_restructure_end_to_end_golden(spark, tmp_path):
     )
 
 
+@needs_fixtures
 def test_avro_restructure_gzip_and_dedup(spark, tmp_path):
     """CSV sink parity (VERDICT #10): gzip-compressed partitioned CSV write
     plus keep-last dedup on the configured key, over the real Avro input."""
@@ -191,7 +197,7 @@ def test_avro_restructure_gzip_and_dedup(spark, tmp_path):
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    run_avro_restructure_job(spark, FIXTURES, cfg)
     gz = _glob.glob(f"{cfg.target_dir}/**/*.csv.gz", recursive=True)
     assert gz, "expected gzip csv part files"
     status = (
@@ -207,6 +213,7 @@ def test_avro_restructure_gzip_and_dedup(spark, tmp_path):
     assert len(rows) == len(texts)
 
 
+@needs_fixtures
 def test_avro_cleaner_delete_and_rollback(spark, tmp_path):
     """O20/O21 over the real pipeline: the cleaner re-reads source Avro,
     verifies event times against the written CSV output (re-read with the
@@ -229,7 +236,7 @@ def test_avro_cleaner_delete_and_rollback(spark, tmp_path):
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, src, cfg, mode="python")
+    run_avro_restructure_job(spark, src, cfg)
 
     # Everything extracted: the status file [18,20] is committed-with-+1
     # (state merged to [18,21]) and fully extracted → deleted; the
@@ -258,10 +265,11 @@ def test_avro_cleaner_delete_and_rollback(spark, tmp_path):
     result2 = run_avro_cleaner_job(spark, src, cfg)
     rolled = [p.rsplit("/", 1)[-1] for p in result2["rolled_back"]]
     assert rolled == ["application_server_status+1+0000000018+0000000020.avro"]
-    r = run_avro_restructure_job(spark, src, cfg, mode="python")
+    r = run_avro_restructure_job(spark, src, cfg)
     assert r["records_written"] == 3
 
 
+@needs_fixtures
 def test_zip_compression_output(spark, tmp_path):
     """O23 zip: single-entry deflate .zip per output file, readable back to
     the identical CSV bytes (compression/ZipCompression.kt:16-29)."""
@@ -277,7 +285,7 @@ def test_zip_compression_output(spark, tmp_path):
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    run_avro_restructure_job(spark, FIXTURES, cfg)
     zips = _glob.glob(f"{cfg.target_dir}/**/*.csv.zip", recursive=True)
     plains = _glob.glob(f"{cfg.target_dir}/**/*.csv", recursive=True)
     assert zips and not plains
@@ -288,6 +296,7 @@ def test_zip_compression_output(spark, tmp_path):
     assert "1.58021982003E9,CONNECTED," in text
 
 
+@needs_fixtures
 def test_service_loop_schedules_jobs(spark, tmp_path):
     """O27: the service loop runs restructure each interval and the cleaner
     on its own (longer) interval, with injected clock/sleep."""
@@ -410,6 +419,7 @@ def test_avro_bzip2_and_xz_codec_decode():
         assert list(c.records()) == [{"a": 7}, {"a": 42}]
 
 
+@needs_fixtures
 def test_avro_cleaner_over_zip_output(spark, tmp_path):
     """O20 × O23 interaction: the cleaner must verify against .zip targets
     (decompress-on-read in executors) — same delete decision as over plain
@@ -431,13 +441,14 @@ def test_avro_cleaner_over_zip_output(spark, tmp_path):
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, src, cfg, mode="python")
+    run_avro_restructure_job(spark, src, cfg)
     result = run_avro_cleaner_job(spark, src, cfg)
     deleted = [p.rsplit("/", 1)[-1] for p in result["deleted"]]
     assert deleted == ["application_server_status+1+0000000018+0000000020.avro"]
     assert result["rolled_back"] == []
 
 
+@needs_fixtures
 def test_streaming_avro_restructure(spark, tmp_path):
     """M5 over the REAL input: a binaryFile stream of reference .avro
     fixtures decodes, organizes, and writes the partitioned layout; a
@@ -516,15 +527,12 @@ def test_read_avro_schema_evolution_union(spark, tmp_path):
     (top / "evolve_topic+0+0000000002+0000000003.avro").write_bytes(
         _build_container(s2, d2, 2)
     )
-    df = read_avro(
-        spark,
-        [str(top / f) for f in sorted(_os.listdir(top))],
-        mode="python",
-    )
+    df = read_avro(spark, [str(top / f) for f in sorted(_os.listdir(top))])
     rows = {r["offset"]: (r["a"], r["b"]) for r in df.collect()}
     assert rows == {0: (1, None), 1: (2, None), 2: (3, "x"), 3: (4, None)}
 
 
+@needs_fixtures
 def test_cleaner_respects_exclude_from_delete(spark, tmp_path):
     """excludeFromDelete (RestructureConfig.kt per-topic override): the
     cleaner must not delete files of an excluded topic even when fully
@@ -545,12 +553,13 @@ def test_cleaner_respects_exclude_from_delete(spark, tmp_path):
         topics={"application_server_status": TopicConfig(exclude_from_delete=True)},
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, src, cfg, mode="python")
+    run_avro_restructure_job(spark, src, cfg)
     result = run_avro_cleaner_job(spark, src, cfg)
     assert result["deleted"] == []  # the deletable status file is protected
     assert len([f for fs in walk_topics(src).values() for f in fs]) == 3
 
 
+@needs_fixtures
 def test_max_files_per_topic_takes_earliest(spark, tmp_path):
     """maxFilesPerTopic caps the EARLIEST pending files deterministically
     (offset order), so repeated capped runs drain a backlog in order."""
@@ -567,15 +576,16 @@ def test_max_files_per_topic_takes_earliest(spark, tmp_path):
     os.makedirs(cfg.state_dir, exist_ok=True)
     # Run 1: one file per topic → status offsets 18-20 (3 records) + the
     # 1000-record acceleration file.
-    r1 = run_avro_restructure_job(spark, src, cfg, mode="python")
+    r1 = run_avro_restructure_job(spark, src, cfg)
     assert r1["records_written"] == 1003  # earliest status file (3) + accel (1000)
     # Run 2 drains the backlog (offsets 21+).
-    r2 = run_avro_restructure_job(spark, src, cfg, mode="python")
+    r2 = run_avro_restructure_job(spark, src, cfg)
     assert r2["records_written"] == 3
     # Run 3: nothing left.
-    assert run_avro_restructure_job(spark, src, cfg, mode="python")["records_written"] == 0
+    assert run_avro_restructure_job(spark, src, cfg)["records_written"] == 0
 
 
+@needs_fixtures
 def test_cloud_tag_end_offset_readers(tmp_path):
     """O3 cloud-tag parity (S3SourceStorage.kt:40-66, AzureSourceStorage
     .kt:28-46): a configured tag reader resolves single-offset filenames'
@@ -642,6 +652,7 @@ def test_cloud_tag_end_offset_readers(tmp_path):
     assert (f.offset_from, f.offset_to) == (21, 55)
 
 
+@needs_fixtures
 def test_walk_topics_hadoop_fs_uri(spark, tmp_path):
     """O1 over a Hadoop-FS URI (file:// here; hdfs://, s3a:// share the
     FileSystem API): listing, +tmp skip, zero-length guard, and the
@@ -677,6 +688,7 @@ def test_walk_topics_hadoop_fs_uri(spark, tmp_path):
     assert all(f.path.startswith("file:/") for f in via_uri["application_server_status"])
 
 
+@needs_fixtures
 def test_restructure_job_over_hadoop_fs_uri(spark, tmp_path):
     """The whole restructure job runs against a Hadoop-FS URI input root
     (file:// here; hdfs://, s3a:// share the FileSystem API): walk, header
@@ -691,12 +703,13 @@ def test_restructure_job_over_hadoop_fs_uri(spark, tmp_path):
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    r = run_avro_restructure_job(spark, f"file://{FIXTURES}", cfg, mode="python")
+    r = run_avro_restructure_job(spark, f"file://{FIXTURES}", cfg)
     assert r["records_written"] == 1006
-    r2 = run_avro_restructure_job(spark, f"file://{FIXTURES}", cfg, mode="python")
+    r2 = run_avro_restructure_job(spark, f"file://{FIXTURES}", cfg)
     assert r2["records_written"] == 0
 
 
+@needs_fixtures
 def test_object_key_strips_uri_scheme_and_bucket(spark, tmp_path):
     """ADVICE r4: for URI roots the walk hands full URIs to the end-offset
     readers; the S3 key / blob name must strip the scheme + authority or

@@ -7,11 +7,9 @@ Kafka-Connect trees (tests/avro_tree.py):
 - differential properties: the driver-side O4 index against the
   DataFrame seen filter ``filter_unseen_files``, and the attempt headers
   derived from collected fingerprints against ``discover_dynamic_columns``;
-- keep-last dedup keyed on a map field;
-- the once-per-session spark-avro probe of ``read_avro(mode="auto")``.
+- keep-last dedup keyed on a map field.
 """
 
-import logging
 import os
 
 from conftest import prop_examples
@@ -48,7 +46,7 @@ def _executions(spark):
 def _run(spark, src, cfg, now_s):
     """One restructure iteration plus the plans it executed."""
     before = max((i for i, _ in _executions(spark)), default=-1)
-    res = run_avro_restructure_job(spark, src, cfg, mode="python", now_s=now_s)
+    res = run_avro_restructure_job(spark, src, cfg, now_s=now_s)
     return res, [p for i, p in _executions(spark) if i > before]
 
 
@@ -304,19 +302,3 @@ def test_keep_last_dedup_on_map_field(spark):
     assert sorted(r["offset"] for r in out.collect()) == [1, 2, 3, 4, 5]
     whole = keep_last_dedup(df.select("value.tags", "offset"), [], "offset")
     assert sorted(r["offset"] for r in whole.collect()) == [2, 3, 4, 5]
-
-
-def test_read_avro_auto_probes_spark_avro_once(spark, tmp_path, caplog, monkeypatch):
-    """``mode="auto"`` asks once per session whether the avro source
-    resolves; without spark-avro it warns once and decodes in Python."""
-    from restructure_hdfs_topic_spark.sources import avro
-
-    path = write_topic_file(str(tmp_path), "probe_topic", 0, 0, [reading("p", "u", 1.0)])
-    monkeypatch.setattr(avro, "_SPARK_AVRO", {})
-    with caplog.at_level(logging.WARNING, logger=avro.__name__):
-        n = [avro.read_avro(spark, [path], mode="auto").count() for _ in range(3)]
-    assert n == [1, 1, 1]
-    assert len(avro._SPARK_AVRO) == 1
-    if not next(iter(avro._SPARK_AVRO.values())):
-        probes = [r for r in caplog.records if "spark-avro data source not found" in r.getMessage()]
-        assert len(probes) == 1

@@ -71,14 +71,14 @@ def test_job_skips_locked_topics(spark, tmp_path):
     held = other.acquire("application_server_status")
     assert held is not None
 
-    result = run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    result = run_avro_restructure_job(spark, FIXTURES, cfg)
     assert result["topics_locked"] == 1
     assert "application_server_status" not in result["topics"]
     assert result["topics"]["android_phone_acceleration"]["records_written"] > 0
 
     # Lease released → the next iteration picks the skipped topic up.
     held.close()
-    result2 = run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    result2 = run_avro_restructure_job(spark, FIXTURES, cfg)
     assert result2["topics_locked"] == 0
     assert result2["topics"]["application_server_status"]["records_written"] > 0
 

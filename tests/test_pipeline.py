@@ -1,68 +1,77 @@
-"""End-to-end pipeline tests (SURVEY §5 strategy): Avro-model records in →
-partitioned JSON out with offsets state; rerun writes NOTHING (idempotence);
-flatten golden semantics (CsvAvroConverterTest.kt analogues); streaming
-availableNow drain; cleaner verdicts; config resolution.
+"""End-to-end pipeline tests (SURVEY §5 strategy), on generated
+Kafka-Connect trees (tests/avro_tree.py): Avro records in → partitioned
+JSON out with offsets state; rerun writes NOTHING (idempotence); flatten
+golden semantics (CsvAvroConverterTest.kt analogues); streaming
+availableNow drain; cleaner delete/rollback; config resolution.
 """
 
 import json
 import os
 
-from pyspark.sql import functions as F
-
-from restructure_hdfs_topic_spark.config import RestructureConfig
+from restructure_hdfs_topic_spark.config import RestructureConfig, WorkerConfig
 from restructure_hdfs_topic_spark.operators.flatten import (
     flatten_for_csv,
     flatten_struct_columns,
     route_by_schema_attempt,
     to_json_lines,
 )
-from restructure_hdfs_topic_spark.plans.job import run_restructure_job
 from restructure_hdfs_topic_spark.operators.offsets import read_offsets
+from restructure_hdfs_topic_spark.plans.avro_job import (
+    organize_avro_records,
+    run_avro_restructure_job,
+)
+from tests.avro_tree import reading, write_topic_file
+
+T0 = 1_704_067_200.0  # 2024-01-01 00:00 UTC
+BIN_FORMAT = "yyyyMMdd_HH'00'"
 
 
-def _records(spark, n=40, mtime="2024-01-01 00:00:00"):
-    return spark.range(n).select(
-        F.lit("events").alias("topic"),
-        (F.col("id") % 2).cast("int").alias("partition"),
-        F.col("id").alias("offset"),
-        F.to_timestamp(F.lit(mtime)).alias("mtime"),
-        (F.col("id") % 5).alias("user_id"),
-        F.timestamp_seconds(F.lit(1704067200) + F.col("id") * 600).alias("ts"),
-        (F.col("id") * 1.5).alias("value"),
-    )
+def _events_tree(root, offset_shift=0, project=None):
+    """Topic ``events``: 2 partitions x 2 files x 10 records.  Record ``i``
+    belongs to user ``u{i % 5}`` with event time ``T0 + 600 * i`` (40
+    records over 2024-01-01 00:00..06:30); ``offset_shift`` lands the
+    same records again as new files further up each partition."""
+    for partition in (0, 1):
+        for f in (0, 1):
+            first = 20 * partition + 10 * f
+            write_topic_file(
+                root, "events", partition, offset_shift + 10 * f,
+                [reading(project, f"u{i % 5}", T0 + 600 * i) for i in range(first, first + 10)],
+            )
+    return root
+
+
+def _read_hive_json(spark, target):
+    return spark.read.option("basePath", target).json(f"{target}/projectId=*")
 
 
 def test_restructure_idempotent_rerun(spark, tmp_path):
+    src = _events_tree(str(tmp_path / "in"), project="p")
     cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"), format="json"
+        target_dir=str(tmp_path / "out"),
+        state_dir=str(tmp_path / "state"),
+        format="json",
+        worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    r1 = run_restructure_job(spark, _records(spark), cfg)
-    assert r1["records_written"] == 40
+    r1 = run_avro_restructure_job(spark, src, cfg)
+    assert (r1["files_processed"], r1["records_written"]) == (4, 40)
     # Output layout: projectId/userId/topic/bin partitions exist.
-    out = spark.read.json(cfg.target_dir)
+    out = _read_hive_json(spark, cfg.target_dir)
     assert out.count() == 40
     assert {"projectId", "userId", "topic", "bin"} <= set(out.columns)
     # Sidecar written once.
     assert os.path.exists(os.path.join(cfg.target_dir, "schema-events.json"))
-    # State holds merged intervals.
+    # State holds merged intervals: one per partition.
     state = read_offsets(spark, cfg.state_dir)
-    assert state.count() == 2  # one interval per partition after merge
+    assert sorted((r.partition, r.offset_from, r.offset_to) for r in state.collect()) == [
+        (0, 0, 19),
+        (1, 0, 19),
+    ]
     # Rerun: same input, nothing written (exactly-once across reruns).
-    r2 = run_restructure_job(spark, _records(spark), cfg)
-    assert r2["records_written"] == 0
-    assert spark.read.json(cfg.target_dir).count() == 40
-
-
-def test_restructure_rewritten_file_reprocesses(spark, tmp_path):
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"), format="json"
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    run_restructure_job(spark, _records(spark), cfg)
-    # Same offsets, NEWER mtime (re-uploaded source file) → must reprocess.
-    r = run_restructure_job(spark, _records(spark, mtime="2024-06-01 00:00:00"), cfg)
-    assert r["records_written"] == 40
+    r2 = run_avro_restructure_job(spark, src, cfg)
+    assert (r2["files_processed"], r2["records_written"]) == (0, 0)
+    assert _read_hive_json(spark, cfg.target_dir).count() == 40
 
 
 def test_flatten_struct_and_dynamic_columns(spark):
@@ -115,31 +124,24 @@ def test_attempt_routing_groups_by_header_shape(spark):
     persisted2.unpersist()
 
 
-def test_streaming_available_now(spark, tmp_path):
-    from restructure_hdfs_topic_spark.streaming.service import (
-        start_service,
-        streaming_restructure,
-    )
+def _drain(spark, topic_dir, **kw):
+    """``read_avro_stream`` organized like the batch job."""
+    from restructure_hdfs_topic_spark.streaming.service import read_avro_stream
 
-    src = str(tmp_path / "src")
-    batch = _records(spark)
-    batch.write.parquet(src)
-    organized = streaming_restructure(
-        spark, src, batch.schema, max_files_per_trigger=2
-    )
-    q = start_service(
-        organized, str(tmp_path / "out"), str(tmp_path / "ckpt"), fmt="json"
-    )
-    q.awaitTermination(120)
-    out = spark.read.json(str(tmp_path / "out"))
-    assert out.count() == 40
+    return organize_avro_records(read_avro_stream(spark, topic_dir, **kw), BIN_FORMAT)
+
+
+def test_streaming_available_now(spark, tmp_path):
+    from restructure_hdfs_topic_spark.streaming.service import start_service
+
+    src = _events_tree(str(tmp_path / "in"))
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    organized = _drain(spark, f"{src}/events", max_files_per_trigger=2)
+    start_service(organized, out, ckpt, fmt="json").awaitTermination(120)
+    assert spark.read.json(out).count() == 40
     # Second availableNow run over the same source: checkpoint dedups files.
-    organized2 = streaming_restructure(spark, src, batch.schema)
-    q2 = start_service(
-        organized2, str(tmp_path / "out"), str(tmp_path / "ckpt"), fmt="json"
-    )
-    q2.awaitTermination(120)
-    assert spark.read.json(str(tmp_path / "out")).count() == 40
+    start_service(_drain(spark, f"{src}/events"), out, ckpt, fmt="json").awaitTermination(120)
+    assert spark.read.json(out).count() == 40
 
 
 def test_streaming_template_layout(spark, tmp_path):
@@ -149,24 +151,18 @@ def test_streaming_template_layout(spark, tmp_path):
     files APPENDS into the bins the first drain created."""
     import glob as _glob
 
-    from restructure_hdfs_topic_spark.config import PathConfig, RestructureConfig
-    from restructure_hdfs_topic_spark.streaming.service import (
-        start_template_service,
-        streaming_restructure,
-    )
+    from restructure_hdfs_topic_spark.config import PathConfig
+    from restructure_hdfs_topic_spark.streaming.service import start_template_service
 
-    src = str(tmp_path / "src")
-    batch = _records(spark)
-    batch.write.parquet(src)
+    src = _events_tree(str(tmp_path / "in"))
     cfg = RestructureConfig(
         target_dir=str(tmp_path / "out"),
         state_dir=str(tmp_path / "state"),
         format="json",
         paths=PathConfig(layout="template"),
     )
-    organized = streaming_restructure(spark, src, batch.schema)
-    q = start_template_service(organized, cfg, "events", str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    ckpt = str(tmp_path / "ckpt")
+    start_template_service(_drain(spark, f"{src}/events"), cfg, "events", ckpt).awaitTermination(120)
 
     user_dirs = sorted(_glob.glob(f"{cfg.target_dir}/unknown-project/*/events"))
     assert len(user_dirs) == 5  # one tree per sanitized user id
@@ -175,6 +171,7 @@ def test_streaming_template_layout(spark, tmp_path):
     assert os.path.exists(os.path.join(user_dirs[0], "schema-events.json"))
     assert not _glob.glob(f"{cfg.target_dir}/_staging_*")
     assert not _glob.glob(f"{cfg.target_dir}/projectId=*")
+
     def data_rows() -> int:
         return sum(
             1
@@ -186,10 +183,8 @@ def test_streaming_template_layout(spark, tmp_path):
     assert data_rows() == 40
 
     # New source files into the SAME bins: the merge path appends.
-    batch.withColumn("offset", F.col("offset") + 100).write.mode("append").parquet(src)
-    organized2 = streaming_restructure(spark, src, batch.schema)
-    q2 = start_template_service(organized2, cfg, "events", str(tmp_path / "ckpt"))
-    q2.awaitTermination(120)
+    _events_tree(src, offset_shift=100)
+    start_template_service(_drain(spark, f"{src}/events"), cfg, "events", ckpt).awaitTermination(120)
     assert data_rows() == 80
 
 
@@ -212,51 +207,59 @@ def test_config_dedup_key_resolution():
 
 
 def test_cleaner_rollback_and_reprocess(spark, tmp_path):
-    """O20 rollback wiring (SourceDataCleaner.kt:103-106 + Accountant.kt:62-65):
-    a committed-but-not-fully-extracted file has its offset range removed
-    from the state, and the next restructure run reprocesses it; fully
-    extracted files are deletable and stay committed."""
+    """O20 over the Avro job (cleaner/SourceDataCleaner.kt:76-109 +
+    Accountant.kt:62-65): a fully extracted committed file is deleted and
+    stays committed; the partition's max-offset file is kept (+1 rule); a
+    committed file missing from the output is rolled back — its range
+    leaves the state — and the next restructure reprocesses exactly it."""
     import shutil
 
-    from pyspark.sql import functions as F
+    from restructure_hdfs_topic_spark.config import CleanerConfig
+    from restructure_hdfs_topic_spark.plans.avro_job import run_avro_cleaner_job
 
-    from restructure_hdfs_topic_spark.operators.offsets import commit_offsets
-    from restructure_hdfs_topic_spark.plans.job import run_cleaner_job
-
+    src = str(tmp_path / "in")
+    mtime = T0 + 86400
+    paths = [
+        write_topic_file(
+            src, "events", 0, 4 * k,
+            [reading("p", f"u{k}", T0 + 600 * (4 * k + i)) for i in range(4)],
+            mtime_s=mtime,
+        )
+        for k in range(3)
+    ]
     cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"), format="json"
+        target_dir=str(tmp_path / "out"),
+        state_dir=str(tmp_path / "state"),
+        format="json",
+        worker=WorkerConfig(minimum_file_age_s=0),
+        cleaner=CleanerConfig(enable=True, age_days=1),
     )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    run_restructure_job(spark, _records(spark), cfg)
-    # Pad the committed intervals past each file's end so the +1 candidacy
-    # trick passes (the reference never deletes the max-offset file).
-    # Partition 0 holds even offsets (max 38), partition 1 odd (max 39):
-    # pads start adjacent to each max so the intervals merge contiguously.
-    pad = spark.createDataFrame(
-        [("events", 0, 39, 60, "2024-01-01 00:00:00"), ("events", 1, 40, 60, "2024-01-01 00:00:00")],
-        "topic string, partition int, offset_from long, offset_to long, last_processed string",
-    ).withColumn("last_processed", F.to_timestamp("last_processed"))
-    commit_offsets(spark, cfg.state_dir, pad)
+    os.makedirs(cfg.state_dir)
+    now = mtime + 2 * 86400
+    r1 = run_avro_restructure_job(spark, src, cfg, now_s=now)
+    assert (r1["files_processed"], r1["records_written"]) == (3, 12)
 
-    # All extracted → both files deletable, state untouched.
-    v1 = run_cleaner_job(spark, _records(spark), cfg, now="2024-06-01 00:00:00")
-    verd1 = {(r.partition, r.file_id): (r.deletable, r.committed) for r in v1.collect()}
-    assert verd1 == {(0, 0): (True, True), (1, 0): (True, True)}
-    r_noop = run_restructure_job(spark, _records(spark), cfg)
-    assert r_noop["records_written"] == 0
+    def intervals():
+        state = read_offsets(spark, cfg.state_dir)
+        return sorted((r.offset_from, r.offset_to) for r in state.collect())
 
-    # Drop one user's rows from the target → partial extraction → rollback.
-    shutil.rmtree(os.path.join(cfg.target_dir, "projectId=unknown-project", "userId=0"))
-    v2 = run_cleaner_job(spark, _records(spark), cfg, now="2024-06-01 00:00:00")
-    verd2 = {(r.partition, r.file_id): (r.deletable, r.committed) for r in v2.collect()}
-    assert verd2 == {(0, 0): (False, True), (1, 0): (False, True)}
-    state = read_offsets(spark, cfg.state_dir)
-    kept = {(r.partition, r.offset_from, r.offset_to) for r in state.collect()}
-    # The files' own ranges are gone; only the padding beyond them remains.
-    assert kept == {(0, 39, 60), (1, 40, 60)}
-    # Rolled-back ranges reprocess on the next run.
-    r = run_restructure_job(spark, _records(spark), cfg)
-    assert r["records_written"] == 40
+    assert intervals() == [(0, 11)]
+    # User u1 (the middle file) lost from the output → partial extraction.
+    shutil.rmtree(os.path.join(cfg.target_dir, "projectId=p", "userId=u1"))
+    cleaned = run_avro_cleaner_job(spark, src, cfg, now_s=now)
+    assert cleaned["deleted"] == [paths[0]]
+    assert cleaned["rolled_back"] == [paths[1]]
+    assert not os.path.exists(paths[0])
+    # The max-offset file is never a candidate: (8, 12) is not committed.
+    assert os.path.exists(paths[2]) and paths[2] not in cleaned["deleted"] + cleaned["rolled_back"]
+    assert intervals() == [(0, 3), (8, 11)]
+
+    r2 = run_avro_restructure_job(spark, src, cfg, now_s=now)
+    assert (r2["files_processed"], r2["records_written"]) == (1, 4)
+    assert intervals() == [(0, 11)]
+    users = _read_hive_json(spark, cfg.target_dir).groupBy("userId").count().collect()
+    assert {r["userId"]: r["count"] for r in users} == {"u0": 4, "u1": 4, "u2": 4}
+
 
 def test_streaming_stateful_seen_record_filter(spark, tmp_path):
     """applyInPandasWithState exactly-once: offsets seen in earlier
@@ -452,8 +455,6 @@ def test_cli_main_one_shot_and_clean(spark, tmp_path):
     fixtures present, the same flow runs over them too."""
     import shutil
 
-    from tests.avro_tree import reading, write_topic_file
-
     src = str(tmp_path / "in")
     t0 = 1_580_216_400.0  # 2020-01-28 13:00 UTC
     write_topic_file(
@@ -637,19 +638,30 @@ def test_query_registry_consistency():
 def test_streaming_template_layout_time_pattern(spark, tmp_path):
     """The generalized template params (${time:pattern}, ${sourceId}) must
     render physically on the STREAMING sink too — micro-batch event times
-    drive the per-record time directories; a corpus without a sourceId
-    falls back to unknown-source (FormattedPathFactory.kt:88,94-98)."""
+    drive the per-record time directories; a key schema without a
+    sourceId falls back to unknown-source (FormattedPathFactory.kt:88,94-98)."""
     import glob as _glob
 
-    from restructure_hdfs_topic_spark.config import PathConfig, RestructureConfig
-    from restructure_hdfs_topic_spark.streaming.service import (
-        start_template_service,
-        streaming_restructure,
-    )
+    from restructure_hdfs_topic_spark.config import PathConfig
+    from restructure_hdfs_topic_spark.streaming.service import start_template_service
+    from tests.avro_tree import KEY_SCHEMA
 
-    src = str(tmp_path / "src")
-    batch = _records(spark)
-    batch.write.parquet(src)
+    key = {**KEY_SCHEMA, "fields": [f for f in KEY_SCHEMA["fields"] if f["name"] != "sourceId"]}
+    value = {"type": "record", "name": "Reading", "fields": [{"name": "time", "type": "double"}]}
+    schema = {
+        "type": "record",
+        "name": "KafkaRecord",
+        "fields": [{"name": "key", "type": key}, {"name": "value", "type": value}],
+    }
+    src = str(tmp_path / "in")
+    write_topic_file(
+        src, "events", 0, 0,
+        [
+            {"key": {"projectId": None, "userId": f"u{i % 5}"}, "value": {"time": T0 + 600 * i}}
+            for i in range(40)
+        ],
+        schema=schema,
+    )
     cfg = RestructureConfig(
         target_dir=str(tmp_path / "out"),
         state_dir=str(tmp_path / "state"),
@@ -659,12 +671,11 @@ def test_streaming_template_layout_time_pattern(spark, tmp_path):
             template="${topic}/${projectId}/${userId}/${sourceId}/${time:yyyyMM}/${filename}",
         ),
     )
-    organized = streaming_restructure(spark, src, batch.schema)
-    q = start_template_service(organized, cfg, "events", str(tmp_path / "ckpt"))
+    q = start_template_service(_drain(spark, f"{src}/events"), cfg, "events", str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
-    # _records spans 2024-01-01 00:00..06:40 → single 202401 time dir, five
-    # sanitized user ids, sourceId falls back.
+    # Event times span 2024-01-01 00:00..06:30 → single 202401 time dir,
+    # five sanitized user ids, sourceId falls back.
     data = [
         p
         for p in _glob.glob(f"{cfg.target_dir}/events/unknown-project/*/unknown-source/202401/*.json")

@@ -122,7 +122,7 @@ def test_restructure_job_times_phases(spark, tmp_path):
     timer.reset()
     timer.enabled = True
     try:
-        counters = run_avro_restructure_job(spark, FIXTURES, config, mode="python")
+        counters = run_avro_restructure_job(spark, FIXTURES, config)
     finally:
         timer.enabled = False
     assert counters["records_written"] > 0

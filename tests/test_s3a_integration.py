@@ -170,7 +170,7 @@ def test_restructure_e2e_over_s3a(s3a):
         format="csv",
         worker=WorkerConfig(minimum_file_age_s=0),
     )
-    result = run_avro_restructure_job(spark, f"{root}/in-e2e", cfg, mode="python")
+    result = run_avro_restructure_job(spark, f"{root}/in-e2e", cfg)
     assert result["records_written"] == 1006
 
     status = (
@@ -183,7 +183,7 @@ def test_restructure_e2e_over_s3a(s3a):
     assert any("schema-application_server_status.json" in k for k in keys)
     # Committed S3 state + idempotent rerun (seen-file filter over s3a).
     assert _keys(client, "radar", "state-e2e/")
-    rerun = run_avro_restructure_job(spark, f"{root}/in-e2e", cfg, mode="python")
+    rerun = run_avro_restructure_job(spark, f"{root}/in-e2e", cfg)
     assert rerun["records_written"] == 0
 
 
@@ -210,7 +210,7 @@ def test_cleaner_over_s3a(s3a):
         worker=WorkerConfig(minimum_file_age_s=0),
         cleaner=CleanerConfig(enable=True, age_days=0),
     )
-    run_avro_restructure_job(spark, f"{root}/in-clean", cfg, mode="python")
+    run_avro_restructure_job(spark, f"{root}/in-clean", cfg)
     before = {k for k in _keys(client, "radar", "in-clean/") if k.endswith(".avro")}
     assert before
     res = run_avro_cleaner_job(spark, f"{root}/in-clean", cfg)

@@ -21,7 +21,7 @@ from restructure_hdfs_topic_spark.plans.avro_job import run_avro_restructure_job
 
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
-pytestmark = pytest.mark.skipif(
+needs_fixtures = pytest.mark.skipif(
     not os.path.isdir(FIXTURES), reason="reference fixtures unavailable"
 )
 
@@ -44,6 +44,7 @@ GOLDEN_CSV = (
 )
 
 
+@needs_fixtures
 def test_template_layout_matches_reference_golden_tree(spark, tmp_path):
     """The exact file list of RestructureS3IntegrationTest.kt:71-80 (modulo
     the acceleration topic's record volume, which spans two extra bins in
@@ -57,7 +58,7 @@ def test_template_layout_matches_reference_golden_tree(spark, tmp_path):
         paths=PathConfig(layout="template"),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    result = run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    result = run_avro_restructure_job(spark, FIXTURES, cfg)
     assert result["records_written"] == 1006
 
     files = _tree(cfg.target_dir)
@@ -79,11 +80,12 @@ def test_template_layout_matches_reference_golden_tree(spark, tmp_path):
         assert fh.read() == GOLDEN_CSV
 
     # Idempotent rerun: committed offsets prune everything, tree unchanged.
-    result2 = run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    result2 = run_avro_restructure_job(spark, FIXTURES, cfg)
     assert result2["records_written"] == 0
     assert _tree(cfg.target_dir) == files
 
 
+@needs_fixtures
 def test_template_layout_append_merges_existing_bins(spark, tmp_path):
     """Reprocessing into an existing bin must APPEND (reference
     FileCache.kt:61-103 semantics), not clobber: run the job, roll back the
@@ -101,11 +103,11 @@ def test_template_layout_append_merges_existing_bins(spark, tmp_path):
         paths=PathConfig(layout="template"),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    run_avro_restructure_job(spark, FIXTURES, cfg)
     # Forget the commits (simulates a re-delivered source prefix).
     empty = read_offsets(spark, cfg.state_dir).limit(0)
     replace_offsets(spark, cfg.state_dir, empty)
-    run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    run_avro_restructure_job(spark, FIXTURES, cfg)
     with open(os.path.join(cfg.target_dir, FIRST, "20200128_1300.csv")) as fh:
         lines = fh.read().splitlines()
     assert lines[0].startswith("key.projectId")
@@ -113,6 +115,7 @@ def test_template_layout_append_merges_existing_bins(spark, tmp_path):
     assert len(lines) == 1 + 4  # 2 rows per run
 
 
+@needs_fixtures
 def test_template_layout_gzip_extension(spark, tmp_path):
     """Compression folds into the rendered filename: <bin>.csv.gz."""
     cfg = RestructureConfig(
@@ -124,13 +127,14 @@ def test_template_layout_gzip_extension(spark, tmp_path):
         paths=PathConfig(layout="template"),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    run_avro_restructure_job(spark, FIXTURES, cfg)
     path = os.path.join(cfg.target_dir, FIRST, "20200128_1300.csv.gz")
     assert os.path.exists(path)
     with gzip.open(path, "rt") as fh:
         assert fh.read() == GOLDEN_CSV
 
 
+@needs_fixtures
 def test_template_cleaner_reads_template_tree(spark, tmp_path):
     """The cleaner's target timestamp index (O21) must work over the
     template tree — project/user recovered from path segments."""
@@ -144,7 +148,7 @@ def test_template_cleaner_reads_template_tree(spark, tmp_path):
         paths=PathConfig(layout="template"),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    run_avro_restructure_job(spark, FIXTURES, cfg)
     tt = read_target_times(spark, cfg, "application_server_status")
     rows = tt.collect()
     assert {(r["t_project"], r["t_user"]) for r in rows} == {
@@ -172,6 +176,7 @@ def test_physical_template_validation():
         check_physical_template("${projectId}/${userId}/${filename}")
 
 
+@needs_fixtures
 def test_template_layout_time_pattern_and_source_tree(spark, tmp_path):
     """The FormattedPathFactoryTest.kt:12-37 template
     ``${topic}/${projectId}/${userId}/${sourceId}/${time:yyyyMM}/${time:dd}/${filename}``
@@ -188,7 +193,7 @@ def test_template_layout_time_pattern_and_source_tree(spark, tmp_path):
         paths=PathConfig(layout="template", template=tmpl),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    result = run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    result = run_avro_restructure_job(spark, FIXTURES, cfg)
     assert result["records_written"] == 1006
 
     files = _tree(cfg.target_dir)
@@ -223,7 +228,7 @@ def test_template_layout_time_pattern_and_source_tree(spark, tmp_path):
     assert any(abs(r["t_seconds"] - 1.58021982003e9) < 1e-3 for r in rows)
 
     # Idempotent rerun: committed offsets prune everything, tree unchanged.
-    result2 = run_avro_restructure_job(spark, FIXTURES, cfg, mode="python")
+    result2 = run_avro_restructure_job(spark, FIXTURES, cfg)
     assert result2["records_written"] == 0
     assert _tree(cfg.target_dir) == files
 
