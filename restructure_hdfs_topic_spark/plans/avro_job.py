@@ -55,7 +55,10 @@ from restructure_hdfs_topic_spark.sources.avro import (
     SourceFile,
     manifest_df,
     read_avro,
+    record_struct,
+    union_avro_schemas,
     walk_topics,
+    writer_schemas,
 )
 
 # Write partition columns of the reference's output layout
@@ -124,9 +127,13 @@ def _write_topic(
     organized: DataFrame,
     config: RestructureConfig,
     topic: str,
+    record_type: StructType,
+    n_tasks: int,
 ) -> None:
     """O13 partitioned sink for one topic, CSV (flattened, dynamic header)
-    or JSON (nested).
+    or JSON (nested), written by ``n_tasks`` tasks (``_write_tasks``).
+    ``record_type`` types the record columns in the ``schema-<topic>.json``
+    sidecar (``sources.avro.record_struct``).
 
     Two physical layouts (``config.paths.layout``):
 
@@ -218,7 +225,7 @@ def _write_topic(
                     part_cols = PARTITION_COLS
                 flat = flatten_for_csv(sub, dynamic=headers[a])
                 writer = (
-                    flat.repartition(*[F.col(f"`{c}`") for c in part_cols])
+                    flat.repartition(n_tasks, *[F.col(f"`{c}`") for c in part_cols])
                     .write.mode("append")
                     .partitionBy(*part_cols)
                     .option("header", "true")
@@ -244,7 +251,7 @@ def _write_topic(
         else:
             part_cols = PARTITION_COLS
         writer = (
-            payload.repartition(*[F.col(c) for c in part_cols])
+            payload.repartition(n_tasks, *[F.col(c) for c in part_cols])
             .write.mode("append")
             .partitionBy(*part_cols)
         )
@@ -256,9 +263,8 @@ def _write_topic(
     if template_mode:
         from restructure_hdfs_topic_spark.plans.layout import finalize_template_layout
 
-        schema_json = json.dumps(
-            payload.drop(*PARTITION_COLS, "attempt", *extra_names).schema.jsonValue(),
-            indent=2,
+        schema_json = _sidecar_json(
+            payload.drop(*PARTITION_COLS, "attempt", *extra_names).schema, record_type
         )
         finalize_template_layout(
             organized.sparkSession,
@@ -276,17 +282,50 @@ def _write_topic(
             local_group_id=config.target.local_group_id,
         )
     else:
-        _write_schema_sidecar(payload.drop(*PARTITION_COLS), config.target_dir, topic)
+        _write_schema_sidecar(
+            organized.sparkSession,
+            _sidecar_json(payload.drop(*PARTITION_COLS).schema, record_type),
+            config.target_dir,
+            topic,
+        )
 
 
-def _write_schema_sidecar(payload: DataFrame, output_dir: str, topic: str) -> None:
+# Input bytes per write task beyond one task per core: AQE's default
+# advisory partition size.
+_WRITE_TASK_BYTES = 64 << 20
+
+
+def _write_tasks(spark: SparkSession, input_bytes: int) -> int:
+    """Task count of the pre-write shuffle: one per core, and one per
+    ``_WRITE_TASK_BYTES`` of input where that is more (a large batch is not
+    held to the cores registered when it starts, as under dynamic
+    allocation), capped by ``spark.sql.shuffle.partitions``.  The count is
+    fixed because AQE would coalesce a by-column repartition of a small
+    batch into ONE write task.  It is no larger because each non-empty
+    task sorts its rows for the partitioned write into at least one
+    memory page (about 64 MiB with an 8 GiB driver on 4 cores), garbage
+    that grows the heap.  Hashing on the partition columns keeps each bin
+    in one task, so each bin gets one part file."""
+    by_size = -(-input_bytes // _WRITE_TASK_BYTES)
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, max(spark.sparkContext.defaultParallelism, by_size)))
+
+
+def _sidecar_json(schema: StructType, record_type: StructType) -> str:
+    """The sidecar text for the written columns ``schema``, each record
+    column typed as ``record_type`` types it: a Spark file scan reads every
+    column as nullable, the Avro schema does not."""
+    declared = {f.name: f for f in record_type.fields}
+    fields = [declared.get(f.name, f) for f in schema.fields]
+    return json.dumps(StructType(fields).jsonValue(), indent=2)
+
+
+def _write_schema_sidecar(spark: SparkSession, schema_json: str, output_dir: str, topic: str) -> None:
     """``schema-<topic>.json`` once per topic dir (worker/FileCacheStore.kt:100-116),
     written through the Hadoop FileSystem API so the sidecar lands on
     whatever store the output does (file://, s3a://, …)."""
     from py4j.protocol import Py4JJavaError
 
-    schema_json = json.dumps(payload.schema.jsonValue(), indent=2)
-    spark = payload.sparkSession
     jvm = spark._jvm
     out_path = jvm.org.apache.hadoop.fs.Path(output_dir)
     fs = out_path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -362,12 +401,17 @@ def read_target_times(spark: SparkSession, config: RestructureConfig, topic: str
         glob, rx, gi_proj, gi_user = template_read_pattern(
             config.paths.template, topic, config.format
         )
-        path = f"{base.rstrip('/')}/{glob}"
+        # Glob the directories and filter the file names: a glob down to
+        # the files hands Spark one root path per file, and past 32 roots
+        # it lists them in a Spark job.
+        dir_glob, _, name_glob = glob.rpartition("/")
+        path = f"{base.rstrip('/')}/{dir_glob}" if dir_glob else base
+        reader = spark.read.option("pathGlobFilter", name_glob)
         if config.format == "csv":
-            df = spark.read.option("header", "true").csv(path)
+            df = reader.option("header", "true").csv(path)
             flattened = True
         else:
-            df = spark.read.json(path)
+            df = reader.json(path)
             flattened = False
         fname = F.input_file_name()
         return df.select(
@@ -722,9 +766,10 @@ def _process_topic(spark, topic, aged, config, counters) -> None:
             "files_pending": 0,
         }
         return
-    paths = [f.path for f in pending]
     with timer.time("restructure.readAvro"):
-        records = read_avro(spark, paths)
+        # The headers once: the reader schema, and the sidecar's types.
+        paths, schemas = writer_schemas(spark, [f.path for f in pending])
+        records = read_avro(spark, paths, schemas)
     organized = organize_avro_records(records, config.paths.bin_format)
     organized = organized.withColumn("topic", F.lit(topic))
     # Dedup keys are the WRITTEN row's columns (the reference dedups the
@@ -749,7 +794,13 @@ def _process_topic(spark, topic, aged, config, counters) -> None:
     obs = Observation()
     organized = organized.observe(obs, F.count(F.lit(1)).alias("n"))
     with timer.time("restructure.write"):
-        _write_topic(organized, config, topic)
+        _write_topic(
+            organized,
+            config,
+            topic,
+            record_struct(union_avro_schemas(schemas)),
+            _write_tasks(spark, sum(f.size for f in pending)),
+        )
     n_records = int(obs.get["n"])
     # last_processed is built in Spark from the double mtime (manifest_df's
     # timestamp_seconds), so committed state matches the seen filter's

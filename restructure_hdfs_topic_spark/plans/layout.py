@@ -13,8 +13,10 @@ directories, not filenames), so template mode is a two-phase sink:
 
 1. the partitioned write lands in a hidden Hive-style staging tree
    (``_staging_<topic>/projectId=…/userId=…/topic=…/bin=…/part-*``) — fully
-   distributed, one task per bin (the pre-write repartition guarantees one
-   part file per bin in the common case);
+   distributed: the pre-write repartition hashes the partition columns
+   into a fixed task count (one per core, more for a large batch; see
+   ``plans.avro_job._write_tasks``), so each bin's rows are written by one
+   task into one part file;
 2. ``finalize_template_layout`` MOVES each staged part to its rendered final
    path.  A move is one filesystem metadata op per output bin — O(bins
    touched this batch), never O(bytes) — except on object stores where a
@@ -22,6 +24,12 @@ directories, not filenames), so template mode is a two-phase sink:
    download-append-reupload, worker/FileCache.kt:61-103, but paid at most
    once per bin instead of once per append).  Moves run on a thread pool:
    S3/ABFS metadata latency dominates, not CPU.
+
+On a checksummed filesystem (Hadoop's local FS) the staged parts carry
+hidden ``.crc`` sidecars.  Files are placed through the raw filesystem
+underneath, so no sidecar follows them into the analyst-facing tree, and a
+replaced destination is deleted through the checksummed one, so its old
+sidecar goes with it (a stale one fails every later checksummed read).
 
 Append semantics across batches match the reference: when the destination
 file already exists (a later batch touched an old bin), the staged part is
@@ -47,6 +55,7 @@ import re
 from concurrent.futures import ThreadPoolExecutor
 from urllib.parse import unquote, urlparse
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
@@ -311,6 +320,13 @@ def finalize_template_layout(
     HPath = jvm.org.apache.hadoop.fs.Path
     staging_path = HPath(staging_dir)
     fs = staging_path.getFileSystem(hconf)
+    # ``place_fs`` creates and renames without .crc sidecars; ``fs`` reads
+    # (verifying staged parts) and deletes (taking sidecars along).
+    place_fs = (
+        fs.getRawFileSystem()
+        if is_instance_of(spark.sparkContext._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem")
+        else fs
+    )
     if apply_local_attrs:
         # Gate on the TARGET's actual filesystem (a scheme-less path can
         # resolve to hdfs:// via fs.defaultFS): POSIX attributes exist
@@ -433,7 +449,7 @@ def finalize_template_layout(
             # Metadata-only on HDFS; rename signals failure by
             # RETURNING false (it does not raise) — fall through to
             # the copy path rather than silently dropping the part.
-            if fs.rename(HPath(parts[0][0]), dest):
+            if place_fs.rename(HPath(parts[0][0]), dest):
                 _store_attrs(dest.toString())
                 return dest.toString()
         # Append/merge path (existing destination or a bin split
@@ -446,14 +462,14 @@ def finalize_template_layout(
             chunks.append(_read_bytes(fs, HPath(p)))
         merged = _merge_csv_like(chunks, is_csv=is_csv, codec=codec)
         tmp = HPath(dest.getParent(), f".{dest.getName()}.tmp")
-        out = fs.create(tmp, True)
+        out = place_fs.create(tmp, True)
         try:
             out.write(bytearray(merged))
         finally:
             out.close()
         if fs.exists(dest):
             fs.delete(dest, False)
-        if not fs.rename(tmp, dest):
+        if not place_fs.rename(tmp, dest):
             raise RuntimeError(
                 f"finalize_template_layout: rename {tmp} -> {dest} failed"
             )
@@ -469,7 +485,7 @@ def finalize_template_layout(
         for d in sorted(sidecar_dirs):
             sc = HPath(d, f"schema-{topic}.json")
             if not fs.exists(sc):
-                out = fs.create(sc, False)
+                out = place_fs.create(sc, False)
                 try:
                     out.write(bytearray(schema_json, "utf-8"))
                 finally:

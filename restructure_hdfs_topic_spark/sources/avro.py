@@ -3,29 +3,39 @@ record source, and filename→offset parsing — the reference's entire input
 side (source/GeneralSourceStorageWalker.kt:18-33, worker/RestructureWorker.kt:178-191,
 accounting/TopicPartitionOffsetRange.kt:50-61).
 
-Spark-first design, with no dependency on the external spark-avro
-module: records are decoded by a pure-Python implementation of the
-PUBLIC Avro 1.x object-container spec
-(https://avro.apache.org/docs/1.11.1/specification/) running INSIDE
-executors: ``spark.read.format("binaryFile")`` distributes the files,
-``mapInPandas`` decodes each file to Arrow record batches.  Kafka
-Connect S3 sink files are bounded (one offset range each), so
-whole-file bytes per task is the natural unit — the reference does
-exactly the same download-then-read (source/S3SourceStorage.kt:76-100).
+Batch decode (``read_avro``) is Spark's own Avro file source, read by its
+class name ``org.apache.spark.sql.avro.AvroFileFormat``: Spark's spark-sql
+jar ships the class but does not register the short name ``avro``.
+Records decode in JVM tasks, so neither the restructure job nor its
+cleaner starts a Python worker.  Every file resolves against one reader
+schema, the by-name union of the files' embedded writer schemas
+(``avro_reader_schema``), so a topic whose schema evolved mid-stream
+loses no field, enum symbol or union branch, whichever file came first.
+The accounting columns come from the scan's ``_metadata`` (file path,
+modification time) and ``FILENAME_RE``.  Spark's file scans read every
+column as nullable; ``record_struct`` gives the Avro schema's own
+nullability (the ``schema-<topic>.json`` sidecars use it).
 
-Per-record offsets (O12) are assigned AT THE SOURCE: the decoder knows
-each record's index within its file, so ``offset = offset_from + index``
-costs nothing — a column-expression form (row_number over a per-file
-window) would shuffle the whole corpus.
+Per-record offsets (O12): ``offset = offset_from + index-in-file``, the
+index being the row number in a window over the file ordered by split
+start, then by read order within the split.  This stays exact when Spark
+splits one large file across tasks at sync markers.  The window costs one
+shuffle, and Catalyst prunes it from any plan that never reads ``offset``
+(the cleaner's).
 
-Scale: one task per source file (binaryFile splits at file granularity);
-1000 executors chew a million files without driver involvement beyond the
-listing, which is the same O(#files) metadata the reference's walker holds.
+Streaming (``streaming.service.read_avro_stream``) still decodes with the
+pure-Python container kernel (``make_avro_decoder``, an implementation of
+the PUBLIC Avro 1.x object-container spec) inside ``mapInPandas``: the
+kernel knows each record's index in its file, and Structured Streaming
+rejects the non-time window that exact offsets need from a JVM scan.  The
+kernel decodes each file with its own writer schema and resolves the
+values against the same reader schema (``_project``), so both decoders
+return the same rows; ``tests/test_avro_decode.py`` checks both against
+the encoded records across an evolving schema.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import re
@@ -34,7 +44,7 @@ import zlib
 from dataclasses import dataclass
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -710,10 +720,13 @@ ACCOUNTING_FIELDS = [
 
 
 def read_schema(path: str, opener=open) -> Any:
-    """Read just the container header of one file (driver-side, a few KB).
-    ``opener`` abstracts the byte source for Hadoop-FS URIs."""
+    """Read just the container header of one file (driver-side, a few KB);
+    None for an empty file.  ``opener`` abstracts the byte source for
+    Hadoop-FS URIs."""
     with opener(path, "rb") as fh:
         head = fh.read(65536)
+    if not head:
+        return None
     try:
         return AvroContainer.parse(head).schema
     except (EOFError, IndexError):
@@ -726,83 +739,284 @@ def read_schema(path: str, opener=open) -> Any:
 
 def union_avro_schemas(schemas: list) -> Any:
     """Union-by-name merge of Avro record schemas (SURVEY §1.3: schema
-    evolution across files within a topic).  Fields present in any file
-    survive; same-named record fields merge recursively; on a genuine type
-    conflict the FIRST file's type wins (older readers' behavior).
-    Nullable unions ``["null", T]`` merge element-wise."""
+    evolution across files within a topic), such that Avro schema
+    resolution reads every file against the result.  Fields present in any
+    file survive; same-named record fields merge recursively; enums keep
+    every symbol in first-seen order; unions keep every branch, merging
+    branches of the same type; a numeric type widens (int -> long -> float
+    -> double).  On any other type conflict the FIRST file's type wins.
+    A field that some schema lacks becomes nullable with a null default
+    (``_optional_where_missing``)."""
 
     def merge(a, b):
-        if (
-            isinstance(a, dict)
-            and a.get("type") == "record"
-            and isinstance(b, dict)
-            and b.get("type") == "record"
-        ):
-            out = [dict(f) for f in a["fields"]]
-            names = {f["name"]: i for i, f in enumerate(out)}
-            for f in b["fields"]:
-                if f["name"] in names:
-                    i = names[f["name"]]
-                    out[i] = {**out[i], "type": merge(out[i]["type"], f["type"])}
+        if isinstance(a, list) or isinstance(b, list):
+            out = list(a) if isinstance(a, list) else [a]
+            for branch in b if isinstance(b, list) else [b]:
+                i = _related_branch(out, branch)
+                if i is None:
+                    out.append(branch)
                 else:
-                    out.append(dict(f))
-            return {**a, "fields": out}
-        if isinstance(a, list) and isinstance(b, list) and len(a) == len(b):
-            return [merge(x, y) for x, y in zip(a, b)]
+                    out[i] = merge(out[i], branch)
+            return out if len(out) > 1 else out[0]
+        if isinstance(a, dict) and isinstance(b, dict) and a["type"] == b["type"]:
+            kind = a["type"]
+            if kind == "record":
+                out = [dict(f) for f in a["fields"]]
+                names = {f["name"]: i for i, f in enumerate(out)}
+                for f in b["fields"]:
+                    if f["name"] in names:
+                        i = names[f["name"]]
+                        out[i] = {**out[i], "type": merge(out[i]["type"], f["type"])}
+                    else:
+                        out.append(dict(f))
+                return {**a, "fields": out}
+            if kind == "enum":
+                return {**a, "symbols": a["symbols"] + [x for x in b["symbols"] if x not in a["symbols"]]}
+            if kind == "array":
+                return {**a, "items": merge(a["items"], b["items"])}
+            if kind == "map":
+                return {**a, "values": merge(a["values"], b["values"])}
+        rank_a = _NUMERIC_RANK.get(_type_name(a))
+        rank_b = _NUMERIC_RANK.get(_type_name(b))
+        if rank_a is not None and rank_b is not None and rank_b > rank_a:
+            return b
         return a
 
     merged = schemas[0]
     for s in schemas[1:]:
         merged = merge(merged, s)
+    for s in schemas:
+        merged = _optional_where_missing(merged, s)
     return merged
 
 
-def read_avro(spark: SparkSession, paths: list[str]) -> DataFrame:
+# Avro's numeric promotions: a wider type reads every narrower one.
+_NUMERIC_RANK = {"int": 0, "long": 1, "float": 2, "double": 3}
+
+
+def _type_name(node: Any) -> str:
+    """What Avro matches union branches by: a named type's name, else its
+    type."""
+    if isinstance(node, str):
+        return node
+    return node["name"] if node["type"] in ("record", "enum", "fixed") else node["type"]
+
+
+def _related_branch(branches: list, node: Any) -> int | None:
+    """Index of the branch in ``branches`` of ``node``'s type, else of the
+    first numeric branch when ``node`` is numeric; None if neither."""
+    names = [_type_name(b) for b in branches]
+    if _type_name(node) in names:
+        return names.index(_type_name(node))
+    if _type_name(node) not in _NUMERIC_RANK:
+        return None
+    return next((i for i, n in enumerate(names) if n in _NUMERIC_RANK), None)
+
+
+def _nullable(t: Any) -> list:
+    """``t`` as a union whose FIRST branch is null, so ``default: null``
+    is a legal default for it."""
+    return ["null"] + [b for b in t if b != "null"] if isinstance(t, list) else ["null", t]
+
+
+def _optional_where_missing(reader: Any, writer: Any) -> Any:
+    """``reader`` with every record field that ``writer`` lacks (at any
+    depth) typed ``["null", T]`` with ``default: null``: Avro schema
+    resolution fills a missing field from its default and fails without
+    one, and a missing field reads as null."""
+    if isinstance(reader, dict) and isinstance(writer, dict):
+        kind = reader.get("type")
+        if kind != writer.get("type"):
+            return reader
+        if kind == "record":
+            have = {f["name"]: f["type"] for f in writer["fields"]}
+            return {
+                **reader,
+                "fields": [
+                    {**f, "type": _optional_where_missing(f["type"], have[f["name"]])}
+                    if f["name"] in have
+                    else {**f, "type": _nullable(f["type"]), "default": None}
+                    for f in reader["fields"]
+                ],
+            }
+        if kind == "array":
+            return {**reader, "items": _optional_where_missing(reader["items"], writer["items"])}
+        if kind == "map":
+            return {**reader, "values": _optional_where_missing(reader["values"], writer["values"])}
+        return reader
+    if not (isinstance(reader, list) or isinstance(writer, list)):
+        return reader
+    # A union on either side: pair each reader branch with the writer's
+    # branch of the same type.
+    w_branches = writer if isinstance(writer, list) else [writer]
+    out = []
+    for r in reader if isinstance(reader, list) else [reader]:
+        i = _related_branch(w_branches, r)
+        out.append(r if i is None else _optional_where_missing(r, w_branches[i]))
+    return out if isinstance(reader, list) else out[0]
+
+
+def _reader_node(node: Any, namespace: str, defined: set[str]) -> Any:
+    """One node of the reader schema: ``logicalType`` annotations dropped
+    (a ``timestamp-millis`` long reads as a long, as ``avro_type_to_spark``
+    types it) and every named type that the header parse inlined more than
+    once emitted again as a reference by its full name (Avro forbids
+    redefining a name)."""
+    if isinstance(node, list):
+        return [_reader_node(b, namespace, defined) for b in node]
+    if isinstance(node, str):
+        return node
+    node = {k: v for k, v in node.items() if k != "logicalType"}
+    kind = node["type"]
+    if kind in ("record", "enum", "fixed"):
+        name = node["name"]
+        if "." in name:
+            full, namespace = name, name.rsplit(".", 1)[0]
+        else:
+            namespace = node.get("namespace", namespace)
+            full = f"{namespace}.{name}" if namespace else name
+        if full in defined:
+            return full
+        defined.add(full)
+        if kind == "record":
+            node["fields"] = [
+                {**f, "type": _reader_node(f["type"], namespace, defined)} for f in node["fields"]
+            ]
+    elif kind == "array":
+        node["items"] = _reader_node(node["items"], namespace, defined)
+    elif kind == "map":
+        node["values"] = _reader_node(node["values"], namespace, defined)
+    return node
+
+
+def avro_reader_schema(schemas: list) -> dict:
+    """The reader schema that Spark's Avro source resolves every file
+    against: ``union_avro_schemas`` with logical types dropped, so its
+    Spark types equal ``avro_type_to_spark``'s."""
+    return _reader_node(union_avro_schemas(schemas), "", set())
+
+
+# Spark's own Avro file source.  The spark-sql jar ships this class but
+# does not register its short name ``avro``, so it is addressed by class.
+AVRO_SOURCE = "org.apache.spark.sql.avro.AvroFileFormat"
+
+
+def read_avro(spark: SparkSession, paths: list[str], schemas: list | None = None) -> DataFrame:
     """O2: DataFrame of Avro records with accounting columns
-    (filename, topic, partition, offset, mtime) appended, decoded by the
-    pure-Python container reader inside executors.  Offsets are exact
-    per-record Kafka offsets (offset_from + index-in-file,
-    worker/RestructureWorker.kt:116-131).
+    (filename, topic, partition, offset, mtime) appended, decoded by
+    Spark's Avro source in JVM tasks.  Offsets are exact per-record Kafka
+    offsets (offset_from + index-in-file, worker/RestructureWorker.kt:116-131;
+    see the module docstring).  Files whose name is not a Kafka-Connect
+    name yield no rows; empty files are skipped.  A caller that already
+    holds ``writer_schemas(spark, paths)`` passes its two parts as
+    ``paths`` and ``schemas``, so no header is read twice.
     """
     if not paths:
         raise ValueError("read_avro: empty path list")
-    schema = union_schema_for_paths(spark, paths)
-    decode, out_schema = make_avro_decoder(schema)
-    binary = (
-        spark.read.format("binaryFile")
-        .load(paths)
-        .select("path", "modificationTime", "content")
+    if schemas is None:
+        paths, schemas = writer_schemas(spark, paths)
+    if not paths:
+        raise ValueError("read_avro: every file is empty")
+    reader = json.dumps(avro_reader_schema(schemas))
+    raw = spark.read.format(AVRO_SOURCE).option("avroSchema", reader).load(paths)
+    fields = [F.col(f"`{c}`") for c in raw.columns]
+    name_rx = FILENAME_RE.pattern
+    named = raw.select(
+        *fields,
+        F.regexp_extract("_metadata.file_path", "[^/]*$", 0).alias("filename"),
+        F.col("_metadata.file_modification_time").alias("mtime"),
+        F.col("_metadata.file_path").alias("__file"),
+        F.col("_metadata.file_block_start").alias("__split"),
+    ).where(F.col("filename").rlike(name_rx))
+    in_file = Window.partitionBy("__file").orderBy("__split", "__read")
+    return named.withColumn("__read", F.monotonically_increasing_id()).select(
+        *fields,
+        "filename",
+        F.regexp_extract("filename", name_rx, 1).alias("topic"),
+        F.regexp_extract("filename", name_rx, 2).cast("int").alias("partition"),
+        (
+            F.regexp_extract("filename", name_rx, 3).cast("long")
+            + F.row_number().over(in_file)
+            - 1
+        ).alias("offset"),
+        "mtime",
     )
-    return binary.mapInPandas(decode, schema=out_schema)
 
 
-def union_schema_for_paths(spark: SparkSession, paths: list[str]):
-    """Union the embedded writer schemas of the given container files.
+def writer_schemas(spark: SparkSession, paths: list[str]) -> tuple[list[str], list]:
+    """(the non-empty container files, their distinct embedded writer
+    schemas in first-seen order).
 
     Per-file header reads are a few KB each (driver-side, path count is
-    bounded by maxFilesPerTopic); distinct headers union by name so a
-    topic whose schema evolved mid-stream loses no fields.  URI paths
-    (hdfs://, s3a://, file://) read through the cluster FileSystem.
-    Shared by the batch reader (``read_avro``) and the Structured
-    Streaming source (``streaming.service.read_avro_stream``)."""
-    headers = {}
+    bounded by maxFilesPerTopic).  URI paths (hdfs://, s3a://, file://)
+    read through the cluster FileSystem."""
+    kept, distinct = [], {}
     for p in paths:
         opener = _hadoop_opener(spark) if _URI_RE.match(p) else open
-        headers.setdefault(json.dumps(read_schema(p, opener), sort_keys=True), p)
-    schemas = [json.loads(s) for s in headers]
-    return schemas[0] if len(schemas) == 1 else union_avro_schemas(schemas)
+        schema = read_schema(p, opener)
+        if schema is not None:
+            kept.append(p)
+            distinct.setdefault(json.dumps(schema, sort_keys=True), schema)
+    return kept, list(distinct.values())
+
+
+def record_struct(avro_schema: Any) -> StructType:
+    """Spark type of the record columns ``read_avro`` returns for the
+    reader schema ``avro_schema``: the top-level record's fields, or one
+    ``value`` column for a non-record schema.  Unlike the columns of a
+    Spark file scan, which are all nullable, its fields are nullable only
+    where the Avro type is a union with null."""
+    record_type, _ = avro_type_to_spark(avro_schema)
+    if not isinstance(record_type, StructType):
+        record_type = StructType([StructField("value", record_type, True)])
+    return record_type
+
+
+def _project(value: Any, writer: Any, reader: Any) -> Any:
+    """``value``, decoded with its file's ``writer`` schema, in the shape
+    the ``reader`` schema gives it, as Avro schema resolution does in
+    Spark's Avro source: a union value lands in the reader branch of its
+    type (``memberN`` among the reader's non-null branches), a record field
+    the writer lacks reads as null, an int read as a float becomes one."""
+    if value is None:
+        return None
+    if isinstance(writer, list) or isinstance(reader, list):
+        w = [b for b in (writer if isinstance(writer, list) else [writer]) if b != "null"]
+        r = [b for b in (reader if isinstance(reader, list) else [reader]) if b != "null"]
+        if len(w) > 1:
+            ((member, value),) = value.items()
+            writer = w[int(member[len("member"):])]
+        else:
+            writer = w[0]
+        i = _related_branch(r, writer)
+        if i is None:
+            raise ValueError(f"no branch of {reader!r} reads {writer!r}")
+        value = _project(value, writer, r[i])
+        return {f"member{i}": value} if len(r) > 1 else value
+    kind = writer if isinstance(writer, str) else writer["type"]
+    if kind == "record":
+        have = {f["name"]: f["type"] for f in writer["fields"]}
+        return {
+            f["name"]: _project(value.get(f["name"]), have[f["name"]], f["type"]) if f["name"] in have else None
+            for f in reader["fields"]
+        }
+    if kind == "array":
+        return [_project(v, writer["items"], reader["items"]) for v in value]
+    if kind == "map":
+        return {k: _project(v, writer["values"], reader["values"]) for k, v in value.items()}
+    if _NUMERIC_RANK.get(_type_name(reader), 0) >= _NUMERIC_RANK["float"]:
+        return float(value)
+    return value
 
 
 def make_avro_decoder(avro_schema):
     """Build the (mapInPandas kernel, output StructType) pair that decodes
     ``binaryFile`` rows (path, modificationTime, content) into records with
-    accounting columns.  Shared by the batch reader above and the
+    accounting columns, the rows ``read_avro`` returns.  Used by the
     Structured Streaming source (``streaming.service.read_avro_stream``) —
     each container file is parsed with its OWN embedded writer schema and
-    projected onto the sample schema's top-level fields."""
-    record_type, _ = avro_type_to_spark(avro_schema)
-    if not isinstance(record_type, StructType):
-        record_type = StructType([StructField("value", record_type, True)])
+    projected onto the reader schema ``avro_schema`` (``_project``)."""
+    record_type = record_struct(avro_schema)
     out_schema = StructType(list(record_type.fields) + ACCOUNTING_FIELDS)
     field_names = [f.name for f in record_type.fields]
 
@@ -820,8 +1034,11 @@ def make_avro_decoder(avro_schema):
                 if parsed is None:
                     continue
                 topic, partition, ofrom, _ = parsed
+                resolve = container.schema != avro_schema
                 rows = []
                 for i, rec in enumerate(container.records()):
+                    if resolve:
+                        rec = _project(rec, container.schema, avro_schema)
                     if not isinstance(rec, dict):
                         rec = {"value": rec}
                     row = {name: rec.get(name) for name in field_names}

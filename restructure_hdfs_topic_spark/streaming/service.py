@@ -10,7 +10,8 @@ Two forms here:
 - ``run_service``: the driver-loop scheduler over the batch Avro job and
   the cleaner, the reference's own shape.
 - Structured Streaming: ``read_avro_stream`` is a ``binaryFile`` file
-  stream decoded by the batch reader's container kernel; feed it through
+  stream decoded by the pure-Python container kernel (the batch reader
+  decodes in the JVM; see ``sources/avro.py``); feed it through
   ``plans.avro_job.organize_avro_records`` into ``start_service`` (Hive
   layout) or ``start_template_service`` (the reference's rendered tree),
   with ``trigger(processingTime=...)`` (service loop) or ``availableNow``
@@ -99,9 +100,11 @@ def start_template_service(
         fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
         if fs.exists(hpath):
             fs.delete(hpath, True)
-        from restructure_hdfs_topic_spark.plans.avro_job import _write_topic
+        from restructure_hdfs_topic_spark.plans.avro_job import _write_tasks, _write_topic
 
-        _write_topic(batch_df, cfg, topic)
+        # The kernel's rows carry the Avro schema's own nullability.  A
+        # micro-batch's input size is not known here: one task per core.
+        _write_topic(batch_df, cfg, topic, batch_df.schema, _write_tasks(spark, 0))
 
     writer = (
         organized.writeStream.foreachBatch(_sink)
@@ -122,9 +125,9 @@ def read_avro_stream(
 ) -> DataFrame:
     """Structured Streaming Avro source for one topic directory — the
     streaming form of the reference's polling service over its REAL input
-    format: a ``binaryFile`` file stream decoded by the same pure-Python
-    container kernel as the batch reader (each file's embedded writer
-    schema, per-record Kafka offsets).  The stream's checkpoint is the
+    format: a ``binaryFile`` file stream decoded by the pure-Python
+    container kernel (each file's embedded writer schema, per-record Kafka
+    offsets) into the rows the batch reader's JVM scan returns.  The stream's checkpoint is the
     seen-file ledger (engine-managed exactly-once; the batch path's offset
     state is the replayable equivalent)."""
     from pyspark.sql.types import (
@@ -138,8 +141,9 @@ def read_avro_stream(
 
     from restructure_hdfs_topic_spark.sources.avro import (
         make_avro_decoder,
-        union_schema_for_paths,
+        union_avro_schemas,
         walk_topics,
+        writer_schemas,
     )
 
     topics = walk_topics(topic_dir, spark=spark)
@@ -149,11 +153,8 @@ def read_avro_stream(
     # before the stream started loses no fields (files arriving later with
     # NEW fields still project onto this fixed stream schema — restart the
     # stream to pick them up; Structured Streaming schemas are static).
-    decode, out_schema = make_avro_decoder(
-        union_schema_for_paths(
-            spark, [f.path for files in topics.values() for f in files]
-        )
-    )
+    paths = [f.path for files in topics.values() for f in files]
+    decode, out_schema = make_avro_decoder(union_avro_schemas(writer_schemas(spark, paths)[1]))
     bin_schema = StructType(
         [
             StructField("path", StringType()),

@@ -1,13 +1,16 @@
 """Kafka-Connect Avro source trees for tests, with no external fixtures:
-an Avro object-container writer (null codec), a datum encoder for the
-schema subset RADAR topics use, and a writer of
+an Avro object-container writer (null, deflate, bzip2, xz or snappy
+blocks), a datum encoder for every Avro type but float, and a writer of
 ``<topic>/partition=<p>/<topic>+<p>+<from>+<to>.avro`` files."""
 
 from __future__ import annotations
 
+import bz2
 import json
+import lzma
 import os
 import struct
+import zlib
 
 # ObservationKey + a small measurement value: a double event time, a
 # nullable field, a map and an array (the data-dependent CSV columns).
@@ -56,47 +59,114 @@ def _string(s: str) -> bytes:
     return zz(len(raw)) + raw
 
 
-def encode(schema, value) -> bytes:
-    """Binary encoding of ``value`` under ``schema`` (records, unions,
-    maps, arrays and the primitive types the schemas above use)."""
-    if isinstance(schema, list):  # union: first branch that fits
-        branch = next(
-            i
-            for i, s in enumerate(schema)
-            if (s == "null") == (value is None)
-        )
-        return zz(branch) + encode(schema[branch], value)
+_PY_TYPES = {
+    "null": type(None),
+    "boolean": bool,
+    "int": int,
+    "long": int,
+    "double": (int, float),
+    "bytes": bytes,
+    "string": str,
+    "enum": str,
+    "fixed": bytes,
+    "record": dict,
+    "map": dict,
+    "array": list,
+}
+
+
+def _fits(schema, value, named: dict) -> bool:
+    schema = named.get(schema, schema)
+    kind = schema if isinstance(schema, str) else schema["type"]
+    if isinstance(value, bool) and kind != "boolean":
+        return False
+    return isinstance(value, _PY_TYPES[kind])
+
+
+def encode(schema, value, named: dict | None = None) -> bytes:
+    """Binary encoding of ``value`` under ``schema``: records, enums,
+    fixed, references to them by (unqualified) name, unions (the first
+    branch whose Python type fits), maps, arrays and every primitive but
+    float.  ``named`` collects the named types defined so far."""
+    named = {} if named is None else named
+    schema = named.get(schema, schema) if isinstance(schema, str) else schema
+    if isinstance(schema, list):
+        branch = next(i for i, s in enumerate(schema) if _fits(s, value, named))
+        return zz(branch) + encode(schema[branch], value, named)
     if isinstance(schema, dict):
         kind = schema["type"]
+        if "name" in schema:
+            named[schema["name"]] = schema
         if kind == "record":
-            return b"".join(encode(f["type"], value[f["name"]]) for f in schema["fields"])
+            return b"".join(encode(f["type"], value[f["name"]], named) for f in schema["fields"])
+        if kind == "enum":
+            return zz(schema["symbols"].index(value))
+        if kind == "fixed":
+            assert len(value) == schema["size"]
+            return value
         if kind == "map":
-            body = b"".join(_string(k) + encode(schema["values"], v) for k, v in value.items())
+            body = b"".join(_string(k) + encode(schema["values"], v, named) for k, v in value.items())
             return (zz(len(value)) + body if value else b"") + zz(0)
         if kind == "array":
-            body = b"".join(encode(schema["items"], v) for v in value)
+            body = b"".join(encode(schema["items"], v, named) for v in value)
             return (zz(len(value)) + body if value else b"") + zz(0)
-        return encode(kind, value)
+        return encode(kind, value, named)
     if schema == "null":
         return b""
+    if schema == "boolean":
+        return b"\x01" if value else b"\x00"
     if schema in ("int", "long"):
         return zz(value)
     if schema == "double":
         return struct.pack("<d", value)
+    if schema == "bytes":
+        return zz(len(value)) + value
     if schema == "string":
         return _string(value)
     raise ValueError(f"unsupported schema {schema!r}")
 
 
-def build_container(schema: dict, encoded_datums: bytes, n: int) -> bytes:
-    """One-block Avro object container (null codec) holding ``n`` datums."""
-    meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": b"null"}
+def _compress(block: bytes, codec: str, snappy) -> bytes:
+    if codec == "deflate":
+        co = zlib.compressobj(6, zlib.DEFLATED, -15)
+        return co.compress(block) + co.flush()
+    if codec == "bzip2":
+        return bz2.compress(block)
+    if codec == "xz":
+        return lzma.compress(block)
+    if codec == "snappy":  # raw snappy + big-endian CRC32 of the input
+        return snappy(block) + struct.pack(">I", zlib.crc32(block) & 0xFFFFFFFF)
+    assert codec == "null", codec
+    return block
+
+
+SYNC = bytes(range(16))
+
+
+def _header(schema: dict, codec: str) -> bytes:
+    meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": codec.encode()}
     hdr = b"Obj\x01" + zz(len(meta))
     for k, v in meta.items():
         hdr += zz(len(k.encode())) + k.encode() + zz(len(v)) + v
-    hdr += zz(0)
-    sync = bytes(range(16))
-    return hdr + sync + zz(n) + zz(len(encoded_datums)) + encoded_datums + sync
+    return hdr + zz(0) + SYNC
+
+
+def container(schema: dict, records: list, codec: str = "null", block_records: int | None = None, snappy=None) -> bytes:
+    """Avro object container of ``records`` in blocks of ``block_records``
+    (default: one block), each compressed with ``codec``.  ``snappy``
+    compresses raw bytes for the ``snappy`` codec."""
+    out = _header(schema, codec)
+    step = block_records or max(len(records), 1)
+    for i in range(0, len(records), step):
+        chunk = records[i : i + step]
+        data = _compress(b"".join(encode(schema, r) for r in chunk), codec, snappy)
+        out += zz(len(chunk)) + zz(len(data)) + data + SYNC
+    return out
+
+
+def build_container(schema: dict, encoded_datums: bytes, n: int) -> bytes:
+    """One-block Avro object container (null codec) holding ``n`` datums."""
+    return _header(schema, "null") + zz(n) + zz(len(encoded_datums)) + encoded_datums + SYNC
 
 
 def reading(project, user: str, t: float, level=None, tags=None, samples=None) -> dict:
@@ -121,17 +191,17 @@ def write_topic_file(
     records: list[dict],
     mtime_s: float | None = None,
     schema: dict = RECORD_SCHEMA,
+    **container_kw,
 ) -> str:
     """Write ``records`` (``schema`` datums) as the Kafka-Connect file
     covering offsets ``offset_from .. offset_from + len(records) - 1``;
-    returns its path."""
+    returns its path.  ``container_kw`` goes to ``container``."""
     part_dir = os.path.join(root, topic, f"partition={partition}")
     os.makedirs(part_dir, exist_ok=True)
     offset_to = offset_from + len(records) - 1
     path = os.path.join(part_dir, f"{topic}+{partition}+{offset_from:010d}+{offset_to:010d}.avro")
-    datums = b"".join(encode(schema, r) for r in records)
     with open(path, "wb") as fh:
-        fh.write(build_container(schema, datums, len(records)))
+        fh.write(container(schema, records, **container_kw))
     if mtime_s is not None:
         os.utime(path, ns=(int(mtime_s * 1e9), int(mtime_s * 1e9)))
     return path

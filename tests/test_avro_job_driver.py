@@ -2,22 +2,32 @@
 Kafka-Connect trees (tests/avro_tree.py):
 
 - polls, re-uploads and the committed offset intervals, end to end, with
-  no Python RDD (``Scan ExistingRDD``) and no Python UDF in any plan the
-  job executes — the decode's ``MapInPandas`` is the only Python stage;
+  no Python RDD (``Scan ExistingRDD``) and no Python exec node in any
+  plan the job executes;
+- a template-layout restructure, an append that merges into an existing
+  bin and the cleaner: no Python exec node in any plan, no ``.crc``
+  sidecar in the output tree, schema sidecars typed by the Avro schema;
 - differential properties: the driver-side O4 index against the
   DataFrame seen filter ``filter_unseen_files``, and the attempt headers
   derived from collected fingerprints against ``discover_dynamic_columns``;
 - keep-last dedup keyed on a map field.
 """
 
+import json
 import os
 
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from restructure_hdfs_topic_spark.config import RestructureConfig, WorkerConfig
+from restructure_hdfs_topic_spark.config import (
+    CleanerConfig,
+    PathConfig,
+    RestructureConfig,
+    WorkerConfig,
+)
 from restructure_hdfs_topic_spark.operators.offsets import (
     committed_intervals,
     committed_range_index,
@@ -25,12 +35,26 @@ from restructure_hdfs_topic_spark.operators.offsets import (
     filter_unseen_files,
     read_offsets,
 )
-from restructure_hdfs_topic_spark.plans.avro_job import run_avro_restructure_job
-from restructure_hdfs_topic_spark.sources.avro import SourceFile, manifest_df
-from tests.avro_tree import reading, write_topic_file
+from restructure_hdfs_topic_spark.plans.avro_job import (
+    run_avro_cleaner_job,
+    run_avro_restructure_job,
+)
+from restructure_hdfs_topic_spark.sources.avro import SourceFile, manifest_df, record_struct
+from tests.avro_tree import RECORD_SCHEMA, reading, write_topic_file
 
 TOPIC = "poll_topic"
 BASE_S = 1_700_000_000.123456789  # sub-µs digits survive into the mtime
+
+
+# Physical operators that run Python workers: UDFs, pandas/Arrow maps and
+# grouped maps.
+PYTHON_EXECS = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "PythonMapInArrow",
+    "FlatMapGroupsInPandas",
+)
 
 
 def _executions(spark):
@@ -43,11 +67,20 @@ def _executions(spark):
     return out
 
 
-def _run(spark, src, cfg, now_s):
-    """One restructure iteration plus the plans it executed."""
+def _run(spark, src, cfg, now_s, job=run_avro_restructure_job):
+    """One ``job`` run (a restructure iteration by default) plus the plans
+    it executed."""
     before = max((i for i, _ in _executions(spark)), default=-1)
-    res = run_avro_restructure_job(spark, src, cfg, now_s=now_s)
+    res = job(spark, src, cfg, now_s=now_s)
     return res, [p for i, p in _executions(spark) if i > before]
+
+
+def _assert_no_python(plans):
+    assert plans
+    for plan in plans:
+        assert "Scan ExistingRDD" not in plan, plan
+        for node in PYTHON_EXECS:
+            assert node not in plan, plan
 
 
 def _state(spark, state_dir):
@@ -141,10 +174,67 @@ def test_two_polls_and_reupload_reprocess(spark, tmp_path):
     want.update({("u2", t(100 + i)): 1 for i in range(4)})
     assert dict(rows) == want
 
-    assert plans
-    for plan in plans:
-        assert "Scan ExistingRDD" not in plan, plan
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    _assert_no_python(plans)
+
+
+def test_restructure_append_and_cleaner_start_no_python_worker(spark, tmp_path):
+    """Template layout, CSV + gzip: a restructure pass, a poll whose file
+    merges into an existing bin, then the cleaner.  No executed plan
+    holds a Python exec node, and no cleaner plan a window; the output
+    tree holds no ``.crc`` sidecar, and the schema sidecar types the
+    record columns as the Avro schema does (non-union fields not
+    nullable); the cleaner deletes exactly the fully extracted files below
+    each partition's max offset and rolls nothing back."""
+    src = str(tmp_path / "in")
+    cfg = RestructureConfig(
+        target_dir=str(tmp_path / "out"),
+        state_dir=str(tmp_path / "state"),
+        format="csv",
+        compression="gzip",
+        worker=WorkerConfig(minimum_file_age_s=0),
+        cleaner=CleanerConfig(enable=True, age_days=1),
+        paths=PathConfig(layout="template"),
+    )
+    os.makedirs(cfg.state_dir)
+    hour = 1_600_000_000.0 - 1_600_000_000.0 % 3600
+
+    def recs(user, n, start=0):
+        return [reading("p", user, hour + 60 * (start + i), tags={"k": str(i)}) for i in range(n)]
+
+    old = [
+        write_topic_file(src, TOPIC, 0, 0, recs("u1", 3), mtime_s=BASE_S),
+        write_topic_file(src, TOPIC, 0, 3, recs("u1", 3, 3), mtime_s=BASE_S),
+        write_topic_file(src, TOPIC, 1, 0, recs("u2", 4), mtime_s=BASE_S),
+    ]
+    now = BASE_S + 10 * 86400
+    res, plans = _run(spark, src, cfg, now)
+    assert res["records_written"] == 10
+    # Same user and hour as the first two files: merges into their bin.
+    write_topic_file(src, TOPIC, 0, 6, recs("u1", 3, 6), mtime_s=BASE_S)
+    res, p = _run(spark, src, cfg, now)
+    plans += p
+    assert (res["files_processed"], res["records_written"]) == (1, 3)
+    cleaned, p = _run(spark, src, cfg, now, job=run_avro_cleaner_job)
+    plans += p
+    # The cleaner never reads ``offset``: the per-file numbering window of
+    # the decode is pruned from its plans.
+    assert p and not [q for q in p if "Window" in q]
+
+    _assert_no_python(plans)
+    out = [os.path.relpath(os.path.join(d, n), cfg.target_dir) for d, _s, ns in os.walk(cfg.target_dir) for n in ns]
+    assert not [f for f in out if f.endswith(".crc")], out
+    data = sorted(f for f in out if f.endswith(".csv.gz"))
+    assert len(data) == 2, data  # one bin per user
+    sidecars = [f for f in out if os.path.basename(f) == f"schema-{TOPIC}.json"]
+    assert len(sidecars) == 2, out  # one per user's topic dir
+    for f in sidecars:
+        with open(os.path.join(cfg.target_dir, f)) as fh:
+            sidecar = StructType.fromJson(json.load(fh))
+        assert sidecar == record_struct(RECORD_SCHEMA)
+        assert not sidecar["key"].nullable and not sidecar["key"].dataType["userId"].nullable
+        assert sidecar["key"].dataType["projectId"].nullable
+    assert sorted(cleaned["deleted"]) == sorted(old[:2])
+    assert cleaned["rolled_back"] == [] and cleaned["locked"] == []
 
 
 # -- differential: driver-side O4 index vs filter_unseen_files ---------------

@@ -747,7 +747,7 @@ def test_csv_attempt_files_carry_their_own_headers(spark, tmp_path):
         state_dir=str(tmp_path / "state"),
         format="csv",
     )
-    _write_topic(df, cfg, "t")
+    _write_topic(df, cfg, "t", df.schema, 2)
     by_bin: dict[str, str] = {}
     for p in glob.glob(str(tmp_path / "out" / "**" / "*.csv"), recursive=True):
         key = "attempt1" if "bin=b1_1" in p else "attempt0"
