@@ -12,12 +12,13 @@ pick the physical strategy. Package layout:
   sanitize/template, filename parsing, text analysis, vector math).
 - ``operators``  — dataflow operators (flatten, dedup, offset accounting,
   cleaner verification, similarity search, multimodal plumbing).
-- ``sources``    — Kafka-Connect topic walk, the Avro container decoder
-  (the only decode path) and the commit-range manifest.
+- ``sources``    — Kafka-Connect topic walk, the Avro decode (Spark's own
+  Avro source, the only decode path) and the commit-range manifest.
 - ``plans``      — end-to-end pipeline compositions: ``avro_job`` is the
   restructure job and its cleaner; the rest are the LLM-data pipelines.
 - ``streaming``  — service mode: the driver-loop scheduler and the
-  Structured Streaming Avro source and sinks (reference: worker/Job.kt).
+  Structured Streaming service, which runs the restructure job's per-topic
+  body on each micro-batch of new files (reference: worker/Job.kt).
 """
 
 __version__ = "0.1.0"

@@ -766,9 +766,46 @@ def _process_topic(spark, topic, aged, config, counters) -> None:
             "files_pending": 0,
         }
         return
+    n_records = restructure_files(
+        spark, topic, [f.path for f in pending], sum(f.size for f in pending), config
+    )
+    # last_processed is built in Spark from the double mtime (manifest_df's
+    # timestamp_seconds), so committed state matches the seen filter's
+    # file_micros bit for bit.
+    new_ranges = manifest_df(spark, pending).select(
+        "topic", "partition", "offset_from", "offset_to",
+        F.col("mtime").alias("last_processed"),
+    )
+    with timer.time("restructure.commitOffsets"):
+        commit_offsets(spark, config.state_dir, new_ranges)
+    counters["topics"][topic] = {
+        "records_written": n_records,
+        "files_processed": len(pending),
+        "files_pending": remaining,
+    }
+    counters["records_written"] += n_records
+    counters["files_processed"] += len(pending)
+    counters["files_pending"] += remaining
+
+
+def restructure_files(
+    spark: SparkSession, topic: str, paths: list[str], input_bytes: int, config: RestructureConfig
+) -> int:
+    """Write one topic's source files to the target: decode, organize,
+    keep-last dedup and the partitioned write, the body that both the
+    batch job (``_process_topic``) and the streaming service run.
+    ``paths`` come in (partition, offset) order, so the reader schema
+    unions the headers in the same order either way; ``input_bytes``
+    sizes the write (``_write_tasks``).  Returns the records written.
+    Empty files are skipped, and when every file is empty nothing is
+    written."""
+    from restructure_hdfs_topic_spark.progress import timer
+
     with timer.time("restructure.readAvro"):
         # The headers once: the reader schema, and the sidecar's types.
-        paths, schemas = writer_schemas(spark, [f.path for f in pending])
+        paths, schemas = writer_schemas(spark, paths)
+        if not paths:
+            return 0
         records = read_avro(spark, paths, schemas)
     organized = organize_avro_records(records, config.paths.bin_format)
     organized = organized.withColumn("topic", F.lit(topic))
@@ -799,23 +836,7 @@ def _process_topic(spark, topic, aged, config, counters) -> None:
             config,
             topic,
             record_struct(union_avro_schemas(schemas)),
-            _write_tasks(spark, sum(f.size for f in pending)),
+            _write_tasks(spark, input_bytes),
         )
     n_records = int(obs.get["n"])
-    # last_processed is built in Spark from the double mtime (manifest_df's
-    # timestamp_seconds), so committed state matches the seen filter's
-    # file_micros bit for bit.
-    new_ranges = manifest_df(spark, pending).select(
-        "topic", "partition", "offset_from", "offset_to",
-        F.col("mtime").alias("last_processed"),
-    )
-    with timer.time("restructure.commitOffsets"):
-        commit_offsets(spark, config.state_dir, new_ranges)
-    counters["topics"][topic] = {
-        "records_written": n_records,
-        "files_processed": len(pending),
-        "files_pending": remaining,
-    }
-    counters["records_written"] += n_records
-    counters["files_processed"] += len(pending)
-    counters["files_pending"] += remaining
+    return n_records

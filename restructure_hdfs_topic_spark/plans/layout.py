@@ -199,17 +199,21 @@ def _decompress_chunk(raw: bytes, codec: str | None) -> str:
 
 
 def _compress_text(text: str, codec: str | None) -> bytes:
+    """``text`` encoded under ``codec``, with fixed timestamps in the gzip
+    header and the zip entry, so equal text gives equal bytes."""
     out = text.encode()
     if codec == "gz":
         import gzip
 
-        out = gzip.compress(out)
+        out = gzip.compress(out, mtime=0)
     elif codec == "zip":
         import zipfile
 
         buf = io.BytesIO()
         with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED, compresslevel=7) as zf:
-            zf.writestr("data", out)
+            entry = zipfile.ZipInfo("data", date_time=(1980, 1, 1, 0, 0, 0))
+            entry.external_attr = 0o600 << 16  # what writestr("data", ...) sets
+            zf.writestr(entry, out, zipfile.ZIP_DEFLATED, 7)
         out = buf.getvalue()
     return out
 

@@ -21,17 +21,8 @@ index being the row number in a window over the file ordered by split
 start, then by read order within the split.  This stays exact when Spark
 splits one large file across tasks at sync markers.  The window costs one
 shuffle, and Catalyst prunes it from any plan that never reads ``offset``
-(the cleaner's).
-
-Streaming (``streaming.service.read_avro_stream``) still decodes with the
-pure-Python container kernel (``make_avro_decoder``, an implementation of
-the PUBLIC Avro 1.x object-container spec) inside ``mapInPandas``: the
-kernel knows each record's index in its file, and Structured Streaming
-rejects the non-time window that exact offsets need from a JVM scan.  The
-kernel decodes each file with its own writer schema and resolves the
-values against the same reader schema (``_project``), so both decoders
-return the same rows; ``tests/test_avro_decode.py`` checks both against
-the encoded records across an evolving schema.
+(the cleaner's).  The streaming service (``streaming.service``) runs the
+same read on each micro-batch's files.
 """
 
 from __future__ import annotations
@@ -39,10 +30,8 @@ from __future__ import annotations
 import json
 import os
 import re
-import struct
-import zlib
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -60,7 +49,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 MAGIC = b"Obj\x01"
@@ -73,7 +61,7 @@ FILENAME_RE = re.compile(_FILENAME_RE_STR)
 
 
 # ---------------------------------------------------------------------------
-# Binary decoder (public Avro spec).
+# Container header (public Avro spec).
 # ---------------------------------------------------------------------------
 
 
@@ -111,129 +99,6 @@ class _Decoder:
 
     def read_utf8(self) -> str:
         return self.read_bytes().decode("utf-8")
-
-    def at_end(self) -> bool:
-        return self.pos >= len(self.buf)
-
-
-def _snappy_decompress(data: bytes) -> bytes:
-    """Pure-Python snappy raw-format decompressor (public format spec:
-    google/snappy format_description.txt).  Used only when the optional
-    python-snappy package is absent; Kafka Connect's Avro blocks are small,
-    so Python-speed decode is acceptable in the fallback path."""
-    pos = 0
-    # Preamble: uncompressed length, little-endian varint.
-    length = 0
-    shift = 0
-    while True:
-        b = data[pos]
-        pos += 1
-        length |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    out = bytearray()
-    while pos < len(data):
-        tag = data[pos]
-        pos += 1
-        kind = tag & 0x03
-        if kind == 0:  # literal
-            n = tag >> 2
-            if n >= 60:
-                extra = n - 59
-                n = int.from_bytes(data[pos : pos + extra], "little")
-                pos += extra
-            n += 1
-            out += data[pos : pos + n]
-            pos += n
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            n = ((tag >> 2) & 0x07) + 4
-            offset = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            n = (tag >> 2) + 1
-            offset = int.from_bytes(data[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            n = (tag >> 2) + 1
-            offset = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-        start = len(out) - offset
-        if start < 0:
-            raise ValueError("snappy copy before stream start")
-        for i in range(n):  # overlapping copies are byte-sequential
-            out.append(out[start + i])
-    if len(out) != length:
-        raise ValueError("snappy length mismatch")
-    return bytes(out)
-
-
-def _decode_value(dec: _Decoder, schema: Any) -> Any:
-    """Decode one value against a (parsed-JSON) Avro schema node."""
-    if isinstance(schema, str):
-        t = schema
-        if t == "null":
-            return None
-        if t == "boolean":
-            return dec.read(1) != b"\x00"
-        if t in ("int", "long"):
-            return dec.read_long()
-        if t == "float":
-            return struct.unpack("<f", dec.read(4))[0]
-        if t == "double":
-            return struct.unpack("<d", dec.read(8))[0]
-        if t == "bytes":
-            return dec.read_bytes()
-        if t == "string":
-            return dec.read_utf8()
-        raise ValueError(f"unknown Avro primitive {t!r}")
-    if isinstance(schema, list):  # union: branch index then value
-        idx = dec.read_long()
-        branch = schema[idx]
-        val = _decode_value(dec, branch)
-        non_null = [s for s in schema if s != "null"]
-        if len(non_null) <= 1 or branch == "null":
-            return val
-        # Multi-branch union: the Spark schema is a memberN struct
-        # (avro_type_to_spark, spark-avro's shape), so the decoded value must
-        # be wrapped as {memberJ: value} keyed by the branch's index among
-        # the non-null members — pyarrow fills the absent members with null.
-        return {f"member{non_null.index(branch)}": val}
-    t = schema["type"]
-    if t == "record":
-        return {f["name"]: _decode_value(dec, f["type"]) for f in schema["fields"]}
-    if t == "enum":
-        return schema["symbols"][dec.read_long()]
-    if t == "fixed":
-        return dec.read(schema["size"])
-    if t == "array":
-        out = []
-        while True:
-            n = dec.read_long()
-            if n == 0:
-                break
-            if n < 0:  # block with byte-size prefix
-                n = -n
-                dec.read_long()
-            for _ in range(n):
-                out.append(_decode_value(dec, schema["items"]))
-        return out
-    if t == "map":
-        out = {}
-        while True:
-            n = dec.read_long()
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                dec.read_long()
-            for _ in range(n):
-                k = dec.read_utf8()
-                out[k] = _decode_value(dec, schema["values"])
-        return out
-    # named-type reference or wrapped primitive {"type": "string", ...}
-    return _decode_value(dec, t)
 
 
 def _resolve_named_types(schema: Any, registry: dict[str, Any] | None = None) -> Any:
@@ -276,12 +141,11 @@ def _names_of(schema: dict) -> list[str]:
 
 @dataclass
 class AvroContainer:
-    """Parsed Avro object-container file (header + lazily-decoded blocks)."""
+    """The header of an Avro object-container file."""
 
     schema: Any
     codec: str
     sync: bytes
-    _dec: _Decoder
 
     @classmethod
     def parse(cls, data: bytes) -> "AvroContainer":
@@ -302,42 +166,7 @@ class AvroContainer:
         sync = dec.read(16)
         schema = _resolve_named_types(json.loads(meta["avro.schema"].decode("utf-8")))
         codec = meta.get("avro.codec", b"null").decode("utf-8")
-        return cls(schema=schema, codec=codec, sync=sync, _dec=dec)
-
-    def records(self) -> Iterator[Any]:
-        dec = self._dec
-        while not dec.at_end():
-            n_records = dec.read_long()
-            block = dec.read(dec.read_long())
-            if dec.read(16) != self.sync:
-                raise ValueError("Avro sync marker mismatch")
-            if self.codec == "deflate":
-                block = zlib.decompress(block, -15)
-            elif self.codec == "snappy":
-                # Avro frames snappy blocks with a trailing 4-byte CRC32 of
-                # the uncompressed data (spec: object container files).
-                payload, crc = block[:-4], block[-4:]
-                try:
-                    import snappy
-
-                    block = snappy.decompress(payload)
-                except ImportError:
-                    block = _snappy_decompress(payload)
-                if struct.pack(">I", zlib.crc32(block) & 0xFFFFFFFF) != crc:
-                    raise ValueError("Avro snappy block CRC mismatch")
-            elif self.codec == "bzip2":
-                import bz2
-
-                block = bz2.decompress(block)
-            elif self.codec == "xz":
-                import lzma
-
-                block = lzma.decompress(block)
-            elif self.codec != "null":
-                raise ValueError(f"unsupported Avro codec {self.codec!r}")
-            bdec = _Decoder(block)
-            for _ in range(n_records):
-                yield _decode_value(bdec, self.schema)
+        return cls(schema=schema, codec=codec, sync=sync)
 
 
 # ---------------------------------------------------------------------------
@@ -710,15 +539,6 @@ def walk_topics(
 # Record source (O2) — distributed decode.
 # ---------------------------------------------------------------------------
 
-ACCOUNTING_FIELDS = [
-    StructField("filename", StringType(), False),
-    StructField("topic", StringType(), False),
-    StructField("partition", IntegerType(), False),
-    StructField("offset", LongType(), False),
-    StructField("mtime", TimestampType(), False),
-]
-
-
 def read_schema(path: str, opener=open) -> Any:
     """Read just the container header of one file (driver-side, a few KB);
     None for an empty file.  ``opener`` abstracts the byte source for
@@ -970,88 +790,6 @@ def record_struct(avro_schema: Any) -> StructType:
     if not isinstance(record_type, StructType):
         record_type = StructType([StructField("value", record_type, True)])
     return record_type
-
-
-def _project(value: Any, writer: Any, reader: Any) -> Any:
-    """``value``, decoded with its file's ``writer`` schema, in the shape
-    the ``reader`` schema gives it, as Avro schema resolution does in
-    Spark's Avro source: a union value lands in the reader branch of its
-    type (``memberN`` among the reader's non-null branches), a record field
-    the writer lacks reads as null, an int read as a float becomes one."""
-    if value is None:
-        return None
-    if isinstance(writer, list) or isinstance(reader, list):
-        w = [b for b in (writer if isinstance(writer, list) else [writer]) if b != "null"]
-        r = [b for b in (reader if isinstance(reader, list) else [reader]) if b != "null"]
-        if len(w) > 1:
-            ((member, value),) = value.items()
-            writer = w[int(member[len("member"):])]
-        else:
-            writer = w[0]
-        i = _related_branch(r, writer)
-        if i is None:
-            raise ValueError(f"no branch of {reader!r} reads {writer!r}")
-        value = _project(value, writer, r[i])
-        return {f"member{i}": value} if len(r) > 1 else value
-    kind = writer if isinstance(writer, str) else writer["type"]
-    if kind == "record":
-        have = {f["name"]: f["type"] for f in writer["fields"]}
-        return {
-            f["name"]: _project(value.get(f["name"]), have[f["name"]], f["type"]) if f["name"] in have else None
-            for f in reader["fields"]
-        }
-    if kind == "array":
-        return [_project(v, writer["items"], reader["items"]) for v in value]
-    if kind == "map":
-        return {k: _project(v, writer["values"], reader["values"]) for k, v in value.items()}
-    if _NUMERIC_RANK.get(_type_name(reader), 0) >= _NUMERIC_RANK["float"]:
-        return float(value)
-    return value
-
-
-def make_avro_decoder(avro_schema):
-    """Build the (mapInPandas kernel, output StructType) pair that decodes
-    ``binaryFile`` rows (path, modificationTime, content) into records with
-    accounting columns, the rows ``read_avro`` returns.  Used by the
-    Structured Streaming source (``streaming.service.read_avro_stream``) —
-    each container file is parsed with its OWN embedded writer schema and
-    projected onto the reader schema ``avro_schema`` (``_project``)."""
-    record_type = record_struct(avro_schema)
-    out_schema = StructType(list(record_type.fields) + ACCOUNTING_FIELDS)
-    field_names = [f.name for f in record_type.fields]
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for path, mtime, content in zip(
-                pdf["path"], pdf["modificationTime"], pdf["content"]
-            ):
-                if not content:
-                    continue
-                container = AvroContainer.parse(bytes(content))
-                parsed = parse_filename(path)
-                if parsed is None:
-                    continue
-                topic, partition, ofrom, _ = parsed
-                resolve = container.schema != avro_schema
-                rows = []
-                for i, rec in enumerate(container.records()):
-                    if resolve:
-                        rec = _project(rec, container.schema, avro_schema)
-                    if not isinstance(rec, dict):
-                        rec = {"value": rec}
-                    row = {name: rec.get(name) for name in field_names}
-                    row["filename"] = os.path.basename(path)
-                    row["topic"] = topic
-                    row["partition"] = partition
-                    row["offset"] = ofrom + i
-                    row["mtime"] = mtime
-                    rows.append(row)
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    return decode, out_schema
 
 
 def manifest_df(spark: SparkSession, files: list[SourceFile]) -> DataFrame:

@@ -9,17 +9,19 @@ Two forms here:
 
 - ``run_service``: the driver-loop scheduler over the batch Avro job and
   the cleaner, the reference's own shape.
-- Structured Streaming: ``read_avro_stream`` is a ``binaryFile`` file
-  stream decoded by the pure-Python container kernel (the batch reader
-  decodes in the JVM; see ``sources/avro.py``); feed it through
-  ``plans.avro_job.organize_avro_records`` into ``start_service`` (Hive
-  layout) or ``start_template_service`` (the reference's rendered tree),
-  with ``trigger(processingTime=...)`` (service loop) or ``availableNow``
-  (one shot that drains the backlog then stops).  ``maxFilesPerTrigger``
-  reproduces ``maxFilesPerTopic``.  The stream's checkpoint gives the
-  exactly-once file tracking the reference built by hand with Redis
-  offsets (O16-O18) — in streaming mode the engine's own commit log is
-  the offset store.
+- ``start_service``: Structured Streaming.  A ``binaryFile`` stream lists
+  the new ``*.avro`` files under a source dir (path and length only: no
+  file content is read by the stream), and each micro-batch runs the
+  batch job's own per-topic body on its files
+  (``plans.avro_job.restructure_files``): Spark's Avro source, the
+  config's layout, format, compression, keep-last dedup and sidecar.
+  The reader schema is built per micro-batch, so a file with new fields
+  that lands while the stream runs keeps them.  ``trigger(processingTime=...)``
+  is the service loop, ``availableNow`` drains the backlog and stops, and
+  ``maxFilesPerTrigger`` reproduces ``maxFilesPerTopic``.  The stream's
+  checkpoint is the seen-file ledger the reference built by hand with
+  Redis offsets (O16-O18): in streaming mode the engine's own commit log
+  is the offset store.
 """
 
 from __future__ import annotations
@@ -27,152 +29,101 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from restructure_hdfs_topic_spark.plans.avro_job import PARTITION_COLS
+from restructure_hdfs_topic_spark.plans.avro_job import restructure_files
+from restructure_hdfs_topic_spark.sources.avro import parse_filename
 
 
 def start_service(
-    organized: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    fmt: str = "json",
-    interval_s: int | None = None,
-) -> StreamingQuery:
-    """writeStream partitioned sink; ``interval_s`` (reference default
-    300 s) → processingTime trigger; None → availableNow (drain & stop)."""
-    writer = (
-        organized.writeStream.format(fmt)
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy(*PARTITION_COLS)
-        .outputMode("append")
-    )
-    if interval_s:
-        writer = writer.trigger(processingTime=f"{interval_s} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_template_service(
-    organized: DataFrame,
-    config,
-    topic: str,
-    checkpoint_dir: str,
-    interval_s: int | None = None,
-) -> StreamingQuery:
-    """Streaming form of the TEMPLATE physical layout (O11 physical half,
-    path/FormattedPathFactory.kt:111): each micro-batch runs the same
-    two-phase sink as the batch job — distributed staging write, then the
-    metadata-only finalize that places files at the rendered
-    ``${projectId}/${userId}/${topic}/<bin><ext>`` tree, merging into bins
-    earlier batches already wrote (the reference's append path).
-
-    ``foreachBatch`` is the Structured Streaming composition point for
-    custom sinks; the engine's checkpoint makes each batch replay-once.
-    Replay after a crash *inside* a batch is handled at both phases:
-
-    - staging leftovers of the failed attempt are deleted before the
-      batch's write (the staging dir exists only within one batch), so
-      partial stage-outs never double rows;
-    - a crash after finalize but before the checkpoint commit replays a
-      fully-finalized batch → at-least-once into final bins, the same
-      window the reference's commit-after-store has
-      (worker/RestructureWorker.kt).  Upstream
-      ``streaming_seen_record_filter`` (stateful exactly-once) closes it
-      when exact delivery matters.
-    """
-    if getattr(config.paths, "layout", None) != "template":
-        # _write_topic branches on the config layout; silently producing a
-        # Hive partition-column tree from a function that promises the
-        # rendered template tree would be a data-layout surprise.
-        raise ValueError(
-            "start_template_service requires config.paths.layout='template' "
-            f"(got {getattr(config.paths, 'layout', None)!r}); use "
-            "start_service for the Hive layout"
-        )
-    cfg = config
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        staging = f"{cfg.target_dir.rstrip('/')}/_staging_{topic}"
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(staging)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
-        from restructure_hdfs_topic_spark.plans.avro_job import _write_tasks, _write_topic
-
-        # The kernel's rows carry the Avro schema's own nullability.  A
-        # micro-batch's input size is not known here: one task per core.
-        _write_topic(batch_df, cfg, topic, batch_df.schema, _write_tasks(spark, 0))
-
-    writer = (
-        organized.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if interval_s:
-        writer = writer.trigger(processingTime=f"{interval_s} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_avro_stream(
     spark: SparkSession,
     topic_dir: str,
+    config,
+    checkpoint_dir: str,
+    interval_s: int | None = None,
     max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Structured Streaming Avro source for one topic directory — the
-    streaming form of the reference's polling service over its REAL input
-    format: a ``binaryFile`` file stream decoded by the pure-Python
-    container kernel (each file's embedded writer schema, per-record Kafka
-    offsets) into the rows the batch reader's JVM scan returns.  The stream's checkpoint is the
-    seen-file ledger (engine-managed exactly-once; the batch path's offset
-    state is the replayable equivalent)."""
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+) -> StreamingQuery:
+    """Stream the Avro files that land under ``topic_dir`` into
+    ``config.target_dir`` as ``run_avro_restructure_job`` writes them.
+    ``interval_s`` (reference default 300 s) gives a processingTime
+    trigger; None drains what is there (availableNow) and stops.
 
-    from restructure_hdfs_topic_spark.sources.avro import (
-        make_avro_decoder,
-        union_avro_schemas,
-        walk_topics,
-        writer_schemas,
-    )
+    Each micro-batch follows the walk's rules (``sources.avro.walk_topics``):
+    it skips ``+tmp`` dirs, empty files, names that are not Kafka-Connect
+    names and excluded topics, groups the files by topic (their
+    grandparent dir) and orders them by (partition, offset).
 
-    topics = walk_topics(topic_dir, spark=spark)
-    if not topics:
-        raise ValueError(f"no Avro topics under {topic_dir}")
-    # Union the headers of every existing file so a topic that evolved
-    # before the stream started loses no fields (files arriving later with
-    # NEW fields still project onto this fixed stream schema — restart the
-    # stream to pick them up; Structured Streaming schemas are static).
-    paths = [f.path for files in topics.values() for f in files]
-    decode, out_schema = make_avro_decoder(union_avro_schemas(writer_schemas(spark, paths)[1]))
-    bin_schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
+    Exactly once per micro-batch: once a batch's output is complete its
+    id is recorded under ``checkpoint_dir/finalized``, and the engine's
+    replay of a recorded batch (a crash before the engine committed it)
+    writes nothing.  A template-layout batch that crashed before its
+    finalize reruns from an empty staging dir, so no staged part lands
+    twice.  A crash after some of a batch's output is in place and
+    before the record can still write that output twice.
+    """
     reader = (
         spark.readStream.format("binaryFile")
-        .schema(bin_schema)
+        # A file stream must be given its source's schema, here binaryFile's.
+        .schema("path string, modificationTime timestamp, length long, content binary")
         .option("pathGlobFilter", "*.avro")
         .option("recursiveFileLookup", "true")
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    binary = reader.load(topic_dir).select("path", "modificationTime", "content")
-    return binary.mapInPandas(decode, schema=out_schema)
+    listing = reader.load(topic_dir).select("path", "length")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    hconf = spark._jsc.hadoopConfiguration()
+    marker_dir = Path(checkpoint_dir, "finalized")
+    fs = marker_dir.getFileSystem(hconf)
+
+    def _sink(batch: DataFrame, batch_id: int) -> None:
+        if batch_id <= _last_finalized(fs, marker_dir):
+            return
+        for topic, paths, input_bytes in _batch_topics(batch.collect(), config):
+            if config.paths.layout == "template":
+                # Staged parts of an attempt that crashed before its
+                # finalize would be finalized along with this one's.
+                staging = Path(f"{config.target_dir.rstrip('/')}/_staging_{topic}")
+                staging.getFileSystem(hconf).delete(staging, True)
+            restructure_files(spark, topic, paths, input_bytes, config)
+        fs.create(Path(marker_dir, str(batch_id)), True).close()
+        for st in fs.listStatus(marker_dir):
+            name = st.getPath().getName()
+            if name.isdigit() and int(name) < batch_id:
+                fs.delete(st.getPath(), False)
+
+    writer = listing.writeStream.foreachBatch(_sink).option("checkpointLocation", checkpoint_dir)
+    if interval_s:
+        writer = writer.trigger(processingTime=f"{interval_s} seconds")
+    else:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _batch_topics(rows, config) -> list[tuple[str, list[str], int]]:
+    """(topic, its paths in (partition, offset, path) order, their total
+    bytes) for each topic of a micro-batch's (path, length) rows."""
+    excluded = {t for t, tc in config.topics.items() if tc.exclude}
+    by_topic: dict[str, list[tuple[int, int, str, int]]] = {}
+    for path, length in rows:
+        parsed = parse_filename(path.rsplit("/", 1)[-1])
+        parts = path.rsplit("/", 3)
+        topic = parts[-3] if len(parts) >= 3 else ""
+        if "/+tmp/" in path or not length or parsed is None or topic in excluded:
+            continue
+        by_topic.setdefault(topic, []).append((parsed[1], parsed[2], path, length))
+    return [
+        (topic, [f[2] for f in sorted(files)], sum(f[3] for f in files))
+        for topic, files in sorted(by_topic.items())
+    ]
+
+
+def _last_finalized(fs, marker_dir) -> int:
+    """The newest batch id recorded in ``marker_dir`` (one empty file per
+    id: a crash between recording one and deleting the older leaves
+    both); -1 if none."""
+    if not fs.exists(marker_dir):
+        return -1
+    names = [st.getPath().getName() for st in fs.listStatus(marker_dir)]
+    return max((int(n) for n in names if n.isdigit()), default=-1)
 
 
 def run_service(
@@ -191,8 +142,8 @@ def run_service(
 
     ``sleep_fn``/``clock`` are injectable for tests; the defaults are real
     time.  This is the driver-loop analogue of the reference's scheduled
-    executor — the streaming functions above are the Structured Streaming
-    form for a continuously-arriving source.
+    executor — ``start_service`` is the Structured Streaming form for a
+    continuously-arriving source.
     """
     import time as _time
 

@@ -6,8 +6,7 @@ added mid-stream with a default, a field only older files carry, enum,
 bytes, fixed (also by reference), map, array, a multi-branch union and a
 ``timestamp-millis`` long.  The schema evolves the way Avro resolution
 allows: an enum gains a symbol, a union gains a branch, an int field
-becomes a long and another a double.  The streaming source's Python
-kernel must return the same rows.
+becomes a long and another a double.
 """
 
 import base64
@@ -207,22 +206,4 @@ def test_read_avro_offsets_exact_on_split_files(spark, tree):
     finally:
         spark.conf.set(key, before)
     assert splits > 3
-    _check_rows(rows, paths, expected)
-
-
-def test_streaming_kernel_matches_batch_reader(spark, tree):
-    """``read_avro_stream`` (the Python container kernel) returns the
-    batch reader's rows on the same tree: both equal the encoded ones."""
-    from restructure_hdfs_topic_spark.streaming.service import read_avro_stream
-
-    topic_dir, paths, expected = tree
-    q = (
-        read_avro_stream(spark, topic_dir).writeStream.format("memory")
-        .queryName("decode_stream_rows").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    try:
-        rows = spark.table("decode_stream_rows").collect()
-    finally:
-        q.stop()
     _check_rows(rows, paths, expected)

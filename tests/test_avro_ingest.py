@@ -32,24 +32,22 @@ needs_fixtures = pytest.mark.skipif(
 
 
 @needs_fixtures
-def test_container_decode_counts_and_values():
+def test_container_decode_counts_and_values(spark):
     # android file: null codec, 1000 records; status files: snappy, 3 each.
     by_name = {
         os.path.basename(p): p
         for p in glob.glob(f"{FIXTURES}/*/partition=*/*.avro")
     }
-    acc = AvroContainer.parse(
-        open(by_name["android_phone_acceleration+0+0003018784.avro"], "rb").read()
-    )
-    recs = list(acc.records())
-    assert acc.codec == "null" and len(recs) == 1000
+    android = by_name["android_phone_acceleration+0+0003018784.avro"]
+    status = by_name["application_server_status+1+0000000018+0000000020.avro"]
+    assert AvroContainer.parse(open(android, "rb").read()).codec == "null"
+    assert AvroContainer.parse(open(status, "rb").read()).codec == "snappy"
+    recs = read_avro(spark, [android]).orderBy("offset").collect()
+    assert len(recs) == 1000
     assert recs[0]["key"]["projectId"] == "radar-test-root"
-    status = AvroContainer.parse(
-        open(by_name["application_server_status+1+0000000018+0000000020.avro"], "rb").read()
-    )
-    srecs = list(status.records())
-    assert status.codec == "snappy" and len(srecs) == 3
-    assert srecs[0]["value"] == {
+    srecs = read_avro(spark, [status]).orderBy("offset").collect()
+    assert len(srecs) == 3
+    assert srecs[0]["value"].asDict() == {
         "time": 1580219820.03,
         "serverStatus": "CONNECTED",
         "ipAddress": None,
@@ -344,81 +342,6 @@ def test_service_loop_schedules_jobs(spark, tmp_path):
     ]
 
 
-def test_avro_deflate_codec_decode():
-    """Deflate-coded container built from the public Avro 1.x spec (magic,
-    metadata map, sync-framed raw-deflate block) decodes to the exact
-    datums — the codec path the reference fixtures (null/snappy) miss."""
-    import json
-    import zlib
-
-    def zz(n: int) -> bytes:  # zig-zag varint (Avro long)
-        n = (n << 1) ^ (n >> 63)
-        out = b""
-        while True:
-            b7 = n & 0x7F
-            n >>= 7
-            if n:
-                out += bytes([b7 | 0x80])
-            else:
-                out += bytes([b7])
-                return out
-
-    schema = {
-        "type": "record",
-        "name": "r",
-        "fields": [{"name": "a", "type": "long"}, {"name": "b", "type": "string"}],
-    }
-    datums = b""
-    for a, s in [(1, "x"), (-3, "hello")]:
-        datums += zz(a) + zz(len(s.encode())) + s.encode()
-    comp = zlib.compressobj(7, zlib.DEFLATED, -15)
-    block = comp.compress(datums) + comp.flush()
-    meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": b"deflate"}
-    hdr = b"Obj\x01" + zz(len(meta))
-    for k, v in meta.items():
-        hdr += zz(len(k.encode())) + k.encode() + zz(len(v)) + v
-    hdr += zz(0)
-    sync = bytes(range(16))
-    data = hdr + sync + zz(2) + zz(len(block)) + block + sync
-    c = AvroContainer.parse(data)
-    assert c.codec == "deflate"
-    assert list(c.records()) == [{"a": 1, "b": "x"}, {"a": -3, "b": "hello"}]
-
-
-def test_avro_bzip2_and_xz_codec_decode():
-    """bzip2 and xz coded blocks (Avro spec codecs) decode via stdlib."""
-    import bz2
-    import json
-    import lzma
-
-    def zz(n: int) -> bytes:
-        n = (n << 1) ^ (n >> 63)
-        out = b""
-        while True:
-            b7 = n & 0x7F
-            n >>= 7
-            if n:
-                out += bytes([b7 | 0x80])
-            else:
-                out += bytes([b7])
-                return out
-
-    schema = {"type": "record", "name": "r", "fields": [{"name": "a", "type": "long"}]}
-    datums = zz(7) + zz(42)
-    for codec, compress in [("bzip2", bz2.compress), ("xz", lzma.compress)]:
-        block = compress(datums)
-        meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": codec.encode()}
-        hdr = b"Obj\x01" + zz(len(meta))
-        for k, v in meta.items():
-            hdr += zz(len(k.encode())) + k.encode() + zz(len(v)) + v
-        hdr += zz(0)
-        sync = bytes(range(16))
-        data = hdr + sync + zz(2) + zz(len(block)) + block + sync
-        c = AvroContainer.parse(data)
-        assert c.codec == codec
-        assert list(c.records()) == [{"a": 7}, {"a": 42}]
-
-
 @needs_fixtures
 def test_avro_cleaner_over_zip_output(spark, tmp_path):
     """O20 × O23 interaction: the cleaner must verify against .zip targets
@@ -448,45 +371,35 @@ def test_avro_cleaner_over_zip_output(spark, tmp_path):
     assert result["rolled_back"] == []
 
 
-@needs_fixtures
 def test_streaming_avro_restructure(spark, tmp_path):
-    """M5 over the REAL input: a binaryFile stream of reference .avro
-    fixtures decodes, organizes, and writes the partitioned layout; a
-    second availableNow run over the same checkpoint ingests nothing new."""
-    import shutil
-
-    from restructure_hdfs_topic_spark.plans.avro_job import organize_avro_records
-    from restructure_hdfs_topic_spark.streaming.service import read_avro_stream
+    """M5: a stream of Kafka-Connect files, one per micro-batch, writes the
+    partitioned layout; a second availableNow run over the same checkpoint
+    ingests nothing new."""
+    from restructure_hdfs_topic_spark.streaming.service import start_service
+    from tests.avro_tree import reading, write_topic_file
 
     src = str(tmp_path / "in")
-    shutil.copytree(os.path.join(FIXTURES, "application_server_status"), src)
-    out = str(tmp_path / "out")
+    t0 = 1_580_219_820.0  # 2020-01-28 13:57 UTC
+    for k in range(2):
+        write_topic_file(
+            src, "application_server_status", 1, 18 + 3 * k,
+            [reading("p", "u", t0 + 120 * (3 * k + i)) for i in range(3)],
+        )
+    cfg = RestructureConfig(
+        target_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"), format="json"
+    )
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
-        records = read_avro_stream(spark, src, max_files_per_trigger=1)
-        organized = organize_avro_records(records, "yyyyMMdd_HH'00'")
-        q = (
-            organized.select(
-                "projectId", "userId", "topic", "bin", F.col("value.time").alias("t")
-            )
-            .writeStream.format("json")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("projectId", "userId", "topic", "bin")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
+        assert start_service(spark, src, cfg, ckpt, max_files_per_trigger=1).awaitTermination(180)
+        out = cfg.target_dir
+        return spark.read.option("basePath", out).json(f"{out}/projectId=*")
 
-    drain()
-    got = spark.read.option("basePath", out).json(f"{out}/projectId=*")
+    got = drain()
     assert got.count() == 6
     bins = {r["bin"] for r in got.select("bin").distinct().collect()}
     assert bins == {"20200128_1300", "20200128_1400"}
-    drain()  # checkpoint: nothing re-ingested
-    assert spark.read.option("basePath", out).json(f"{out}/projectId=*").count() == 6
+    assert drain().count() == 6  # checkpoint: nothing re-ingested
 
 
 def test_read_avro_schema_evolution_union(spark, tmp_path):

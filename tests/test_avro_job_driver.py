@@ -57,22 +57,30 @@ PYTHON_EXECS = (
 )
 
 
-def _executions(spark):
-    """(id, physical plan text) of every SQL execution the session ran."""
+def _last_execution(spark) -> int:
+    """Id of the newest SQL execution the session ran; -1 if none."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+def _plans_after(spark, after: int) -> list[str]:
+    """Physical plan text of every SQL execution newer than ``after``."""
     out = []
     it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
     while it.hasNext():
         e = it.next()
-        out.append((e.executionId(), e.physicalPlanDescription()))
+        if e.executionId() > after:
+            out.append(e.physicalPlanDescription())
     return out
 
 
 def _run(spark, src, cfg, now_s, job=run_avro_restructure_job):
     """One ``job`` run (a restructure iteration by default) plus the plans
     it executed."""
-    before = max((i for i, _ in _executions(spark)), default=-1)
+    before = _last_execution(spark)
     res = job(spark, src, cfg, now_s=now_s)
-    return res, [p for i, p in _executions(spark) if i > before]
+    return res, _plans_after(spark, before)
 
 
 def _assert_no_python(plans):

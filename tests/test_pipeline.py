@@ -7,6 +7,10 @@ availableNow drain; cleaner delete/rollback; config resolution.
 
 import json
 import os
+import re
+import time
+
+import pytest
 
 from restructure_hdfs_topic_spark.config import RestructureConfig, WorkerConfig
 from restructure_hdfs_topic_spark.operators.flatten import (
@@ -16,27 +20,27 @@ from restructure_hdfs_topic_spark.operators.flatten import (
     to_json_lines,
 )
 from restructure_hdfs_topic_spark.operators.offsets import read_offsets
-from restructure_hdfs_topic_spark.plans.avro_job import (
-    organize_avro_records,
-    run_avro_restructure_job,
-)
+from restructure_hdfs_topic_spark.plans.avro_job import run_avro_restructure_job
 from tests.avro_tree import reading, write_topic_file
 
 T0 = 1_704_067_200.0  # 2024-01-01 00:00 UTC
-BIN_FORMAT = "yyyyMMdd_HH'00'"
 
 
 def _events_tree(root, offset_shift=0, project=None):
     """Topic ``events``: 2 partitions x 2 files x 10 records.  Record ``i``
     belongs to user ``u{i % 5}`` with event time ``T0 + 600 * i`` (40
     records over 2024-01-01 00:00..06:30); ``offset_shift`` lands the
-    same records again as new files further up each partition."""
+    same records again as new files further up each partition.  File
+    mtimes rise in (partition, offset) order, the order a file stream
+    lists them in."""
+    now = time.time()
     for partition in (0, 1):
         for f in (0, 1):
             first = 20 * partition + 10 * f
             write_topic_file(
                 root, "events", partition, offset_shift + 10 * f,
                 [reading(project, f"u{i % 5}", T0 + 600 * i) for i in range(first, first + 10)],
+                mtime_s=now - 60 + 2 * partition + f,
             )
     return root
 
@@ -124,24 +128,22 @@ def test_attempt_routing_groups_by_header_shape(spark):
     persisted2.unpersist()
 
 
-def _drain(spark, topic_dir, **kw):
-    """``read_avro_stream`` organized like the batch job."""
-    from restructure_hdfs_topic_spark.streaming.service import read_avro_stream
+def _stream(spark, src, cfg, ckpt, **kw):
+    """One ``start_service`` drain (availableNow) of ``src``."""
+    from restructure_hdfs_topic_spark.streaming.service import start_service
 
-    return organize_avro_records(read_avro_stream(spark, topic_dir, **kw), BIN_FORMAT)
+    assert start_service(spark, src, cfg, ckpt, **kw).awaitTermination(120)
 
 
 def test_streaming_available_now(spark, tmp_path):
-    from restructure_hdfs_topic_spark.streaming.service import start_service
-
     src = _events_tree(str(tmp_path / "in"))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    organized = _drain(spark, f"{src}/events", max_files_per_trigger=2)
-    start_service(organized, out, ckpt, fmt="json").awaitTermination(120)
-    assert spark.read.json(out).count() == 40
+    cfg = RestructureConfig(target_dir=out, state_dir=str(tmp_path / "state"), format="json")
+    _stream(spark, f"{src}/events", cfg, ckpt, max_files_per_trigger=2)
+    assert _read_hive_json(spark, out).count() == 40
     # Second availableNow run over the same source: checkpoint dedups files.
-    start_service(_drain(spark, f"{src}/events"), out, ckpt, fmt="json").awaitTermination(120)
-    assert spark.read.json(out).count() == 40
+    _stream(spark, f"{src}/events", cfg, ckpt)
+    assert _read_hive_json(spark, out).count() == 40
 
 
 def test_streaming_template_layout(spark, tmp_path):
@@ -152,7 +154,6 @@ def test_streaming_template_layout(spark, tmp_path):
     import glob as _glob
 
     from restructure_hdfs_topic_spark.config import PathConfig
-    from restructure_hdfs_topic_spark.streaming.service import start_template_service
 
     src = _events_tree(str(tmp_path / "in"))
     cfg = RestructureConfig(
@@ -162,7 +163,7 @@ def test_streaming_template_layout(spark, tmp_path):
         paths=PathConfig(layout="template"),
     )
     ckpt = str(tmp_path / "ckpt")
-    start_template_service(_drain(spark, f"{src}/events"), cfg, "events", ckpt).awaitTermination(120)
+    _stream(spark, f"{src}/events", cfg, ckpt)
 
     user_dirs = sorted(_glob.glob(f"{cfg.target_dir}/unknown-project/*/events"))
     assert len(user_dirs) == 5  # one tree per sanitized user id
@@ -184,8 +185,162 @@ def test_streaming_template_layout(spark, tmp_path):
 
     # New source files into the SAME bins: the merge path appends.
     _events_tree(src, offset_shift=100)
-    start_template_service(_drain(spark, f"{src}/events"), cfg, "events", ckpt).awaitTermination(120)
+    _stream(spark, f"{src}/events", cfg, ckpt)
     assert data_rows() == 80
+
+
+def _tree_files(root) -> dict[str, bytes]:
+    """{relative path: bytes, decompressed} of every file under ``root``."""
+    import gzip
+
+    out = {}
+    for dirpath, _dirs, names in os.walk(root):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as fh:
+                raw = fh.read()
+            out[os.path.relpath(path, root)] = gzip.decompress(raw) if name.endswith(".gz") else raw
+    return out
+
+
+def _hive_rows(root) -> dict[str, object]:
+    """The hive tree by directory: the sorted JSON lines of its part files
+    (their names carry a write id, and a stream writes one part per
+    micro-batch), and every other file's bytes."""
+    out: dict[str, object] = {}
+    for rel, raw in _tree_files(root).items():
+        d, name = os.path.split(rel)
+        if name.startswith("part-"):
+            out.setdefault(d, []).extend(raw.decode().splitlines())
+        elif not name.startswith(("_", ".")):
+            out[rel] = raw
+    return {k: sorted(v) if isinstance(v, list) else v for k, v in out.items()}
+
+
+@pytest.mark.parametrize("layout,fmt,compression", [("template", "csv", "gzip"), ("hive", "json", None)])
+def test_stream_equals_batch(spark, tmp_path, layout, fmt, compression):
+    """``start_service`` with two files per micro-batch writes what
+    ``run_avro_restructure_job`` writes for the same config: the template
+    tree file for file, with equal decompressed bytes, the hive tree row
+    for row.  No execution the stream runs starts a Python worker."""
+    from restructure_hdfs_topic_spark.config import PathConfig
+    from tests.test_avro_job_driver import _assert_no_python, _last_execution, _plans_after
+
+    src = _events_tree(str(tmp_path / "in"))
+
+    def config(target):
+        return RestructureConfig(
+            target_dir=str(tmp_path / target),
+            state_dir=str(tmp_path / f"state_{target}"),
+            format=fmt,
+            compression=compression,
+            paths=PathConfig(layout=layout),
+            worker=WorkerConfig(minimum_file_age_s=0),
+        )
+
+    batch_cfg, stream_cfg = config("batch"), config("stream")
+    os.makedirs(batch_cfg.state_dir)
+    assert run_avro_restructure_job(spark, src, batch_cfg)["records_written"] == 40
+    before = _last_execution(spark)
+    _stream(spark, f"{src}/events", stream_cfg, str(tmp_path / "ckpt"), max_files_per_trigger=2)
+    plans = _plans_after(spark, before)
+    # foreachBatch hands a micro-batch over as the rows of the stream's own
+    # JVM plan (an SQLExecutionRDD), which scans as an ExistingRDD: the
+    # collect of each batch's (path, length) listing.
+    listing = [p for p in plans if "SQLExecutionRDD[" in p]
+    assert listing and all(re.search(r"Output \[2\]: \[path#\d+, length#\d+L\]", p) for p in listing)
+    _assert_no_python([p for p in plans if p not in listing])
+    if layout == "template":
+        batch, stream = _tree_files(batch_cfg.target_dir), _tree_files(stream_cfg.target_dir)
+        assert len(batch) == 39  # 34 (user, bin) files and 5 sidecars
+    else:
+        batch, stream = _hive_rows(batch_cfg.target_dir), _hive_rows(stream_cfg.target_dir)
+        assert sum(len(v) for v in batch.values() if isinstance(v, list)) == 40
+    assert stream == batch
+
+
+@pytest.mark.parametrize("layout", ["hive", "template"])
+def test_streaming_replayed_batch_writes_once(spark, tmp_path, layout):
+    """A micro-batch the engine replays (its commit lost after the output
+    was written) writes nothing again."""
+    import glob as _glob
+
+    from restructure_hdfs_topic_spark.config import PathConfig
+
+    src = _events_tree(str(tmp_path / "in"))
+    cfg = RestructureConfig(
+        target_dir=str(tmp_path / "out"),
+        state_dir=str(tmp_path / "state"),
+        format="json",
+        paths=PathConfig(layout=layout),
+    )
+    ckpt = str(tmp_path / "ckpt")
+
+    def rows() -> int:
+        if layout == "hive":
+            return _read_hive_json(spark, cfg.target_dir).count()
+        files = _glob.glob(f"{cfg.target_dir}/unknown-project/*/events/*.json")
+        return sum(1 for p in files if not os.path.basename(p).startswith("schema-") for _ in open(p))
+
+    _stream(spark, f"{src}/events", cfg, ckpt, max_files_per_trigger=2)
+    assert rows() == 40
+    commits = os.path.join(ckpt, "commits")
+    last = max((n for n in os.listdir(commits) if n.isdigit()), key=int)
+    for name in (last, f".{last}.crc"):
+        os.remove(os.path.join(commits, name))
+    _stream(spark, f"{src}/events", cfg, ckpt, max_files_per_trigger=2)
+    assert os.path.exists(os.path.join(commits, last))  # the batch ran again
+    assert rows() == 40
+
+
+def test_streaming_schema_evolves_while_running(spark, tmp_path):
+    """A processingTime stream: a file that lands while the stream runs,
+    with a new nullable field and a new union branch, keeps both in the
+    output; an empty ``.avro`` file alone in a micro-batch writes
+    nothing and does not fail the stream."""
+    from tests.avro_tree import KEY_SCHEMA, RECORD_SCHEMA
+
+    value = RECORD_SCHEMA["fields"][1]["type"]
+    new_value = {
+        **value,
+        "fields": [
+            {**f, "type": ["null", "long", "string"]} if f["name"] == "level" else f
+            for f in value["fields"]
+        ]
+        + [{"name": "note", "type": ["null", "string"], "default": None}],
+    }
+    new_schema = {**RECORD_SCHEMA, "fields": [{"name": "key", "type": KEY_SCHEMA}, {"name": "value", "type": new_value}]}
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    cfg = RestructureConfig(target_dir=out, state_dir=str(tmp_path / "state"), format="json")
+    write_topic_file(src, "events", 0, 0, [reading("p", "u1", T0 + 60 * i, level=i) for i in range(3)])
+    from restructure_hdfs_topic_spark.streaming.service import start_service
+
+    q = start_service(spark, src, cfg, str(tmp_path / "ckpt"), interval_s=1)
+    try:
+        q.processAllAvailable()
+        empty = os.path.join(src, "events", "partition=0", "events+0+0000000003+0000000003.avro")
+        open(empty, "wb").close()
+        q.processAllAvailable()
+        later = [reading("p", "u1", T0 + 600 + 60 * i) for i in range(2)]
+        later[0]["value"]["level"], later[1]["value"]["level"] = 7, "high"
+        later[0]["value"]["note"], later[1]["value"]["note"] = "n0", None
+        write_topic_file(src, "events", 0, 4, later, schema=new_schema)
+        q.processAllAvailable()
+        assert q.exception() is None
+    finally:
+        q.stop()
+    # Read line by line: the older rows' ``level`` is a long, the newer
+    # rows' a union struct.
+    values = {
+        v["time"]: v
+        for rel, raw in _tree_files(out).items()
+        if os.path.basename(rel).startswith("part-")
+        for v in (json.loads(line)["value"] for line in raw.decode().splitlines())
+    }
+    assert len(values) == 5 and values[T0]["level"] == 0
+    assert (values[T0 + 600]["level"], values[T0 + 600]["note"]) == ({"member0": 7}, "n0")
+    assert values[T0 + 660]["level"] == {"member1": "high"} and "note" not in values[T0 + 660]
 
 
 def test_config_dedup_key_resolution():
@@ -643,7 +798,6 @@ def test_streaming_template_layout_time_pattern(spark, tmp_path):
     import glob as _glob
 
     from restructure_hdfs_topic_spark.config import PathConfig
-    from restructure_hdfs_topic_spark.streaming.service import start_template_service
     from tests.avro_tree import KEY_SCHEMA
 
     key = {**KEY_SCHEMA, "fields": [f for f in KEY_SCHEMA["fields"] if f["name"] != "sourceId"]}
@@ -671,8 +825,7 @@ def test_streaming_template_layout_time_pattern(spark, tmp_path):
             template="${topic}/${projectId}/${userId}/${sourceId}/${time:yyyyMM}/${filename}",
         ),
     )
-    q = start_template_service(_drain(spark, f"{src}/events"), cfg, "events", str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    _stream(spark, f"{src}/events", cfg, str(tmp_path / "ckpt"))
 
     # Event times span 2024-01-01 00:00..06:30 → single 202401 time dir,
     # five sanitized user ids, sourceId falls back.

@@ -339,3 +339,24 @@ def test_finalize_store_time_posix_attrs(spark, tmp_path):
         assert stat_mod.S_IMODE(os.stat(dest).st_mode) == FILE_MODE
     finally:
         os.umask(old_umask)
+
+
+@pytest.mark.parametrize("codec", ["gz", "zip"])
+def test_merged_bin_bytes_do_not_depend_on_the_clock(monkeypatch, codec):
+    """A merged ``.gz`` or ``.zip`` bin carries no write time: merging the
+    same chunks at two clock readings gives the same bytes."""
+    import time
+
+    from restructure_hdfs_topic_spark.plans.layout import (
+        _compress_text,
+        _decompress_chunk,
+        _merge_csv_like,
+    )
+
+    chunks = [_compress_text(t, codec) for t in ("a,b\n1,2\n", "a,b\n3,4\n")]
+    merged = []
+    for now in (1_000_000_000.0, 1_700_000_000.0):
+        monkeypatch.setattr(time, "time", lambda now=now: now)
+        merged.append(_merge_csv_like(chunks, is_csv=True, codec=codec))
+    assert merged[0] == merged[1]
+    assert _decompress_chunk(merged[0], codec) == "a,b\n1,2\n3,4\n"
