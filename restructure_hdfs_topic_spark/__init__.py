@@ -16,9 +16,10 @@ pick the physical strategy. Package layout:
   Avro source, the only decode path) and the commit-range manifest.
 - ``plans``      — end-to-end pipeline compositions: ``avro_job`` is the
   restructure job and its cleaner; the rest are the LLM-data pipelines.
-- ``streaming``  — service mode: the driver-loop scheduler and the
-  Structured Streaming service, which runs the restructure job's per-topic
-  body on each micro-batch of new files (reference: worker/Job.kt).
+- ``streaming``  — service mode: the driver loop that runs the restructure
+  job over every input root each interval, and the cleaner on its own
+  interval (reference: Application.kt, worker/Job.kt); streaming dedup
+  and sinks for the LLM-data pipelines.
 """
 
 __version__ = "0.1.0"

@@ -53,7 +53,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--max-iterations",
         type=int,
-        help="stop the service loop after N restructure runs (testing)",
+        help="stop the service loop after N iterations (testing)",
     )
     return p
 
@@ -103,21 +103,18 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     )
     from restructure_hdfs_topic_spark.streaming.service import run_service
 
+    if cfg.service.enable:
+        # --no-restructure + --service = clean-only polling.
+        runs = run_service(
+            spark,
+            args.input_paths,
+            cfg,
+            max_iterations=args.max_iterations,
+            restructure=not args.no_restructure,
+        )
+        return {"runs": runs}
     results: dict = {"runs": []}
     for root in args.input_paths:
-        if cfg.service.enable:
-            results["runs"].extend(
-                run_service(
-                    spark,
-                    root,
-                    cfg,
-                    max_iterations=args.max_iterations,
-                    # --no-restructure + --service = clean-only polling
-                    # (the flag was previously ignored in service mode).
-                    restructure=not args.no_restructure,
-                )
-            )
-            continue
         if not args.no_restructure:
             out = run_avro_restructure_job(spark, root, cfg)
             out["job"] = "restructure"

@@ -6,13 +6,17 @@ apps can share one output tree (accounting/RedisRemoteLockManager.kt:8-45):
 the key only when the stored UUID is the closer's own (owner-only unlock).
 
 This is the same lease on the engine's storage instead of Redis — no extra
-service dependency: a lock is an atomically-created file
+service dependency: a lock is an exclusively-created file
 ``<state_dir>/_lock/<name>.lock`` holding ``{owner, expires_at}``.
-``fs.create(path, overwrite=False)`` is the NX primitive (atomic on local
-FS and HDFS; object stores without atomic create — plain S3 — should keep
-the STATE dir on a consistent store, which the offset commit protocol
-already requires).  The 24 h TTL matches the reference; an expired lock
-file is broken and re-acquired.
+``create_exclusive`` is the NX primitive.  On HDFS it is
+``fs.create(path, overwrite=False)``, which the NameNode makes atomic.  On
+a ``file:`` path Hadoop's create is not atomic (``RawLocalFileSystem``
+checks ``exists()`` and then opens, so two creators can both win), and
+the create is ``os.open`` with ``O_CREAT | O_EXCL`` instead.  Object
+stores without atomic create — plain S3 — should keep the STATE dir on a
+consistent store, which the offset commit protocol already requires.
+The 24 h TTL matches the reference; an expired lock file is broken and
+re-acquired.
 
 Config-gated (``lock_enable``), default off: a single Spark app owns the
 whole plan and needs no locking — this module exists for the two-engines-
@@ -21,7 +25,9 @@ one-tree deployment the reference supports.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import os
 import time
 import uuid
 
@@ -33,6 +39,44 @@ BREAK_TTL_S = 300
 # _release refuses to delete a lease this close to expiry: a breaker may
 # already be mid-takeover, and deleting then could remove ITS fresh lock.
 RELEASE_MARGIN_S = 5.0
+
+
+def create_exclusive(fs, path, data: bytes) -> bool:
+    """Create the file ``path`` holding ``data`` unless a file is already
+    there: True when this call created it.  ``fs`` is the Hadoop
+    FileSystem of the Hadoop ``path``, or None when ``path`` is a local
+    path string.  A local file is made with ``O_CREAT | O_EXCL`` and has
+    no ``.crc`` sidecar, which Hadoop's checksummed local FS reads and
+    deletes without complaint.  A create whose write then fails is
+    removed again: a half-written file would hold the name for a TTL."""
+    if fs is None or fs.getScheme() == "file":
+        local = path if fs is None else fs.pathToFile(path).getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        try:
+            fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o666)
+        except FileExistsError:
+            return False
+        try:
+            with os.fdopen(fd, "wb") as fh:
+                fh.write(data)
+        except OSError:
+            os.remove(local)
+            return False
+        return True
+    try:
+        out = fs.create(path, False)
+    except Exception:
+        return False
+    try:
+        with contextlib.closing(out):
+            out.write(bytearray(data))
+    except Exception:
+        try:
+            fs.delete(path, False)
+        except Exception:
+            pass
+        return False
+    return True
 
 
 class StorageLock:
@@ -86,22 +130,8 @@ class StorageLockManager:
             return None
 
     def _try_create(self, path) -> bool:
-        try:
-            out = self._fs.create(path, False)  # overwrite=False → atomic NX
-        except Exception:
-            return False
-        try:
-            out.write(
-                bytearray(
-                    json.dumps(
-                        {"owner": self.owner, "expires_at": time.time() + self._ttl_s}
-                    ),
-                    "utf-8",
-                )
-            )
-        finally:
-            out.close()
-        return True
+        meta = {"owner": self.owner, "expires_at": time.time() + self._ttl_s}
+        return create_exclusive(self._fs, path, json.dumps(meta).encode())
 
     def _mtime_s(self, path) -> float | None:
         try:

@@ -436,9 +436,9 @@ class ClaimLost(RuntimeError):
 
 
 def _claim_version(spark: SparkSession, state_dir: str, nxt: int) -> str | None:
-    """Atomically claim version ``nxt`` via create-NX of a claim marker —
-    the serialization point that keeps two concurrent committers out of one
-    version directory.  The marker carries an OWNER TOKEN which
+    """Claim version ``nxt`` by creating its claim marker exclusively
+    (``locks.create_exclusive``) — the serialization point that keeps two
+    concurrent committers out of one version directory.  The marker carries an OWNER TOKEN which
     ``_replace_at`` re-verifies before making the claimed version visible:
     a committer stalled past the claim TTL whose claim was broken and
     re-claimed by a peer fails that check instead of silently overwriting
@@ -446,41 +446,16 @@ def _claim_version(spark: SparkSession, state_dir: str, nxt: int) -> str | None:
     is already held.  Claim files are pruned with their versions."""
     import uuid as _uuid
 
+    from restructure_hdfs_topic_spark.locks import create_exclusive
+
     token = _uuid.uuid4().hex
+    name = f"offsets/.claim.v{nxt:08d}"
     if "://" not in state_dir:
-        root = os.path.join(state_dir, "offsets")
-        os.makedirs(root, exist_ok=True)
-        try:
-            with open(os.path.join(root, f".claim.v{nxt:08d}"), "x") as fh:
-                fh.write(token)
-                return token
-        except FileExistsError:
-            return None
-    jvm, fs, _ = _hfs(spark, state_dir)
-    path = jvm.org.apache.hadoop.fs.Path(
-        state_dir, f"offsets/.claim.v{nxt:08d}"
-    )
-    created = False
-    try:
-        stream = fs.create(path, False)
-        created = True
-        try:
-            stream.write(bytearray(token, "utf-8"))
-        finally:
-            stream.close()
-        return token
-    except Exception:
-        if created:
-            # The create-NX itself succeeded; a failure writing/closing
-            # would otherwise leave an ORPHANED, token-less claim that
-            # stalls every committer on this version for a full claim TTL
-            # (and reads as owner '').  Best-effort removal keeps the
-            # failure local to this committer.
-            try:
-                fs.delete(path, False)
-            except Exception:
-                pass
-        return None
+        fs, path = None, os.path.join(state_dir, name)
+    else:
+        jvm, fs, _ = _hfs(spark, state_dir)
+        path = jvm.org.apache.hadoop.fs.Path(state_dir, name)
+    return token if create_exclusive(fs, path, token.encode()) else None
 
 
 def _claim_owner(spark: SparkSession, state_dir: str, nxt: int) -> str | None:

@@ -792,11 +792,11 @@ def restructure_files(
     spark: SparkSession, topic: str, paths: list[str], input_bytes: int, config: RestructureConfig
 ) -> int:
     """Write one topic's source files to the target: decode, organize,
-    keep-last dedup and the partitioned write, the body that both the
-    batch job (``_process_topic``) and the streaming service run.
-    ``paths`` come in (partition, offset) order, so the reader schema
-    unions the headers in the same order either way; ``input_bytes``
-    sizes the write (``_write_tasks``).  Returns the records written.
+    keep-last dedup and the partitioned write, the body of
+    ``_process_topic`` between the seen filter and the offset commit.
+    ``paths`` come in (partition, offset) order, the order the reader
+    schema unions the headers in; ``input_bytes`` sizes the write
+    (``_write_tasks``).  Returns the records written.
     Empty files are skipped, and when every file is empty nothing is
     written."""
     from restructure_hdfs_topic_spark.progress import timer

@@ -21,8 +21,7 @@ index being the row number in a window over the file ordered by split
 start, then by read order within the split.  This stays exact when Spark
 splits one large file across tasks at sync markers.  The window costs one
 shuffle, and Catalyst prunes it from any plan that never reads ``offset``
-(the cleaner's).  The streaming service (``streaming.service``) runs the
-same read on each micro-batch's files.
+(the cleaner's).
 """
 
 from __future__ import annotations

@@ -377,8 +377,7 @@ def read_warc_stream(
     ``crawl_dir`` decoded by the same parse kernel as the batch reader —
     crawler output lands as ``.warc.gz`` files and each becomes one
     micro-batch unit; the stream checkpoint is the seen-file ledger
-    (engine-managed exactly-once), as in the Avro
-    ``streaming.service.start_service``.
+    (engine-managed exactly-once).
     Compose with ``warc_responses_as_documents`` and the
     ``streaming_curation_sink`` for the live "crawl stream in, training
     rows out" path."""

@@ -1,20 +1,18 @@
-"""Custom stateful streaming operator (SURVEY M5 extension).
+"""Streaming operators and sinks for the LLM-data pipelines (SURVEY M5
+extension).
 
-The batch engine's exactly-once record filter (O5,
-worker/RestructureWorker.kt:126-140 + accounting/OffsetIntervals.kt:33-44)
-is an anti-join against a persisted interval state table.  In a
-continuously-running service, the same semantics map to Structured
-Streaming's arbitrary stateful processing: ``applyInPandasWithState``
-keyed by (topic, partition), with the merged offset-interval set as the
-group state.  Records whose offset falls inside a committed interval are
-dropped; new offsets extend the state, which the engine checkpoints with
-the stream (no external Redis/state table needed — the reference built
-this by hand, worker/Job.kt + accounting/*).
+- ``streaming_dedup_documents``: exact document dedup across micro-batches
+  as an ``applyInPandasWithState`` operator, the fingerprint set kept in
+  the engine's group state.
+- ``streaming_near_dup_sink``, ``streaming_bm25_index_sink``,
+  ``streaming_curation_sink``, ``streaming_ivf_index_sink``:
+  ``foreachBatch`` sink bodies that run the batch operator on each
+  micro-batch and keep their state in the shared on-disk stores
+  (``operators/incremental.py``, the index directories).
 
-Scale shape: state is per-(topic, partition) — hundreds of groups, each
-holding a handful of merged ``[lo, hi]`` intervals (bounded by gap count,
-not record count).  The per-batch work is vectorized numpy searchsorted
-over the interval bounds, Arrow-batched.
+The restructure job's exactly-once record filter is not here: the service
+loop (``streaming.service.run_service``) runs the batch job, whose offset
+ledger (``operators/offsets.py``) is the seen-record filter (O5).
 """
 
 from __future__ import annotations
@@ -23,95 +21,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def make_dedup_kernel(offset_col: str = "offset"):
-    """The per-group kernel behind ``streaming_seen_record_filter``,
-    exposed at module level so the cross-chunk dedup contract is directly
-    unit-testable (a synthetic multi-chunk ``pdf_iter`` + fake GroupState
-    exercises exactly what Arrow chunking does in production)."""
-    import numpy as np
-    import pandas as pd
-
-    def dedup(key, pdf_iter, state: GroupState):
-        if state.exists:
-            los, his = state.get
-            los = np.asarray(los, dtype=np.int64)
-            his = np.asarray(his, dtype=np.int64)
-        else:
-            los = np.empty(0, dtype=np.int64)
-            his = np.empty(0, dtype=np.int64)
-        # Offsets first emitted earlier in THIS batch (sorted, unique):
-        # Arrow hands the group as multiple chunks, so the committed-interval
-        # state alone cannot catch a duplicate that spans two chunks of the
-        # same micro-batch — this running set closes that gap.
-        fresh_sorted = np.empty(0, dtype=np.int64)
-        for pdf in pdf_iter:
-            offs = pdf[offset_col].to_numpy(dtype=np.int64)
-            if len(los):
-                # Interval membership: the candidate interval for offset o
-                # is the last one with lo <= o; seen iff o <= its hi.
-                idx = np.searchsorted(los, offs, side="right") - 1
-                seen = (idx >= 0) & (offs <= his[np.clip(idx, 0, None)])
-            else:
-                seen = np.zeros(len(offs), dtype=bool)
-            if len(fresh_sorted):
-                seen |= np.isin(offs, fresh_sorted)
-            # Also dedup within the chunk itself (a file may repeat offsets).
-            first_seen = ~pd.Series(offs).duplicated().to_numpy()
-            keep = ~seen & first_seen
-            out = pdf[keep]
-            if len(out):
-                yield out
-            kept = offs[keep]
-            if len(kept):
-                fresh_sorted = np.union1d(fresh_sorted, kept)
-        if len(fresh_sorted):
-            # Merge fresh offsets into the interval set: gaps-and-islands
-            # over the union of existing interval endpoints and new points.
-            merged_lo, merged_hi = [], []
-            intervals = sorted(
-                [(int(l), int(h)) for l, h in zip(los, his)]
-                + [(int(p), int(p)) for p in fresh_sorted]
-            )
-            for lo, hi in intervals:
-                if merged_lo and lo <= merged_hi[-1] + 1:
-                    merged_hi[-1] = max(merged_hi[-1], hi)
-                else:
-                    merged_lo.append(lo)
-                    merged_hi.append(hi)
-            state.update((merged_lo, merged_hi))
-
-    return dedup
-
-
-def streaming_seen_record_filter(
-    records: DataFrame,
-    topic_col: str = "topic",
-    partition_col: str = "partition",
-    offset_col: str = "offset",
-) -> DataFrame:
-    """Exactly-once record filter as a stateful streaming operator.
-
-    Emits each (topic, partition, offset) at most once across ALL
-    micro-batches — duplicate file deliveries, overlapping offset ranges,
-    and replays are dropped.  State per group = sorted disjoint intervals
-    of seen offsets (the same representation as the batch O16 state).
-    """
-    out_schema = records.schema
-    return records.groupBy(topic_col, partition_col).applyInPandasWithState(
-        make_dedup_kernel(offset_col),
-        outputStructType=out_schema,
-        stateStructType="los array<long>, his array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def make_fingerprint_dedup_kernel(fp_col: str = "__fp"):
     """Per-group kernel for ``streaming_dedup_documents``: exact-membership
-    dedup against a sorted fingerprint array in group state (the
-    set-valued analogue of the interval kernel above), with the same
-    cross-chunk running set so an Arrow-chunked group cannot leak
-    intra-batch duplicates."""
+    dedup against a sorted fingerprint array in group state, with a
+    running set of this batch's fingerprints so an Arrow-chunked group
+    cannot leak a duplicate that spans two chunks.  Module-level so the
+    cross-chunk contract is testable with a fake GroupState."""
     import numpy as np
     import pandas as pd
 

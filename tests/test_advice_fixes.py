@@ -1,6 +1,6 @@
 """Regression tests for the round-2 advisor findings (ADVICE.md r2):
-cross-chunk streaming dedup, offsets pointer-loss recovery, overflow-safe
-hash sampling, per-query top-k in probed buckets, multi-branch Avro unions.
+offsets pointer-loss recovery, overflow-safe hash sampling, per-query
+top-k in probed buckets, multi-branch Avro unions.
 """
 
 import sys
@@ -10,54 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
-
-
-class _FakeState:
-    """Minimal GroupState stand-in for driving the dedup kernel directly."""
-
-    def __init__(self, value=None):
-        self._value = value
-        self.updated = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, value):
-        self.updated = value
-        self._value = value
-
-
-def test_streaming_dedup_across_arrow_chunks():
-    """An offset repeated across two Arrow chunks of the SAME micro-batch
-    group must be emitted once (ADVICE r2 #1: the per-chunk seen set let
-    cross-chunk duplicates through)."""
-    from restructure_hdfs_topic_spark.streaming.stateful import make_dedup_kernel
-
-    dedup = make_dedup_kernel("offset")
-    chunk1 = pd.DataFrame({"offset": [0, 1, 2, 2], "v": ["a", "b", "c", "c2"]})
-    chunk2 = pd.DataFrame({"offset": [2, 3, 1], "v": ["dup", "d", "dup"]})
-    state = _FakeState()
-    out = pd.concat(list(dedup(("t", 0), iter([chunk1, chunk2]), state)))
-    assert sorted(out["offset"].tolist()) == [0, 1, 2, 3]
-    assert "dup" not in set(out["v"])
-    # state merged to one contiguous interval
-    assert state.updated == ([0], [3])
-
-
-def test_streaming_dedup_against_committed_state():
-    from restructure_hdfs_topic_spark.streaming.stateful import make_dedup_kernel
-
-    dedup = make_dedup_kernel("offset")
-    state = _FakeState(([0, 10], [4, 12]))  # committed: [0,4] and [10,12]
-    chunk = pd.DataFrame({"offset": [3, 5, 11, 13]})
-    out = pd.concat(list(dedup(("t", 0), iter([chunk]), state)))
-    assert sorted(out["offset"].tolist()) == [5, 13]
-    assert state.updated == ([0, 10], [5, 13])  # 5 and 13 extend the islands
 
 
 def test_offsets_pointer_loss_recovers_latest_version(spark, tmp_path):
@@ -508,6 +460,9 @@ def test_claim_version_failure_after_create_cleans_up(spark, tmp_path, monkeypat
     class FsWrapper:
         def __init__(self, fs):
             self._fs = fs
+
+        def getScheme(self):
+            return "hdfs"  # a file: scheme would be created through os.open
 
         def create(self, path, overwrite):
             self._fs.create(path, overwrite).close()  # real create-NX lands

@@ -10,7 +10,9 @@ and the golden output pinned in RestructureS3IntegrationTest.kt:
 """
 
 import glob
+import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -294,52 +296,176 @@ def test_zip_compression_output(spark, tmp_path):
     assert "1.58021982003E9,CONNECTED," in text
 
 
-@needs_fixtures
-def test_service_loop_schedules_jobs(spark, tmp_path):
-    """O27: the service loop runs restructure each interval and the cleaner
-    on its own (longer) interval, with injected clock/sleep."""
-    import shutil
+def _hive_json_rows(target_dir: str) -> list[tuple]:
+    """(userId, value.time, value.level as JSON, value.note) of every row
+    in a Hive-layout JSON tree, read line by line: rows written under an
+    evolved schema carry a union struct where older rows carry a long."""
+    rows = []
+    for path in glob.glob(f"{target_dir}/projectId=*/userId=*/topic=*/bin=*/part-*"):
+        user = path.split("/userId=", 1)[1].split("/", 1)[0]
+        with open(path) as fh:
+            for line in fh:
+                v = json.loads(line)["value"]
+                rows.append((user, v["time"], json.dumps(v.get("level")), v.get("note")))
+    return rows
 
+
+def _service_config(tmp_path):
+    """Hive-layout JSON; a 300 s service interval, and the cleaner on the
+    same interval, deleting any committed file its successor offset
+    proves complete."""
     from restructure_hdfs_topic_spark.config import CleanerConfig, ServiceConfig
-    from restructure_hdfs_topic_spark.streaming.service import run_service
 
-    src = str(tmp_path / "in")
-    shutil.copytree(FIXTURES, src)
     cfg = RestructureConfig(
         target_dir=str(tmp_path / "out"),
         state_dir=str(tmp_path / "state"),
-        format="csv",
-        cleaner=CleanerConfig(enable=True, interval_s=500, age_days=0),
+        format="json",
+        cleaner=CleanerConfig(enable=True, interval_s=300, age_days=0),
         service=ServiceConfig(enable=True, interval_s=300),
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    import time as _time
+    return cfg
 
-    t = {"now": _time.time()}
-    sleeps = []
 
-    def fake_sleep(s):
-        sleeps.append(s)
-        t["now"] += s
+class _FakeTime:
+    """An injected clock whose ``sleep`` advances it and runs the next
+    landing: ``landings[k]`` runs during the k-th sleep."""
 
-    results = run_service(
-        spark, src, cfg, max_iterations=3, sleep_fn=fake_sleep, clock=lambda: t["now"]
-    )
-    jobs = [r["job"] for r in results]
-    # 3 restructure runs; cleaner fires after the 500s threshold passes
-    # (i.e. after the second 300s sleep), exactly once here.
-    assert jobs.count("restructure") == 3
-    assert jobs.count("clean") == 1
-    assert sleeps == [300, 300]
-    # First run ingests everything; later runs are no-ops; the cleaner
-    # deleted the fully-extracted committed file.
-    assert results[0]["records_written"] == 1006
-    assert all(r["records_written"] == 0 for r in results if r["job"] == "restructure" and r is not results[0])
-    cleans = [r for r in results if r["job"] == "clean"]
-    assert [p.rsplit("/", 1)[-1] for p in cleans[0]["deleted"]] == [
-        "application_server_status+1+0000000018+0000000020.avro"
+    def __init__(self, landings=()):
+        self.now = time.time()
+        self.sleeps: list[float] = []
+        self._landings = list(landings)
+
+    def clock(self) -> float:
+        return self.now
+
+    def sleep(self, s: float) -> None:
+        self.sleeps.append(s)
+        self.now += s
+        if self._landings:
+            self._landings.pop(0)()
+
+
+def test_service_loop_schedules_jobs(spark, tmp_path):
+    """O27: the service loop restructures each interval and cleans on the
+    cleaner's interval, and files that land between iterations are picked
+    up: every record is written exactly once, a lone zero-length file
+    writes nothing, a file with an evolved schema keeps its new field, and
+    the cleaner deletes exactly the processed files whose successor offset
+    is committed."""
+    from collections import Counter
+
+    from restructure_hdfs_topic_spark.streaming.service import run_service
+    from tests.avro_tree import KEY_SCHEMA, RECORD_SCHEMA, reading, write_topic_file
+
+    src = str(tmp_path / "in")
+    t0 = 1_704_067_200.0  # 2024-01-01 00:00 UTC
+    # 2 partitions x 2 files x 10 records; record i: user u{i % 3}, time t0 + 600 i.
+    first = {
+        (p, f): write_topic_file(
+            src, "events", p, 10 * f,
+            [reading("p", f"u{i % 3}", t0 + 600 * i) for i in range(20 * p + 10 * f, 20 * p + 10 * f + 10)],
+        )
+        for p in (0, 1)
+        for f in (0, 1)
+    }
+    empty = os.path.join(src, "events", "partition=0", "events+0+0000000020+0000000020.avro")
+
+    def land_empty():
+        # Offset 20 of partition 0 is never committed, so (0, 10..19) stays.
+        open(empty, "wb").close()
+
+    # A nullable field and a union branch added (level: long -> long|string).
+    value = RECORD_SCHEMA["fields"][1]["type"]
+    new_value = {
+        **value,
+        "fields": [
+            {**f, "type": ["null", "long", "string"]} if f["name"] == "level" else f
+            for f in value["fields"]
+        ]
+        + [{"name": "note", "type": ["null", "string"], "default": None}],
+    }
+    new_schema = {**RECORD_SCHEMA, "fields": [{"name": "key", "type": KEY_SCHEMA}, {"name": "value", "type": new_value}]}
+    evolved = {}
+
+    def land_evolved():
+        later = [reading("p", "u1", t0 + 86400 + 60 * i) for i in range(2)]
+        later[0]["value"].update(level=7, note="n0")
+        later[1]["value"].update(level="high", note=None)
+        evolved["path"] = write_topic_file(src, "events", 1, 20, later, schema=new_schema)
+
+    cfg = _service_config(tmp_path)
+    fake = _FakeTime([land_empty, land_evolved])
+    results = run_service(spark, [src], cfg, max_iterations=3, sleep_fn=fake.sleep, clock=fake.clock)
+
+    assert [r["job"] for r in results] == ["restructure", "restructure", "clean", "restructure", "clean"]
+    assert fake.sleeps == [300, 300]
+    restructures = [r for r in results if r["job"] == "restructure"]
+    assert [(r["files_processed"], r["records_written"]) for r in restructures] == [(4, 40), (0, 0), (1, 2)]
+    expected = [(f"u{i % 3}", t0 + 600 * i, "null", None) for i in range(40)] + [
+        ("u1", t0 + 86400, json.dumps({"member0": 7}), "n0"),
+        ("u1", t0 + 86460, json.dumps({"member1": "high"}), None),
     ]
+    assert Counter(_hive_json_rows(cfg.target_dir)) == Counter(expected)
+    cleans = [r for r in results if r["job"] == "clean"]
+    assert sorted(cleans[0]["deleted"]) == [first[0, 0], first[1, 0]]
+    assert cleans[1]["deleted"] == [first[1, 1]]
+    assert all(c["rolled_back"] == [] for c in cleans)
+    assert sorted(glob.glob(f"{src}/events/partition=*/*.avro")) == sorted([first[0, 1], empty, evolved["path"]])
+
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        import shutil
+
+        fixture_src = str(tmp_path / "fixtures")
+        shutil.copytree(FIXTURES, fixture_src)
+        cfg = _service_config(tmp_path / "golden")
+        cfg.format, cfg.cleaner.interval_s = "csv", 500
+        fake = _FakeTime()
+        results = run_service(spark, [fixture_src], cfg, max_iterations=3, sleep_fn=fake.sleep, clock=fake.clock)
+        # The cleaner's 500 s pass after the second 300 s sleep.
+        assert [r["job"] for r in results] == ["restructure"] * 3 + ["clean"]
+        assert [r["records_written"] for r in results[:3]] == [1006, 0, 0]
+        assert [p.rsplit("/", 1)[-1] for p in results[3]["deleted"]] == [
+            "application_server_status+1+0000000018+0000000020.avro"
+        ]
+
+
+def test_service_serves_every_input_root(spark, tmp_path):
+    """Each service iteration restructures every input root, with one
+    sleep per iteration, not one root after the other."""
+    from restructure_hdfs_topic_spark.streaming.service import run_service
+    from tests.avro_tree import reading, write_topic_file
+
+    roots = [str(tmp_path / "in_a"), str(tmp_path / "in_b")]
+    for k, root in enumerate(roots):
+        write_topic_file(root, f"topic_{k}", 0, 0, [reading("p", "u", 1_704_067_200.0 + 60 * i) for i in range(3 + k)])
+    cfg = _service_config(tmp_path)
+    cfg.cleaner.enable = False
+    fake = _FakeTime()
+    results = run_service(spark, roots, cfg, max_iterations=2, sleep_fn=fake.sleep, clock=fake.clock)
+    assert [(r["input_root"], r["records_written"]) for r in results] == [
+        (roots[0], 3), (roots[1], 4), (roots[0], 0), (roots[1], 0)
+    ]
+    assert fake.sleeps == [300]
+
+
+def test_cli_service_runs_one_loop_over_all_roots(tmp_path, monkeypatch):
+    """``-S in1 in2``: the CLI starts one service loop over both roots (a
+    loop per root would never reach the second one)."""
+    from restructure_hdfs_topic_spark import __main__ as cli
+    from restructure_hdfs_topic_spark.streaming import service
+
+    calls = []
+
+    def fake_run_service(spark, roots, cfg, **kw):
+        calls.append((roots, kw))
+        return []
+
+    monkeypatch.setattr(service, "run_service", fake_run_service)
+    argv = ["in1", "in2", "-S", "-o", str(tmp_path / "out"), "--state-directory", str(tmp_path / "state")]
+    cli.main(argv, spark=object())
+    assert calls == [(["in1", "in2"], {"max_iterations": None, "restructure": True})]
 
 
 @needs_fixtures
@@ -369,37 +495,6 @@ def test_avro_cleaner_over_zip_output(spark, tmp_path):
     deleted = [p.rsplit("/", 1)[-1] for p in result["deleted"]]
     assert deleted == ["application_server_status+1+0000000018+0000000020.avro"]
     assert result["rolled_back"] == []
-
-
-def test_streaming_avro_restructure(spark, tmp_path):
-    """M5: a stream of Kafka-Connect files, one per micro-batch, writes the
-    partitioned layout; a second availableNow run over the same checkpoint
-    ingests nothing new."""
-    from restructure_hdfs_topic_spark.streaming.service import start_service
-    from tests.avro_tree import reading, write_topic_file
-
-    src = str(tmp_path / "in")
-    t0 = 1_580_219_820.0  # 2020-01-28 13:57 UTC
-    for k in range(2):
-        write_topic_file(
-            src, "application_server_status", 1, 18 + 3 * k,
-            [reading("p", "u", t0 + 120 * (3 * k + i)) for i in range(3)],
-        )
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"), state_dir=str(tmp_path / "state"), format="json"
-    )
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        assert start_service(spark, src, cfg, ckpt, max_files_per_trigger=1).awaitTermination(180)
-        out = cfg.target_dir
-        return spark.read.option("basePath", out).json(f"{out}/projectId=*")
-
-    got = drain()
-    assert got.count() == 6
-    bins = {r["bin"] for r in got.select("bin").distinct().collect()}
-    assert bins == {"20200128_1300", "20200128_1400"}
-    assert drain().count() == 6  # checkpoint: nothing re-ingested
 
 
 def test_read_avro_schema_evolution_union(spark, tmp_path):

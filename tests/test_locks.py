@@ -40,6 +40,66 @@ def test_lease_mutual_exclusion_and_owner_unlock(spark, tmp_path):
     assert b.acquire("topic_x") is not None
 
 
+def _race(n: int, fn) -> list:
+    """``fn(k)`` for k in range(n), each in its own thread, released
+    together by a barrier; returns the results in k order."""
+    import threading
+
+    barrier = threading.Barrier(n, timeout=60)
+    results = [None] * n
+
+    def run(k):
+        barrier.wait()
+        results[k] = fn(k)
+
+    threads = [threading.Thread(target=run, args=(k,)) for k in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+        assert not t.is_alive()
+    return results
+
+
+def test_lease_excludes_under_a_race(spark, tmp_path):
+    """Six managers that call ``acquire`` on one name at the same moment:
+    exactly one wins each round.  Hadoop's ``create(path, false)`` on a
+    local path checks ``exists()`` and then opens, so without an
+    exclusive create several contenders can win one round."""
+    managers = [StorageLockManager(spark, str(tmp_path / "state")) for _ in range(6)]
+    for round_ in range(50):
+        won = _race(len(managers), lambda k: managers[k].acquire("topic_x"))
+        winners = [lock for lock in won if lock is not None]
+        assert len(winners) == 1, f"round {round_}: {len(winners)} winners"
+        winners[0].close()
+
+
+def test_offset_version_claim_excludes_under_a_race(spark, tmp_path):
+    """Six committers claiming one offsets version of a ``file://`` state
+    dir at the same moment: exactly one gets the claim."""
+    from restructure_hdfs_topic_spark.operators.offsets import _claim_version
+
+    state_dir = f"file://{tmp_path}/state"
+    for nxt in range(1, 21):
+        tokens = _race(6, lambda k: _claim_version(spark, state_dir, nxt))
+        assert sum(t is not None for t in tokens) == 1, f"version {nxt}: {tokens}"
+
+
+def test_lease_file_without_crc_reads_and_releases(spark, tmp_path):
+    """A local lease file is made without Hadoop's ``.crc`` sidecar; the
+    checksummed local FS still reads it (a second owner is refused), and
+    ``close`` deletes it."""
+    lock_dir = tmp_path / "state" / "_lock"
+    a = StorageLockManager(spark, str(tmp_path / "state"))
+    lock = a.acquire("topic_x")
+    assert lock is not None
+    assert sorted(os.listdir(lock_dir)) == ["topic_x.lock"]
+    assert a._read(a._path("topic_x"))["owner"] == a.owner
+    assert StorageLockManager(spark, str(tmp_path / "state")).acquire("topic_x") is None
+    lock.close()
+    assert os.listdir(lock_dir) == []
+
+
 def test_expired_lease_is_broken(spark, tmp_path):
     state = str(tmp_path / "state")
     a = StorageLockManager(spark, state, ttl_s=-1)  # already expired

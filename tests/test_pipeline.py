@@ -1,16 +1,12 @@
 """End-to-end pipeline tests (SURVEY §5 strategy), on generated
 Kafka-Connect trees (tests/avro_tree.py): Avro records in → partitioned
 JSON out with offsets state; rerun writes NOTHING (idempotence); flatten
-golden semantics (CsvAvroConverterTest.kt analogues); streaming
-availableNow drain; cleaner delete/rollback; config resolution.
+golden semantics (CsvAvroConverterTest.kt analogues); template paths;
+cleaner delete/rollback; config resolution; the CLI.
 """
 
 import json
 import os
-import re
-import time
-
-import pytest
 
 from restructure_hdfs_topic_spark.config import RestructureConfig, WorkerConfig
 from restructure_hdfs_topic_spark.operators.flatten import (
@@ -26,21 +22,16 @@ from tests.avro_tree import reading, write_topic_file
 T0 = 1_704_067_200.0  # 2024-01-01 00:00 UTC
 
 
-def _events_tree(root, offset_shift=0, project=None):
+def _events_tree(root, project=None):
     """Topic ``events``: 2 partitions x 2 files x 10 records.  Record ``i``
     belongs to user ``u{i % 5}`` with event time ``T0 + 600 * i`` (40
-    records over 2024-01-01 00:00..06:30); ``offset_shift`` lands the
-    same records again as new files further up each partition.  File
-    mtimes rise in (partition, offset) order, the order a file stream
-    lists them in."""
-    now = time.time()
+    records over 2024-01-01 00:00..06:30)."""
     for partition in (0, 1):
         for f in (0, 1):
             first = 20 * partition + 10 * f
             write_topic_file(
-                root, "events", partition, offset_shift + 10 * f,
+                root, "events", partition, 10 * f,
                 [reading(project, f"u{i % 5}", T0 + 600 * i) for i in range(first, first + 10)],
-                mtime_s=now - 60 + 2 * partition + f,
             )
     return root
 
@@ -128,221 +119,6 @@ def test_attempt_routing_groups_by_header_shape(spark):
     persisted2.unpersist()
 
 
-def _stream(spark, src, cfg, ckpt, **kw):
-    """One ``start_service`` drain (availableNow) of ``src``."""
-    from restructure_hdfs_topic_spark.streaming.service import start_service
-
-    assert start_service(spark, src, cfg, ckpt, **kw).awaitTermination(120)
-
-
-def test_streaming_available_now(spark, tmp_path):
-    src = _events_tree(str(tmp_path / "in"))
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    cfg = RestructureConfig(target_dir=out, state_dir=str(tmp_path / "state"), format="json")
-    _stream(spark, f"{src}/events", cfg, ckpt, max_files_per_trigger=2)
-    assert _read_hive_json(spark, out).count() == 40
-    # Second availableNow run over the same source: checkpoint dedups files.
-    _stream(spark, f"{src}/events", cfg, ckpt)
-    assert _read_hive_json(spark, out).count() == 40
-
-
-def test_streaming_template_layout(spark, tmp_path):
-    """Streaming form of the TEMPLATE physical sink: micro-batches land at
-    the rendered ${projectId}/${userId}/${topic}/<bin>.json tree with the
-    schema sidecar next to the data, and a second drain over NEW source
-    files APPENDS into the bins the first drain created."""
-    import glob as _glob
-
-    from restructure_hdfs_topic_spark.config import PathConfig
-
-    src = _events_tree(str(tmp_path / "in"))
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="json",
-        paths=PathConfig(layout="template"),
-    )
-    ckpt = str(tmp_path / "ckpt")
-    _stream(spark, f"{src}/events", cfg, ckpt)
-
-    user_dirs = sorted(_glob.glob(f"{cfg.target_dir}/unknown-project/*/events"))
-    assert len(user_dirs) == 5  # one tree per sanitized user id
-    first = sorted(_glob.glob(f"{user_dirs[0]}/*.json"))
-    assert first and all("/" not in os.path.relpath(p, user_dirs[0]) for p in first)
-    assert os.path.exists(os.path.join(user_dirs[0], "schema-events.json"))
-    assert not _glob.glob(f"{cfg.target_dir}/_staging_*")
-    assert not _glob.glob(f"{cfg.target_dir}/projectId=*")
-
-    def data_rows() -> int:
-        return sum(
-            1
-            for p in _glob.glob(f"{cfg.target_dir}/unknown-project/*/events/*.json")
-            if not os.path.basename(p).startswith("schema-")
-            for _ in open(p)
-        )
-
-    assert data_rows() == 40
-
-    # New source files into the SAME bins: the merge path appends.
-    _events_tree(src, offset_shift=100)
-    _stream(spark, f"{src}/events", cfg, ckpt)
-    assert data_rows() == 80
-
-
-def _tree_files(root) -> dict[str, bytes]:
-    """{relative path: bytes, decompressed} of every file under ``root``."""
-    import gzip
-
-    out = {}
-    for dirpath, _dirs, names in os.walk(root):
-        for name in names:
-            path = os.path.join(dirpath, name)
-            with open(path, "rb") as fh:
-                raw = fh.read()
-            out[os.path.relpath(path, root)] = gzip.decompress(raw) if name.endswith(".gz") else raw
-    return out
-
-
-def _hive_rows(root) -> dict[str, object]:
-    """The hive tree by directory: the sorted JSON lines of its part files
-    (their names carry a write id, and a stream writes one part per
-    micro-batch), and every other file's bytes."""
-    out: dict[str, object] = {}
-    for rel, raw in _tree_files(root).items():
-        d, name = os.path.split(rel)
-        if name.startswith("part-"):
-            out.setdefault(d, []).extend(raw.decode().splitlines())
-        elif not name.startswith(("_", ".")):
-            out[rel] = raw
-    return {k: sorted(v) if isinstance(v, list) else v for k, v in out.items()}
-
-
-@pytest.mark.parametrize("layout,fmt,compression", [("template", "csv", "gzip"), ("hive", "json", None)])
-def test_stream_equals_batch(spark, tmp_path, layout, fmt, compression):
-    """``start_service`` with two files per micro-batch writes what
-    ``run_avro_restructure_job`` writes for the same config: the template
-    tree file for file, with equal decompressed bytes, the hive tree row
-    for row.  No execution the stream runs starts a Python worker."""
-    from restructure_hdfs_topic_spark.config import PathConfig
-    from tests.test_avro_job_driver import _assert_no_python, _last_execution, _plans_after
-
-    src = _events_tree(str(tmp_path / "in"))
-
-    def config(target):
-        return RestructureConfig(
-            target_dir=str(tmp_path / target),
-            state_dir=str(tmp_path / f"state_{target}"),
-            format=fmt,
-            compression=compression,
-            paths=PathConfig(layout=layout),
-            worker=WorkerConfig(minimum_file_age_s=0),
-        )
-
-    batch_cfg, stream_cfg = config("batch"), config("stream")
-    os.makedirs(batch_cfg.state_dir)
-    assert run_avro_restructure_job(spark, src, batch_cfg)["records_written"] == 40
-    before = _last_execution(spark)
-    _stream(spark, f"{src}/events", stream_cfg, str(tmp_path / "ckpt"), max_files_per_trigger=2)
-    plans = _plans_after(spark, before)
-    # foreachBatch hands a micro-batch over as the rows of the stream's own
-    # JVM plan (an SQLExecutionRDD), which scans as an ExistingRDD: the
-    # collect of each batch's (path, length) listing.
-    listing = [p for p in plans if "SQLExecutionRDD[" in p]
-    assert listing and all(re.search(r"Output \[2\]: \[path#\d+, length#\d+L\]", p) for p in listing)
-    _assert_no_python([p for p in plans if p not in listing])
-    if layout == "template":
-        batch, stream = _tree_files(batch_cfg.target_dir), _tree_files(stream_cfg.target_dir)
-        assert len(batch) == 39  # 34 (user, bin) files and 5 sidecars
-    else:
-        batch, stream = _hive_rows(batch_cfg.target_dir), _hive_rows(stream_cfg.target_dir)
-        assert sum(len(v) for v in batch.values() if isinstance(v, list)) == 40
-    assert stream == batch
-
-
-@pytest.mark.parametrize("layout", ["hive", "template"])
-def test_streaming_replayed_batch_writes_once(spark, tmp_path, layout):
-    """A micro-batch the engine replays (its commit lost after the output
-    was written) writes nothing again."""
-    import glob as _glob
-
-    from restructure_hdfs_topic_spark.config import PathConfig
-
-    src = _events_tree(str(tmp_path / "in"))
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="json",
-        paths=PathConfig(layout=layout),
-    )
-    ckpt = str(tmp_path / "ckpt")
-
-    def rows() -> int:
-        if layout == "hive":
-            return _read_hive_json(spark, cfg.target_dir).count()
-        files = _glob.glob(f"{cfg.target_dir}/unknown-project/*/events/*.json")
-        return sum(1 for p in files if not os.path.basename(p).startswith("schema-") for _ in open(p))
-
-    _stream(spark, f"{src}/events", cfg, ckpt, max_files_per_trigger=2)
-    assert rows() == 40
-    commits = os.path.join(ckpt, "commits")
-    last = max((n for n in os.listdir(commits) if n.isdigit()), key=int)
-    for name in (last, f".{last}.crc"):
-        os.remove(os.path.join(commits, name))
-    _stream(spark, f"{src}/events", cfg, ckpt, max_files_per_trigger=2)
-    assert os.path.exists(os.path.join(commits, last))  # the batch ran again
-    assert rows() == 40
-
-
-def test_streaming_schema_evolves_while_running(spark, tmp_path):
-    """A processingTime stream: a file that lands while the stream runs,
-    with a new nullable field and a new union branch, keeps both in the
-    output; an empty ``.avro`` file alone in a micro-batch writes
-    nothing and does not fail the stream."""
-    from tests.avro_tree import KEY_SCHEMA, RECORD_SCHEMA
-
-    value = RECORD_SCHEMA["fields"][1]["type"]
-    new_value = {
-        **value,
-        "fields": [
-            {**f, "type": ["null", "long", "string"]} if f["name"] == "level" else f
-            for f in value["fields"]
-        ]
-        + [{"name": "note", "type": ["null", "string"], "default": None}],
-    }
-    new_schema = {**RECORD_SCHEMA, "fields": [{"name": "key", "type": KEY_SCHEMA}, {"name": "value", "type": new_value}]}
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    cfg = RestructureConfig(target_dir=out, state_dir=str(tmp_path / "state"), format="json")
-    write_topic_file(src, "events", 0, 0, [reading("p", "u1", T0 + 60 * i, level=i) for i in range(3)])
-    from restructure_hdfs_topic_spark.streaming.service import start_service
-
-    q = start_service(spark, src, cfg, str(tmp_path / "ckpt"), interval_s=1)
-    try:
-        q.processAllAvailable()
-        empty = os.path.join(src, "events", "partition=0", "events+0+0000000003+0000000003.avro")
-        open(empty, "wb").close()
-        q.processAllAvailable()
-        later = [reading("p", "u1", T0 + 600 + 60 * i) for i in range(2)]
-        later[0]["value"]["level"], later[1]["value"]["level"] = 7, "high"
-        later[0]["value"]["note"], later[1]["value"]["note"] = "n0", None
-        write_topic_file(src, "events", 0, 4, later, schema=new_schema)
-        q.processAllAvailable()
-        assert q.exception() is None
-    finally:
-        q.stop()
-    # Read line by line: the older rows' ``level`` is a long, the newer
-    # rows' a union struct.
-    values = {
-        v["time"]: v
-        for rel, raw in _tree_files(out).items()
-        if os.path.basename(rel).startswith("part-")
-        for v in (json.loads(line)["value"] for line in raw.decode().splitlines())
-    }
-    assert len(values) == 5 and values[T0]["level"] == 0
-    assert (values[T0 + 600]["level"], values[T0 + 600]["note"]) == ({"member0": 7}, "n0")
-    assert values[T0 + 660]["level"] == {"member1": "high"} and "note" not in values[T0 + 660]
-
-
 def test_config_dedup_key_resolution():
     cfg = RestructureConfig.from_dict(
         {
@@ -416,45 +192,6 @@ def test_cleaner_rollback_and_reprocess(spark, tmp_path):
     assert {r["userId"]: r["count"] for r in users} == {"u0": 4, "u1": 4, "u2": 4}
 
 
-def test_streaming_stateful_seen_record_filter(spark, tmp_path):
-    """applyInPandasWithState exactly-once: offsets seen in earlier
-    micro-batches (or repeated within one) are dropped; interval state
-    survives across batches via the checkpoint."""
-    from restructure_hdfs_topic_spark.streaming.stateful import (
-        streaming_seen_record_filter,
-    )
-
-    src = str(tmp_path / "src")
-    schema = "topic string, partition int, offset long, payload string"
-    # File 1: offsets 0-9.  File 2 (arrives later): 5-14 — overlap 5-9 must
-    # be dropped.  File 3: replays 0-14 entirely + new 15, plus an in-file
-    # duplicate of 15.
-    b1 = [("t", 0, o, f"p{o}") for o in range(10)]
-    b2 = [("t", 0, o, f"p{o}") for o in range(5, 15)]
-    b3 = [("t", 0, o, f"p{o}") for o in range(16)] + [("t", 0, 15, "dup")]
-    for i, rows in enumerate([b1, b2, b3]):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            f"{src}/f{i}", mode="overwrite"
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{src}/f*")
-    )
-    deduped = streaming_seen_record_filter(stream)
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT offset FROM dedup_out").collect()
-    offsets = sorted(r["offset"] for r in rows)
-    assert offsets == list(range(16))  # each offset exactly once
-
 def test_plan_shapes_scale_properties(spark):
     """Pin the plan properties SCALE.md claims: the seen-record filter is
     the broadcast searchsorted interval lookup (ONE ArrowEvalPython
@@ -526,51 +263,6 @@ def test_offsets_commit_hadoop_fs_uri(spark, tmp_path):
     claims = [n for n in entries if n.startswith(".claim.v")]
     assert claims == [".claim.v00000001", ".claim.v00000002"]
     assert (tmp_path / "state" / "offsets.CURRENT").read_text() == "v00000002"
-
-def test_streaming_stateful_state_survives_restart(spark, tmp_path):
-    """applyInPandasWithState state must recover from the checkpoint: a
-    SECOND streaming query over the same checkpoint sees the first run's
-    offset intervals and still drops replayed records."""
-    from restructure_hdfs_topic_spark.streaming.stateful import (
-        streaming_seen_record_filter,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    schema = "topic string, partition int, offset long, payload string"
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/f*")
-        )
-        q = (
-            streaming_seen_record_filter(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    spark.createDataFrame(
-        [("t", 0, o, f"p{o}") for o in range(10)], schema
-    ).coalesce(1).write.parquet(f"{src}/f0")
-    run_once()
-    assert spark.read.parquet(out).count() == 10
-
-    # New file replays 0-9 and adds 10-14; a fresh query on the SAME
-    # checkpoint must recover the interval state and emit only 10-14.
-    spark.createDataFrame(
-        [("t", 0, o, f"p{o}") for o in range(15)], schema
-    ).coalesce(1).write.parquet(f"{src}/f1")
-    run_once()
-    got = sorted(r["offset"] for r in spark.read.parquet(out).collect())
-    assert got == list(range(15))  # 0-9 from run 1, 10-14 from run 2, no dups
 
 def _cli_one_shot_and_clean(spark, work, src: str, n_records: int, deletable: list[str]):
     """Run the CLI one-shot over ``src``, then a --clean --no-restructure
@@ -791,10 +483,10 @@ def test_query_registry_consistency():
 
 
 def test_streaming_template_layout_time_pattern(spark, tmp_path):
-    """The generalized template params (${time:pattern}, ${sourceId}) must
-    render physically on the STREAMING sink too — micro-batch event times
-    drive the per-record time directories; a key schema without a
-    sourceId falls back to unknown-source (FormattedPathFactory.kt:88,94-98)."""
+    """The generalized template params (${time:pattern}, ${sourceId})
+    render physically on the template sink — record event times drive the
+    per-record time directories; a key schema without a sourceId falls
+    back to unknown-source (FormattedPathFactory.kt:88,94-98)."""
     import glob as _glob
 
     from restructure_hdfs_topic_spark.config import PathConfig
@@ -824,8 +516,10 @@ def test_streaming_template_layout_time_pattern(spark, tmp_path):
             layout="template",
             template="${topic}/${projectId}/${userId}/${sourceId}/${time:yyyyMM}/${filename}",
         ),
+        worker=WorkerConfig(minimum_file_age_s=0),
     )
-    _stream(spark, f"{src}/events", cfg, str(tmp_path / "ckpt"))
+    os.makedirs(cfg.state_dir)
+    assert run_avro_restructure_job(spark, src, cfg)["records_written"] == 40
 
     # Event times span 2024-01-01 00:00..06:30 → single 202401 time dir,
     # five sanitized user ids, sourceId falls back.
