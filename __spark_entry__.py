@@ -2685,6 +2685,7 @@ def q_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bench/extras surface)."""
     import os
 
+    from restructure_hdfs_topic_spark import state
     from restructure_hdfs_topic_spark.operators.bloom import (
         filter_novel_documents_bloom,
     )
@@ -2699,7 +2700,7 @@ def q_bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"/tmp/spark_graft_bloomstate_{os.path.basename(os.path.normpath(sf_dir))}"
     )
     if _rebuild_this_process(
-        state_dir, not os.path.exists(f"{state_dir}/offsets.CURRENT")
+        state_dir, state.current_version(spark, state_dir) is None
     ):
         import shutil
 

@@ -12,6 +12,10 @@ pick the physical strategy. Package layout:
   sanitize/template, filename parsing, text analysis, vector math).
 - ``operators``  — dataflow operators (flatten, dedup, offset accounting,
   cleaner verification, similarity search, multimodal plumbing).
+- ``state``      — the versioned state store: the one owner of a state
+  directory's on-disk layout (pointer, versions, claims, staging) and of
+  its compare-and-swap ``commit``, under the offset ledger and the
+  incremental-dedup lanes.
 - ``sources``    — Kafka-Connect topic walk, the Avro decode (Spark's own
   Avro source, the only decode path) and the commit-range manifest.
 - ``plans``      — end-to-end pipeline compositions: ``avro_job`` is the

@@ -187,11 +187,11 @@ def write_bloom_sidecar(
     """Build the sidecar from the CURRENT committed fingerprint state and
     store it under ``<state_dir>/bloom/`` with the state version it
     reflects.  Derived data — rebuild-safe any time."""
-    from restructure_hdfs_topic_spark.operators import offsets as _off
-    from restructure_hdfs_topic_spark.operators.incremental import read_fingerprints
+    from restructure_hdfs_topic_spark import state
+    from restructure_hdfs_topic_spark.operators.incremental import FP_SCHEMA
 
-    version = _off._current_version(state_dir, spark) or 0
-    fps = read_fingerprints(spark, state_dir)
+    fps, version = state.read(spark, state_dir, FP_SCHEMA)
+    version = version or 0
     old_meta = read_bloom_meta(spark, state_dir)
     path = _bloom_data_path(state_dir, version)
     # Writer count only shapes output files — size it from the PRIOR
@@ -419,10 +419,11 @@ def filter_novel_documents_bloom(
     ``BROADCAST_BITS_CAP`` the bitmaps broadcast and a NARROW two-column
     Pandas UDF tags rows in place (zero extra shuffle); above it, the
     cogroup path ships each bucket's bitmap once per task."""
-    from restructure_hdfs_topic_spark.operators import offsets as _off
-    from restructure_hdfs_topic_spark.operators.incremental import read_fingerprints
+    from restructure_hdfs_topic_spark import state
+    from restructure_hdfs_topic_spark.operators.incremental import FP_SCHEMA
 
-    version = _off._current_version(state_dir, spark) or 0
+    state_fps, version = state.read(spark, state_dir, FP_SCHEMA)
+    version = version or 0
     meta = read_bloom_meta(spark, state_dir)
     if (
         meta is None
@@ -461,7 +462,6 @@ def filter_novel_documents_bloom(
         tagged = _bloom_tag(firsts, bloom, n_buckets)
     definite = tagged.filter(~F.col("__bloom_maybe")).select(*batch.columns)
     suspects = tagged.filter(F.col("__bloom_maybe"))
-    state_fps = read_fingerprints(spark, state_dir)
     cleared = suspects.join(
         state_fps.select(F.col("fp").alias("__fp")), "__fp", "left_anti"
     ).select(*batch.columns)

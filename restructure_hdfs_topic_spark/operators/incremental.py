@@ -11,11 +11,11 @@ the state, durably write the accepted documents, THEN commit their
 fingerprints — a crash between the two steps re-offers the batch instead
 of losing it.
 
-State persistence reuses the versioned-directory + pointer-swap + CAS
-claim protocol from ``operators/offsets.py`` (same crash-safety and
-concurrent-committer story, battle-tested there; the on-disk layout is
-the shared implementation's ``offsets/v*`` naming).  Point it at its OWN
-state directory, never at an offset accounting dir.
+Each lane (fingerprints; MinHash signatures under ``minhash_sigs/``) is
+an ``update`` over the versioned state store's one compare-and-swap
+commit (``restructure_hdfs_topic_spark/state.py``), with the offset
+ledger's crash-safety and concurrent-committer story.  Point it at its
+OWN state directory, never at an offset accounting dir.
 
 Scale shape: the novelty filter is one hash anti-join on an 8-byte key
 (the within-batch keep-first window reuses the same exchange); the state
@@ -28,9 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from restructure_hdfs_topic_spark.operators import offsets as _off
+from restructure_hdfs_topic_spark import state
 
 FP_SCHEMA = "fp long"
+SIG_SCHEMA = "id long, sig array<long>"
 
 
 def document_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -64,22 +65,15 @@ def filter_novel_documents(
 
 def read_fingerprints(spark: SparkSession, state_dir: str) -> DataFrame:
     """Committed fingerprint state (empty frame when none yet)."""
-    cur = _off._current_version(state_dir, spark)
-    if cur is None:
-        return spark.createDataFrame([], FP_SCHEMA)
-    # The fp lane's schema is pinned by contract (xxhash64 → long);
-    # passing it skips the per-read parquet footer inference job (r13).
-    return spark.read.schema(FP_SCHEMA).parquet(f"{state_dir}/offsets/v{cur:08d}")
+    return state.read(spark, state_dir, FP_SCHEMA)[0]
 
 
 def commit_fingerprints(
     spark: SparkSession, state_dir: str, new_fps: DataFrame
 ) -> DataFrame:
-    """Merge ``new_fps`` into the committed set and swap atomically — the
-    same resolve-once CAS as ``commit_offsets`` (claim cur+1 against the
-    snapshot read from cur; a concurrent pointer bump fails the claim and
-    forces re-read).  Call only AFTER the accepted documents are durably
-    written (commit-after-store, O18)."""
+    """Merge ``new_fps`` into the committed set and swap atomically
+    (``state.commit``).  Call only AFTER the accepted documents are
+    durably written (commit-after-store, O18)."""
     return commit_fingerprints_versioned(spark, state_dir, new_fps)[0]
 
 
@@ -92,35 +86,12 @@ def commit_fingerprints_versioned(
     the new keys in only when the sidecar covers ``snapshot_version`` and
     this commit produced ``committed_version`` from it (any interleaved
     peer commit makes the fold unsound and forces a rebuild)."""
-    import os as _os
-    import random
-    import time as _time
-
-    if "://" not in state_dir:
-        _os.makedirs(state_dir, exist_ok=True)
-    for attempt in range(64):
-        cur = _off._current_version(state_dir, spark)
-        existing = (
-            spark.read.schema(FP_SCHEMA).parquet(f"{state_dir}/offsets/v{cur:08d}")
-            if cur is not None
-            else spark.createDataFrame([], FP_SCHEMA)
-        )
-        merged = existing.select("fp").unionByName(new_fps.select("fp")).distinct()
-        nxt = (cur or 0) + 1
-        token = _off._claim_version(spark, state_dir, nxt)
-        if not token:
-            _off._break_stale_claim(spark, state_dir, nxt)
-            if _off._claim_exists(spark, state_dir, nxt):
-                _time.sleep(
-                    min(2.0, 0.05 * (attempt + 1)) * (0.5 + random.random())
-                )
-            continue
-        try:
-            out = _off._replace_at(spark, state_dir, merged, nxt, token)
-            return out, (cur or 0), nxt
-        except _off.ClaimLost:
-            continue
-    raise RuntimeError(f"commit_fingerprints: version contention in {state_dir}")
+    return state.commit(
+        spark,
+        state_dir,
+        lambda snapshot: snapshot.unionByName(new_fps.select("fp")).distinct(),
+        FP_SCHEMA,
+    )
 
 
 SIG_STATE_SUBDIR = "minhash_sigs"
@@ -248,36 +219,24 @@ def filter_novel_near_dup(
     return batch.join(dropped, on=id_col, how="left_anti")
 
 
+def _sig_dir(state_dir: str) -> str:
+    return f"{state_dir.rstrip('/')}/{SIG_STATE_SUBDIR}"
+
+
 def read_signatures(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Committed signature state (empty when none yet)."""
-    sub = f"{state_dir.rstrip('/')}/{SIG_STATE_SUBDIR}"
-    cur = _off._current_version(sub, spark)
-    if cur is None:
-        return spark.createDataFrame([], "id long, sig array<long>")
-    return spark.read.parquet(f"{sub}/offsets/v{cur:08d}")
+    """Committed signature state (empty when none yet).  The id type
+    follows the ingested batches, so the footers decide the schema."""
+    return state.read(spark, _sig_dir(state_dir), SIG_SCHEMA, infer=True)[0]
 
 
 def commit_signatures(
     spark: SparkSession, state_dir: str, new_sigs: DataFrame
 ) -> DataFrame:
-    """Append signatures of accepted documents to the committed state —
-    same resolve-once CAS as ``commit_fingerprints`` (claim cur+1 against
-    the snapshot version).  Call after the accepted documents are durably
+    """Append signatures of accepted documents to the committed state
+    (``state.commit``).  Call after the accepted documents are durably
     written (commit-after-store)."""
-    import os as _os
-    import random
-    import time as _time
 
-    sub = f"{state_dir.rstrip('/')}/{SIG_STATE_SUBDIR}"
-    if "://" not in sub:
-        _os.makedirs(sub, exist_ok=True)
-    for attempt in range(64):
-        cur = _off._current_version(sub, spark)
-        existing = (
-            spark.read.parquet(f"{sub}/offsets/v{cur:08d}")
-            if cur is not None
-            else spark.createDataFrame([], new_sigs.schema)
-        )
+    def update(existing: DataFrame) -> DataFrame:
         # Prefer the COMMITTED row when a re-ingested id reappears (possibly
         # with different text): a bare dropDuplicates(["id"]) over the union
         # keeps a partition-order-dependent survivor, making future near-dup
@@ -285,25 +244,15 @@ def commit_signatures(
         # collapse intra-batch id conflicts to the lexicographically least
         # signature (arrays are orderable) so the merge is a pure function
         # of (state, batch) regardless of partitioning.
-        merged = existing.unionByName(
+        return existing.unionByName(
             new_sigs.join(existing.select("id"), "id", "left_anti")
             .groupBy("id")
             .agg(F.min("sig").alias("sig"))
         )
-        nxt = (cur or 0) + 1
-        token = _off._claim_version(spark, sub, nxt)
-        if not token:
-            _off._break_stale_claim(spark, sub, nxt)
-            if _off._claim_exists(spark, sub, nxt):
-                _time.sleep(
-                    min(2.0, 0.05 * (attempt + 1)) * (0.5 + random.random())
-                )
-            continue
-        try:
-            return _off._replace_at(spark, sub, merged, nxt, token)
-        except _off.ClaimLost:
-            continue
-    raise RuntimeError(f"commit_signatures: version contention in {sub}")
+
+    return state.commit(
+        spark, _sig_dir(state_dir), update, new_sigs.schema.simpleString(), infer=True
+    )[0]
 
 
 def ingest_batch_near_dup(
@@ -403,74 +352,44 @@ def delete_from_incremental_state(
         del_ids = del_ids.select(F.col(id_col).alias("id")).distinct()
     report: dict = {"fp_state": None, "sig_state": None}
 
-    if del_fps is not None and _off._current_version(state_dir, spark) is not None:
+    if del_fps is not None and state.current_version(spark, state_dir) is not None:
         if surviving is not None:
             keep = document_fingerprints(surviving, text_col)
             del_fps = del_fps.join(keep, "fp", "left_anti")
-        report["fp_state"] = _cas_retract(
+        report["fp_state"] = _retract(
             spark,
             state_dir,
-            lambda existing: existing.join(
-                del_fps.select("fp"), "fp", "left_anti"
-            ),
-            empty_schema=FP_SCHEMA,
-            read_schema=FP_SCHEMA,
+            lambda existing: existing.join(del_fps.select("fp"), "fp", "left_anti"),
+            FP_SCHEMA,
         )
 
-    sig_sub = f"{state_dir.rstrip('/')}/{SIG_STATE_SUBDIR}"
-    if del_ids is not None and _off._current_version(sig_sub, spark) is not None:
-        report["sig_state"] = _cas_retract(
+    sig_sub = _sig_dir(state_dir)
+    if del_ids is not None and state.current_version(spark, sig_sub) is not None:
+        report["sig_state"] = _retract(
             spark,
             sig_sub,
-            lambda existing: existing.join(
-                del_ids.select("id"), "id", "left_anti"
-            ),
-            empty_schema="id long, sig array<long>",
+            lambda existing: existing.join(del_ids.select("id"), "id", "left_anti"),
+            SIG_SCHEMA,
+            infer=True,
         )
     return report
 
 
-def _cas_retract(
-    spark: SparkSession,
-    sub: str,
-    transform,
-    empty_schema: str,
-    read_schema: str | None = None,
+def _retract(
+    spark: SparkSession, sub: str, transform, schema: str, infer: bool = False
 ) -> dict:
-    """One versioned CAS commit applying ``transform`` to the committed
-    state (the ``commit_fingerprints`` claim/replace loop, shared crash
-    discipline); returns ``{"removed": n, "version": committed}``.
-    ``read_schema``: pass the lane's contract-pinned schema to skip the
-    parquet footer inference job (r13); None (the sig lane, whose id
-    type follows the ingested batch) falls back to inference."""
-    import random
-    import time as _time
+    """One ``state.commit`` applying ``transform`` to the committed state;
+    returns ``{"removed": n, "version": committed}``.  ``update`` reruns
+    on every commit attempt, so ``removed`` counts against the snapshot of
+    the attempt that committed (the last one)."""
+    before: list[int] = []
 
-    for attempt in range(64):
-        cur = _off._current_version(sub, spark)
-        reader = spark.read.schema(read_schema) if read_schema else spark.read
-        existing = (
-            reader.parquet(f"{sub}/offsets/v{cur:08d}")
-            if cur is not None
-            else spark.createDataFrame([], empty_schema)
-        )
-        merged = transform(existing)
-        n_before = existing.count()
-        nxt = (cur or 0) + 1
-        token = _off._claim_version(spark, sub, nxt)
-        if not token:
-            _off._break_stale_claim(spark, sub, nxt)
-            if _off._claim_exists(spark, sub, nxt):
-                _time.sleep(
-                    min(2.0, 0.05 * (attempt + 1)) * (0.5 + random.random())
-                )
-            continue
-        try:
-            out = _off._replace_at(spark, sub, merged, nxt, token)
-            return {"removed": n_before - out.count(), "version": nxt}
-        except _off.ClaimLost:
-            continue
-    raise RuntimeError(f"delete_from_incremental_state: version contention in {sub}")
+    def update(existing: DataFrame) -> DataFrame:
+        before.append(existing.count())
+        return transform(existing)
+
+    out, _, version = state.commit(spark, sub, update, schema, infer)
+    return {"removed": before[-1] - out.count(), "version": version}
 
 
 def ingest_batch(

@@ -1,5 +1,5 @@
-"""Offset accounting: interval merge, seen filters, per-record offsets
-(SURVEY O4/O5/O12/O16/O17/O18).
+"""Offset accounting: interval algebra and the offset lane of the state
+store (SURVEY O4/O5/O12/O16/O17/O18).
 
 Reference semantics:
 - O16 (accounting/OffsetIntervals.kt:46-199): per (topic, partition) keep a
@@ -13,7 +13,11 @@ Reference semantics:
 - O12 (worker/RestructureWorker.kt:116-131): offset = file.offset_from +
   record index within the file.
 - O17/O18: state persisted only after data is durably written
-  (commit-after-store, worker/FileCache.kt:128-158).
+  (commit-after-store, worker/FileCache.kt:128-158).  Persistence is the
+  versioned state store (``restructure_hdfs_topic_spark/state.py``): the
+  offset lane is ``read_offsets`` plus ``commit_offsets`` (merge) and
+  ``replace_offsets`` (any update, e.g. the cleaner's remove) over
+  ``state.commit``.
 
 Spark-first: the interval set is a DataFrame ``(topic, partition,
 offset_from, offset_to, last_processed)``; merge is the classic
@@ -25,10 +29,10 @@ merging collapses contiguous ranges).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from restructure_hdfs_topic_spark import state
 
 STATE_SCHEMA = "topic string, partition int, offset_from long, offset_to long, last_processed timestamp"
 
@@ -296,71 +300,10 @@ def filter_unseen_records(records: DataFrame, state: DataFrame) -> DataFrame:
     return annotated.filter(~seen).select(*records.columns)
 
 
-_POINTER = "offsets.CURRENT"
-
-
-def _hfs(spark: SparkSession, dir_path: str):
-    """(jvm, FileSystem, Path-for-dir) via the Hadoop FS API, so the state
-    protocol works on whatever store ``state_dir`` names (file://, hdfs://,
-    s3a://, abfss://) — same pattern as the schema sidecar writer."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(dir_path)
-    return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _current_version(state_dir: str, spark: SparkSession | None = None) -> int | None:
-    if spark is None or "://" not in state_dir:
-        pointer = os.path.join(state_dir, _POINTER)
-        if os.path.exists(pointer):
-            with open(pointer) as fh:
-                return int(fh.read().strip().lstrip("v"))
-        # Same pointer-loss recovery as the remote branch (os.replace is
-        # atomic, but a deleted/corrupted pointer must not read as empty).
-        root = os.path.join(state_dir, "offsets")
-        best = None
-        if os.path.isdir(root):
-            for name in os.listdir(root):
-                if name.startswith("v") and name[1:].isdigit():
-                    if os.path.exists(os.path.join(root, name, "_SUCCESS")):
-                        v = int(name[1:])
-                        if best is None or v > best:
-                            best = v
-        return best
-    jvm, fs, _ = _hfs(spark, state_dir)
-    pointer = jvm.org.apache.hadoop.fs.Path(state_dir, _POINTER)
-    if not fs.exists(pointer):
-        return _recover_version(jvm, fs, state_dir)
-    stream = fs.open(pointer)
-    try:
-        data = bytes(stream.readAllBytes()).decode()
-    finally:
-        stream.close()
-    return int(data.strip().lstrip("v"))
-
-
-def _recover_version(jvm, fs, state_dir: str) -> int | None:
-    """Pointer-loss recovery: a missing ``offsets.CURRENT`` must NOT read as
-    empty state (that would reprocess every committed file and emit
-    duplicates).  Committed versions are immutable directories, so the
-    highest fully-written ``offsets/v*`` (``_SUCCESS`` present) IS the last
-    commit — commit_offsets only runs after the data write succeeded, so
-    adopting it is always safe."""
-    root = jvm.org.apache.hadoop.fs.Path(state_dir, "offsets")
-    if not fs.exists(root):
-        return None
-    best = None
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("v")):
-            continue
-        try:
-            v = int(name[1:])
-        except ValueError:
-            continue
-        ok = fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS"))
-        if ok and (best is None or v > best):
-            best = v
-    return best
+def read_offsets(spark: SparkSession, state_dir: str) -> DataFrame:
+    """The committed interval state (empty before the first commit), read
+    with the lane's schema so no footer-inference job runs."""
+    return state.read(spark, state_dir, STATE_SCHEMA)[0]
 
 
 def commit_offsets(
@@ -368,500 +311,27 @@ def commit_offsets(
     state_dir: str,
     new_ranges: DataFrame,
 ) -> DataFrame:
-    """O17/O18: merge new ranges into persisted state and commit atomically.
-
-    Versioned-state commit protocol (the Spark-native analogue of the
-    reference's atomic move, target/LocalTargetStorage.kt:60-72):
-    1. write the merged interval set to a NEW directory ``offsets/v{N+1}``;
-    2. atomically swap the ``offsets.CURRENT`` pointer file (tempfile +
-       rename — atomic on POSIX; on S3 a pointer-object PUT is atomic);
-    3. prune versions older than N (N itself survives one commit so lazy
-       DataFrames still referencing it keep resolving — crash mid-commit
-       never loses state, the pointer flips or it doesn't).
+    """O17/O18: merge ``new_ranges`` into the committed intervals and swap
+    the result in atomically (``state.commit``); returns the new state.
 
     MUST be called only after the data write action has succeeded
-    (commit-after-store ordering, worker/FileCache.kt:128-158).
-    """
-    import random
-    import time as _time
-
-    for attempt in range(64):
-        # True compare-and-swap: resolve the current version EXACTLY once,
-        # read the merge snapshot from that same version, and claim cur+1.
-        # (Reading via read_offsets and re-resolving the pointer for nxt
-        # opened a TOCTOU: a concurrent committer flipping the pointer
-        # between the two resolves let this committer claim the now-free
-        # higher version with a merge built on the STALE snapshot, erasing
-        # the peer's intervals.)  A concurrent pointer bump now makes the
-        # claim of cur+1 fail, forcing the re-read/retry path.
-        cur = _current_version(state_dir, spark)
-        existing = _read_state_at(spark, state_dir, cur)
-        merged = merge_offset_intervals(
-            existing.unionByName(new_ranges, allowMissingColumns=True)
-        )
-        nxt = (cur or 0) + 1
-        token = _claim_version(spark, state_dir, nxt)
-        if not token:
-            # Another committer (a second engine instance on a different
-            # topic) claimed this version: RE-READ so its freshly committed
-            # intervals are included in our merge, then contend again —
-            # without the claim both would write the SAME version directory
-            # concurrently and the pointer swap would silently drop one
-            # merge.  A claim whose owner crashed is broken after a TTL so
-            # commits cannot deadlock on it.
-            _break_stale_claim(spark, state_dir, nxt)
-            if _claim_exists(spark, state_dir, nxt):
-                # A LIVE peer holds this claim: its commit includes a
-                # parquet write that can take seconds, while our retry
-                # iteration is fast driver-side work — back off with
-                # jitter so the 64-attempt budget spans at least one full
-                # peer-commit duration instead of exhausting spuriously.
-                _time.sleep(
-                    min(2.0, 0.05 * (attempt + 1)) * (0.5 + random.random())
-                )
-            continue
-        try:
-            return _replace_at(spark, state_dir, merged, nxt, token)
-        except ClaimLost:
-            # Our claim was TTL-broken while we were writing (stall) — the
-            # peer's commit is durable; retry against the fresh snapshot.
-            continue
-    raise RuntimeError(f"commit_offsets: version contention in {state_dir}")
+    (commit-after-store ordering, worker/FileCache.kt:128-158)."""
+    return state.commit(
+        spark,
+        state_dir,
+        lambda snapshot: merge_offset_intervals(
+            snapshot.unionByName(new_ranges, allowMissingColumns=True)
+        ),
+        STATE_SCHEMA,
+    )[0]
 
 
-class ClaimLost(RuntimeError):
-    """The committer's version claim was broken (TTL-expired and taken
-    over by a peer) between claiming and committing — the commit must be
-    retried against a fresh snapshot."""
-
-
-def _claim_version(spark: SparkSession, state_dir: str, nxt: int) -> str | None:
-    """Claim version ``nxt`` by creating its claim marker exclusively
-    (``locks.create_exclusive``) — the serialization point that keeps two
-    concurrent committers out of one version directory.  The marker carries an OWNER TOKEN which
-    ``_replace_at`` re-verifies before making the claimed version visible:
-    a committer stalled past the claim TTL whose claim was broken and
-    re-claimed by a peer fails that check instead of silently overwriting
-    the peer's committed state.  Returns the token, or None if the claim
-    is already held.  Claim files are pruned with their versions."""
-    import uuid as _uuid
-
-    from restructure_hdfs_topic_spark.locks import create_exclusive
-
-    token = _uuid.uuid4().hex
-    name = f"offsets/.claim.v{nxt:08d}"
-    if "://" not in state_dir:
-        fs, path = None, os.path.join(state_dir, name)
-    else:
-        jvm, fs, _ = _hfs(spark, state_dir)
-        path = jvm.org.apache.hadoop.fs.Path(state_dir, name)
-    return token if create_exclusive(fs, path, token.encode()) else None
-
-
-def _claim_owner(spark: SparkSession, state_dir: str, nxt: int) -> str | None:
-    """Owner token currently recorded in the claim marker (None if the
-    marker is missing or unreadable)."""
-    name = f"offsets/.claim.v{nxt:08d}"
-    if "://" not in state_dir:
-        try:
-            with open(os.path.join(state_dir, name)) as fh:
-                return fh.read().strip()
-        except OSError:
-            return None
-    jvm, fs, _ = _hfs(spark, state_dir)
-    path = jvm.org.apache.hadoop.fs.Path(state_dir, name)
-    try:
-        stream = fs.open(path)
-        try:
-            return bytes(stream.readAllBytes()).decode().strip()
-        finally:
-            stream.close()
-    except Exception:
-        return None
-
-
-def _claim_exists(spark: SparkSession, state_dir: str, nxt: int) -> bool:
-    """True if the claim marker for version ``nxt`` is still present (used
-    after a break attempt to distinguish a live peer from a broken claim)."""
-    name = f"offsets/.claim.v{nxt:08d}"
-    if "://" not in state_dir:
-        return os.path.exists(os.path.join(state_dir, name))
-    jvm, fs, _ = _hfs(spark, state_dir)
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(state_dir, name))
-
-
-def replace_offsets(spark: SparkSession, state_dir: str, state: DataFrame) -> DataFrame:
-    """Atomically swap the committed state to ``state`` (steps 1-3 above).
-    Used by commit (merge) and by the cleaner's rollback (remove).  The
-    version claim serializes the physical write; content-level conflicts
-    with a concurrent commit are the caller's to minimize (the cleaner
-    re-reads current state right before computing its rollback)."""
-    import random
-    import time as _time
-
-    for attempt in range(64):
-        nxt = (_current_version(state_dir, spark) or 0) + 1
-        token = _claim_version(spark, state_dir, nxt)
-        if token:
-            try:
-                return _replace_at(spark, state_dir, state, nxt, token)
-            except ClaimLost:
-                continue
-        _break_stale_claim(spark, state_dir, nxt)
-        if _claim_exists(spark, state_dir, nxt):
-            _time.sleep(min(2.0, 0.05 * (attempt + 1)) * (0.5 + random.random()))
-    raise RuntimeError(f"replace_offsets: version contention in {state_dir}")
-
-
-CLAIM_TTL_S = 600.0
-
-
-def _break_stale_claim(
-    spark: SparkSession, state_dir: str, nxt: int, ttl_s: float = CLAIM_TTL_S
-) -> None:
-    """Recover from a committer that claimed version ``nxt`` and died.
-
-    A claim older than ``ttl_s`` whose version never became CURRENT is
-    broken by TOMBSTONE-RENAME (exactly one breaker's rename succeeds — a
-    delete+recreate pair would let two breakers re-create the two-writer
-    race the claim exists to prevent).  An orphaned ``v{nxt}`` directory,
-    if any, is ADOPTED, never deleted: under the staging protocol the
-    version directory only comes into existence via an atomic rename of a
-    fully-written parquet dir, so its presence means the stalled
-    committer's data write IS durable and only the pointer swap is
-    missing — commit-after-store ordering makes completing that swap
-    always safe (the same argument as ``_recover_version``).  The pre-r7
-    delete here destroyed committed data when the breaker fired inside a
-    >TTL-stalled peer's window between its staging rename and its pointer
-    write, leaving the peer's subsequent CURRENT write dangling.  Adoption
-    is also what unblocks successors: they would otherwise livelock on
-    rename-refused ``ClaimLost`` retries against the orphan.  A
-    >TTL-stalled committer that later wakes loses its claim, mirroring the
-    lease semantics of ``locks.py``."""
-    import time as _time
-    import uuid as _uuid
-
-    name = f".claim.v{nxt:08d}"
-    if "://" not in state_dir:
-        path = os.path.join(state_dir, "offsets", name)
-        try:
-            age = _time.time() - os.path.getmtime(path)
-        except OSError:
-            return
-        if age < ttl_s or (_current_version(state_dir) or 0) >= nxt:
-            return
-        tomb = f"{path}.broken.{_uuid.uuid4().hex}"
-        try:
-            os.rename(path, tomb)
-        except OSError:
-            return  # another breaker won
-        try:
-            # Rename preserves mtime: re-check on the tombstone so a claim
-            # that was broken-and-recreated FRESH between our stat and
-            # rename is restored rather than destroyed (the re-claimer may
-            # be mid-commit).
-            if _time.time() - os.path.getmtime(tomb) < ttl_s:
-                os.rename(tomb, path)
-                return
-            os.remove(tomb)
-        except OSError:
-            pass
-        _adopt_orphan_version(spark, state_dir, nxt)
-        return
-    jvm, fs, _ = _hfs(spark, state_dir)
-    path = jvm.org.apache.hadoop.fs.Path(state_dir, f"offsets/{name}")
-    try:
-        mtime_ms = fs.getFileStatus(path).getModificationTime()
-    except Exception:
-        return
-    if _time.time() * 1000 - mtime_ms < ttl_s * 1000:
-        return
-    if (_current_version(state_dir, spark) or 0) >= nxt:
-        return
-    tomb = jvm.org.apache.hadoop.fs.Path(
-        state_dir, f"offsets/{name}.broken.{_uuid.uuid4().hex}"
-    )
-    try:
-        if not fs.rename(path, tomb):
-            return
-    except Exception:
-        return
-    try:
-        # Rename preserves mtime: restore a claim that turned out FRESH
-        # (broken and re-created between our stat and rename).
-        if _time.time() * 1000 - fs.getFileStatus(tomb).getModificationTime() < ttl_s * 1000:
-            fs.rename(tomb, path)
-            return
-    except Exception:
-        pass
-    fs.delete(tomb, False)
-    _adopt_orphan_version(spark, state_dir, nxt)
-
-
-def _adopt_orphan_version(spark: SparkSession, state_dir: str, nxt: int) -> None:
-    """Finish a dead committer's commit: if a fully-written
-    ``offsets/v{nxt}`` exists but the pointer still trails it, swing the
-    pointer to it.  Safe by commit-after-store ordering (the data the
-    version records was durably stored before its committer ever wrote
-    parquet), idempotent with the stalled committer's own later pointer
-    write, and required to unblock successors (see ``_break_stale_claim``).
-    No-op when the version directory is absent or incomplete."""
-    if "://" not in state_dir:
-        vdir = os.path.join(state_dir, "offsets", f"v{nxt:08d}")
-        if not os.path.exists(os.path.join(vdir, "_SUCCESS")):
-            return
-        if (_current_version(state_dir) or 0) >= nxt:
-            return
-        _write_pointer(spark, state_dir, nxt)
-        return
-    jvm, fs, _ = _hfs(spark, state_dir)
-    success = jvm.org.apache.hadoop.fs.Path(
-        state_dir, f"offsets/v{nxt:08d}/_SUCCESS"
-    )
-    try:
-        if not fs.exists(success):
-            return
-    except Exception:
-        return
-    if (_current_version(state_dir, spark) or 0) >= nxt:
-        return
-    _write_pointer(spark, state_dir, nxt)
-
-
-def _write_pointer(spark: SparkSession, state_dir: str, nxt: int) -> None:
-    """Atomically swap ``offsets.CURRENT`` to version ``nxt``: tempfile +
-    ``os.replace`` locally; temp object + ``FileContext`` rename with
-    ``Rename.OVERWRITE`` remotely (single atomic metadata op on HDFS),
-    falling back to delete+rename whose no-pointer crash window
-    ``_recover_version`` closes."""
-    if "://" not in state_dir:
-        import tempfile
-
-        fd, tmp = tempfile.mkstemp(dir=state_dir, prefix=".offsets.CURRENT.")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(f"v{nxt:08d}")
-        os.replace(tmp, os.path.join(state_dir, _POINTER))
-        return
-    jvm, fs, _ = _hfs(spark, state_dir)
-    tmp = jvm.org.apache.hadoop.fs.Path(state_dir, f".offsets.CURRENT.v{nxt:08d}")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(f"v{nxt:08d}", "utf-8"))
-    finally:
-        stream.close()
-    pointer = jvm.org.apache.hadoop.fs.Path(state_dir, _POINTER)
-    try:
-        gw = spark.sparkContext._gateway
-        rename_opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        rename_opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            pointer.toUri(), spark._jsc.hadoopConfiguration()
-        )
-        fc.rename(tmp, pointer, rename_opts)
-    except Exception:
-        # Store without FileContext support (some object-store connectors):
-        # non-atomic fallback, recoverable via _recover_version.
-        if fs.exists(pointer):
-            fs.delete(pointer, False)
-        fs.rename(tmp, pointer)
-
-
-def _replace_at(
-    spark: SparkSession, state_dir: str, state: DataFrame, nxt: int,
-    token: str | None = None,
-) -> DataFrame:
-    """Make ``state`` visible as version ``nxt``: write to a UNIQUE staging
-    directory, re-verify claim ownership, rename staging into place, swap
-    the pointer, prune.
-
-    The staging + verify + rename sequence is what makes a broken claim
-    actually LOSE: a committer stalled past the claim TTL (slow parquet
-    write, GC pause, suspended VM) whose claim a peer broke and re-claimed
-    would otherwise wake and overwrite the peer's committed version
-    directory with a merge built on a stale snapshot — erasing the peer's
-    intervals AND clobbering parquet data the live pointer references.
-    With staging, the stalled committer's write lands in its own scratch
-    dir; the ownership check (and the rename's refusal to replace an
-    existing version dir) turns the wake-up into a clean ``ClaimLost``
-    retry instead of a lost update."""
-    import uuid as _uuid
-
-    suffix = token or _uuid.uuid4().hex
-    staging = f"{state_dir}/offsets/.staging.v{nxt:08d}.{suffix}"
-    version_dir = f"{state_dir}/offsets/v{nxt:08d}"
-    state.write.mode("overwrite").parquet(staging)
-
-    def _abort(reason: str) -> None:
-        import shutil
-
-        if "://" not in state_dir:
-            shutil.rmtree(staging, ignore_errors=True)
-        else:
-            jvm_, fs_, _ = _hfs(spark, state_dir)
-            try:
-                fs_.delete(jvm_.org.apache.hadoop.fs.Path(staging), True)
-            except Exception:
-                pass
-        # If the loss is because a fully-committed v{nxt} is sitting there
-        # with a trailing pointer (its committer died between rename and
-        # pointer write), finish that commit NOW — otherwise every retry
-        # recomputes the same nxt and re-aborts here until a TTL elapses.
-        try:
-            _adopt_orphan_version(spark, state_dir, nxt)
-        except Exception:
-            pass
-        raise ClaimLost(f"version v{nxt} claim lost ({reason}) in {state_dir}")
-
-    if token is not None and _claim_owner(spark, state_dir, nxt) != token:
-        _abort("owner token changed")
-    _clear_incomplete_version(spark, state_dir, nxt)
-    if "://" not in state_dir:
-        import shutil
-
-        try:
-            # POSIX rename refuses to replace a non-empty directory —
-            # exactly the guard we want: if a peer's committed v{nxt}
-            # already exists, this committer's claim was broken.
-            os.rename(staging, version_dir)
-        except OSError:
-            _abort("version directory already exists")
-        # The rename succeeded, so v{nxt} is OURS.  If the version already
-        # visible is BEYOND nxt, a TTL-breaker adopted our orphan while we
-        # stalled and peers built on it — re-writing CURRENT here would
-        # regress their commits.  At exactly nxt the write is idempotent
-        # (and on a first commit _current_version recovers nxt from our own
-        # just-renamed directory, so `<= nxt` — not `< nxt` — is what still
-        # creates the pointer).
-        if (_current_version(state_dir) or 0) <= nxt:
-            _write_pointer(spark, state_dir, nxt)
-        versions_root = os.path.join(state_dir, "offsets")
-        for v in os.listdir(versions_root):
-            # digit guard: a stray user entry like `v1.bak` must not crash
-            # every future commit
-            if v.startswith("v") and v[1:].isdigit() and int(v[1:]) < nxt - 1:
-                shutil.rmtree(os.path.join(versions_root, v), ignore_errors=True)
-            elif v.startswith(".claim.v") and v[8:].lstrip("v").isdigit() and int(
-                v[8:].lstrip("v")
-            ) < nxt - 1:
-                try:
-                    os.remove(os.path.join(versions_root, v))
-                except OSError:
-                    pass
-            elif v.startswith(".staging.v") and _staging_version(v) is not None and (
-                _staging_version(v) < nxt - 1
-            ):
-                # Scratch left by a committer that died (or lost its claim)
-                # long ago — unreferenced by construction.
-                shutil.rmtree(os.path.join(versions_root, v), ignore_errors=True)
-        legacy = os.path.join(state_dir, "offsets.parquet")
-        if os.path.exists(legacy):  # migration: drop pre-pointer layout
-            shutil.rmtree(legacy, ignore_errors=True)
-        return read_offsets(spark, state_dir)
-    # Remote store: write temp pointer object then rename.  The swap uses
-    # FileContext.rename(..., Rename.OVERWRITE) where the store supports it
-    # (single atomic metadata op on HDFS); the delete+rename fallback has a
-    # crash window with NO pointer, which ``_recover_version`` closes by
-    # adopting the highest fully-written offsets/v* directory.
-    jvm, fs, _ = _hfs(spark, state_dir)
-    staging_path = jvm.org.apache.hadoop.fs.Path(staging)
-    version_path = jvm.org.apache.hadoop.fs.Path(version_dir)
-    # Hadoop FileSystem.rename moves src INTO an existing dst directory
-    # instead of failing — check-then-rename (the residual race is the
-    # rename itself; the ownership check above already shrank the window
-    # from the whole parquet write to this metadata op).
-    if fs.exists(version_path):
-        _abort("version directory already exists")
-    if not fs.rename(staging_path, version_path):
-        _abort("staging rename refused")
-    # Same adoption guard as the local branch: a visible version PAST nxt
-    # means a TTL-breaker finished our commit and peers advanced — don't
-    # regress it.  At exactly nxt (breaker-adopted, or recovered from our
-    # own rename on a pointerless store) the write is idempotent/required.
-    if (_current_version(state_dir, spark) or 0) <= nxt:
-        _write_pointer(spark, state_dir, nxt)
-    versions_root = jvm.org.apache.hadoop.fs.Path(state_dir, "offsets")
-    for st in fs.listStatus(versions_root):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit() and int(name[1:]) < nxt - 1:
-            fs.delete(st.getPath(), True)
-        elif name.startswith(".claim.v") and name[8:].lstrip("v").isdigit() and int(
-            name[8:].lstrip("v")
-        ) < nxt - 1:
-            fs.delete(st.getPath(), False)
-        elif name.startswith(".staging.v") and _staging_version(name) is not None and (
-            _staging_version(name) < nxt - 1
-        ):
-            fs.delete(st.getPath(), True)
-    return read_offsets(spark, state_dir)
-
-
-def _clear_incomplete_version(spark: SparkSession, state_dir: str, nxt: int) -> None:
-    """Claim-holder-only debris sweep: remove a ``v{nxt}`` directory that
-    lacks ``_SUCCESS`` — pre-staging-protocol crash leftovers or external
-    interference, never committed data (staged dirs are fully written,
-    ``_SUCCESS`` included, BEFORE their atomic rename, so a committed
-    version always carries the marker).  While the caller holds the claim
-    no live peer may create ``v{nxt}`` (the staging rename re-verifies
-    ownership first), which makes the check-then-delete race-free at the
-    protocol's TTL granularity — the dangerous interleave (our claim
-    broken AND a new claimant fully committed between our check and the
-    delete) requires the claim TTL to elapse inside this metadata-op
-    window.  Without the sweep, debris livelocks every commit that
-    reaches version ``nxt``: the rename is refused, adoption no-ops on
-    the incomplete dir, and the ``ClaimLost`` retry recomputes the same
-    ``nxt`` forever."""
-    if "://" not in state_dir:
-        import shutil
-
-        vdir = os.path.join(state_dir, "offsets", f"v{nxt:08d}")
-        if os.path.isdir(vdir) and not os.path.exists(
-            os.path.join(vdir, "_SUCCESS")
-        ):
-            shutil.rmtree(vdir, ignore_errors=True)
-        return
-    jvm, fs, _ = _hfs(spark, state_dir)
-    vdir = jvm.org.apache.hadoop.fs.Path(state_dir, f"offsets/v{nxt:08d}")
-    success = jvm.org.apache.hadoop.fs.Path(
-        state_dir, f"offsets/v{nxt:08d}/_SUCCESS"
-    )
-    try:
-        if fs.exists(vdir) and not fs.exists(success):
-            fs.delete(vdir, True)
-    except Exception:
-        pass
-
-
-def _staging_version(name: str) -> int | None:
-    """Version number of a ``.staging.v{N}.{token}`` scratch dir name."""
-    parts = name.split(".")
-    # ["", "staging", "v{N}", "{token}"]
-    if len(parts) >= 3 and parts[2].startswith("v") and parts[2][1:].isdigit():
-        return int(parts[2][1:])
-    return None
-
-
-def read_offsets(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Load the committed interval state (empty DataFrame if none yet).
-
-    Resolves the ``offsets.CURRENT`` pointer; falls back to the legacy
-    single-directory layout for pre-pointer state dirs.
-    """
-    return _read_state_at(spark, state_dir, _current_version(state_dir, spark))
-
-
-def _read_state_at(
-    spark: SparkSession, state_dir: str, cur: int | None
-) -> DataFrame:
-    """State at an explicitly resolved version (so commit_offsets can pin
-    its merge snapshot to the same version it claims against)."""
-    if cur is not None:
-        return spark.read.parquet(f"{state_dir}/offsets/v{cur:08d}")
-    legacy = os.path.join(state_dir, "offsets.parquet")
-    if "://" not in state_dir and os.path.exists(legacy):
-        return spark.read.parquet(legacy)
-    from restructure_hdfs_topic_spark.session import local_frame
-
-    return local_frame(spark, [], STATE_SCHEMA)
+def replace_offsets(spark: SparkSession, state_dir: str, update) -> DataFrame:
+    """Commit ``update(snapshot)`` as the next interval state — the
+    cleaner's rollback passes ``lambda s: remove_offsets(s, rollbacks)``.
+    ``update`` sees the snapshot its commit claims against, so a
+    concurrent commit is never overwritten."""
+    return state.commit(spark, state_dir, update, STATE_SCHEMA)[0]
 
 
 def remove_offsets(state: DataFrame, to_remove: DataFrame) -> DataFrame:

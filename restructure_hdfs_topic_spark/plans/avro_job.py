@@ -645,18 +645,12 @@ def run_avro_cleaner_job(
         rb = local_frame(
             spark, rollback_ranges, "topic string, partition int, offset_from long, offset_to long"
         )
-        # Subtract the rollbacks from the CURRENT state, not the snapshot
-        # read at job start: a concurrent restructure app (the two-apps
-        # deployment lock_enable serves) may have committed new intervals
-        # while this cleaner verified topics, and swapping in the stale
-        # snapshot would erase those commits.  (The read→swap window that
-        # remains is the reference's own non-transactional accountant
-        # semantics; per-topic locks keep the verdicts themselves stable.)
-        replace_offsets(
-            spark,
-            config.state_dir,
-            remove_offsets(read_offsets(spark, config.state_dir), rb),
-        )
+        # Subtract the rollbacks inside the commit, from the snapshot it
+        # claims against: a concurrent restructure app (the two-apps
+        # deployment lock_enable serves) may commit new intervals while
+        # this cleaner verifies topics, and a remove built outside the
+        # commit would swap a stale state over them.
+        replace_offsets(spark, config.state_dir, lambda s: remove_offsets(s, rb))
     return counters
 
 

@@ -28,7 +28,9 @@ def run_service(
     ``input_roots`` and, when enabled and ``cleaner.interval_s`` has passed,
     the cleaner over every root; then it sleeps ``service.interval_s``.
     Runs until interrupted, or for ``max_iterations`` iterations (tests,
-    one-shot).  Each result carries its ``job`` and ``input_root``.
+    one-shot).  Each result carries its ``job`` and ``input_root``; they
+    are kept and returned only when ``max_iterations`` is set, so an
+    unbounded run holds no history.
 
     ``sleep_fn``/``clock`` are injectable for tests; the defaults are real
     time.
@@ -43,18 +45,21 @@ def run_service(
     sleep_fn = sleep_fn or _time.sleep
     clock = clock or _time.time
     results: list[dict] = []
+
+    def keep(result: dict, job: str, root: str) -> None:
+        if max_iterations is not None:
+            results.append({**result, "job": job, "input_root": root})
+
     last_clean = clock()
     iteration = 0
     while max_iterations is None or iteration < max_iterations:
         iteration += 1
         if restructure:
             for root in input_roots:
-                out = run_avro_restructure_job(spark, root, config, now_s=clock())
-                results.append({**out, "job": "restructure", "input_root": root})
+                keep(run_avro_restructure_job(spark, root, config, now_s=clock()), "restructure", root)
         if config.cleaner.enable and clock() - last_clean >= config.cleaner.interval_s:
             for root in input_roots:
-                cleaned = run_avro_cleaner_job(spark, root, config, now_s=clock())
-                results.append({**cleaned, "job": "clean", "input_root": root})
+                keep(run_avro_cleaner_job(spark, root, config, now_s=clock()), "clean", root)
             last_clean = clock()
         if max_iterations is not None and iteration >= max_iterations:
             break

@@ -259,6 +259,15 @@ def test_committed_range_index_matches_bruteforce_and_scales():
     assert n_hit > 0
 
 
+def _state_dirs(tmp_path):
+    """One state dir per spelling — a plain path and a ``file://`` URI —
+    as ``(local root, state_dir)``: both run through the same code path."""
+    for name in ("plain", "uri"):
+        root = tmp_path / name
+        root.mkdir()
+        yield root, str(root) if name == "plain" else f"file://{root}"
+
+
 def test_commit_offsets_cas_no_lost_update(spark, tmp_path, monkeypatch):
     """ADVICE r5 #1: commit_offsets must resolve the current version EXACTLY
     once (snapshot + claim from the same resolve).  A concurrent committer
@@ -267,38 +276,35 @@ def test_commit_offsets_cas_no_lost_update(spark, tmp_path, monkeypatch):
     concurrent commit's intervals."""
     from restructure_hdfs_topic_spark.operators import offsets as O
 
-    state_dir = str(tmp_path / "state")
-    import os as _os
-
-    _os.makedirs(state_dir)
     mk = lambda lo, hi: spark.createDataFrame(
         [("t", 0, lo, hi, None)], O.STATE_SCHEMA
     )
-    O.commit_offsets(spark, state_dir, mk(0, 9))
+    for _, state_dir in _state_dirs(tmp_path):
+        O.commit_offsets(spark, state_dir, mk(0, 9))
 
-    real_merge = O.merge_offset_intervals
-    fired = []
+        real_merge = O.merge_offset_intervals
+        fired = []
 
-    def hooked_merge(ranges):
-        # First (victim) merge: interleave a full concurrent peer commit
-        # BETWEEN the victim's snapshot read and its version claim — the
-        # exact TOCTOU window of the old two-resolve code.
-        if not fired:
-            fired.append(1)
-            monkeypatch.setattr(O, "merge_offset_intervals", real_merge)
-            O.commit_offsets(spark, state_dir, mk(100, 109))
-            monkeypatch.setattr(O, "merge_offset_intervals", hooked_merge)
-        return real_merge(ranges)
+        def hooked_merge(ranges):
+            # First (victim) merge: interleave a full concurrent peer commit
+            # BETWEEN the victim's snapshot read and its version claim — the
+            # exact TOCTOU window of the old two-resolve code.
+            if not fired:
+                fired.append(1)
+                monkeypatch.setattr(O, "merge_offset_intervals", real_merge)
+                O.commit_offsets(spark, state_dir, mk(100, 109))
+                monkeypatch.setattr(O, "merge_offset_intervals", hooked_merge)
+            return real_merge(ranges)
 
-    monkeypatch.setattr(O, "merge_offset_intervals", hooked_merge)
-    O.commit_offsets(spark, state_dir, mk(200, 209))
-    monkeypatch.setattr(O, "merge_offset_intervals", real_merge)
+        monkeypatch.setattr(O, "merge_offset_intervals", hooked_merge)
+        O.commit_offsets(spark, state_dir, mk(200, 209))
+        monkeypatch.setattr(O, "merge_offset_intervals", real_merge)
 
-    final = {
-        (r.offset_from, r.offset_to)
-        for r in O.read_offsets(spark, state_dir).collect()
-    }
-    assert final == {(0, 9), (100, 109), (200, 209)}
+        final = {
+            (r.offset_from, r.offset_to)
+            for r in O.read_offsets(spark, state_dir).collect()
+        }
+        assert final == {(0, 9), (100, 109), (200, 209)}
 
 
 def test_dedup_distinct_fields_not_narrowed_by_accounting(tmp_path):
@@ -339,52 +345,52 @@ def test_stalled_committer_cannot_clobber_peer_commit(spark, tmp_path):
 
     import pytest as _pytest
 
+    from restructure_hdfs_topic_spark import state as S
     from restructure_hdfs_topic_spark.operators import offsets as O
 
-    state_dir = str(tmp_path / "state")
-    _os.makedirs(state_dir)
     mk = lambda lo, hi: spark.createDataFrame(  # noqa: E731
         [("t", 0, lo, hi, None)], O.STATE_SCHEMA
     )
-    O.commit_offsets(spark, state_dir, mk(0, 9))  # v1
+    for root, state_dir in _state_dirs(tmp_path):
+        O.commit_offsets(spark, state_dir, mk(0, 9))  # v1
 
-    # Victim A: resolves cur=1, claims v2 ... then stalls past the TTL.
-    token_a = O._claim_version(spark, state_dir, 2)
-    assert token_a
-    victim_merge = O.merge_offset_intervals(
-        O._read_state_at(spark, state_dir, 1).unionByName(mk(200, 209))
-    )
-    claim = _os.path.join(state_dir, "offsets", ".claim.v00000002")
-    old = _time.time() - O.CLAIM_TTL_S - 5
-    _os.utime(claim, (old, old))
+        # Victim A: resolves cur=1, claims v2 ... then stalls past the TTL.
+        token_a = S._claim_version(spark, state_dir, 2)
+        assert token_a
+        victim_merge = O.merge_offset_intervals(
+            S._read_at(spark, state_dir, 1, O.STATE_SCHEMA).unionByName(mk(200, 209))
+        )
+        claim = _os.path.join(root, "offsets", ".claim.v00000002")
+        old = _time.time() - S.CLAIM_TTL_S - 5
+        _os.utime(claim, (old, old))
 
-    # Peer B: breaks the stale claim, takes v2, commits durably.
-    O.commit_offsets(spark, state_dir, mk(100, 109))
-    assert O._current_version(state_dir) == 2
+        # Peer B: breaks the stale claim, takes v2, commits durably.
+        O.commit_offsets(spark, state_dir, mk(100, 109))
+        assert S.current_version(spark, state_dir) == 2
 
-    # A wakes and finishes its attempt with its stale token + merge.
-    with _pytest.raises(O.ClaimLost):
-        O._replace_at(spark, state_dir, victim_merge, 2, token_a)
+        # A wakes and finishes its attempt with its stale token + merge.
+        with _pytest.raises(S.ClaimLost):
+            S._replace_at(spark, state_dir, victim_merge, 2, token_a)
 
-    final = {
-        (r.offset_from, r.offset_to)
-        for r in O.read_offsets(spark, state_dir).collect()
-    }
-    assert final == {(0, 9), (100, 109)}  # B's commit intact, no stale merge
-    # No staging scratch left behind by the aborted attempt.
-    leftovers = [
-        n for n in _os.listdir(_os.path.join(state_dir, "offsets"))
-        if n.startswith(".staging.")
-    ]
-    assert leftovers == []
+        final = {
+            (r.offset_from, r.offset_to)
+            for r in O.read_offsets(spark, state_dir).collect()
+        }
+        assert final == {(0, 9), (100, 109)}  # B's commit intact, no stale merge
+        # No staging scratch left behind by the aborted attempt.
+        leftovers = [
+            n for n in _os.listdir(_os.path.join(root, "offsets"))
+            if n.startswith(".staging.")
+        ]
+        assert leftovers == []
 
-    # A's proper retry path (fresh snapshot) lands its intervals on v3.
-    O.commit_offsets(spark, state_dir, mk(200, 209))
-    final = {
-        (r.offset_from, r.offset_to)
-        for r in O.read_offsets(spark, state_dir).collect()
-    }
-    assert final == {(0, 9), (100, 109), (200, 209)}
+        # A's proper retry path (fresh snapshot) lands its intervals on v3.
+        O.commit_offsets(spark, state_dir, mk(200, 209))
+        final = {
+            (r.offset_from, r.offset_to)
+            for r in O.read_offsets(spark, state_dir).collect()
+        }
+        assert final == {(0, 9), (100, 109), (200, 209)}
 
 
 def test_breaker_adopts_orphan_committed_version(spark, tmp_path):
@@ -396,42 +402,42 @@ def test_breaker_adopts_orphan_committed_version(spark, tmp_path):
     import os as _os
     import time as _time
 
+    from restructure_hdfs_topic_spark import state as S
     from restructure_hdfs_topic_spark.operators import offsets as O
 
-    state_dir = str(tmp_path / "state")
-    _os.makedirs(state_dir)
     mk = lambda lo, hi: spark.createDataFrame(  # noqa: E731
         [("t", 0, lo, hi, None)], O.STATE_SCHEMA
     )
-    O.commit_offsets(spark, state_dir, mk(0, 9))  # v1
+    for root, state_dir in _state_dirs(tmp_path):
+        O.commit_offsets(spark, state_dir, mk(0, 9))  # v1
 
-    # Simulate the dead committer: claim v2, write + rename the version
-    # directory, then die BEFORE the pointer write.
-    token = O._claim_version(spark, state_dir, 2)
-    assert token
-    merged = O.merge_offset_intervals(
-        O._read_state_at(spark, state_dir, 1).unionByName(mk(100, 109))
-    )
-    staging = f"{state_dir}/offsets/.staging.v00000002.{token}"
-    merged.write.mode("overwrite").parquet(staging)
-    _os.rename(staging, _os.path.join(state_dir, "offsets", "v00000002"))
-    # (no pointer write — the crash point; pointer still names v1)
-    assert (tmp_path / "state" / "offsets.CURRENT").read_text() == "v00000001"
+        # Simulate the dead committer: claim v2, write + rename the version
+        # directory, then die BEFORE the pointer write.
+        token = S._claim_version(spark, state_dir, 2)
+        assert token
+        merged = O.merge_offset_intervals(
+            S._read_at(spark, state_dir, 1, O.STATE_SCHEMA).unionByName(mk(100, 109))
+        )
+        staging = f"offsets/.staging.v00000002.{token}"
+        merged.write.mode("overwrite").parquet(f"{state_dir}/{staging}")
+        _os.rename(_os.path.join(root, staging), _os.path.join(root, "offsets", "v00000002"))
+        # (no pointer write — the crash point; pointer still names v1)
+        assert (root / "offsets.CURRENT").read_text() == "v00000001"
 
-    # Age the claim past the TTL; a peer commit then contends on v2, breaks
-    # the stale claim, must ADOPT v2 (not delete it) and commit as v3.
-    claim = _os.path.join(state_dir, "offsets", ".claim.v00000002")
-    old = _time.time() - O.CLAIM_TTL_S - 5
-    _os.utime(claim, (old, old))
-    O.commit_offsets(spark, state_dir, mk(200, 209))
+        # Age the claim past the TTL; a peer commit then contends on v2, breaks
+        # the stale claim, must ADOPT v2 (not delete it) and commit as v3.
+        claim = _os.path.join(root, "offsets", ".claim.v00000002")
+        old = _time.time() - S.CLAIM_TTL_S - 5
+        _os.utime(claim, (old, old))
+        O.commit_offsets(spark, state_dir, mk(200, 209))
 
-    final = {
-        (r.offset_from, r.offset_to)
-        for r in O.read_offsets(spark, state_dir).collect()
-    }
-    # The orphan's intervals SURVIVE: adoption made them part of history.
-    assert final == {(0, 9), (100, 109), (200, 209)}
-    assert (tmp_path / "state" / "offsets.CURRENT").read_text() == "v00000003"
+        final = {
+            (r.offset_from, r.offset_to)
+            for r in O.read_offsets(spark, state_dir).collect()
+        }
+        # The orphan's intervals SURVIVE: adoption made them part of history.
+        assert final == {(0, 9), (100, 109), (200, 209)}
+        assert (root / "offsets.CURRENT").read_text() == "v00000003"
 
 
 def test_claim_version_failure_after_create_cleans_up(spark, tmp_path, monkeypatch):
@@ -440,7 +446,7 @@ def test_claim_version_failure_after_create_cleans_up(spark, tmp_path, monkeypat
     full TTL."""
     import os as _os
 
-    from restructure_hdfs_topic_spark.operators import offsets as O
+    from restructure_hdfs_topic_spark import state as S
 
     state_dir = f"file://{tmp_path}/state"
     _os.makedirs(tmp_path / "state" / "offsets")
@@ -448,7 +454,7 @@ def test_claim_version_failure_after_create_cleans_up(spark, tmp_path, monkeypat
     # Force the write-after-create to blow up by breaking bytearray usage:
     # patch _hfs to return a wrapper whose create() yields a stream that
     # raises on write.
-    real_hfs = O._hfs
+    real_hfs = S._hfs
 
     class BoomStream:
         def write(self, *_a):
@@ -475,12 +481,12 @@ def test_claim_version_failure_after_create_cleans_up(spark, tmp_path, monkeypat
         jvm, fs, p = real_hfs(spark_, dir_)
         return jvm, FsWrapper(fs), p
 
-    monkeypatch.setattr(O, "_hfs", fake_hfs)
-    assert O._claim_version(spark, state_dir, 1) is None
+    monkeypatch.setattr(S, "_hfs", fake_hfs)
+    assert S._claim_version(spark, state_dir, 1) is None
     monkeypatch.undo()
     # The half-made claim was removed: a fresh claim succeeds immediately.
     assert not _os.path.exists(tmp_path / "state" / "offsets" / ".claim.v00000001")
-    assert O._claim_version(spark, state_dir, 1) is not None
+    assert S._claim_version(spark, state_dir, 1) is not None
 
 
 def test_export_one_file_per_shard_dir(spark, tmp_path):

@@ -450,6 +450,50 @@ def test_service_serves_every_input_root(spark, tmp_path):
     assert fake.sleeps == [300]
 
 
+def test_unbounded_service_keeps_no_result_history(tmp_path, monkeypatch):
+    """Without ``max_iterations`` the service loop runs forever, so it keeps
+    no results: an iteration's payload (a cleaner result carries every
+    deleted and kept path) is freed once the iteration ends."""
+    import gc
+    import weakref
+
+    from restructure_hdfs_topic_spark.plans import avro_job
+    from restructure_hdfs_topic_spark.streaming.service import run_service
+
+    live = weakref.WeakSet()
+
+    class Paths(list):
+        """A result payload whose liveness the WeakSet tracks."""
+
+        __hash__ = object.__hash__
+
+    def fake_job(spark, root, config, now_s=None):
+        paths = Paths([f"{root}/f{now_s}.avro"])
+        live.add(paths)
+        return {"deleted": paths, "kept": [], "rolled_back": [], "files_processed": 0}
+
+    monkeypatch.setattr(avro_job, "run_avro_restructure_job", fake_job)
+    monkeypatch.setattr(avro_job, "run_avro_cleaner_job", fake_job)
+
+    class Stop(Exception):
+        pass
+
+    fake, counts = _FakeTime(), []
+
+    def sleep(s):
+        gc.collect()
+        counts.append(len(live))
+        if len(counts) == 3:
+            raise Stop
+        fake.sleep(s)
+
+    with pytest.raises(Stop):
+        run_service(object(), [str(tmp_path / "in")], _service_config(tmp_path), sleep_fn=sleep, clock=fake.clock)
+    # At most the iteration just finished (one restructure, one clean) may
+    # still be referenced; earlier iterations' payloads are gone.
+    assert counts and max(counts) <= 2, counts
+
+
 def test_cli_service_runs_one_loop_over_all_roots(tmp_path, monkeypatch):
     """``-S in1 in2``: the CLI starts one service loop over both roots (a
     loop per root would never reach the second one)."""

@@ -269,7 +269,7 @@ def test_ingest_batch_bloom_steady_state(spark, tmp_path):
     (incremental), so the NEXT batch's filter never rebuilds: its meta
     version already equals the state version."""
     from restructure_hdfs_topic_spark.operators.bloom import read_bloom_meta
-    from restructure_hdfs_topic_spark.operators import offsets as _off
+    from restructure_hdfs_topic_spark import state
     from restructure_hdfs_topic_spark.operators.incremental import ingest_batch
 
     state_dir = str(tmp_path / "state")
@@ -286,7 +286,7 @@ def test_ingest_batch_bloom_steady_state(spark, tmp_path):
         assert res["accepted_rows"] == 8
         meta = read_bloom_meta(spark, state_dir)
         assert meta["state_version"] == (
-            _off._current_version(state_dir, spark) or 0
+            state.current_version(spark, state_dir) or 0
         )
     # Re-offering batch 0 accepts nothing.
     res = ingest_batch(

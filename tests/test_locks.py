@@ -77,7 +77,7 @@ def test_lease_excludes_under_a_race(spark, tmp_path):
 def test_offset_version_claim_excludes_under_a_race(spark, tmp_path):
     """Six committers claiming one offsets version of a ``file://`` state
     dir at the same moment: exactly one gets the claim."""
-    from restructure_hdfs_topic_spark.operators.offsets import _claim_version
+    from restructure_hdfs_topic_spark.state import _claim_version
 
     state_dir = f"file://{tmp_path}/state"
     for nxt in range(1, 21):

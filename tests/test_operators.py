@@ -1179,69 +1179,74 @@ def test_mixture_sample_duckdb_cross_check(spark):
 def test_offsets_commit_claim_protocol(spark, tmp_path):
     """Version claims serialize committers: a live claim forces a retry, a
     stale claim (crashed committer) is broken and its orphan version dir
-    discarded, and normal commits still round-trip."""
+    discarded, and normal commits still round-trip — for a state dir
+    spelled as a plain path and as a ``file://`` URI alike."""
     import os
     import time
 
     from restructure_hdfs_topic_spark.operators.offsets import (
-        _break_stale_claim,
-        _claim_version,
         commit_offsets,
         read_offsets,
     )
+    from restructure_hdfs_topic_spark.state import (
+        _break_stale_claim,
+        _claim_version,
+    )
 
-    sd = str(tmp_path / "state")
-    os.makedirs(sd)
-    df = spark.createDataFrame(
-        [("t", 0, 0, 9)], "topic string, partition int, offset_from long, offset_to long"
-    )
-    commit_offsets(spark, sd, df)
-    assert read_offsets(spark, sd).count() == 1
+    for spelling in ("plain", "uri"):
+        root = str(tmp_path / spelling)
+        sd = root if spelling == "plain" else f"file://{root}"
+        os.makedirs(root)
+        df = spark.createDataFrame(
+            [("t", 0, 0, 9)], "topic string, partition int, offset_from long, offset_to long"
+        )
+        commit_offsets(spark, sd, df)
+        assert read_offsets(spark, sd).count() == 1
 
-    # Claim for the NEXT version is exclusive.
-    assert _claim_version(spark, sd, 3)
-    assert not _claim_version(spark, sd, 3)
-    # Fresh claim: break refuses (owner may be alive).
-    _break_stale_claim(spark, sd, 3)
-    assert not _claim_version(spark, sd, 3)
-    # Aged claim + INCOMPLETE orphan version dir (no _SUCCESS — never a
-    # committed version): break removes the claim but does NOT delete the
-    # dir — the breaker never destroys a version directory (a committed
-    # one is adopted instead, see test_breaker_adopts_orphan_committed_
-    # version); incomplete debris is swept by the next claim HOLDER.
-    claim = os.path.join(sd, "offsets", ".claim.v00000003")
-    orphan = os.path.join(sd, "offsets", "v00000003")
-    os.makedirs(orphan)
-    old = time.time() - 3600
-    os.utime(claim, (old, old))
-    _break_stale_claim(spark, sd, 3)
-    assert not os.path.exists(claim) and os.path.exists(orphan)
-    # A later commit (v2) still works...
-    df2 = spark.createDataFrame(
-        [("t", 0, 20, 29)], "topic string, partition int, offset_from long, offset_to long"
-    )
-    commit_offsets(spark, sd, df2)
-    got = {
-        (r["offset_from"], r["offset_to"])
-        for r in read_offsets(spark, sd).collect()
-    }
-    assert got == {(0, 9), (20, 29)}
-    # ...and the commit that REACHES version 3 sweeps the incomplete
-    # debris instead of livelocking on rename-refused ClaimLost retries.
-    df3 = spark.createDataFrame(
-        [("t", 0, 40, 49)], "topic string, partition int, offset_from long, offset_to long"
-    )
-    commit_offsets(spark, sd, df3)
-    assert os.path.exists(os.path.join(orphan, "_SUCCESS"))
-    got = {
-        (r["offset_from"], r["offset_to"])
-        for r in read_offsets(spark, sd).collect()
-    }
-    assert got == {(0, 9), (20, 29), (40, 49)}
-    # A stray non-numeric version entry must not break pruning.
-    os.makedirs(os.path.join(sd, "offsets", "v1.bak"), exist_ok=True)
-    commit_offsets(spark, sd, df2)
-    assert os.path.isdir(os.path.join(sd, "offsets", "v1.bak"))
+        # Claim for the NEXT version is exclusive.
+        assert _claim_version(spark, sd, 3)
+        assert not _claim_version(spark, sd, 3)
+        # Fresh claim: break refuses (owner may be alive).
+        _break_stale_claim(spark, sd, 3)
+        assert not _claim_version(spark, sd, 3)
+        # Aged claim + INCOMPLETE orphan version dir (no _SUCCESS — never a
+        # committed version): break removes the claim but does NOT delete the
+        # dir — the breaker never destroys a version directory (a committed
+        # one is adopted instead, see test_breaker_adopts_orphan_committed_
+        # version); incomplete debris is swept by the next claim HOLDER.
+        claim = os.path.join(root, "offsets", ".claim.v00000003")
+        orphan = os.path.join(root, "offsets", "v00000003")
+        os.makedirs(orphan)
+        old = time.time() - 3600
+        os.utime(claim, (old, old))
+        _break_stale_claim(spark, sd, 3)
+        assert not os.path.exists(claim) and os.path.exists(orphan)
+        # A later commit (v2) still works...
+        df2 = spark.createDataFrame(
+            [("t", 0, 20, 29)], "topic string, partition int, offset_from long, offset_to long"
+        )
+        commit_offsets(spark, sd, df2)
+        got = {
+            (r["offset_from"], r["offset_to"])
+            for r in read_offsets(spark, sd).collect()
+        }
+        assert got == {(0, 9), (20, 29)}
+        # ...and the commit that REACHES version 3 sweeps the incomplete
+        # debris instead of livelocking on rename-refused ClaimLost retries.
+        df3 = spark.createDataFrame(
+            [("t", 0, 40, 49)], "topic string, partition int, offset_from long, offset_to long"
+        )
+        commit_offsets(spark, sd, df3)
+        assert os.path.exists(os.path.join(orphan, "_SUCCESS"))
+        got = {
+            (r["offset_from"], r["offset_to"])
+            for r in read_offsets(spark, sd).collect()
+        }
+        assert got == {(0, 9), (20, 29), (40, 49)}
+        # A stray non-numeric version entry must not break pruning.
+        os.makedirs(os.path.join(root, "offsets", "v1.bak"), exist_ok=True)
+        commit_offsets(spark, sd, df2)
+        assert os.path.isdir(os.path.join(root, "offsets", "v1.bak"))
 
 
 def test_filename_parse_rejects_plus_in_topic(spark):

@@ -137,15 +137,17 @@ def test_config_dedup_key_resolution():
     assert cfg.dedup_key_for("other", cols) == cols
 
 
-def test_cleaner_rollback_and_reprocess(spark, tmp_path):
+def test_cleaner_rollback_and_reprocess(spark, tmp_path, monkeypatch):
     """O20 over the Avro job (cleaner/SourceDataCleaner.kt:76-109 +
     Accountant.kt:62-65): a fully extracted committed file is deleted and
     stays committed; the partition's max-offset file is kept (+1 rule); a
     committed file missing from the output is rolled back — its range
-    leaves the state — and the next restructure reprocesses exactly it."""
+    leaves the state — and the next restructure reprocesses exactly it.
+    A peer commit that lands while the rollback is computed survives it."""
     import shutil
 
     from restructure_hdfs_topic_spark.config import CleanerConfig
+    from restructure_hdfs_topic_spark.operators import offsets
     from restructure_hdfs_topic_spark.plans.avro_job import run_avro_cleaner_job
 
     src = str(tmp_path / "in")
@@ -170,13 +172,27 @@ def test_cleaner_rollback_and_reprocess(spark, tmp_path):
     r1 = run_avro_restructure_job(spark, src, cfg, now_s=now)
     assert (r1["files_processed"], r1["records_written"]) == (3, 12)
 
-    def intervals():
-        state = read_offsets(spark, cfg.state_dir)
+    def intervals(partition=0):
+        state = read_offsets(spark, cfg.state_dir).filter(f"partition = {partition}")
         return sorted((r.offset_from, r.offset_to) for r in state.collect())
 
     assert intervals() == [(0, 11)]
     # User u1 (the middle file) lost from the output → partial extraction.
     shutil.rmtree(os.path.join(cfg.target_dir, "projectId=p", "userId=u1"))
+    # A peer app commits partition 1 between the cleaner's state read and
+    # its rollback commit: the first remove call lands that commit.
+    real_remove, fired = offsets.remove_offsets, []
+
+    def remove_after_peer_commit(state, to_remove):
+        if not fired:
+            fired.append(1)
+            peer = spark.createDataFrame(
+                [("events", 1, 0, 9)], "topic string, partition int, offset_from long, offset_to long"
+            )
+            offsets.commit_offsets(spark, cfg.state_dir, peer)
+        return real_remove(state, to_remove)
+
+    monkeypatch.setattr(offsets, "remove_offsets", remove_after_peer_commit)
     cleaned = run_avro_cleaner_job(spark, src, cfg, now_s=now)
     assert cleaned["deleted"] == [paths[0]]
     assert cleaned["rolled_back"] == [paths[1]]
@@ -184,6 +200,7 @@ def test_cleaner_rollback_and_reprocess(spark, tmp_path):
     # The max-offset file is never a candidate: (8, 12) is not committed.
     assert os.path.exists(paths[2]) and paths[2] not in cleaned["deleted"] + cleaned["rolled_back"]
     assert intervals() == [(0, 3), (8, 11)]
+    assert intervals(partition=1) == [(0, 9)]  # the peer commit survives
 
     r2 = run_avro_restructure_job(spark, src, cfg, now_s=now)
     assert (r2["files_processed"], r2["records_written"]) == (1, 4)

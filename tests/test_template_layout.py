@@ -90,10 +90,7 @@ def test_template_layout_append_merges_existing_bins(spark, tmp_path):
     """Reprocessing into an existing bin must APPEND (reference
     FileCache.kt:61-103 semantics), not clobber: run the job, roll back the
     committed offsets, run again — rows double, header stays single."""
-    from restructure_hdfs_topic_spark.operators.offsets import (
-        read_offsets,
-        replace_offsets,
-    )
+    from restructure_hdfs_topic_spark.operators.offsets import replace_offsets
 
     cfg = RestructureConfig(
         target_dir=str(tmp_path / "out"),
@@ -105,8 +102,7 @@ def test_template_layout_append_merges_existing_bins(spark, tmp_path):
     os.makedirs(cfg.state_dir, exist_ok=True)
     run_avro_restructure_job(spark, FIXTURES, cfg)
     # Forget the commits (simulates a re-delivered source prefix).
-    empty = read_offsets(spark, cfg.state_dir).limit(0)
-    replace_offsets(spark, cfg.state_dir, empty)
+    replace_offsets(spark, cfg.state_dir, lambda s: s.limit(0))
     run_avro_restructure_job(spark, FIXTURES, cfg)
     with open(os.path.join(cfg.target_dir, FIRST, "20200128_1300.csv")) as fh:
         lines = fh.read().splitlines()
