@@ -36,10 +36,11 @@ def _qcol(name: str) -> Column:
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def flatten_struct_columns(df: DataFrame, sep: str = ".") -> DataFrame:
+def flatten_struct_columns(df: DataFrame, sep: str = ".", keep: tuple[str, ...] = ()) -> DataFrame:
     """O6/O7 struct recursion: expand every StructType column to scalar
     columns with dot-joined names (``key.projectId``).  Maps/arrays are left
-    intact (see flatten_for_csv for the data-dependent expansion)."""
+    intact (see flatten_for_csv for the data-dependent expansion), and so
+    are the columns named in ``keep``."""
     cols: list[Column] = []
 
     def q(name: str) -> str:
@@ -55,7 +56,10 @@ def flatten_struct_columns(df: DataFrame, sep: str = ".") -> DataFrame:
             cols.append(F.expr(path).alias(prefix))
 
     for field in df.schema.fields:
-        expand(field.name, field.dataType, q(field.name))
+        if field.name in keep:
+            cols.append(_qcol(field.name))
+        else:
+            expand(field.name, field.dataType, q(field.name))
     return df.select(*cols)
 
 
@@ -211,13 +215,21 @@ def _dynamic_columns(headers: list[dict]) -> dict[str, list]:
     return out
 
 
-def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame, dict[int, dict]]:
+def route_by_schema_attempt(
+    df: DataFrame, order_col: str | None = None
+) -> tuple[DataFrame, DataFrame, dict[int, dict]]:
     """Assign each record its attempt index, mirroring
     RecordPathFactory.kt:56-75's retry loop set-wise: distinct header
     shapes are processed in first-occurrence order, each routed to the
     FIRST earlier attempt whose header CONTAINS it (sub-schema records
     absorb into the wider file with ``""`` cells —
     CsvAvroConverterTest.kt:88-157), else to a new attempt.
+
+    A shape's first occurrence is its smallest ``order_col`` (the
+    restructure job passes ``sources.avro.FILE_ORDER``, the record order
+    the reference writes in); the column is dropped from the routed frame.
+    Without one it is the smallest ``monotonically_increasing_id``, the
+    frame's partition order, which after a shuffle follows hashing.
 
     Driver state is one row per DISTINCT header shape (bounded by schema
     variance, not record count); the subset scan is O(shapes²).
@@ -243,9 +255,9 @@ def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame, dict[i
 
     from pyspark import StorageLevel
 
-    fp = df.withColumn("__fp", _header_descriptor(df)).withColumn(
-        "__mid", F.monotonically_increasing_id()
-    )
+    if order_col is None:
+        order_col, df = "__mid", df.withColumn("__mid", F.monotonically_increasing_id())
+    fp = df.withColumn("__fp", _header_descriptor(df.drop(order_col)))
     # Two consumers — the distinct-header collect below AND the returned
     # routed plan — would each re-run the whole upstream decode/flatten
     # lineage (ADVICE r4: one extra full pass per topic write).  Persist
@@ -254,7 +266,7 @@ def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame, dict[i
     # not be recomputed between the two consumers.
     fp = fp.persist(StorageLevel.MEMORY_AND_DISK)
     firsts = sorted(
-        fp.groupBy("__fp").agg(F.min("__mid").alias("m")).collect(),
+        fp.groupBy("__fp").agg(F.min(order_col).alias("m")).collect(),
         key=lambda r: r["m"],
     )
     canonicals: list[dict] = []
@@ -273,6 +285,6 @@ def route_by_schema_attempt(df: DataFrame) -> tuple[DataFrame, DataFrame, dict[i
     mapping = F.create_map(
         *[F.lit(x) for kv in attempt_of.items() for x in kv]
     )
-    out = fp.withColumn("attempt", mapping[F.col("__fp")]).drop("__fp", "__mid")
+    out = fp.withColumn("attempt", mapping[F.col("__fp")]).drop("__fp", order_col)
     headers = {a: _dynamic_columns(hs) for a, hs in members.items()}
     return out, fp, headers

@@ -17,11 +17,14 @@ distinct header shapes of the records being written (bounded by schema
 variance).  Committed files are pruned on the driver, from the listing and
 a bisect index over the intervals, before any byte of data is read (the
 reference's scan-pruning, worker/RadarKafkaRestructure.kt:118-122) — no
-Spark job.  For CSV, decode + organize + dedup is persisted once for
-attempt routing, whose one aggregation yields both the attempts and each
-attempt's header; each attempt (JSON: the whole topic) is then written in
-one plan with a single shuffle (the pre-write repartition on output
-partition columns).
+Spark job.  A topic's records are shuffled once: hashed on the output
+partition columns (project, user, bin), by the keep-last dedup's
+repartition when its key holds them, else by the write's own.  The dedup
+orders records by ``file_order`` rather than by the exact offset, whose
+per-file window would be a second shuffle.  For CSV, decode + organize +
+dedup is persisted once for attempt routing, whose one aggregation yields
+both the attempts and each attempt's header; each attempt (JSON: the
+whole topic) is then written in one plan over that partitioning.
 Frames the driver builds (commit ranges, rollbacks, the empty state) are
 local relations, so no Python worker runs outside the decode.
 """
@@ -52,6 +55,7 @@ from restructure_hdfs_topic_spark.operators.offsets import (
 )
 from restructure_hdfs_topic_spark.session import local_frame
 from restructure_hdfs_topic_spark.sources.avro import (
+    FILE_ORDER,
     SourceFile,
     manifest_df,
     read_avro,
@@ -64,6 +68,11 @@ from restructure_hdfs_topic_spark.sources.avro import (
 # Write partition columns of the reference's output layout
 # ``projectId/userId/topic/yyyyMMdd_HH00`` (path/FormattedPathFactory.kt:111).
 PARTITION_COLS = ["projectId", "userId", "topic", "bin"]
+# The columns a topic's records are hashed on before the write: ``topic``
+# is a literal within one topic's write, so it adds nothing to the hash,
+# and a window partitioned by a key holding a literal drops the literal,
+# so hashing on it would no longer satisfy the dedup's window.
+_HASH_COLS = ["projectId", "userId", "bin"]
 
 # Event-time candidate fields in reference priority order
 # (util/TimeUtil.kt:21-50), with their physical interpretation.
@@ -128,12 +137,16 @@ def _write_topic(
     config: RestructureConfig,
     topic: str,
     record_type: StructType,
-    n_tasks: int,
+    n_tasks: int | None,
 ) -> None:
     """O13 partitioned sink for one topic, CSV (flattened, dynamic header)
-    or JSON (nested), written by ``n_tasks`` tasks (``_write_tasks``).
-    ``record_type`` types the record columns in the ``schema-<topic>.json``
-    sidecar (``sources.avro.record_struct``).
+    or JSON (nested), written by ``n_tasks`` tasks (``_write_tasks``)
+    after a repartition on the partition columns; ``n_tasks=None`` when
+    ``organized`` is already hash-partitioned on ``_HASH_COLS``, which
+    puts every output directory in one task, so each gets one part file.
+    A ``FILE_ORDER`` column orders the CSV attempt routing's first
+    occurrences.  ``record_type`` types the record columns in the
+    ``schema-<topic>.json`` sidecar (``sources.avro.record_struct``).
 
     Two physical layouts (``config.paths.layout``):
 
@@ -182,8 +195,16 @@ def _write_topic(
     codec = writer_compression(config.compression)
     # The reference's output rows carry ONLY the record payload (flattened
     # key.*/value.* for CSV, nested for JSON) — accounting columns served
-    # their purpose (pruning, dedup order, commit) and are dropped here.
-    payload = organized.drop("time", "filename", "mtime", "partition", "offset")
+    # their purpose (pruning, dedup order, commit) and are dropped here;
+    # CSV attempt routing still reads the file order.
+    ordered = organized.drop("time", "filename", "mtime", "partition", "offset")
+    payload = ordered.drop(FILE_ORDER)
+
+    def clustered(frame: DataFrame, part_cols: list[str]) -> DataFrame:
+        if n_tasks is None:
+            return frame
+        return frame.repartition(n_tasks, *[F.col(f"`{c}`") for c in part_cols])
+
     if config.format == "csv":
         # Attempt routing (§1.3, worker/RestructureWorker.kt:148-163) runs
         # on the struct-flattened payload BEFORE the CSV null→"" coalesce
@@ -195,8 +216,9 @@ def _write_topic(
             route_by_schema_attempt,
         )
 
+        order = FILE_ORDER if FILE_ORDER in ordered.columns else None
         routed, persisted, headers = route_by_schema_attempt(
-            flatten_struct_columns(payload)
+            flatten_struct_columns(ordered, keep=(FILE_ORDER,)), order
         )
         try:
             # One write PER ATTEMPT, each with its own dynamic columns (map
@@ -225,7 +247,7 @@ def _write_topic(
                     part_cols = PARTITION_COLS
                 flat = flatten_for_csv(sub, dynamic=headers[a])
                 writer = (
-                    flat.repartition(n_tasks, *[F.col(f"`{c}`") for c in part_cols])
+                    clustered(flat, part_cols)
                     .write.mode("append")
                     .partitionBy(*part_cols)
                     .option("header", "true")
@@ -251,7 +273,7 @@ def _write_topic(
         else:
             part_cols = PARTITION_COLS
         writer = (
-            payload.repartition(n_tasks, *[F.col(c) for c in part_cols])
+            clustered(payload, part_cols)
             .write.mode("append")
             .partitionBy(*part_cols)
         )
@@ -296,7 +318,7 @@ _WRITE_TASK_BYTES = 64 << 20
 
 
 def _write_tasks(spark: SparkSession, input_bytes: int) -> int:
-    """Task count of the pre-write shuffle: one per core, and one per
+    """Task count of a topic write's one shuffle: one per core, and one per
     ``_WRITE_TASK_BYTES`` of input where that is more (a large batch is not
     held to the cores registered when it starts, as under dynamic
     allocation), capped by ``spark.sql.shuffle.partitions``.  The count is
@@ -304,8 +326,9 @@ def _write_tasks(spark: SparkSession, input_bytes: int) -> int:
     batch into ONE write task.  It is no larger because each non-empty
     task sorts its rows for the partitioned write into at least one
     memory page (about 64 MiB with an 8 GiB driver on 4 cores), garbage
-    that grows the heap.  Hashing on the partition columns keeps each bin
-    in one task, so each bin gets one part file."""
+    that grows the heap.  Hashing on the partition columns, or on
+    ``_HASH_COLS`` (a subset of them), keeps each output directory in one
+    task, so each bin gets one part file."""
     by_size = -(-input_bytes // _WRITE_TASK_BYTES)
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(cap, max(spark.sparkContext.defaultParallelism, by_size)))
@@ -800,17 +823,17 @@ def restructure_files(
         paths, schemas = writer_schemas(spark, paths)
         if not paths:
             return 0
-        records = read_avro(spark, paths, schemas)
+        records = read_avro(spark, paths, schemas, file_order=True)
     organized = organize_avro_records(records, config.paths.bin_format)
     organized = organized.withColumn("topic", F.lit(topic))
     # Dedup keys are the WRITTEN row's columns (the reference dedups the
     # output file, format/CsvAvroConverterFactory.kt:22-56): flattened
     # record leaves (key.sourceId, value.time, …), never the accounting
-    # columns — offset/filename are unique per record and would make
-    # full-row dedup a no-op.
+    # columns — offset/filename/file_order are unique per record and would
+    # make full-row dedup a no-op.
     accounting = {"offset", "filename", "mtime", "partition", "time"}
     leaves = []
-    for f in organized.schema.fields:
+    for f in organized.drop(FILE_ORDER).schema.fields:
         if isinstance(f.dataType, StructType):
             leaves.extend(f"{f.name}.{c}" for c in f.dataType.fieldNames())
         else:
@@ -818,8 +841,22 @@ def restructure_files(
     # Accounting columns are excluded only from the DEFAULT full-row key;
     # explicitly configured distinct fields are honored verbatim.
     dedup_key = config.dedup_key_for(topic, leaves, default_exclude=accounting)
+    n_tasks = _write_tasks(spark, input_bytes)
     if dedup_key is not None:
-        organized = keep_last_dedup(organized, dedup_key, "offset")
+        if set(_HASH_COLS) <= set(dedup_key):
+            # Hash once, on columns of both the dedup key and the write's
+            # partitioning: the keep-last window needs no shuffle of its
+            # own, and the write none either.  The default full-row key
+            # holds them.
+            organized = organized.repartition(n_tasks, *_HASH_COLS)
+            n_tasks = None
+        # Keep-last in file processing order (SURVEY O14): the record of
+        # the later file in (partition, offset_from, path) order wins, and
+        # within a file the later record.  That is the exact-offset order
+        # unless two files' offset ranges overlap (the later-starting file
+        # wins) or a key spans Kafka partitions (the higher partition
+        # wins), where offsets of different files are not comparable.
+        organized = keep_last_dedup(organized, dedup_key, FILE_ORDER)
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -830,7 +867,7 @@ def restructure_files(
             config,
             topic,
             record_struct(union_avro_schemas(schemas)),
-            _write_tasks(spark, input_bytes),
+            n_tasks,
         )
     n_records = int(obs.get["n"])
     return n_records

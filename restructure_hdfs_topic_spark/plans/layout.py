@@ -13,8 +13,9 @@ directories, not filenames), so template mode is a two-phase sink:
 
 1. the partitioned write lands in a hidden Hive-style staging tree
    (``_staging_<topic>/projectId=…/userId=…/topic=…/bin=…/part-*``) — fully
-   distributed: the pre-write repartition hashes the partition columns
-   into a fixed task count (one per core, more for a large batch; see
+   distributed: the topic write's one shuffle hashes the partition
+   columns, or the project, user and bin among them, into a fixed task
+   count (one per core, more for a large batch; see
    ``plans.avro_job._write_tasks``), so each bin's rows are written by one
    task into one part file;
 2. ``finalize_template_layout`` MOVES each staged part to its rendered final

@@ -21,7 +21,8 @@ index being the row number in a window over the file ordered by split
 start, then by read order within the split.  This stays exact when Spark
 splits one large file across tasks at sync markers.  The window costs one
 shuffle, and Catalyst prunes it from any plan that never reads ``offset``
-(the cleaner's).
+(the cleaner's, and the restructure job's, whose keep-last dedup orders
+records by ``file_order`` instead).
 """
 
 from __future__ import annotations
@@ -57,6 +58,9 @@ MAGIC = b"Obj\x01"
 from restructure_hdfs_topic_spark.functions.paths import FILENAME_RE as _FILENAME_RE_STR
 
 FILENAME_RE = re.compile(_FILENAME_RE_STR)
+
+# The column ``read_avro(..., file_order=True)`` appends.
+FILE_ORDER = "file_order"
 
 
 # ---------------------------------------------------------------------------
@@ -720,7 +724,9 @@ def avro_reader_schema(schemas: list) -> dict:
 AVRO_SOURCE = "org.apache.spark.sql.avro.AvroFileFormat"
 
 
-def read_avro(spark: SparkSession, paths: list[str], schemas: list | None = None) -> DataFrame:
+def read_avro(
+    spark: SparkSession, paths: list[str], schemas: list | None = None, file_order: bool = False
+) -> DataFrame:
     """O2: DataFrame of Avro records with accounting columns
     (filename, topic, partition, offset, mtime) appended, decoded by
     Spark's Avro source in JVM tasks.  Offsets are exact per-record Kafka
@@ -729,6 +735,14 @@ def read_avro(spark: SparkSession, paths: list[str], schemas: list | None = None
     name yield no rows; empty files are skipped.  A caller that already
     holds ``writer_schemas(spark, paths)`` passes its two parts as
     ``paths`` and ``schemas``, so no header is read twice.
+
+    ``file_order=True`` appends ``FILE_ORDER``, a struct that orders
+    records as files are processed: (partition, offset_from from the file
+    name, file path, split start, read position within the split).  It
+    needs no window, so a plan that orders by it instead of ``offset``
+    shuffles nothing for it.  It equals the order of ``offset`` unless two
+    files' offset ranges overlap or records of different Kafka
+    partitions are compared.
     """
     if not paths:
         raise ValueError("read_avro: empty path list")
@@ -747,19 +761,28 @@ def read_avro(spark: SparkSession, paths: list[str], schemas: list | None = None
         F.col("_metadata.file_path").alias("__file"),
         F.col("_metadata.file_block_start").alias("__split"),
     ).where(F.col("filename").rlike(name_rx))
+    partition = F.regexp_extract("filename", name_rx, 2).cast("int")
+    offset_from = F.regexp_extract("filename", name_rx, 3).cast("long")
     in_file = Window.partitionBy("__file").orderBy("__split", "__read")
-    return named.withColumn("__read", F.monotonically_increasing_id()).select(
+    cols = [
         *fields,
         "filename",
         F.regexp_extract("filename", name_rx, 1).alias("topic"),
-        F.regexp_extract("filename", name_rx, 2).cast("int").alias("partition"),
-        (
-            F.regexp_extract("filename", name_rx, 3).cast("long")
-            + F.row_number().over(in_file)
-            - 1
-        ).alias("offset"),
+        partition.alias("partition"),
+        (offset_from + F.row_number().over(in_file) - 1).alias("offset"),
         "mtime",
-    )
+    ]
+    if file_order:
+        cols.append(
+            F.struct(
+                partition.alias("partition"),
+                offset_from.alias("offset_from"),
+                F.col("__file").alias("path"),
+                F.col("__split").alias("split"),
+                F.col("__read").alias("read"),
+            ).alias(FILE_ORDER)
+        )
+    return named.withColumn("__read", F.monotonically_increasing_id()).select(*cols)
 
 
 def writer_schemas(spark: SparkSession, paths: list[str]) -> tuple[list[str], list]:

@@ -191,17 +191,109 @@ def write_topic_file(
     records: list[dict],
     mtime_s: float | None = None,
     schema: dict = RECORD_SCHEMA,
+    single_offset: bool = False,
     **container_kw,
 ) -> str:
     """Write ``records`` (``schema`` datums) as the Kafka-Connect file
     covering offsets ``offset_from .. offset_from + len(records) - 1``;
-    returns its path.  ``container_kw`` goes to ``container``."""
+    returns its path.  ``single_offset`` names the file by its first
+    offset only (``<topic>+<p>+<from>.avro``).  ``container_kw`` goes to
+    ``container``."""
     part_dir = os.path.join(root, topic, f"partition={partition}")
     os.makedirs(part_dir, exist_ok=True)
     offset_to = offset_from + len(records) - 1
-    path = os.path.join(part_dir, f"{topic}+{partition}+{offset_from:010d}+{offset_to:010d}.avro")
+    last = "" if single_offset else f"+{offset_to:010d}"
+    path = os.path.join(part_dir, f"{topic}+{partition}+{offset_from:010d}{last}.avro")
     with open(path, "wb") as fh:
         fh.write(container(schema, records, **container_kw))
     if mtime_s is not None:
         os.utime(path, ns=(int(mtime_s * 1e9), int(mtime_s * 1e9)))
     return path
+
+
+# A tree shaped like the reference's integration fixtures
+# (src/integrationTest/resources): topic ``application_server_status``,
+# partition 1, a file of offsets 18-20 and a single-offset file from 21,
+# three records each; topic ``android_phone_acceleration``, partition 0,
+# one single-offset file.  The status records of bin 20200128_1300 are the
+# two identical rows of the reference's golden CSV
+# (RestructureS3IntegrationTest.kt).
+STATUS_TOPIC = "application_server_status"
+ACCEL_TOPIC = "android_phone_acceleration"
+STATUS_KEY = ("STAGING_PROJECT", "1543bc93-3c17-4381-89a5-c5d6272b827c", "99caf236-bbe6-4eed-9c63-fba77349821d")
+ACCEL_KEY = ("radar-test-root", "4ab9b985-6eec-4e51-9a29-f4c571c89f99", "6d4b9f3c-3b4b-4e7f-8f5a-0c1f0e2d8a11")
+STATUS_SCHEMA = {
+    "type": "record",
+    "name": "KafkaRecord",
+    "fields": [
+        {"name": "key", "type": KEY_SCHEMA},
+        {
+            "name": "value",
+            "type": {
+                "type": "record",
+                "name": "ApplicationServerStatus",
+                "fields": [
+                    {"name": "time", "type": "double"},
+                    {
+                        "name": "serverStatus",
+                        "type": {"type": "enum", "name": "ServerStatus", "symbols": ["CONNECTED", "DISCONNECTED", "UNKNOWN"]},
+                    },
+                    {"name": "ipAddress", "type": ["null", "string"]},
+                ],
+            },
+        },
+    ],
+}
+ACCEL_SCHEMA = {
+    "type": "record",
+    "name": "KafkaRecord",
+    "fields": [
+        {"name": "key", "type": KEY_SCHEMA},
+        {
+            "name": "value",
+            "type": {
+                "type": "record",
+                "name": "PhoneAcceleration",
+                "fields": [
+                    {"name": n, "type": "double"} for n in ("time", "timeReceived", "x", "y", "z")
+                ],
+            },
+        },
+    ],
+}
+
+
+def _status(t: float, status: str) -> dict:
+    p, u, s = STATUS_KEY
+    return {"key": {"projectId": p, "userId": u, "sourceId": s}, "value": {"time": t, "serverStatus": status, "ipAddress": None}}
+
+
+def reference_shaped_tree(root: str, accel_records: int = 40) -> str:
+    """Write the fixture-shaped tree under ``root`` and return ``root``.
+    Its status files hold six records, three of them distinct payloads:
+    two (1580219820.03, CONNECTED) in bin 20200128_1300, then in bin
+    20200128_1400 (1580220600.5, CONNECTED) twice, once per file, and
+    (1580221800.25, DISCONNECTED) twice.  The acceleration file holds
+    ``accel_records`` records in bin 20200528_1000."""
+    t13, t14, t14b = 1580219820.03, 1580220600.5, 1580221800.25
+    write_topic_file(
+        root, STATUS_TOPIC, 1, 18,
+        [_status(t13, "CONNECTED"), _status(t13, "CONNECTED"), _status(t14, "CONNECTED")],
+        schema=STATUS_SCHEMA, codec="deflate",
+    )
+    write_topic_file(
+        root, STATUS_TOPIC, 1, 21,
+        [_status(t14, "CONNECTED"), _status(t14b, "DISCONNECTED"), _status(t14b, "DISCONNECTED")],
+        schema=STATUS_SCHEMA, codec="deflate", single_offset=True,
+    )
+    p, u, s = ACCEL_KEY
+    t0 = 1590660000.0  # 2020-05-28 10:00 UTC
+    accel = [
+        {
+            "key": {"projectId": p, "userId": u, "sourceId": s},
+            "value": {"time": t0 + i, "timeReceived": t0 + i + 0.5, "x": i * 0.25, "y": -1.0, "z": 9.81},
+        }
+        for i in range(accel_records)
+    ]
+    write_topic_file(root, ACCEL_TOPIC, 0, 3018784, accel, schema=ACCEL_SCHEMA, single_offset=True)
+    return root

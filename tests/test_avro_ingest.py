@@ -25,6 +25,7 @@ from restructure_hdfs_topic_spark.sources.avro import (
     walk_topics,
 )
 from tests.avro_tree import build_container as _build_container
+from tests.avro_tree import reference_shaped_tree
 
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
@@ -182,22 +183,22 @@ def test_avro_restructure_end_to_end_golden(spark, tmp_path):
     )
 
 
-@needs_fixtures
-def test_avro_restructure_gzip_and_dedup(spark, tmp_path):
-    """CSV sink parity (VERDICT #10): gzip-compressed partitioned CSV write
-    plus keep-last dedup on the configured key, over the real Avro input."""
+def _gzip_dedup_rows(spark, src: str, out) -> set:
+    """Restructure ``src`` to gzip CSV with the default full-row dedup;
+    the status topic's rows as (value.time, value.serverStatus, bin), after
+    checking that no two are equal."""
     import glob as _glob
 
     cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
+        target_dir=str(out / "out"),
+        state_dir=str(out / "state"),
         format="csv",
         compression="gzip",
         dedup_enable=True,
         worker=WorkerConfig(minimum_file_age_s=0),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg)
+    run_avro_restructure_job(spark, src, cfg)
     gz = _glob.glob(f"{cfg.target_dir}/**/*.csv.gz", recursive=True)
     assert gz, "expected gzip csv part files"
     status = (
@@ -206,11 +207,27 @@ def test_avro_restructure_gzip_and_dedup(spark, tmp_path):
         .csv(f"{cfg.target_dir}/projectId=*/userId=*/topic=application_server_status")
     )
     rows = status.collect()
-    # The 6 status records collapse under full-row dedup: the two files hold
-    # a repeated (time, serverStatus) payload — keep-last retains one row
-    # per distinct flattened record.
     texts = {(r["value.time"], r["value.serverStatus"], r["bin"]) for r in rows}
     assert len(rows) == len(texts)
+    return texts
+
+
+def test_avro_restructure_gzip_and_dedup(spark, tmp_path):
+    """CSV sink parity (VERDICT #10): gzip-compressed partitioned CSV write
+    plus keep-last dedup on the default full-row key, over a tree shaped
+    like the reference's fixtures and, when present, the fixtures
+    themselves."""
+    src = reference_shaped_tree(str(tmp_path / "in"))
+    # The 6 status records collapse under full-row dedup: the two files
+    # hold a repeated payload, and each file a repeated one — keep-last
+    # retains one row per distinct flattened record.
+    assert _gzip_dedup_rows(spark, src, tmp_path / "tree") == {
+        ("1.58021982003E9", "CONNECTED", "20200128_1300"),
+        ("1.5802206005E9", "CONNECTED", "20200128_1400"),
+        ("1.58022180025E9", "DISCONNECTED", "20200128_1400"),
+    }
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        assert _gzip_dedup_rows(spark, FIXTURES, tmp_path / "golden")
 
 
 @needs_fixtures
@@ -269,31 +286,43 @@ def test_avro_cleaner_delete_and_rollback(spark, tmp_path):
     assert r["records_written"] == 3
 
 
-@needs_fixtures
 def test_zip_compression_output(spark, tmp_path):
     """O23 zip: single-entry deflate .zip per output file, readable back to
-    the identical CSV bytes (compression/ZipCompression.kt:16-29)."""
+    the identical CSV bytes (compression/ZipCompression.kt:16-29), over a
+    tree shaped like the reference's fixtures and, when present, the
+    fixtures themselves."""
     import glob as _glob
 
     from restructure_hdfs_topic_spark.compression import read_zip_entry
 
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="csv",
-        compression="zip",
-        worker=WorkerConfig(minimum_file_age_s=0),
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg)
-    zips = _glob.glob(f"{cfg.target_dir}/**/*.csv.zip", recursive=True)
-    plains = _glob.glob(f"{cfg.target_dir}/**/*.csv", recursive=True)
-    assert zips and not plains
-    status_zip = [p for p in zips if "application_server_status" in p and "20200128_1300" in p]
-    text = read_zip_entry(status_zip[0]).decode()
-    header = text.splitlines()[0]
-    assert header == "key.projectId,key.userId,key.sourceId,value.time,value.serverStatus,value.ipAddress"
-    assert "1.58021982003E9,CONNECTED," in text
+    def zipped_status_bin(src: str, out) -> str:
+        cfg = RestructureConfig(
+            target_dir=str(out / "out"),
+            state_dir=str(out / "state"),
+            format="csv",
+            compression="zip",
+            worker=WorkerConfig(minimum_file_age_s=0),
+        )
+        os.makedirs(cfg.state_dir, exist_ok=True)
+        run_avro_restructure_job(spark, src, cfg)
+        zips = _glob.glob(f"{cfg.target_dir}/**/*.csv.zip", recursive=True)
+        plains = _glob.glob(f"{cfg.target_dir}/**/*.csv", recursive=True)
+        assert zips and not plains
+        status_zip = [p for p in zips if "application_server_status" in p and "20200128_1300" in p]
+        assert len(status_zip) == 1
+        text = read_zip_entry(status_zip[0]).decode()
+        header = text.splitlines()[0]
+        assert header == "key.projectId,key.userId,key.sourceId,value.time,value.serverStatus,value.ipAddress"
+        assert "1.58021982003E9,CONNECTED," in text
+        return text
+
+    text = zipped_status_bin(reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree")
+    assert text.splitlines()[1:] == [
+        "STAGING_PROJECT,1543bc93-3c17-4381-89a5-c5d6272b827c,99caf236-bbe6-4eed-9c63-fba77349821d,"
+        "1.58021982003E9,CONNECTED,"
+    ] * 2
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        zipped_status_bin(FIXTURES, tmp_path / "golden")
 
 
 def _hive_json_rows(target_dir: str) -> list[tuple]:
@@ -611,30 +640,32 @@ def test_cleaner_respects_exclude_from_delete(spark, tmp_path):
     assert len([f for fs in walk_topics(src).values() for f in fs]) == 3
 
 
-@needs_fixtures
 def test_max_files_per_topic_takes_earliest(spark, tmp_path):
     """maxFilesPerTopic caps the EARLIEST pending files deterministically
-    (offset order), so repeated capped runs drain a backlog in order."""
-    import shutil
+    (offset order), so repeated capped runs drain a backlog in order: over
+    a tree shaped like the reference's fixtures and, when present, the
+    fixtures themselves (whose acceleration file holds 1000 records)."""
 
-    src = str(tmp_path / "in")
-    shutil.copytree(FIXTURES, src)
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="csv",
-        worker=WorkerConfig(minimum_file_age_s=0, max_files_per_topic=1),
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
+    def capped_runs(src: str, out) -> list[int]:
+        cfg = RestructureConfig(
+            target_dir=str(out / "out"),
+            state_dir=str(out / "state"),
+            format="csv",
+            worker=WorkerConfig(minimum_file_age_s=0, max_files_per_topic=1),
+        )
+        os.makedirs(cfg.state_dir, exist_ok=True)
+        return [run_avro_restructure_job(spark, src, cfg)["records_written"] for _ in range(3)]
+
     # Run 1: one file per topic → status offsets 18-20 (3 records) + the
-    # 1000-record acceleration file.
-    r1 = run_avro_restructure_job(spark, src, cfg)
-    assert r1["records_written"] == 1003  # earliest status file (3) + accel (1000)
-    # Run 2 drains the backlog (offsets 21+).
-    r2 = run_avro_restructure_job(spark, src, cfg)
-    assert r2["records_written"] == 3
-    # Run 3: nothing left.
-    assert run_avro_restructure_job(spark, src, cfg)["records_written"] == 0
+    # acceleration file; run 2 drains the backlog (offsets 21+); run 3:
+    # nothing left.
+    src = reference_shaped_tree(str(tmp_path / "in"), accel_records=40)
+    assert capped_runs(src, tmp_path / "tree") == [43, 3, 0]
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        import shutil
+
+        shutil.copytree(FIXTURES, tmp_path / "fixtures")
+        assert capped_runs(str(tmp_path / "fixtures"), tmp_path / "golden") == [1003, 3, 0]
 
 
 @needs_fixtures

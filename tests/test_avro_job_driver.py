@@ -10,11 +10,16 @@ Kafka-Connect trees (tests/avro_tree.py):
 - differential properties: the driver-side O4 index against the
   DataFrame seen filter ``filter_unseen_files``, and the attempt headers
   derived from collected fingerprints against ``discover_dynamic_columns``;
-- keep-last dedup keyed on a map field.
+- keep-last dedup keyed on a map field;
+- one shuffle per topic write: the executed write plans' Exchange nodes,
+  one part file per output directory, attempt routing in record order;
+- keep-last in file order: against exact-offset order where the two
+  agree (a differential), and the rule where they do not.
 """
 
 import json
 import os
+import re
 
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
@@ -400,3 +405,285 @@ def test_keep_last_dedup_on_map_field(spark):
     assert sorted(r["offset"] for r in out.collect()) == [1, 2, 3, 4, 5]
     whole = keep_last_dedup(df.select("value.tags", "offset"), [], "offset")
     assert sorted(r["offset"] for r in whole.collect()) == [2, 3, 4, 5]
+
+
+# -- one shuffle per topic write ---------------------------------------------
+
+
+def _final_nodes(plan: str, name: str) -> list[int]:
+    """Ids of the ``name`` nodes in an executed plan's tree, the initial
+    plans that adaptive execution prints next to the final ones left out."""
+    ids: list[int] = []
+    skip_from = None
+    for line in plan.split("\n\n", 1)[0].splitlines():
+        col = len(line) - len(line.lstrip(" |:+-"))
+        if skip_from is not None and col >= skip_from:
+            continue
+        skip_from = None
+        if "== Initial Plan ==" in line:
+            skip_from = line.index("==")
+            continue
+        m = re.search(rf"\b{name} \((\d+)\)", line)
+        if m and int(m.group(1)) not in ids:
+            ids.append(int(m.group(1)))
+    return ids
+
+
+def _node_args(plan: str, node_id: int) -> str:
+    """The ``Arguments`` line of node ``node_id`` in the plan's details."""
+    block = next(b for b in plan.split("\n\n") if b.startswith(f"({node_id}) "))
+    return next(line for line in block.splitlines() if line.startswith("Arguments:"))
+
+
+def _write_plans(plans: list[str]) -> list[str]:
+    """The plans that write decoded records."""
+    return [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p and "Scan avro" in p]
+
+
+def _one_part_file_per_dir(target: str) -> set[str]:
+    """Checks that every output directory holds one part file; returns the
+    bin directory names."""
+    bins = set()
+    for dirpath, _dirs, names in os.walk(target):
+        parts = [n for n in names if n.startswith("part-")]
+        if parts:
+            assert len(parts) == 1, (dirpath, parts)
+            bins.add(os.path.basename(dirpath))
+    return bins
+
+
+def _write_guard_tree(src: str) -> None:
+    """Two partitions of three files: users u0-u2 over two hour bins, four
+    records redelivered in the second file, and a third file whose map
+    keys are not a subset of the first shape's, so it opens attempt 1.
+    Both partitions hold the same records."""
+    t0 = 1_704_067_200.0  # 2024-01-01 00:00 UTC
+    recs = [reading("p", f"u{i % 3}", t0 + 300 * i, tags={"a": str(i % 2)}) for i in range(16)]
+    other = [reading("p", f"u{i % 3}", t0 + 300 * i, tags={"b": "1"}) for i in range(6)]
+    for p in (0, 1):
+        write_topic_file(src, TOPIC, p, 0, recs[:8])
+        write_topic_file(src, TOPIC, p, 8, recs[8:] + recs[:4])
+        write_topic_file(src, TOPIC, p, 20, other)
+
+
+def test_one_shuffle_per_topic_write(spark, tmp_path):
+    """On the default full-row dedup key, every executed plan that writes
+    the topic's records holds one Exchange, a hash on the output partition
+    columns, and no window over the file path (the per-file offset
+    window): in the Hive layout, where each output directory, the
+    attempt-suffixed ``bin=<b>_1`` ones included, holds one part file, and
+    in a template layout whose time-pattern and sourceId params stage as
+    extra partition columns."""
+    src = str(tmp_path / "in")
+    _write_guard_tree(src)
+    tmpl = "${topic}/${projectId}/${userId}/${sourceId}/${time:yyyyMM}/${time:dd}/${filename}"
+    for layout, paths in (("hive", PathConfig()), ("template", PathConfig(layout="template", template=tmpl))):
+        cfg = RestructureConfig(
+            target_dir=str(tmp_path / layout / "out"),
+            state_dir=str(tmp_path / layout / "state"),
+            format="csv",
+            dedup_enable=True,
+            worker=WorkerConfig(minimum_file_age_s=0),
+            paths=paths,
+        )
+        os.makedirs(cfg.state_dir)
+        res, plans = _run(spark, src, cfg, None)
+        assert res["records_written"] == 22, layout  # 16 + 6 distinct payloads
+        writes = _write_plans(plans)
+        assert len(writes) == 2, layout  # attempts 0 and 1
+        for plan in writes:
+            exchanges = _final_nodes(plan, "Exchange")
+            assert len(exchanges) == 1, plan
+            assert re.search(
+                r"hashpartitioning\(projectId#\d+, userId#\d+, bin#\d+, \d+\), REPARTITION_BY_NUM",
+                _node_args(plan, exchanges[0]),
+            ), plan
+        assert not any("windowspecdefinition(__file" in p for p in plans), layout
+    bins = _one_part_file_per_dir(str(tmp_path / "hive" / "out"))
+    assert bins == {"bin=20240101_0000", "bin=20240101_0100", "bin=20240101_0000_1"}
+
+
+def test_write_keeps_its_repartition_without_a_clustering_key(spark, tmp_path):
+    """With dedup off, and with configured distinct fields that lack
+    ``bin``, the write repartitions on the output partition columns itself:
+    one Exchange more than the dedup's, and still one part file per
+    output directory.  Neither plan holds the per-file offset window."""
+    src = str(tmp_path / "in")
+    _write_guard_tree(src)
+    for name, dedup, records, n_exchanges in (
+        ("off", {}, 52, 1),
+        ("distinct", {"dedup_enable": True, "dedup_distinct_fields": ["key.userId", "value.time"]}, 16, 2),
+    ):
+        cfg = RestructureConfig(
+            target_dir=str(tmp_path / name / "out"),
+            state_dir=str(tmp_path / name / "state"),
+            format="csv",
+            worker=WorkerConfig(minimum_file_age_s=0),
+            **dedup,
+        )
+        os.makedirs(cfg.state_dir)
+        res, plans = _run(spark, src, cfg, None)
+        assert res["records_written"] == records, name
+        writes = _write_plans(plans)
+        assert writes, name
+        for plan in writes:
+            exchanges = _final_nodes(plan, "Exchange")
+            assert len(exchanges) == n_exchanges, (name, plan)
+            args = [_node_args(plan, e) for e in exchanges]
+            assert any(
+                re.search(r"hashpartitioning\(projectId#\d+, userId#\d+, .*bin#\d+, \d+\), REPARTITION_BY_NUM", a)
+                for a in args
+            ), (name, args)
+        assert not any("windowspecdefinition(__file" in p for p in plans), name
+        assert _one_part_file_per_dir(cfg.target_dir), name
+
+
+def test_attempt_routing_follows_record_order(spark, tmp_path):
+    """The earlier file holds map-key shape A, a later file shape B that
+    does not nest in A, with earlier event times in the same bin: A is
+    attempt 0 (``bin=<b>``) and B attempt 1 (``bin=<b>_1``) whatever the
+    shuffle's partition count, because a shape's first occurrence is its
+    first record in file order, not in the dedup shuffle's output."""
+    import csv
+
+    src = str(tmp_path / "in")
+    t0 = 1_704_067_200.0
+    write_topic_file(src, TOPIC, 0, 0, [reading("p", f"u{i % 4}", t0 + 1800 + i, tags={"a": "1"}) for i in range(20)])
+    write_topic_file(src, TOPIC, 0, 20, [reading("p", f"u{i % 4}", t0 + i, tags={"b": "1"}) for i in range(20)])
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        for n in (1, 7, 32):
+            spark.conf.set(key, str(n))
+            cfg = RestructureConfig(
+                target_dir=str(tmp_path / f"out{n}"),
+                state_dir=str(tmp_path / f"state{n}"),
+                format="csv",
+                dedup_enable=True,
+                worker=WorkerConfig(minimum_file_age_s=0),
+            )
+            os.makedirs(cfg.state_dir)
+            run_avro_restructure_job(spark, src, cfg)
+            headers = {}
+            for dirpath, _dirs, names in os.walk(cfg.target_dir):
+                for name in names:
+                    if name.startswith("part-"):
+                        with open(os.path.join(dirpath, name), newline="") as fh:
+                            header = next(csv.reader(fh))
+                        headers.setdefault(os.path.basename(dirpath), set()).update(
+                            c for c in header if c.startswith("value.tags.")
+                        )
+            assert headers == {
+                "bin=20240101_0000": {"value.tags.a"},
+                "bin=20240101_0000_1": {"value.tags.b"},
+            }, n
+    finally:
+        spark.conf.set(key, before)
+
+
+# -- keep-last in file order -------------------------------------------------
+
+_partition_files = st.lists(
+    st.lists(st.tuples(st.integers(0, 3), st.integers(1, 6)), min_size=1, max_size=3),
+    min_size=1,
+    max_size=3,
+)
+
+
+@settings(
+    max_examples=prop_examples(10),
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(_partition_files, st.data())
+def test_keep_last_by_file_order_matches_offset_order(spark, layout, data):
+    """On trees whose files' offset ranges do not overlap, keep-last by
+    ``file_order`` keeps the same records as keep-last by the exact
+    offset, whatever order the paths come in and whether Spark splits the
+    files across read tasks.  The key holds ``partition``: across Kafka
+    partitions the two orders differ by design."""
+    import shutil
+    import tempfile
+
+    from restructure_hdfs_topic_spark.operators.dedup import keep_last_dedup
+    from restructure_hdfs_topic_spark.sources.avro import FILE_ORDER, read_avro
+
+    record = st.tuples(st.sampled_from(["u0", "u1"]), st.integers(0, 2))
+    split = data.draw(st.booleans(), "split")
+    root = tempfile.mkdtemp(dir=os.environ.get("SPARK_LOCAL_DIRS"))
+    paths, uid = [], 0
+    try:
+        for p, files in enumerate(layout):
+            offset = 0
+            for gap, n in files:
+                offset += gap
+                recs = []
+                for user, slot in data.draw(st.lists(record, min_size=n, max_size=n)):
+                    recs.append(reading("p", user, 1_704_067_200.0 + 600 * slot, level=uid))
+                    uid += 1
+                paths.append(write_topic_file(root, TOPIC, p, offset, recs, block_records=1 if split else None))
+                offset += n
+        paths = data.draw(st.permutations(paths), "paths")
+        conf = "spark.sql.files.maxPartitionBytes"
+        before = spark.conf.get(conf)
+        spark.conf.set(conf, "256" if split else before)
+        try:
+            df = read_avro(spark, paths, file_order=True)
+            key = ["partition", "key.userId", "value.time"]
+
+            def kept(order):
+                return sorted(
+                    tuple(r) for r in keep_last_dedup(df, key, order).select("partition", "value.level").collect()
+                )
+
+            assert kept(FILE_ORDER) == kept("offset")
+        finally:
+            spark.conf.set(conf, before)
+    finally:
+        shutil.rmtree(root)
+
+
+def test_keep_last_file_order_rule(spark, tmp_path):
+    """Where file order and offset order differ, the job keeps the record
+    of the later file in (partition, offset_from, path) order: of two
+    files with overlapping offset ranges the later-starting one, and of a
+    key in two Kafka partitions the higher partition's record, although
+    in both cases the other record has the larger offset.  The same on
+    the write's own partitioning (distinct fields without ``bin``) and on
+    the dedup's (distinct fields holding every partition column)."""
+    import csv
+
+    src = str(tmp_path / "in")
+    t0 = 1_704_067_200.0
+
+    def rec(user, slot, level):
+        return reading("p", user, t0 + 60 * slot, level=level)
+
+    # Partition 0: offsets 0-3, then 2-5 — key (u1, 10) at offset 3 in the
+    # first file and at offset 2 in the second.
+    write_topic_file(src, TOPIC, 0, 0, [rec("u0", 0, 0), rec("u0", 1, 1), rec("u0", 2, 2), rec("u1", 10, 3)])
+    write_topic_file(src, TOPIC, 0, 2, [rec("u1", 10, 4), rec("u0", 3, 5), rec("u0", 4, 6), rec("u0", 5, 7)])
+    # Key (u2, 20) at offset 100 of partition 0 and offset 0 of partition 1.
+    write_topic_file(src, TOPIC, 0, 100, [rec("u2", 20, 8)])
+    write_topic_file(src, TOPIC, 1, 0, [rec("u2", 20, 9)])
+    for name, distinct in (
+        ("write", ["key.userId", "value.time"]),
+        ("dedup", ["projectId", "userId", "bin", "key.userId", "value.time"]),
+    ):
+        cfg = RestructureConfig(
+            target_dir=str(tmp_path / name / "out"),
+            state_dir=str(tmp_path / name / "state"),
+            format="csv",
+            dedup_enable=True,
+            dedup_distinct_fields=distinct,
+            worker=WorkerConfig(minimum_file_age_s=0),
+        )
+        os.makedirs(cfg.state_dir)
+        assert run_avro_restructure_job(spark, src, cfg)["records_written"] == 8
+        levels = set()
+        for dirpath, _dirs, names in os.walk(cfg.target_dir):
+            for n in names:
+                if n.startswith("part-"):
+                    with open(os.path.join(dirpath, n), newline="") as fh:
+                        levels.update(int(r["value.level"]) for r in csv.DictReader(fh))
+        assert levels == {0, 1, 2, 4, 5, 6, 7, 9}, name

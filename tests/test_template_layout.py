@@ -172,25 +172,23 @@ def test_physical_template_validation():
         check_physical_template("${projectId}/${userId}/${filename}")
 
 
-@needs_fixtures
-def test_template_layout_time_pattern_and_source_tree(spark, tmp_path):
-    """The FormattedPathFactoryTest.kt:12-37 template
-    ``${topic}/${projectId}/${userId}/${sourceId}/${time:yyyyMM}/${time:dd}/${filename}``
-    must place files physically: per-record time-pattern directories and the
-    sanitized sourceId as path segments, bin filename at the leaf."""
+def _time_pattern_and_source_tree(spark, src: str, out, records: int) -> None:
+    """Restructure ``src`` under the FormattedPathFactoryTest.kt:12-37
+    template and check the placed tree, its read-back and an idempotent
+    rerun; ``records`` is the number ``src`` holds."""
     from restructure_hdfs_topic_spark.plans.avro_job import read_target_times
 
     tmpl = "${topic}/${projectId}/${userId}/${sourceId}/${time:yyyyMM}/${time:dd}/${filename}"
     cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
+        target_dir=str(out / "out"),
+        state_dir=str(out / "state"),
         format="csv",
         worker=WorkerConfig(minimum_file_age_s=0),
         paths=PathConfig(layout="template", template=tmpl),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    result = run_avro_restructure_job(spark, FIXTURES, cfg)
-    assert result["records_written"] == 1006
+    result = run_avro_restructure_job(spark, src, cfg)
+    assert result["records_written"] == records
 
     files = _tree(cfg.target_dir)
     # Golden fixture record: topic application_server_status, project
@@ -224,9 +222,24 @@ def test_template_layout_time_pattern_and_source_tree(spark, tmp_path):
     assert any(abs(r["t_seconds"] - 1.58021982003e9) < 1e-3 for r in rows)
 
     # Idempotent rerun: committed offsets prune everything, tree unchanged.
-    result2 = run_avro_restructure_job(spark, FIXTURES, cfg)
+    result2 = run_avro_restructure_job(spark, src, cfg)
     assert result2["records_written"] == 0
     assert _tree(cfg.target_dir) == files
+
+
+def test_template_layout_time_pattern_and_source_tree(spark, tmp_path):
+    """The FormattedPathFactoryTest.kt:12-37 template
+    ``${topic}/${projectId}/${userId}/${sourceId}/${time:yyyyMM}/${time:dd}/${filename}``
+    must place files physically: per-record time-pattern directories and the
+    sanitized sourceId as path segments, bin filename at the leaf.  Over a
+    tree shaped like the reference's fixtures and, when present, the
+    fixtures themselves."""
+    from tests.avro_tree import reference_shaped_tree
+
+    src = reference_shaped_tree(str(tmp_path / "in"), accel_records=40)
+    _time_pattern_and_source_tree(spark, src, tmp_path / "tree", 46)
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        _time_pattern_and_source_tree(spark, FIXTURES, tmp_path / "golden", 1006)
 
 
 def test_finalize_diverts_on_csv_header_mismatch(spark, tmp_path):
