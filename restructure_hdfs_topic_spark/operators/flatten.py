@@ -257,7 +257,7 @@ def route_by_schema_attempt(
 
     if order_col is None:
         order_col, df = "__mid", df.withColumn("__mid", F.monotonically_increasing_id())
-    fp = df.withColumn("__fp", _header_descriptor(df.drop(order_col)))
+    fp = df.withColumn("__fp", _header_descriptor(df))
     # Two consumers — the distinct-header collect below AND the returned
     # routed plan — would each re-run the whole upstream decode/flatten
     # lineage (ADVICE r4: one extra full pass per topic write).  Persist
