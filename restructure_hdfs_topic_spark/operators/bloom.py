@@ -188,9 +188,9 @@ def write_bloom_sidecar(
     store it under ``<state_dir>/bloom/`` with the state version it
     reflects.  Derived data — rebuild-safe any time."""
     from restructure_hdfs_topic_spark import state
-    from restructure_hdfs_topic_spark.operators.incremental import FP_SCHEMA
+    from restructure_hdfs_topic_spark.operators.incremental import FP_STATE
 
-    fps, version = state.read(spark, state_dir, FP_SCHEMA)
+    fps, version = state.read(spark, state_dir, FP_STATE)
     version = version or 0
     old_meta = read_bloom_meta(spark, state_dir)
     path = _bloom_data_path(state_dir, version)
@@ -420,9 +420,9 @@ def filter_novel_documents_bloom(
     Pandas UDF tags rows in place (zero extra shuffle); above it, the
     cogroup path ships each bucket's bitmap once per task."""
     from restructure_hdfs_topic_spark import state
-    from restructure_hdfs_topic_spark.operators.incremental import FP_SCHEMA
+    from restructure_hdfs_topic_spark.operators.incremental import FP_STATE
 
-    state_fps, version = state.read(spark, state_dir, FP_SCHEMA)
+    state_fps, version = state.read(spark, state_dir, FP_STATE)
     version = version or 0
     meta = read_bloom_meta(spark, state_dir)
     if (

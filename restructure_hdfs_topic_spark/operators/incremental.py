@@ -30,8 +30,10 @@ from pyspark.sql import functions as F
 
 from restructure_hdfs_topic_spark import state
 
-FP_SCHEMA = "fp long"
-SIG_SCHEMA = "id long, sig array<long>"
+# The lanes' payloads in the state store: parquet versions.  The
+# signature lane's id type follows the ingested batches.
+FP_STATE = state.Parquet("fp long")
+SIG_STATE = state.Parquet("id long, sig array<long>", infer=True)
 
 
 def document_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -65,7 +67,7 @@ def filter_novel_documents(
 
 def read_fingerprints(spark: SparkSession, state_dir: str) -> DataFrame:
     """Committed fingerprint state (empty frame when none yet)."""
-    return state.read(spark, state_dir, FP_SCHEMA)[0]
+    return state.read(spark, state_dir, FP_STATE)[0]
 
 
 def commit_fingerprints(
@@ -90,7 +92,7 @@ def commit_fingerprints_versioned(
         spark,
         state_dir,
         lambda snapshot: snapshot.unionByName(new_fps.select("fp")).distinct(),
-        FP_SCHEMA,
+        FP_STATE,
     )
 
 
@@ -226,7 +228,7 @@ def _sig_dir(state_dir: str) -> str:
 def read_signatures(spark: SparkSession, state_dir: str) -> DataFrame:
     """Committed signature state (empty when none yet).  The id type
     follows the ingested batches, so the footers decide the schema."""
-    return state.read(spark, _sig_dir(state_dir), SIG_SCHEMA, infer=True)[0]
+    return state.read(spark, _sig_dir(state_dir), SIG_STATE)[0]
 
 
 def commit_signatures(
@@ -250,9 +252,8 @@ def commit_signatures(
             .agg(F.min("sig").alias("sig"))
         )
 
-    return state.commit(
-        spark, _sig_dir(state_dir), update, new_sigs.schema.simpleString(), infer=True
-    )[0]
+    payload = state.Parquet(new_sigs.schema.simpleString(), infer=True)
+    return state.commit(spark, _sig_dir(state_dir), update, payload)[0]
 
 
 def ingest_batch_near_dup(
@@ -360,7 +361,7 @@ def delete_from_incremental_state(
             spark,
             state_dir,
             lambda existing: existing.join(del_fps.select("fp"), "fp", "left_anti"),
-            FP_SCHEMA,
+            FP_STATE,
         )
 
     sig_sub = _sig_dir(state_dir)
@@ -369,15 +370,12 @@ def delete_from_incremental_state(
             spark,
             sig_sub,
             lambda existing: existing.join(del_ids.select("id"), "id", "left_anti"),
-            SIG_SCHEMA,
-            infer=True,
+            SIG_STATE,
         )
     return report
 
 
-def _retract(
-    spark: SparkSession, sub: str, transform, schema: str, infer: bool = False
-) -> dict:
+def _retract(spark: SparkSession, sub: str, transform, payload: state.Parquet) -> dict:
     """One ``state.commit`` applying ``transform`` to the committed state;
     returns ``{"removed": n, "version": committed}``.  ``update`` reruns
     on every commit attempt, so ``removed`` counts against the snapshot of
@@ -388,7 +386,7 @@ def _retract(
         before.append(existing.count())
         return transform(existing)
 
-    out, _, version = state.commit(spark, sub, update, schema, infer)
+    out, _, version = state.commit(spark, sub, update, payload)
     return {"removed": before[-1] - out.count(), "version": version}
 
 

@@ -1,39 +1,58 @@
-"""Offset accounting: interval algebra and the offset lane of the state
-store (SURVEY O4/O5/O12/O16/O17/O18).
+"""Offset accounting: the offset ledger, its interval algebra and its
+document, plus the DataFrame interval operators (SURVEY
+O4/O5/O12/O16/O17/O18).
 
 Reference semantics:
 - O16 (accounting/OffsetIntervals.kt:46-199): per (topic, partition) keep a
   sorted disjoint set of [from, to] offset intervals; adding a range merges
   adjacent/overlapping intervals; ``lastProcessed`` (source-file mtime) is
-  max-merged so re-uploaded files reprocess.
+  max-merged so re-uploaded files reprocess.  The whole committed
+  ``OffsetRangeSet`` lives in heap.
 - O4 (worker/RadarKafkaRestructure.kt:118-122): skip source files whose full
   offset range is already contained in the committed set.
 - O5 (worker/RestructureWorker.kt:126-140): skip individual records whose
   (topicPartition, offset, mtime) is committed.
 - O12 (worker/RestructureWorker.kt:116-131): offset = file.offset_from +
   record index within the file.
-- O17/O18: state persisted only after data is durably written
-  (commit-after-store, worker/FileCache.kt:128-158).  Persistence is the
-  versioned state store (``restructure_hdfs_topic_spark/state.py``): the
-  offset lane is ``read_offsets`` plus ``commit_offsets`` (merge) and
-  ``replace_offsets`` (any update, e.g. the cleaner's remove) over
-  ``state.commit``.
+- O17/O18: the committed set is persisted as one JSON document
+  (accounting/OffsetRedisPersistence.kt:34-102), only after the data is
+  durably written (commit-after-store, worker/FileCache.kt:128-158).
 
-Spark-first: the interval set is a DataFrame ``(topic, partition,
-offset_from, offset_to, last_processed)``; merge is the classic
-gaps-and-islands window aggregation (one shuffle on (topic, partition));
-seen filters are range anti-joins that Catalyst broadcasts when the state
-side is small (it always is: intervals per partition stay tiny because
-merging collapses contiguous ranges).
+The ledger is driver rows ``(topic, partition, offset_from, offset_to,
+last_processed_us)`` in (topic, partition, offset) order, with
+``last_processed_us`` the source file's mtime in unix micros
+(``file_micros``; None when unknown).  Merging keeps it metadata-scale.
+``merge_intervals`` and ``remove_intervals`` are its algebra and
+``encode_ledger``/``decode_ledger`` its document, the reference's shape
+``{"partitions": [{"topic", "partition", "ranges": [{"from", "to",
+"lastProcessed"}]}]}`` with ISO-8601 ``lastProcessed``.  The state store
+keeps that document as the offset lane's payload (``LEDGER``) and the
+Redis backend (``redis_backends.py``) under one key.  The lane is
+``read_intervals`` plus ``commit_offsets`` (merge) and ``replace_offsets``
+(any update, e.g. the cleaner's remove) over ``state.commit``: no Spark
+job.
+
+The DataFrame operators (``merge_offset_intervals``, ``remove_offsets``,
+``filter_unseen_files``, ``filter_unseen_records``) serve the O4/O5/O16
+queries over interval frames ``(topic, partition, offset_from, offset_to,
+last_processed)`` and are the differential reference of the ledger
+algebra.  Merge is the classic gaps-and-islands window aggregation (one
+shuffle on (topic, partition)); the seen filters are a broadcast interval
+lookup.
 """
 
 from __future__ import annotations
+
+import json
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from restructure_hdfs_topic_spark import state
+from restructure_hdfs_topic_spark.session import local_frame
 
+# An interval frame: the registry queries' shape and ``read_offsets``'.
 STATE_SCHEMA = "topic string, partition int, offset_from long, offset_to long, last_processed timestamp"
 
 
@@ -221,28 +240,124 @@ def file_micros(mtime_s: float) -> int:
 
 
 def committed_intervals(state: DataFrame) -> list[tuple]:
-    """The committed state as driver rows ``(topic, partition, offset_from,
-    offset_to, last_processed_us)`` — one collect, no Spark job when
-    ``read_offsets`` found no version (its empty state is a local
-    relation).  ``last_processed_us`` is None when unknown."""
-    mt = (
-        F.unix_micros("last_processed")
-        if "last_processed" in state.columns
-        else F.lit(None).cast("long")
+    """An interval frame as ledger rows — one collect, which runs no Spark
+    job when the frame is a local relation.  ``last_processed_us`` is None
+    when unknown or when the frame has no ``last_processed``."""
+    has_mtime = "last_processed" in state.columns
+    mt = F.unix_micros("last_processed") if has_mtime else F.lit(None).cast("long")
+    cols = ["topic", "partition", "offset_from", "offset_to", mt]
+    return [tuple(r) for r in state.select(*cols).collect()]
+
+
+def intervals_frame(spark: SparkSession, rows) -> DataFrame:
+    """Ledger rows as an interval frame (``STATE_SCHEMA``): a local
+    relation whose ``last_processed`` Spark builds from the micros, so
+    actions on it run no Spark job."""
+    ledger_row = "topic string, partition int, offset_from long, offset_to long, last_processed_us long"
+    return local_frame(spark, list(rows), ledger_row).select(
+        "topic", "partition", "offset_from", "offset_to",
+        F.timestamp_micros("last_processed_us").alias("last_processed"),
     )
-    return [
-        tuple(r)
-        for r in state.select("topic", "partition", "offset_from", "offset_to", mt).collect()
+
+
+def merge_intervals(rows) -> list[tuple]:
+    """O16 merge of ledger rows: overlapping or ADJACENT intervals of a
+    (topic, partition) become one, whose ``last_processed_us`` is the
+    latest known of its members (SQL ``max``: None when none is known).
+    The driver twin of ``merge_offset_intervals``."""
+    out: list[tuple] = []
+    for t, p, lo, hi, lp in sorted(rows, key=lambda r: r[:4]):
+        if out and out[-1][:2] == (t, p) and lo <= out[-1][3] + 1:
+            _, _, first, last, known = out[-1]
+            latest = max((v for v in (known, lp) if v is not None), default=None)
+            out[-1] = (t, p, first, max(last, hi), latest)
+        else:
+            out.append((t, p, lo, hi, lp))
+    return out
+
+
+def remove_intervals(rows, removals) -> list[tuple]:
+    """O16 ``remove`` / cleaner rollback (Accountant.kt:62-65): subtract
+    the [from, to] ``removals`` (rows starting topic, partition, from, to)
+    from the ledger ``rows``, splitting intervals where needed; a surviving
+    slice keeps its interval's ``last_processed_us``.  The driver twin of
+    ``remove_offsets``."""
+    cuts: dict[tuple, list[tuple[int, int]]] = {}
+    for t, p, lo, hi, *_ in sorted(removals, key=lambda r: r[:4]):
+        cuts.setdefault((t, p), []).append((lo, hi))
+    out = []
+    for t, p, lo, hi, lp in rows:
+        for cut_lo, cut_hi in cuts.get((t, p), ()):
+            if cut_lo <= hi and cut_hi >= lo:
+                if cut_lo > lo:
+                    out.append((t, p, lo, cut_lo - 1, lp))
+                lo = cut_hi + 1
+        if lo <= hi:
+            out.append((t, p, lo, hi, lp))
+    return out
+
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_MICROSECOND = timedelta(microseconds=1)
+
+
+def _iso(us: int | None) -> str | None:
+    return None if us is None else (_EPOCH + us * _MICROSECOND).isoformat().replace("+00:00", "Z")
+
+
+def _micros(iso: str | None) -> int | None:
+    """Unix micros of an ISO-8601 instant with its zone, as Jackson writes
+    an ``Instant`` (a zoneless time raises: it names no instant)."""
+    return None if iso is None else (datetime.fromisoformat(iso) - _EPOCH) // _MICROSECOND
+
+
+def encode_ledger(rows) -> str:
+    """The reference's JSON document of ledger ``rows``
+    (OffsetRedisPersistence.kt:69-84): one entry per (topic, partition),
+    ranges in offset order, ``lastProcessed`` ISO-8601 in UTC (null when
+    unknown)."""
+    parts: dict[tuple, list[dict]] = {}
+    for t, p, lo, hi, lp in sorted(rows, key=lambda r: r[:4]):
+        parts.setdefault((t, p), []).append({"from": lo, "to": hi, "lastProcessed": _iso(lp)})
+    return json.dumps(
+        {"partitions": [{"topic": t, "partition": p, "ranges": r} for (t, p), r in parts.items()]}
+    )
+
+
+def decode_ledger(text: str | None) -> list[tuple]:
+    """The ledger rows of a document, ``encode_ledger``'s or the
+    reference's; no document (None) is the empty ledger.  A null ``to`` is
+    a pending single-offset range, which ensureToOffset() maps to ``from``
+    (OffsetRangeSet.kt:167-170)."""
+    rows = [
+        (p["topic"], int(p["partition"]), int(r["from"]),
+         int(r["from"] if r.get("to") is None else r["to"]), _micros(r.get("lastProcessed")))
+        for p in ([] if text is None else json.loads(text).get("partitions", []))
+        for r in p.get("ranges", [])
     ]
+    return sorted(rows, key=lambda r: r[:4])
+
+
+def _read_parquet_version(spark: SparkSession, path: str) -> list[tuple]:
+    """A ledger version written as parquet (``STATE_SCHEMA``) before the
+    ledger had a document: read once, through Spark; the next commit
+    writes the document."""
+    frame = spark.read.schema(STATE_SCHEMA).parquet(path)
+    return sorted(committed_intervals(frame), key=lambda r: r[:4])
+
+
+# The offset lane's payload in the state store.
+LEDGER = state.Document(encode_ledger, decode_ledger, _read_parquet_version)
 
 
 def committed_range_index(rows) -> "callable":
     """Containment test over a committed interval set, O(log intervals) per
-    probe: per (topic, partition) sorted interval starts + aligned ends,
-    probed with ``bisect`` — replaces the O(files × intervals) linear driver
-    scan (VERDICT r4 #2: sf1 interval sets reach ~70k rows, the same shape
-    that made the O4/O5 broadcast range join quadratic).  Committed state is
-    merged (disjoint per partition) at every commit, so the interval whose
+    probe: the intervals sorted by (topic, partition, from, to,
+    last_processed), probed with ``bisect`` — replaces the O(files ×
+    intervals) linear driver scan (VERDICT r4 #2: sf1 interval sets reach
+    ~70k rows, the same shape that made the O4/O5 broadcast range join
+    quadratic).  Committed state is merged (disjoint per partition) at
+    every commit, so the interval of the probe's (topic, partition) whose
     start is the latest <= lo is the only one that can contain [lo, hi] —
     the same interval ``_covering_interval`` picks, ties included.
 
@@ -256,26 +371,17 @@ def committed_range_index(rows) -> "callable":
     """
     from bisect import bisect_right
 
-    by_tp: dict[tuple, list[tuple[int, int, int]]] = {}
-    for t, p, lo, hi, *mt in rows:
-        lp = mt[0] if mt else None
-        by_tp.setdefault((t, p), []).append(
-            (lo, hi, _MTIME_UNKNOWN_US if lp is None else lp)
-        )
-    index: dict[tuple, tuple[list[int], list[int], list[int]]] = {}
-    for k, ivs in by_tp.items():
-        ivs.sort()
-        index[k] = tuple([iv[i] for iv in ivs] for i in range(3))
+    ivs = sorted(
+        (t, p, lo, hi, _MTIME_UNKNOWN_US if not mt or mt[0] is None else mt[0])
+        for t, p, lo, hi, *mt in rows
+    )
+    starts = [iv[:3] for iv in ivs]
 
     def contains(topic: str, partition: int, lo: int, hi: int, mtime_us: int | None = None) -> bool:
-        arr = index.get((topic, partition))
-        if arr is None:
+        i = bisect_right(starts, (topic, partition, lo)) - 1
+        if i < 0 or ivs[i][:2] != (topic, partition) or hi > ivs[i][3]:
             return False
-        froms, tos, mts = arr
-        i = bisect_right(froms, lo) - 1
-        if i < 0 or hi > tos[i]:
-            return False
-        return mtime_us is None or mtime_us <= mts[i]
+        return mtime_us is None or mtime_us <= ivs[i][4]
 
     return contains
 
@@ -300,38 +406,35 @@ def filter_unseen_records(records: DataFrame, state: DataFrame) -> DataFrame:
     return annotated.filter(~seen).select(*records.columns)
 
 
+def read_intervals(spark: SparkSession, state_dir: str) -> list[tuple]:
+    """The committed ledger (empty before the first commit): one document
+    read, no Spark job."""
+    return state.read(spark, state_dir, LEDGER)[0]
+
+
 def read_offsets(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The committed interval state (empty before the first commit), read
-    with the lane's schema so no footer-inference job runs."""
-    return state.read(spark, state_dir, STATE_SCHEMA)[0]
+    """The committed ledger as an interval frame (``intervals_frame``):
+    no Spark job."""
+    return intervals_frame(spark, read_intervals(spark, state_dir))
 
 
-def commit_offsets(
-    spark: SparkSession,
-    state_dir: str,
-    new_ranges: DataFrame,
-) -> DataFrame:
-    """O17/O18: merge ``new_ranges`` into the committed intervals and swap
-    the result in atomically (``state.commit``); returns the new state.
+def commit_offsets(spark: SparkSession, state_dir: str, new_ranges) -> list[tuple]:
+    """O17/O18: merge the ledger rows ``new_ranges`` into the committed
+    ledger and swap the result in atomically (``state.commit``); returns
+    the committed ledger.
 
     MUST be called only after the data write action has succeeded
     (commit-after-store ordering, worker/FileCache.kt:128-158)."""
-    return state.commit(
-        spark,
-        state_dir,
-        lambda snapshot: merge_offset_intervals(
-            snapshot.unionByName(new_ranges, allowMissingColumns=True)
-        ),
-        STATE_SCHEMA,
-    )[0]
+    new_ranges = list(new_ranges)
+    return state.commit(spark, state_dir, lambda s: merge_intervals(s + new_ranges), LEDGER)[0]
 
 
-def replace_offsets(spark: SparkSession, state_dir: str, update) -> DataFrame:
-    """Commit ``update(snapshot)`` as the next interval state — the
-    cleaner's rollback passes ``lambda s: remove_offsets(s, rollbacks)``.
-    ``update`` sees the snapshot its commit claims against, so a
-    concurrent commit is never overwritten."""
-    return state.commit(spark, state_dir, update, STATE_SCHEMA)[0]
+def replace_offsets(spark: SparkSession, state_dir: str, update) -> list[tuple]:
+    """Commit ``update(snapshot)``, ledger rows to ledger rows, as the next
+    ledger — the cleaner's rollback passes ``lambda s: remove_intervals(s,
+    rollbacks)``.  ``update`` sees the snapshot its commit claims against,
+    so a concurrent commit is never overwritten."""
+    return state.commit(spark, state_dir, update, LEDGER)[0]
 
 
 def remove_offsets(state: DataFrame, to_remove: DataFrame) -> DataFrame:

@@ -25,8 +25,9 @@ per-file window would be a second shuffle.  For CSV, decode + organize +
 dedup is persisted once for attempt routing, whose one aggregation yields
 both the attempts and each attempt's header; each attempt (JSON: the
 whole topic) is then written in one plan over that partitioning.
-Frames the driver builds (commit ranges, rollbacks, the empty state) are
-local relations, so no Python worker runs outside the decode.
+The offset ledger stays on the driver: the seen filter, the commit and
+the cleaner's rollback read and write plain ledger rows
+(``operators/offsets.py``), so no Spark job or Python worker serves them.
 """
 
 from __future__ import annotations
@@ -45,19 +46,18 @@ from restructure_hdfs_topic_spark.operators.dedup import keep_last_dedup
 from restructure_hdfs_topic_spark.operators.flatten import flatten_for_csv
 from restructure_hdfs_topic_spark.operators.offsets import (
     commit_offsets,
-    committed_intervals,
     committed_range_index,
     file_micros,
-    # Not called here any more (the seen filter runs on the driver), but
-    # perfbench/layers.py wraps this name in this module.
+    read_intervals,
+    # Not called here any more (the seen filter works on ledger rows), but
+    # perfbench/layers.py wraps these names in this module.
     filter_unseen_files,
     read_offsets,
 )
-from restructure_hdfs_topic_spark.session import local_frame
 from restructure_hdfs_topic_spark.sources.avro import (
     FILE_ORDER,
     SourceFile,
-    manifest_df,
+    manifest_df,  # not called here; perfbench/layers.py wraps it in this module
     read_avro,
     record_struct,
     union_avro_schemas,
@@ -573,11 +573,9 @@ def run_avro_cleaner_job(
     from source storage, partially-extracted files are rolled back
     (accountant.remove) so the next restructure reprocesses them.
     """
-    from restructure_hdfs_topic_spark.operators.offsets import (
-        read_offsets,
-        remove_offsets,
-        replace_offsets,
-    )
+    # Looked up at call time, so a wrapped or patched ledger function is
+    # the one that runs.
+    from restructure_hdfs_topic_spark.operators import offsets
 
     now = now_s if now_s is not None else _time.time()
     age_s = config.cleaner.age_days * 86400
@@ -591,9 +589,7 @@ def run_avro_cleaner_job(
     }
     topics = walk_topics(input_root, exclude=excluded, spark=spark)
     counters: dict = {"deleted": [], "rolled_back": [], "kept": [], "locked": []}
-    contains = committed_range_index(
-        committed_intervals(read_offsets(spark, config.state_dir))
-    )
+    contains = committed_range_index(read_intervals(spark, config.state_dir))
 
     def committed(f: SourceFile) -> bool:
         # +1 trick (SourceDataCleaner.kt:86-91).
@@ -665,15 +661,14 @@ def run_avro_cleaner_job(
             if lock is not None:
                 lock.close()
     if rollback_ranges:
-        rb = local_frame(
-            spark, rollback_ranges, "topic string, partition int, offset_from long, offset_to long"
-        )
         # Subtract the rollbacks inside the commit, from the snapshot it
         # claims against: a concurrent restructure app (the two-apps
         # deployment lock_enable serves) may commit new intervals while
         # this cleaner verifies topics, and a remove built outside the
         # commit would swap a stale state over them.
-        replace_offsets(spark, config.state_dir, lambda s: remove_offsets(s, rb))
+        offsets.replace_offsets(
+            spark, config.state_dir, lambda s: offsets.remove_intervals(s, rollback_ranges)
+        )
     return counters
 
 
@@ -755,9 +750,7 @@ def _process_topic(spark, topic, aged, config, counters) -> None:
     # committed intervals are metadata-scale, so the seen filter is a
     # bisect probe per file — no manifest frame, no Spark job for it.
     with timer.time("restructure.readOffsets"):
-        committed = committed_range_index(
-            committed_intervals(read_offsets(spark, config.state_dir))
-        )
+        committed = committed_range_index(read_intervals(spark, config.state_dir))
     # Sort NUMERICALLY by (partition, offset) so the maxFilesPerTopic cap
     # always takes the EARLIEST pending files, like the reference's ordered
     # walk + take (lexicographic path order would put `+10000.avro` before
@@ -786,13 +779,10 @@ def _process_topic(spark, topic, aged, config, counters) -> None:
     n_records = restructure_files(
         spark, topic, [f.path for f in pending], sum(f.size for f in pending), config
     )
-    # last_processed is built in Spark from the double mtime (manifest_df's
-    # timestamp_seconds), so committed state matches the seen filter's
-    # file_micros bit for bit.
-    new_ranges = manifest_df(spark, pending).select(
-        "topic", "partition", "offset_from", "offset_to",
-        F.col("mtime").alias("last_processed"),
-    )
+    new_ranges = [
+        (f.topic, f.partition, f.offset_from, f.offset_to, file_micros(f.mtime))
+        for f in pending
+    ]
     with timer.time("restructure.commitOffsets"):
         commit_offsets(spark, config.state_dir, new_ranges)
     counters["topics"][topic] = {

@@ -15,21 +15,23 @@ These classes reproduce both wire formats against any client object that
 speaks the redis-py surface (``set``/``get``/``delete``) — the container
 has no redis server or package, so production use passes a real
 ``redis.Redis`` and tests pass an in-memory stub.  Everything is driver-
-side metadata I/O: the interval set is heap-scale by the reference's own
-contract, so no Spark job touches Redis.
+side metadata I/O: the offset document is the ledger's own
+(``operators/offsets.py``: ``encode_ledger``/``decode_ledger``, merged by
+``merge_intervals``), so no Spark job touches Redis.
 """
 
 from __future__ import annotations
 
-import json
 import uuid
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
 from restructure_hdfs_topic_spark.operators.offsets import (
-    STATE_SCHEMA,
-    merge_offset_intervals,
+    committed_intervals,
+    decode_ledger,
+    encode_ledger,
+    intervals_frame,
+    merge_intervals,
 )
 
 DEFAULT_TTL_MS = 24 * 3600 * 1000  # RedisRemoteLockManager.kt:43
@@ -83,79 +85,32 @@ def _to_str(value) -> str:
     return value.decode() if isinstance(value, (bytes, bytearray)) else str(value)
 
 
-def _iso(ts) -> str:
-    # Spark's collect() yields NAIVE datetimes in the driver's LOCAL zone
-    # (TimestampType.fromInternal goes through fromtimestamp) — labelling
-    # them UTC directly would shift lastProcessed by the host's UTC offset
-    # on every write.  A naive .astimezone() interprets local wall time,
-    # which round-trips correctly on any driver timezone.
-    dt = ts if ts.tzinfo is not None else ts.astimezone()
-    return dt.astimezone(timezone.utc).isoformat().replace("+00:00", "Z")
-
-
 class RedisOffsetPersistence:
     """O17 state over Redis in the reference's exact JSON wire format
     (OffsetRedisPersistence.kt:69-84): one document per state key holding
     every (topic, partition)'s merged interval list.
 
-    ``read`` → committed state DataFrame (STATE_SCHEMA; empty when the key
-    is missing).  ``write`` → serialize a merged state frame under the
-    key.  ``commit`` mirrors ``commit_offsets``: read + union + interval
-    merge + write — call it only after the data write action succeeded
-    (commit-after-store, O18)."""
+    ``read`` → committed state as an interval frame (a local relation;
+    empty when the key is missing).  ``write`` → serialize an interval
+    frame under the key.  ``commit`` mirrors ``commit_offsets``: merge
+    ``new_ranges`` into the stored ledger and write it back — call it only
+    after the data write action succeeded (commit-after-store, O18).
+    Frames in are collected to ledger rows (no job for a local relation)."""
 
     def __init__(self, client):
         self._client = client
 
-    def read(self, spark: SparkSession, key: str) -> DataFrame:
+    def _rows(self, key: str) -> list[tuple]:
         raw = self._client.get(key)
-        if raw is None:
-            return spark.createDataFrame([], STATE_SCHEMA)
-        doc = json.loads(_to_str(raw))
-        rows = []
-        for part in doc.get("partitions", []):
-            for rng in part.get("ranges", []):
-                lp = rng.get("lastProcessed")
-                # Range.to is nullable in the reference (a pending
-                # single-offset range); ensureToOffset() maps null → from
-                # (OffsetRangeSet.kt:167-170).
-                to = rng.get("to")
-                rows.append(
-                    (
-                        part["topic"],
-                        int(part["partition"]),
-                        int(rng["from"]),
-                        int(to if to is not None else rng["from"]),
-                        datetime.fromisoformat(lp.replace("Z", "+00:00"))
-                        if lp is not None
-                        else None,
-                    )
-                )
-        return spark.createDataFrame(rows, STATE_SCHEMA)
+        return decode_ledger(None if raw is None else _to_str(raw))
+
+    def read(self, spark: SparkSession, key: str) -> DataFrame:
+        return intervals_frame(spark, self._rows(key))
 
     def write(self, spark: SparkSession, key: str, state: DataFrame) -> None:
-        by_tp: dict[tuple, list[dict]] = {}
-        has_mtime = "last_processed" in state.columns
-        for r in state.collect():
-            rng = {"from": r["offset_from"], "to": r["offset_to"]}
-            lp = r["last_processed"] if has_mtime else None
-            rng["lastProcessed"] = _iso(lp) if lp is not None else None
-            by_tp.setdefault((r["topic"], r["partition"]), []).append(rng)
-        doc = {
-            "partitions": [
-                {
-                    "topic": t,
-                    "partition": p,
-                    "ranges": sorted(ranges, key=lambda x: (x["from"], x["to"])),
-                }
-                for (t, p), ranges in sorted(by_tp.items())
-            ]
-        }
-        self._client.set(key, json.dumps(doc))
+        self._client.set(key, encode_ledger(committed_intervals(state)))
 
     def commit(self, spark: SparkSession, key: str, new_ranges: DataFrame) -> DataFrame:
-        merged = merge_offset_intervals(
-            self.read(spark, key).unionByName(new_ranges, allowMissingColumns=True)
-        )
-        self.write(spark, key, merged)
-        return self.read(spark, key)
+        merged = merge_intervals(self._rows(key) + committed_intervals(new_ranges))
+        self._client.set(key, encode_ledger(merged))
+        return intervals_frame(spark, merged)

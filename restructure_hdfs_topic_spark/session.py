@@ -64,7 +64,9 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str):
     ``get_spark``; without it Spark falls back to a Python RDD).  PySpark
     skips Arrow for an empty pandas frame, so the empty case is a
     constant-false filter that the optimizer folds into an empty
-    ``LocalRelation``.  Build timestamps in Spark from numeric columns
+    ``LocalRelation``.  Columns stay Python objects up to Arrow, so a long
+    column holding None keeps its exact integers (pandas would make it a
+    float column).  Build timestamps in Spark from numeric columns
     (``F.timestamp_seconds``), never from Python datetimes."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
@@ -74,7 +76,7 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str):
         import pandas as pd
 
         return spark.createDataFrame(
-            pd.DataFrame.from_records(rows, columns=struct.fieldNames()), struct
+            pd.DataFrame(rows, columns=struct.fieldNames(), dtype=object), struct
         )
     return (
         spark.range(1)

@@ -817,8 +817,9 @@ def record_struct(avro_schema: Any) -> StructType:
 def manifest_df(spark: SparkSession, files: list[SourceFile]) -> DataFrame:
     """O3/O4 manifest DataFrame from a walked file list — a local relation
     (no Python RDD).  ``mtime`` is built in Spark as
-    ``timestamp_seconds(mtime_s)``, so a committed ``last_processed`` taken
-    from it equals ``offsets.file_micros(f.mtime)`` exactly."""
+    ``timestamp_seconds(mtime_s)``, whose unix micros equal
+    ``offsets.file_micros(f.mtime)``, the ``last_processed_us`` the ledger
+    commits, exactly."""
     from restructure_hdfs_topic_spark.session import local_frame
 
     rows = [

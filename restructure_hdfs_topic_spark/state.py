@@ -7,15 +7,18 @@ atomic write, and callers only merge and remove
 target/LocalTargetStorage.kt:60-72).  Here every state lane is a few lines
 over ``read`` and ``commit``: the offset ledger (``operators/offsets.py``)
 and the fingerprint and MinHash-signature lanes
-(``operators/incremental.py``).  Each lane owns its OWN state directory.
+(``operators/incremental.py``).  Each lane owns its OWN state directory
+and picks its payload in code: ``Document`` (the offset ledger, kept on
+the driver) or ``Parquet`` (the fingerprint and signature lanes).
 
 Layout of a state directory (the ``offsets`` names predate the other
 lanes, which use them too):
 
 - ``offsets.CURRENT`` — pointer file holding ``v{N:08d}``, the visible
   version;
-- ``offsets/v{N:08d}/`` — committed version N: a parquet directory that
-  carries ``_SUCCESS``, immutable once renamed into place;
+- ``offsets/v{N:08d}/`` — committed version N, immutable once renamed
+  into place: the lane's payload plus ``_SUCCESS`` — ``state.json`` for a
+  ``Document`` lane, parquet part files for a ``Parquet`` lane;
 - ``offsets/.claim.v{N:08d}`` — exclusive claim on version N, holding the
   claimant's owner token;
 - ``offsets/.staging.v{N:08d}.{token}/`` — a claimant's scratch write.
@@ -34,8 +37,9 @@ written (commit-after-store, worker/FileCache.kt:128-158).
 Storage: ``state_dir`` is resolved through the Hadoop FS, so plain paths,
 ``file://``, ``hdfs://`` and ``s3a://`` take one code path.  The ``file``
 scheme differs in three primitives only: the exclusive create
-(``locks.create_exclusive``), the no-replace directory rename
-(``_rename_no_replace``) and the pointer swap (``_write_pointer``).
+(``locks.create_exclusive``, also of every small file: no ``.crc``
+sidecars), the no-replace directory rename (``_rename_no_replace``) and
+the pointer swap (``_write_pointer``).
 """
 
 from __future__ import annotations
@@ -44,7 +48,6 @@ import contextlib
 import os
 import random
 import re
-import tempfile
 import time
 import uuid
 
@@ -107,6 +110,65 @@ def _read_text(fs, path) -> str | None:
         stream.close()
 
 
+def _create(fs, path, text: str) -> None:
+    """Create the small file ``path``, a fresh name, holding ``text`` (on
+    ``file``: plain file I/O, no ``.crc`` sidecar)."""
+    if not create_exclusive(fs, path, text.encode()):
+        raise OSError(f"state store: could not create {path}")
+
+
+class Parquet:
+    """A DataFrame lane's payload: each version is a parquet directory.
+    ``schema`` (DDL) pins the read, so it runs no footer-inference job, and
+    the written state is cast to it, so the pinned read reads back what was
+    written.  A lane whose column types follow its input (the signature
+    lane's id) passes ``infer=True``: the footers decide, and ``schema``
+    only shapes the empty state."""
+
+    def __init__(self, schema: str, infer: bool = False):
+        self.schema, self.infer = schema, infer
+
+    def read(self, spark: SparkSession, path: str | None) -> DataFrame:
+        if path is None:
+            return local_frame(spark, [], self.schema)
+        reader = spark.read if self.infer else spark.read.schema(self.schema)
+        return reader.parquet(path)
+
+    def write(self, spark: SparkSession, path: str, state: DataFrame) -> None:
+        if not self.infer:
+            state = state.select(
+                *[F.col(f.name).cast(f.dataType) for f in StructType.fromDDL(self.schema)]
+            )
+        state.write.mode("overwrite").parquet(path)
+
+
+class Document:
+    """A driver-side lane's payload: each version directory holds one text
+    document, ``state.json``, plus ``_SUCCESS``, read and written through
+    the FS with no Spark job.  ``encode(state)`` is the document's text and
+    ``decode(text)`` the state again; ``decode(None)`` is the empty state.
+    A committed version without the document was written as parquet before
+    the lane had one: ``legacy(spark, path)`` reads it, and the next commit
+    writes the document."""
+
+    NAME = "state.json"
+
+    def __init__(self, encode, decode, legacy):
+        self.encode, self.decode, self.legacy = encode, decode, legacy
+
+    def read(self, spark: SparkSession, path: str | None):
+        if path is None:
+            return self.decode(None)
+        fs, at = _open(spark, path)
+        text = _read_text(fs, at(self.NAME))
+        return self.legacy(spark, path) if text is None else self.decode(text)
+
+    def write(self, spark: SparkSession, path: str, state) -> None:
+        fs, at = _open(spark, path)
+        for name, text in ((self.NAME, self.encode(state)), ("_SUCCESS", "")):
+            _create(fs, at(name), text)
+
+
 def current_version(spark: SparkSession, state_dir: str) -> int | None:
     """The committed version ``offsets.CURRENT`` names (None before the
     first commit).
@@ -133,53 +195,36 @@ def current_version(spark: SparkSession, state_dir: str) -> int | None:
     return max(done, default=None)
 
 
-def read(
-    spark: SparkSession, state_dir: str, schema: str, infer: bool = False
-) -> tuple[DataFrame, int | None]:
-    """The committed state and its version, ``(frame, version)``; before
-    the first commit the frame is empty and the version None.
-
-    ``schema`` (DDL) pins the read, so it runs no footer-inference job.
-    A lane whose column types follow its input (the signature lane's id)
-    passes ``infer=True``: the footers decide, and ``schema`` only shapes
-    the empty state."""
+def read(spark: SparkSession, state_dir: str, payload) -> tuple[object, int | None]:
+    """The committed state and its version, ``(state, version)``; before
+    the first commit the state is the payload's empty state and the
+    version None."""
     version = current_version(spark, state_dir)
-    return _read_at(spark, state_dir, version, schema, infer), version
+    return _read_at(spark, state_dir, version, payload), version
 
 
-def _read_at(
-    spark: SparkSession, state_dir: str, version: int | None, schema: str,
-    infer: bool = False,
-) -> DataFrame:
+def _read_at(spark: SparkSession, state_dir: str, version: int | None, payload):
     """The state at an explicitly resolved version (so a commit pins its
     snapshot to the same version it claims against)."""
-    if version is None:
-        return local_frame(spark, [], schema)
-    reader = spark.read if infer else spark.read.schema(schema)
-    return reader.parquet(f"{state_dir}/{_version(version)}")
+    return payload.read(spark, None if version is None else f"{state_dir}/{_version(version)}")
 
 
 def commit(
-    spark: SparkSession, state_dir: str, update, schema: str, infer: bool = False
-) -> tuple[DataFrame, int, int]:
+    spark: SparkSession, state_dir: str, update, payload
+) -> tuple[object, int, int]:
     """Commit ``update(snapshot)`` as the next version of ``state_dir``;
-    returns ``(frame, snapshot_version, committed_version)``, the frame
-    being the committed state (snapshot version 0 = empty state).
+    returns ``(state, snapshot_version, committed_version)``, the state
+    being the committed one read back (snapshot version 0 = empty state).
 
     Compare-and-swap: the current version is resolved EXACTLY once per
     attempt, the snapshot is read from that version and the claim is on
     the next one, so a peer commit in between fails the claim and forces a
     fresh snapshot instead of a stale-merge overwrite.  ``update`` runs
     once per attempt, before the claim (a peer may commit while it runs).
-    ``schema`` and ``infer`` are ``read``'s; a pinned lane's result is
-    cast to ``schema`` so the pinned read reads back what was written."""
+    ``payload`` (``Parquet`` or ``Document``) reads and writes versions."""
     for attempt in range(64):
         cur = current_version(spark, state_dir)
-        nxt_state = update(_read_at(spark, state_dir, cur, schema, infer))
-        if not infer:
-            nxt_state = nxt_state.select(
-                *[F.col(f.name).cast(f.dataType) for f in StructType.fromDDL(schema)]
-            )
+        nxt_state = update(_read_at(spark, state_dir, cur, payload))
         nxt = (cur or 0) + 1
         token = _claim_version(spark, state_dir, nxt)
         if token is None:
@@ -188,18 +233,18 @@ def commit(
             # crashed is broken after a TTL so commits cannot deadlock on it.
             _break_stale_claim(spark, state_dir, nxt)
             if _claim_owner(spark, state_dir, nxt) is not None:
-                # A LIVE peer's commit includes a parquet write that can take
-                # seconds: back off with jitter so the attempt budget spans
-                # at least one full peer commit.
+                # A LIVE peer's commit may include a parquet write that
+                # takes seconds: back off with jitter so the attempt budget
+                # spans at least one full peer commit.
                 time.sleep(min(2.0, 0.05 * (attempt + 1)) * (0.5 + random.random()))
             continue
         try:
-            _replace_at(spark, state_dir, nxt_state, nxt, token)
+            _replace_at(spark, state_dir, payload, nxt_state, nxt, token)
         except ClaimLost:
             # Our claim was TTL-broken while we were writing (stall): the
             # peer's commit is durable; retry against the fresh snapshot.
             continue
-        return _read_at(spark, state_dir, nxt, schema, infer), cur or 0, nxt
+        return _read_at(spark, state_dir, nxt, payload), cur or 0, nxt
     raise RuntimeError(f"state commit: version contention in {state_dir}")
 
 
@@ -294,23 +339,16 @@ def _write_pointer(spark: SparkSession, state_dir: str, nxt: int) -> None:
     recovery."""
     fs, at = _open(spark, state_dir)
     pointer, text = at(_POINTER), f"v{nxt:08d}"
+    tmp = at(f".{_POINTER}.{text}.{uuid.uuid4().hex}")
+    _create(fs, tmp, text)
     local = _local(fs, pointer)
     if local is not None:
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(local), prefix=f".{_POINTER}.")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(text)
-        os.replace(tmp, local)
+        os.replace(_local(fs, tmp), local)
         # A pointer once written through Hadoop's checksummed local FS left
         # a ``.crc`` sidecar that no longer matches.
         with contextlib.suppress(FileNotFoundError):
             os.remove(os.path.join(os.path.dirname(local), f".{_POINTER}.crc"))
         return
-    tmp = at(f".{_POINTER}.{text}")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(text, "utf-8"))
-    finally:
-        stream.close()
     jvm = spark._jvm
     try:
         opts = spark.sparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
@@ -343,11 +381,11 @@ def _rename_no_replace(spark: SparkSession, state_dir: str, src: str, dst: str) 
 
 
 def _replace_at(
-    spark: SparkSession, state_dir: str, state: DataFrame, nxt: int, token: str
+    spark: SparkSession, state_dir: str, payload, state, nxt: int, token: str
 ) -> None:
-    """Make ``state`` visible as version ``nxt``: write it to a UNIQUE
-    staging directory, re-verify claim ownership, rename staging into
-    place, swap the pointer, prune.
+    """Make ``state`` visible as version ``nxt``: write it with
+    ``payload`` to a UNIQUE staging directory, re-verify claim ownership,
+    rename staging into place, swap the pointer, prune.
 
     Staging + verify + rename is what makes a broken claim actually LOSE:
     a committer stalled past the claim TTL whose claim a peer broke and
@@ -358,7 +396,7 @@ def _replace_at(
     turns the wake-up into a clean ``ClaimLost`` retry."""
     fs, at = _open(spark, state_dir)
     staging = f"offsets/.staging.v{nxt:08d}.{token}"
-    state.write.mode("overwrite").parquet(f"{state_dir}/{staging}")
+    payload.write(spark, f"{state_dir}/{staging}", state)
     if _claim_owner(spark, state_dir, nxt) != token:
         lost = "owner token changed"
     else:

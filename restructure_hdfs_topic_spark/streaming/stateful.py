@@ -12,7 +12,8 @@ extension).
 
 The restructure job's exactly-once record filter is not here: the service
 loop (``streaming.service.run_service``) runs the batch job, whose offset
-ledger (``operators/offsets.py``) is the seen-record filter (O5).
+ledger (``operators/offsets.py``, driver rows) prunes every committed
+file before its records are read (O4/O5).
 """
 
 from __future__ import annotations

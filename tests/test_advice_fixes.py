@@ -24,14 +24,8 @@ def test_offsets_pointer_loss_recovers_latest_version(spark, tmp_path):
         (str(tmp_path / "local"), tmp_path / "local" / "offsets.CURRENT"),
         (f"file://{tmp_path}/uri", tmp_path / "uri" / "offsets.CURRENT"),
     ]:
-        r1 = spark.createDataFrame(
-            [("t", 0, 0, 9)],
-            "topic string, partition int, offset_from long, offset_to long",
-        )
-        r2 = spark.createDataFrame(
-            [("t", 0, 20, 29)],
-            "topic string, partition int, offset_from long, offset_to long",
-        )
+        r1 = [("t", 0, 0, 9, None)]
+        r2 = [("t", 0, 20, 29, None)]
         commit_offsets(spark, state_dir, r1)
         commit_offsets(spark, state_dir, r2)
         pointer.unlink()
@@ -41,14 +35,7 @@ def test_offsets_pointer_loss_recovers_latest_version(spark, tmp_path):
         )
         assert got == [("t", 0, 0, 9), ("t", 0, 20, 29)], state_dir
         # and the next commit still advances cleanly from the recovered state
-        commit_offsets(
-            spark,
-            state_dir,
-            spark.createDataFrame(
-                [("t", 0, 10, 19)],
-                "topic string, partition int, offset_from long, offset_to long",
-            ),
-        )
+        commit_offsets(spark, state_dir, [("t", 0, 10, 19, None)])
         got = sorted(
             (r["offset_from"], r["offset_to"])
             for r in read_offsets(spark, state_dir).collect()
@@ -276,13 +263,11 @@ def test_commit_offsets_cas_no_lost_update(spark, tmp_path, monkeypatch):
     concurrent commit's intervals."""
     from restructure_hdfs_topic_spark.operators import offsets as O
 
-    mk = lambda lo, hi: spark.createDataFrame(
-        [("t", 0, lo, hi, None)], O.STATE_SCHEMA
-    )
+    mk = lambda lo, hi: [("t", 0, lo, hi, None)]
     for _, state_dir in _state_dirs(tmp_path):
         O.commit_offsets(spark, state_dir, mk(0, 9))
 
-        real_merge = O.merge_offset_intervals
+        real_merge = O.merge_intervals
         fired = []
 
         def hooked_merge(ranges):
@@ -291,14 +276,14 @@ def test_commit_offsets_cas_no_lost_update(spark, tmp_path, monkeypatch):
             # exact TOCTOU window of the old two-resolve code.
             if not fired:
                 fired.append(1)
-                monkeypatch.setattr(O, "merge_offset_intervals", real_merge)
+                monkeypatch.setattr(O, "merge_intervals", real_merge)
                 O.commit_offsets(spark, state_dir, mk(100, 109))
-                monkeypatch.setattr(O, "merge_offset_intervals", hooked_merge)
+                monkeypatch.setattr(O, "merge_intervals", hooked_merge)
             return real_merge(ranges)
 
-        monkeypatch.setattr(O, "merge_offset_intervals", hooked_merge)
+        monkeypatch.setattr(O, "merge_intervals", hooked_merge)
         O.commit_offsets(spark, state_dir, mk(200, 209))
-        monkeypatch.setattr(O, "merge_offset_intervals", real_merge)
+        monkeypatch.setattr(O, "merge_intervals", real_merge)
 
         final = {
             (r.offset_from, r.offset_to)
@@ -348,18 +333,14 @@ def test_stalled_committer_cannot_clobber_peer_commit(spark, tmp_path):
     from restructure_hdfs_topic_spark import state as S
     from restructure_hdfs_topic_spark.operators import offsets as O
 
-    mk = lambda lo, hi: spark.createDataFrame(  # noqa: E731
-        [("t", 0, lo, hi, None)], O.STATE_SCHEMA
-    )
+    mk = lambda lo, hi: [("t", 0, lo, hi, None)]  # noqa: E731
     for root, state_dir in _state_dirs(tmp_path):
         O.commit_offsets(spark, state_dir, mk(0, 9))  # v1
 
         # Victim A: resolves cur=1, claims v2 ... then stalls past the TTL.
         token_a = S._claim_version(spark, state_dir, 2)
         assert token_a
-        victim_merge = O.merge_offset_intervals(
-            S._read_at(spark, state_dir, 1, O.STATE_SCHEMA).unionByName(mk(200, 209))
-        )
+        victim_merge = O.merge_intervals(S._read_at(spark, state_dir, 1, O.LEDGER) + mk(200, 209))
         claim = _os.path.join(root, "offsets", ".claim.v00000002")
         old = _time.time() - S.CLAIM_TTL_S - 5
         _os.utime(claim, (old, old))
@@ -370,7 +351,7 @@ def test_stalled_committer_cannot_clobber_peer_commit(spark, tmp_path):
 
         # A wakes and finishes its attempt with its stale token + merge.
         with _pytest.raises(S.ClaimLost):
-            S._replace_at(spark, state_dir, victim_merge, 2, token_a)
+            S._replace_at(spark, state_dir, O.LEDGER, victim_merge, 2, token_a)
 
         final = {
             (r.offset_from, r.offset_to)
@@ -405,9 +386,7 @@ def test_breaker_adopts_orphan_committed_version(spark, tmp_path):
     from restructure_hdfs_topic_spark import state as S
     from restructure_hdfs_topic_spark.operators import offsets as O
 
-    mk = lambda lo, hi: spark.createDataFrame(  # noqa: E731
-        [("t", 0, lo, hi, None)], O.STATE_SCHEMA
-    )
+    mk = lambda lo, hi: [("t", 0, lo, hi, None)]  # noqa: E731
     for root, state_dir in _state_dirs(tmp_path):
         O.commit_offsets(spark, state_dir, mk(0, 9))  # v1
 
@@ -415,11 +394,9 @@ def test_breaker_adopts_orphan_committed_version(spark, tmp_path):
         # directory, then die BEFORE the pointer write.
         token = S._claim_version(spark, state_dir, 2)
         assert token
-        merged = O.merge_offset_intervals(
-            S._read_at(spark, state_dir, 1, O.STATE_SCHEMA).unionByName(mk(100, 109))
-        )
+        merged = O.merge_intervals(S._read_at(spark, state_dir, 1, O.LEDGER) + mk(100, 109))
         staging = f"offsets/.staging.v00000002.{token}"
-        merged.write.mode("overwrite").parquet(f"{state_dir}/{staging}")
+        O.LEDGER.write(spark, f"{state_dir}/{staging}", merged)
         _os.rename(_os.path.join(root, staging), _os.path.join(root, "offsets", "v00000002"))
         # (no pointer write — the crash point; pointer still names v1)
         assert (root / "offsets.CURRENT").read_text() == "v00000001"

@@ -24,8 +24,8 @@ from restructure_hdfs_topic_spark.sources.avro import (
     read_avro,
     walk_topics,
 )
+from tests.avro_tree import STATUS_KEY, STATUS_SCHEMA, STATUS_TOPIC, reference_shaped_tree, write_topic_file
 from tests.avro_tree import build_container as _build_container
-from tests.avro_tree import reference_shaped_tree
 
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
@@ -71,38 +71,46 @@ def test_walk_topics_and_filename_parse():
     ]
 
 
-@needs_fixtures
 def test_single_offset_filename_commits_true_range(spark, tmp_path):
-    """O3 tail: processing the single-offset fixture must commit [21, 23]
+    """O3 tail: processing a single-offset file must commit [21, 23]
     (record-count end offset), so the cleaner's `offset_to + 1 <= hi` check
     can ever succeed and a partially-committed prefix is not mistaken for
-    full coverage."""
+    full coverage — on a generated file and, when present, the reference's
+    fixture."""
     import shutil
 
-    from restructure_hdfs_topic_spark.config import RestructureConfig, WorkerConfig
-    from restructure_hdfs_topic_spark.operators.offsets import read_offsets
-    from restructure_hdfs_topic_spark.plans.avro_job import run_avro_restructure_job
+    from restructure_hdfs_topic_spark.operators.offsets import read_intervals
 
-    src = tmp_path / "in" / "application_server_status" / "partition=1"
-    src.mkdir(parents=True)
-    shutil.copy(
-        f"{FIXTURES}/application_server_status/partition=1/"
-        "application_server_status+1+0000000021.avro",
-        src,
-    )
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="csv",
-        worker=WorkerConfig(minimum_file_age_s=0),
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    result = run_avro_restructure_job(spark, str(tmp_path / "in"), cfg)
-    assert result["records_written"] == 3
-    state = read_offsets(spark, cfg.state_dir).collect()
-    assert [(r["topic"], r["partition"], r["offset_from"], r["offset_to"]) for r in state] == [
-        ("application_server_status", 1, 21, 23)
+    def committed(src: str, out) -> tuple[int, list]:
+        cfg = RestructureConfig(
+            target_dir=str(out / "out"),
+            state_dir=str(out / "state"),
+            format="csv",
+            worker=WorkerConfig(minimum_file_age_s=0),
+        )
+        os.makedirs(cfg.state_dir, exist_ok=True)
+        result = run_avro_restructure_job(spark, src, cfg)
+        return result["records_written"], [r[:4] for r in read_intervals(spark, cfg.state_dir)]
+
+    project, user, source = STATUS_KEY
+    records = [
+        {
+            "key": {"projectId": project, "userId": user, "sourceId": source},
+            "value": {"time": 1580220600.5 + i, "serverStatus": "CONNECTED", "ipAddress": None},
+        }
+        for i in range(3)
     ]
+    src = str(tmp_path / "in")
+    write_topic_file(
+        src, STATUS_TOPIC, 1, 21, records, schema=STATUS_SCHEMA, codec="deflate", single_offset=True
+    )
+    want = (3, [(STATUS_TOPIC, 1, 21, 23)])
+    assert committed(src, tmp_path / "tree") == want
+    if os.path.isdir(FIXTURES):  # the reference's fixture file
+        fixture = tmp_path / "fixture" / STATUS_TOPIC / "partition=1"
+        fixture.mkdir(parents=True)
+        shutil.copy(f"{FIXTURES}/{STATUS_TOPIC}/partition=1/{STATUS_TOPIC}+1+0000000021.avro", fixture)
+        assert committed(str(tmp_path / "fixture"), tmp_path / "golden") == want
 
 
 @needs_fixtures
@@ -230,24 +238,24 @@ def test_avro_restructure_gzip_and_dedup(spark, tmp_path):
         assert _gzip_dedup_rows(spark, FIXTURES, tmp_path / "golden")
 
 
-@needs_fixtures
-def test_avro_cleaner_delete_and_rollback(spark, tmp_path):
-    """O20/O21 over the real pipeline: the cleaner re-reads source Avro,
-    verifies event times against the written CSV output (re-read with the
-    positional O21 parse), DELETES fully-extracted committed files, rolls
-    back partially-extracted ones, and never touches a partition's
-    max-offset file (+1 trick)."""
+def _cleaner_delete_and_rollback(spark, src: str, out) -> None:
+    """The cleaner flow of ``test_avro_cleaner_delete_and_rollback`` over
+    the fixture-shaped tree ``src``: delete, then roll back, then
+    reprocess."""
     import shutil
 
     from restructure_hdfs_topic_spark.config import CleanerConfig
     from restructure_hdfs_topic_spark.plans.avro_job import run_avro_cleaner_job
 
-    src = str(tmp_path / "in")
-    shutil.copytree(FIXTURES, src)
+    victim = f"{STATUS_TOPIC}+1+0000000018+0000000020.avro"
+    victim_path = os.path.join(src, STATUS_TOPIC, "partition=1", victim)
+    saved = str(out / victim)
+    os.makedirs(out, exist_ok=True)
+    shutil.copy(victim_path, saved)
     cfg = RestructureConfig(
         source_dir=src,
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
+        target_dir=str(out / "out"),
+        state_dir=str(out / "state"),
         format="csv",
         cleaner=CleanerConfig(enable=True, age_days=0),
         worker=WorkerConfig(minimum_file_age_s=0),
@@ -256,12 +264,12 @@ def test_avro_cleaner_delete_and_rollback(spark, tmp_path):
     run_avro_restructure_job(spark, src, cfg)
 
     # Everything extracted: the status file [18,20] is committed-with-+1
-    # (state merged to [18,21]) and fully extracted → deleted; the
+    # (state merged to [18,23]) and fully extracted → deleted; the
     # single-offset status file and the acceleration file hold their
     # partitions' max offsets → kept.
     result = run_avro_cleaner_job(spark, src, cfg)
     deleted = [p.rsplit("/", 1)[-1] for p in result["deleted"]]
-    assert deleted == ["application_server_status+1+0000000018+0000000020.avro"]
+    assert deleted == [victim]
     assert result["rolled_back"] == []
     remaining = [f for fs in walk_topics(src).values() for f in fs]
     assert len(remaining) == 2
@@ -269,21 +277,30 @@ def test_avro_cleaner_delete_and_rollback(spark, tmp_path):
     # Partial extraction: restore the deleted file, wipe one status bin
     # from the target → cleaner rolls the file's range back instead of
     # deleting, and the next restructure reprocesses exactly that file.
-    shutil.copy(
-        os.path.join(
-            FIXTURES,
-            "application_server_status/partition=1/application_server_status+1+0000000018+0000000020.avro",
-        ),
-        os.path.join(src, "application_server_status/partition=1/"),
-    )
+    shutil.copy(saved, victim_path)
     for root, dirs, files in os.walk(cfg.target_dir):
         if root.endswith("bin=20200128_1300"):
             shutil.rmtree(root)
     result2 = run_avro_cleaner_job(spark, src, cfg)
     rolled = [p.rsplit("/", 1)[-1] for p in result2["rolled_back"]]
-    assert rolled == ["application_server_status+1+0000000018+0000000020.avro"]
+    assert rolled == [victim]
     r = run_avro_restructure_job(spark, src, cfg)
     assert r["records_written"] == 3
+
+
+def test_avro_cleaner_delete_and_rollback(spark, tmp_path):
+    """O20/O21 over the real pipeline: the cleaner re-reads source Avro,
+    verifies event times against the written CSV output (re-read with the
+    positional O21 parse), DELETES fully-extracted committed files, rolls
+    back partially-extracted ones, and never touches a partition's
+    max-offset file (+1 trick) — over a tree shaped like the reference's
+    fixtures and, when present, the fixtures themselves."""
+    import shutil
+
+    _cleaner_delete_and_rollback(spark, reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree")
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        shutil.copytree(FIXTURES, tmp_path / "fixtures")
+        _cleaner_delete_and_rollback(spark, str(tmp_path / "fixtures"), tmp_path / "golden")
 
 
 def test_zip_compression_output(spark, tmp_path):
@@ -613,31 +630,35 @@ def test_read_avro_schema_evolution_union(spark, tmp_path):
     assert rows == {0: (1, None), 1: (2, None), 2: (3, "x"), 3: (4, None)}
 
 
-@needs_fixtures
 def test_cleaner_respects_exclude_from_delete(spark, tmp_path):
     """excludeFromDelete (RestructureConfig.kt per-topic override): the
     cleaner must not delete files of an excluded topic even when fully
-    extracted and committed."""
+    extracted and committed — over a tree shaped like the reference's
+    fixtures and, when present, the fixtures themselves."""
     import shutil
 
     from restructure_hdfs_topic_spark.config import CleanerConfig, TopicConfig
     from restructure_hdfs_topic_spark.plans.avro_job import run_avro_cleaner_job
 
-    src = str(tmp_path / "in")
-    shutil.copytree(FIXTURES, src)
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="csv",
-        cleaner=CleanerConfig(enable=True, age_days=0),
-        worker=WorkerConfig(minimum_file_age_s=0),
-        topics={"application_server_status": TopicConfig(exclude_from_delete=True)},
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, src, cfg)
-    result = run_avro_cleaner_job(spark, src, cfg)
-    assert result["deleted"] == []  # the deletable status file is protected
-    assert len([f for fs in walk_topics(src).values() for f in fs]) == 3
+    def cleaned(src: str, out) -> tuple[list, int]:
+        cfg = RestructureConfig(
+            target_dir=str(out / "out"),
+            state_dir=str(out / "state"),
+            format="csv",
+            cleaner=CleanerConfig(enable=True, age_days=0),
+            worker=WorkerConfig(minimum_file_age_s=0),
+            topics={STATUS_TOPIC: TopicConfig(exclude_from_delete=True)},
+        )
+        os.makedirs(cfg.state_dir, exist_ok=True)
+        run_avro_restructure_job(spark, src, cfg)
+        result = run_avro_cleaner_job(spark, src, cfg)
+        return result["deleted"], len([f for fs in walk_topics(src).values() for f in fs])
+
+    # The deletable status file is protected; all three files remain.
+    assert cleaned(reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree") == ([], 3)
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        shutil.copytree(FIXTURES, tmp_path / "fixtures")
+        assert cleaned(str(tmp_path / "fixtures"), tmp_path / "golden") == ([], 3)
 
 
 def test_max_files_per_topic_takes_earliest(spark, tmp_path):
@@ -771,25 +792,27 @@ def test_walk_topics_hadoop_fs_uri(spark, tmp_path):
     assert all(f.path.startswith("file:/") for f in via_uri["application_server_status"])
 
 
-@needs_fixtures
 def test_restructure_job_over_hadoop_fs_uri(spark, tmp_path):
     """The whole restructure job runs against a Hadoop-FS URI input root
-    (file:// here; hdfs://, s3a:// share the FileSystem API): walk, header
-    read, binaryFile decode, write, commit — and the rerun is idempotent."""
-    from restructure_hdfs_topic_spark.config import RestructureConfig, WorkerConfig
-    from restructure_hdfs_topic_spark.plans.avro_job import run_avro_restructure_job
+    and state dir (file:// here; hdfs://, s3a:// share the FileSystem
+    API): walk, header read, binaryFile decode, write, commit — and the
+    rerun is idempotent.  Over a tree shaped like the reference's fixtures
+    and, when present, the fixtures themselves."""
 
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="csv",
-        worker=WorkerConfig(minimum_file_age_s=0),
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    r = run_avro_restructure_job(spark, f"file://{FIXTURES}", cfg)
-    assert r["records_written"] == 1006
-    r2 = run_avro_restructure_job(spark, f"file://{FIXTURES}", cfg)
-    assert r2["records_written"] == 0
+    def records_written(src: str, out) -> list[int]:
+        cfg = RestructureConfig(
+            target_dir=str(out / "out"),
+            state_dir=f"file://{out}/state",
+            format="csv",
+            worker=WorkerConfig(minimum_file_age_s=0),
+        )
+        os.makedirs(out / "state", exist_ok=True)
+        return [run_avro_restructure_job(spark, f"file://{src}", cfg)["records_written"] for _ in range(2)]
+
+    src = reference_shaped_tree(str(tmp_path / "in"), accel_records=40)
+    assert records_written(src, tmp_path / "tree") == [46, 0]
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        assert records_written(FIXTURES, tmp_path / "golden") == [1006, 0]
 
 
 @needs_fixtures

@@ -38,7 +38,7 @@ from restructure_hdfs_topic_spark.operators.offsets import (
     committed_range_index,
     file_micros,
     filter_unseen_files,
-    read_offsets,
+    read_intervals,
 )
 from restructure_hdfs_topic_spark.plans.avro_job import (
     run_avro_cleaner_job,
@@ -98,7 +98,7 @@ def _assert_no_python(plans):
 
 def _state(spark, state_dir):
     got: dict = {}
-    for t, p, lo, hi, lp in committed_intervals(read_offsets(spark, state_dir)):
+    for t, p, lo, hi, lp in read_intervals(spark, state_dir):
         got.setdefault((t, p), []).append((lo, hi, lp))
     return {k: sorted(v) for k, v in got.items()}
 

@@ -6,20 +6,31 @@ Each hypothesis example packs MANY generated cases into ONE DataFrame
 random cases and the suite stays fast.  The model is brute-force integer
 painting: an interval set IS the set of covered offsets; merge must
 reproduce its adjacency-merged islands, remove must reproduce set
-difference."""
+difference.  The ledger's driver algebra (``merge_intervals``,
+``remove_intervals``) must equal the DataFrame operators row for row,
+``last_processed`` included — unknown (None) and the
+``_MTIME_UNKNOWN_US`` sentinel among its values."""
 
 import sys
 
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from restructure_hdfs_topic_spark.operators.offsets import _MTIME_UNKNOWN_US
+
+# last_processed in unix micros: unknown, the sentinel or a small time.
+last_processed = st.one_of(
+    st.none(), st.just(_MTIME_UNKNOWN_US), st.integers(min_value=0, max_value=5)
+)
 interval = st.tuples(
     st.integers(min_value=0, max_value=120),
     st.integers(min_value=0, max_value=40),
-).map(lambda t: (t[0], t[0] + t[1]))
+    last_processed,
+).map(lambda t: (t[0], t[0] + t[1], t[2]))
 
 case = st.lists(interval, min_size=1, max_size=8)
 cases = st.lists(case, min_size=1, max_size=12)
@@ -39,9 +50,27 @@ def _islands(covered: set[int]) -> list[tuple[int, int]]:
 
 def _paint(ivs) -> set[int]:
     s: set[int] = set()
-    for lo, hi in ivs:
+    for lo, hi, *_ in ivs:
         s.update(range(lo, hi + 1))
     return s
+
+
+def _interval_frame(spark, rows):
+    """Ledger rows as an interval frame, ``last_processed`` built from the
+    micros (the sentinel is no Python datetime)."""
+    return spark.createDataFrame(
+        rows, "topic string, partition int, offset_from long, offset_to long, lp_us long"
+    ).select(
+        "topic", "partition", "offset_from", "offset_to",
+        F.timestamp_micros("lp_us").alias("last_processed"),
+    )
+
+
+def _ledger(frame) -> list[tuple]:
+    """An interval frame's rows in ledger order, micros exact."""
+    from restructure_hdfs_topic_spark.operators.offsets import committed_intervals
+
+    return sorted(committed_intervals(frame), key=lambda r: r[:4])
 
 
 @settings(
@@ -52,20 +81,20 @@ def _paint(ivs) -> set[int]:
 @given(cases)
 def test_merge_equals_painted_islands(spark, all_cases):
     from restructure_hdfs_topic_spark.operators.offsets import (
+        merge_intervals,
         merge_offset_intervals,
     )
 
     rows = [
-        (f"case{i}", 0, lo, hi)
+        (f"case{i}", 0, lo, hi, lp)
         for i, ivs in enumerate(all_cases)
-        for lo, hi in ivs
+        for lo, hi, lp in ivs
     ]
-    df = spark.createDataFrame(
-        rows, "topic string, partition int, offset_from long, offset_to long"
-    )
+    reference = _ledger(merge_offset_intervals(_interval_frame(spark, rows)))
+    assert merge_intervals(rows) == reference
     got: dict[str, list] = {}
-    for r in merge_offset_intervals(df).collect():
-        got.setdefault(r["topic"], []).append((r["offset_from"], r["offset_to"]))
+    for t, _p, lo, hi, _lp in reference:
+        got.setdefault(t, []).append((lo, hi))
     for i, ivs in enumerate(all_cases):
         want = _islands(_paint(ivs))
         assert sorted(got[f"case{i}"]) == want, (ivs, got[f"case{i}"], want)
@@ -79,22 +108,27 @@ def test_merge_equals_painted_islands(spark, all_cases):
 @given(st.lists(st.tuples(case, case), min_size=1, max_size=8))
 def test_remove_equals_set_difference(spark, pairs):
     from restructure_hdfs_topic_spark.operators.offsets import (
+        merge_intervals,
         merge_offset_intervals,
+        remove_intervals,
         remove_offsets,
     )
 
     st_rows, rm_rows = [], []
     for i, (state_ivs, rm_ivs) in enumerate(pairs):
-        st_rows += [(f"case{i}", 0, lo, hi) for lo, hi in state_ivs]
-        rm_rows += [(f"case{i}", 0, lo, hi) for lo, hi in rm_ivs]
-    schema = "topic string, partition int, offset_from long, offset_to long"
+        st_rows += [(f"case{i}", 0, lo, hi, lp) for lo, hi, lp in state_ivs]
+        rm_rows += [(f"case{i}", 0, lo, hi) for lo, hi, _ in rm_ivs]
     # State must satisfy the engine invariant (disjoint merged intervals —
     # merge_offset_intervals runs at every commit).
-    state = merge_offset_intervals(spark.createDataFrame(st_rows, schema))
-    removals = spark.createDataFrame(rm_rows, schema)
+    state = merge_offset_intervals(_interval_frame(spark, st_rows))
+    removals = spark.createDataFrame(
+        rm_rows, "topic string, partition int, offset_from long, offset_to long"
+    )
+    reference = _ledger(remove_offsets(state, removals))
+    assert remove_intervals(merge_intervals(st_rows), rm_rows) == reference
     got: dict[str, list] = {}
-    for r in remove_offsets(state, removals).collect():
-        got.setdefault(r["topic"], []).append((r["offset_from"], r["offset_to"]))
+    for t, _p, lo, hi, _lp in reference:
+        got.setdefault(t, []).append((lo, hi))
     for i, (state_ivs, rm_ivs) in enumerate(pairs):
         want = _islands(_paint(state_ivs) - _paint(rm_ivs))
         assert sorted(got.get(f"case{i}", [])) == want, (

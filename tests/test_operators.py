@@ -1197,9 +1197,7 @@ def test_offsets_commit_claim_protocol(spark, tmp_path):
         root = str(tmp_path / spelling)
         sd = root if spelling == "plain" else f"file://{root}"
         os.makedirs(root)
-        df = spark.createDataFrame(
-            [("t", 0, 0, 9)], "topic string, partition int, offset_from long, offset_to long"
-        )
+        df = [("t", 0, 0, 9, None)]
         commit_offsets(spark, sd, df)
         assert read_offsets(spark, sd).count() == 1
 
@@ -1222,9 +1220,7 @@ def test_offsets_commit_claim_protocol(spark, tmp_path):
         _break_stale_claim(spark, sd, 3)
         assert not os.path.exists(claim) and os.path.exists(orphan)
         # A later commit (v2) still works...
-        df2 = spark.createDataFrame(
-            [("t", 0, 20, 29)], "topic string, partition int, offset_from long, offset_to long"
-        )
+        df2 = [("t", 0, 20, 29, None)]
         commit_offsets(spark, sd, df2)
         got = {
             (r["offset_from"], r["offset_to"])
@@ -1233,9 +1229,7 @@ def test_offsets_commit_claim_protocol(spark, tmp_path):
         assert got == {(0, 9), (20, 29)}
         # ...and the commit that REACHES version 3 sweeps the incomplete
         # debris instead of livelocking on rename-refused ClaimLost retries.
-        df3 = spark.createDataFrame(
-            [("t", 0, 40, 49)], "topic string, partition int, offset_from long, offset_to long"
-        )
+        df3 = [("t", 0, 40, 49, None)]
         commit_offsets(spark, sd, df3)
         assert os.path.exists(os.path.join(orphan, "_SUCCESS"))
         got = {

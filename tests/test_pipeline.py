@@ -181,18 +181,15 @@ def test_cleaner_rollback_and_reprocess(spark, tmp_path, monkeypatch):
     shutil.rmtree(os.path.join(cfg.target_dir, "projectId=p", "userId=u1"))
     # A peer app commits partition 1 between the cleaner's state read and
     # its rollback commit: the first remove call lands that commit.
-    real_remove, fired = offsets.remove_offsets, []
+    real_remove, fired = offsets.remove_intervals, []
 
     def remove_after_peer_commit(state, to_remove):
         if not fired:
             fired.append(1)
-            peer = spark.createDataFrame(
-                [("events", 1, 0, 9)], "topic string, partition int, offset_from long, offset_to long"
-            )
-            offsets.commit_offsets(spark, cfg.state_dir, peer)
+            offsets.commit_offsets(spark, cfg.state_dir, [("events", 1, 0, 9, None)])
         return real_remove(state, to_remove)
 
-    monkeypatch.setattr(offsets, "remove_offsets", remove_after_peer_commit)
+    monkeypatch.setattr(offsets, "remove_intervals", remove_after_peer_commit)
     cleaned = run_avro_cleaner_job(spark, src, cfg, now_s=now)
     assert cleaned["deleted"] == [paths[0]]
     assert cleaned["rolled_back"] == [paths[1]]
@@ -259,12 +256,8 @@ def test_offsets_commit_hadoop_fs_uri(spark, tmp_path):
     )
 
     state_dir = f"file://{tmp_path}/state"
-    r1 = spark.createDataFrame(
-        [("t", 0, 0, 9)], "topic string, partition int, offset_from long, offset_to long"
-    )
-    r2 = spark.createDataFrame(
-        [("t", 0, 10, 19)], "topic string, partition int, offset_from long, offset_to long"
-    )
+    r1 = [("t", 0, 0, 9, None)]
+    r2 = [("t", 0, 10, 19, None)]
     commit_offsets(spark, state_dir, r1)
     commit_offsets(spark, state_dir, r2)
     got = [

@@ -18,6 +18,7 @@ from restructure_hdfs_topic_spark.config import (
     WorkerConfig,
 )
 from restructure_hdfs_topic_spark.plans.avro_job import run_avro_restructure_job
+from tests.avro_tree import reference_shaped_tree
 
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
@@ -85,30 +86,38 @@ def test_template_layout_matches_reference_golden_tree(spark, tmp_path):
     assert _tree(cfg.target_dir) == files
 
 
-@needs_fixtures
 def test_template_layout_append_merges_existing_bins(spark, tmp_path):
     """Reprocessing into an existing bin must APPEND (reference
     FileCache.kt:61-103 semantics), not clobber: run the job, roll back the
-    committed offsets, run again — rows double, header stays single."""
+    committed offsets, run again — rows double, header stays single.  Over
+    a tree shaped like the reference's fixtures and, when present, the
+    fixtures themselves."""
     from restructure_hdfs_topic_spark.operators.offsets import replace_offsets
 
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="csv",
-        worker=WorkerConfig(minimum_file_age_s=0),
-        paths=PathConfig(layout="template"),
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg)
-    # Forget the commits (simulates a re-delivered source prefix).
-    replace_offsets(spark, cfg.state_dir, lambda s: s.limit(0))
-    run_avro_restructure_job(spark, FIXTURES, cfg)
-    with open(os.path.join(cfg.target_dir, FIRST, "20200128_1300.csv")) as fh:
-        lines = fh.read().splitlines()
-    assert lines[0].startswith("key.projectId")
-    assert sum(1 for l in lines if l.startswith("key.projectId")) == 1
-    assert len(lines) == 1 + 4  # 2 rows per run
+    def appended_bin(src: str, out) -> list[str]:
+        cfg = RestructureConfig(
+            target_dir=str(out / "out"),
+            state_dir=str(out / "state"),
+            format="csv",
+            worker=WorkerConfig(minimum_file_age_s=0),
+            paths=PathConfig(layout="template"),
+        )
+        os.makedirs(cfg.state_dir, exist_ok=True)
+        run_avro_restructure_job(spark, src, cfg)
+        # Forget the commits (simulates a re-delivered source prefix).
+        replace_offsets(spark, cfg.state_dir, lambda s: [])
+        run_avro_restructure_job(spark, src, cfg)
+        with open(os.path.join(cfg.target_dir, FIRST, "20200128_1300.csv")) as fh:
+            return fh.read().splitlines()
+
+    trees = [(reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree")]
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        trees.append((FIXTURES, tmp_path / "golden"))
+    for src, out in trees:
+        lines = appended_bin(src, out)
+        assert lines[0].startswith("key.projectId")
+        assert sum(1 for l in lines if l.startswith("key.projectId")) == 1
+        assert len(lines) == 1 + 4  # 2 rows per run
 
 
 @needs_fixtures
@@ -234,8 +243,6 @@ def test_template_layout_time_pattern_and_source_tree(spark, tmp_path):
     sanitized sourceId as path segments, bin filename at the leaf.  Over a
     tree shaped like the reference's fixtures and, when present, the
     fixtures themselves."""
-    from tests.avro_tree import reference_shaped_tree
-
     src = reference_shaped_tree(str(tmp_path / "in"), accel_records=40)
     _time_pattern_and_source_tree(spark, src, tmp_path / "tree", 46)
     if os.path.isdir(FIXTURES):  # the reference's golden tree
