@@ -94,9 +94,6 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
 
         master = f"local[{args.num_threads}]" if args.num_threads else "local[*]"
         spark = get_spark("restructure", master=master)
-    import os
-
-    os.makedirs(cfg.state_dir, exist_ok=True) if "://" not in cfg.state_dir else None
     from restructure_hdfs_topic_spark.plans.avro_job import (
         run_avro_cleaner_job,
         run_avro_restructure_job,

@@ -10,308 +10,21 @@ The repack touches each output file once; at cluster scale the same loop
 runs in executors over a parallelized path list — kept driver-side here
 because zip output is a compatibility format, not a hot path.
 
-Remote stores: a ``scheme://`` target repacks through the Hadoop
-FileSystem API (the reference streams zip everywhere,
-compression/ZipCompression.kt:16-29) — the zip entry is STREAM-written in
-bounded chunks straight into an ``FSDataOutputStream`` (Python's zipfile
-falls back to data-descriptor mode on the unseekable sink, so no local
-staging file and no whole-file buffering on the write side).  The same
-code path serves file://, hdfs://, s3a://, abfss:// — tests pin it via
-file:// URIs, which exercise the identical py4j stream plumbing.
+Every file access goes through ``storage``: one listing, and one zip
+writer that streams each entry in bounded chunks from the store's reader
+into the store's writer, whatever the scheme (the reference streams zip
+everywhere).  On a Hadoop store the writer cannot seek, so zipfile writes
+in data-descriptor mode: no local staging file, no whole-file buffer.
 """
 
 from __future__ import annotations
 
-import os
+import shutil
 import zipfile
 
-SPARK_WRITER_CODECS = {"gzip", "none", None}
+from restructure_hdfs_topic_spark import storage
 
 _CHUNK = 8 * 1024 * 1024
-
-
-def _is_uri(path: str) -> bool:
-    """Hadoop renders ``Path.toString()`` with a SINGLE slash
-    (``file:/tmp/x``), so a bare ``"://" in path`` misses round-tripped
-    paths — accept any ``scheme:/`` prefix."""
-    import re
-
-    return re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:/", path) is not None
-
-
-class _HadoopSink:
-    """Write-only file-like over an ``FSDataOutputStream`` (py4j handle).
-    Exposes ``write``/``tell``/``flush`` but NOT ``seek`` — zipfile then
-    writes in data-descriptor mode, which is exactly the streaming layout
-    an object store needs."""
-
-    def __init__(self, stream):
-        self._s = stream
-        self._pos = 0
-
-    def write(self, b) -> int:
-        if b:
-            self._s.write(bytearray(b))
-            self._pos += len(b)
-        return len(b)
-
-    def tell(self) -> int:
-        return self._pos
-
-    def flush(self) -> None:
-        self._s.flush()
-
-
-def _hadoop_fs(spark, uri: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(uri)
-    return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _read_chunks(jvm, stream, size: int):
-    """Yield the stream's bytes in bounded chunks: commons-io
-    ``toByteArray(in, n)`` reads exactly n bytes and py4j ships a Java
-    ``byte[]`` back as one efficient bytearray (no per-element bridge)."""
-    io_utils = jvm.org.apache.commons.io.IOUtils
-    remaining = int(size)
-    while remaining > 0:
-        n = min(_CHUNK, remaining)
-        yield bytes(io_utils.toByteArray(stream, n))
-        remaining -= n
-
-
-def _repack_to_zip_hadoop(spark, target_dir: str, extensions) -> list[str]:
-    jvm, fs, root = _hadoop_fs(spark, target_dir)
-    todo = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath()
-        name = p.getName()
-        if name.endswith(tuple(extensions)) and not name.startswith(("_", ".")):
-            todo.append((p, name, st.getLen()))
-    created: list[str] = []
-    for p, name, size in todo:
-        dst = jvm.org.apache.hadoop.fs.Path(p.getParent(), name + ".zip")
-        out = fs.create(dst, True)
-        try:
-            sink = _HadoopSink(out)
-            with zipfile.ZipFile(
-                sink, "w", zipfile.ZIP_DEFLATED, compresslevel=7
-            ) as zf:
-                src = fs.open(p)
-                try:
-                    with zf.open(name, "w") as entry:
-                        for chunk in _read_chunks(jvm, src, size):
-                            entry.write(chunk)
-                finally:
-                    src.close()
-        finally:
-            out.close()
-        fs.delete(p, False)
-        created.append(str(dst.toString()))
-    return created
-
-
-def write_small_file(path: str, payload: bytes, spark=None) -> None:
-    """Write one small artifact (a meta/manifest-sized blob, not data) to
-    a local path or — given ``spark`` — any Hadoop ``scheme://`` store.
-    Shared by the zip/BPE/IVF artifact writers so the stream plumbing has
-    ONE implementation."""
-    if _is_uri(path):
-        if spark is None:
-            raise ValueError(f"writing {path!r} over a URI needs spark")
-        _jvm, fs, p = _hadoop_fs(spark, path)
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-        return
-    with open(path, "wb") as fh:
-        fh.write(payload)
-
-
-def delete_small_file(path: str, spark=None) -> bool:
-    """Delete one small artifact if present (counterpart of
-    ``write_small_file``); returns whether anything was removed.  Used to
-    INVALIDATE a meta file before rewriting the artifacts it describes —
-    a build killed mid-way then presents as "no meta" (stale, rebuild)
-    instead of serving new data against the previous meta."""
-    if _is_uri(path):
-        if spark is None:
-            raise ValueError(f"deleting {path!r} over a URI needs spark")
-        _jvm, fs, p = _hadoop_fs(spark, path)
-        return bool(fs.delete(p, False)) if fs.exists(p) else False
-    import os
-
-    try:
-        os.remove(path)
-        return True
-    except FileNotFoundError:
-        return False
-
-
-def small_file_exists(path: str, spark=None) -> bool:
-    """Existence check with ``write_small_file``'s path semantics (local
-    path or any Hadoop ``scheme://`` store); true for files AND
-    directories — used to distinguish "no index here, bootstrap" from
-    "index artifacts present but meta unreadable, refuse" (ADVICE r11)."""
-    if _is_uri(path):
-        if spark is None:
-            raise ValueError(f"checking {path!r} over a URI needs spark")
-        _jvm, fs, p = _hadoop_fs(spark, path)
-        return bool(fs.exists(p))
-    import os
-
-    return os.path.exists(path)
-
-
-class _FaultInjected(RuntimeError):
-    """Raised by a monkeypatched ``_fault_point`` in crash-path tests."""
-
-
-def _fault_point(tag: str) -> None:
-    """Fault-injection hook: a NO-OP in production.  Crash-surface tests
-    (tests/test_r13_properties.py) monkeypatch it to raise
-    ``_FaultInjected`` at a chosen point of the atomic-publish fallback
-    protocol, pinning the invariant that a reader always recovers SOME
-    valid version at every crash point — the standard storage-engine
-    fault-injection pattern (e.g. LevelDB/RocksDB FaultInjectionTestEnv)."""
-
-
-def write_small_file_atomic(path: str, payload: bytes, spark=None) -> None:
-    """Publish a small artifact ATOMICALLY: write to ``<path>.tmp`` then
-    replace the target in one operation — ``os.replace`` locally (atomic
-    on POSIX); ``FileContext.rename(…, Options.Rename.OVERWRITE)`` for
-    ``scheme://`` targets (the single-op overwrite-rename HDFS exposes —
-    the old FileSystem-API delete→rename pair had a crash window where
-    NEITHER version existed, ADVICE r11).  Where ``FileContext`` is
-    unavailable (some object-store connectors), falls back to renaming
-    the CURRENT version aside to ``<path>.old`` before renaming the new
-    one in, so at least one durable version exists at every instant (a
-    reader that misses ``path`` can recover from ``.old`` — see
-    ``read_small_file_fallback``).  Used for meta files whose PREVIOUS
-    version must stay valid until the new one is fully durable (segment
-    appends)."""
-    tmp = f"{path}.tmp"
-    if _is_uri(path):
-        if spark is None:
-            raise ValueError(f"writing {path!r} over a URI needs spark")
-        write_small_file(tmp, payload, spark=spark)
-        _fault_point("atomic.tmp_written")
-        jvm, fs, p_dst = _hadoop_fs(spark, path)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        try:
-            _fault_point("atomic.filecontext")
-            rename_enum = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
-            fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-                p_dst.toUri(), spark._jsc.hadoopConfiguration()
-            )
-            opts = spark.sparkContext._gateway.new_array(rename_enum, 1)
-            opts[0] = rename_enum.OVERWRITE
-            fc.rename(p_tmp, p_dst, opts)
-            return
-        except _FaultInjected:
-            pass  # test-forced fallback (same handling as no-FileContext)
-        except Exception:
-            # No FileContext for this scheme — keep one valid version
-            # visible at all times: current → .old, tmp → path, drop .old.
-            pass
-        p_old = jvm.org.apache.hadoop.fs.Path(f"{path}.old")
-        if fs.exists(p_dst):
-            if fs.exists(p_old):
-                fs.delete(p_old, False)
-            _fault_point("fallback.stale_old_cleared")
-            if not fs.rename(p_dst, p_old):
-                raise OSError(f"atomic publish of {path!r} failed moving old aside")
-            _fault_point("fallback.aside_done")
-        if not fs.rename(p_tmp, p_dst):
-            raise OSError(f"atomic publish of {path!r} failed at rename")
-        _fault_point("fallback.renamed_in")
-        fs.delete(p_old, False)
-        return
-    import os
-
-    with open(tmp, "wb") as fh:
-        fh.write(payload)
-    os.replace(tmp, path)
-
-
-def read_small_file_fallback(path: str, spark=None) -> bytes:
-    """Read a ``write_small_file_atomic``-published artifact, recovering
-    from the fallback path's one non-atomic instant: if ``path`` is
-    missing but ``<path>.old`` exists (a crash between the aside-rename
-    and the publish-rename), return the previous version — per the
-    contract that the old version stays valid until the new one is
-    durable.  Raises (``FileNotFoundError``/IO error) when neither
-    exists."""
-    try:
-        return read_small_file(path, spark=spark)
-    except Exception as exc:
-        try:
-            return read_small_file(f"{path}.old", spark=spark)
-        except Exception:
-            raise exc
-
-
-def fs_delete_dir(path: str, spark) -> bool:
-    """Recursively delete a directory (local or ``scheme://``) through the
-    Hadoop FileSystem; returns whether anything was removed."""
-    _jvm, fs, p = _hadoop_fs(spark, path)
-    return bool(fs.delete(p, True)) if fs.exists(p) else False
-
-
-def fs_list_dir(path: str, spark) -> list[str]:
-    """Child names (not paths) of a directory through the Hadoop
-    FileSystem; empty list when the directory does not exist.  Used by
-    artifact janitors to reconcile on-disk children against the meta's
-    referenced set."""
-    _jvm, fs, p = _hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return []
-    return [str(st.getPath().getName()) for st in fs.listStatus(p)]
-
-
-def fs_mtime(path: str, spark) -> float | None:
-    """Modification time (epoch seconds) of a file or directory through
-    the Hadoop FileSystem, or ``None`` when the path does not exist.
-    Age-gated janitors (``repair_bm25_index``/``repair_ivf_index``
-    ``min_age_s``) key on the META file's mtime: any dir unreferenced by
-    a meta published ≥ age ago has been unreferenced at least that long."""
-    try:
-        _jvm, fs, p = _hadoop_fs(spark, path)
-        return fs.getFileStatus(p).getModificationTime() / 1000.0
-    except Exception:
-        return None
-
-
-def fs_rename(src: str, dst: str, spark) -> None:
-    """Rename/move a path through the Hadoop FileSystem (atomic on HDFS
-    and posix; copy-based on object stores — callers sequence it before
-    the meta write so a torn move presents as stale, never as valid)."""
-    jvm, fs, p_src = _hadoop_fs(spark, src)
-    p_dst = jvm.org.apache.hadoop.fs.Path(dst)
-    parent = p_dst.getParent()
-    if parent is not None and not fs.exists(parent):
-        fs.mkdirs(parent)
-    if not fs.rename(p_src, p_dst):
-        raise OSError(f"rename {src!r} -> {dst!r} failed")
-
-
-def read_small_file(path: str, spark=None) -> bytes:
-    """Read one small artifact back (counterpart of ``write_small_file``)."""
-    if _is_uri(path):
-        if spark is None:
-            raise ValueError(f"reading {path!r} over a URI needs spark")
-        jvm, fs, p = _hadoop_fs(spark, path)
-        src = fs.open(p)
-        try:
-            return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(src))
-        finally:
-            src.close()
-    with open(path, "rb") as fh:
-        return fh.read()
 
 
 def writer_compression(compression: str | None) -> str | None:
@@ -326,62 +39,38 @@ def repack_to_zip(
     target_dir: str,
     extensions: tuple[str, ...] = (".csv", ".json"),
     spark=None,
+    select=None,
 ) -> list[str]:
-    """Replace every uncompressed data file under ``target_dir`` with a
-    single-entry ``<name>.zip`` (deflate level 7).  Returns created paths.
+    """Replace every uncompressed data file under ``target_dir`` (and, given
+    ``select``, whose path it accepts) with a single-entry ``<name>.zip``
+    (deflate level 7).  Returns the created paths.
 
     Zip is not a Spark writer codec, so this post-pass (reference
-    CompressionFactory.kt zip flavor) walks the written tree.  Local paths
-    use the direct filesystem; ``scheme://`` targets stream through the
-    Hadoop FS API (pass ``spark``) — see the module docstring."""
-    if _is_uri(target_dir):
-        if spark is None:
-            raise ValueError("repack_to_zip over a URI target needs spark")
-        return _repack_to_zip_hadoop(spark, target_dir, extensions)
+    CompressionFactory.kt zip flavor) walks the written tree; a non-local
+    ``target_dir`` needs ``spark``."""
+    st = storage.store(target_dir, spark)
     created = []
-    for dirpath, _dirs, files in os.walk(target_dir):
-        for fname in files:
-            if not fname.endswith(extensions) or fname.startswith(("_", ".")):
-                continue
-            src = os.path.join(dirpath, fname)
-            dst = src + ".zip"
-            with zipfile.ZipFile(dst, "w", zipfile.ZIP_DEFLATED, compresslevel=7) as zf:
-                zf.write(src, arcname=fname)
-            os.remove(src)
-            # Hadoop's local ChecksumFileSystem writes DOT-PREFIXED
-            # sidecars (.<name>.crc); check both spellings so no stale
-            # checksum survives to poison a later same-named write.
-            for crc in (
-                src + ".crc",
-                os.path.join(dirpath, f".{fname}.crc"),
-            ):
-                if os.path.exists(crc):
-                    os.remove(crc)
-            created.append(dst)
+    for path, _mtime, _size in st.list_files(target_dir):
+        name = path.rsplit("/", 1)[-1]
+        if not name.endswith(extensions) or name.startswith(("_", ".")):
+            continue
+        if select is not None and not select(path):
+            continue
+        with st.create(f"{path}.zip") as out:
+            with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED, compresslevel=7) as zf:
+                with st.open(path) as src, zf.open(name, "w") as entry:
+                    shutil.copyfileobj(src, entry, _CHUNK)
+        st.delete(path)
+        created.append(f"{path}.zip")
     return created
 
 
 def read_zip_entry(path: str, spark=None) -> bytes:
     """Read back the single entry of a ``.zip`` output file (the
-    reference's decompress side, CompressionFactory.kt:22-27).  A
-    ``scheme://`` path reads through the Hadoop FS API (zip's central
-    directory needs random access, so one OUTPUT FILE — not the dataset —
-    is buffered; output files are bounded by ``maxRecordsPerFile``)."""
-    if _is_uri(path):
-        if spark is None:
-            raise ValueError("read_zip_entry over a URI path needs spark")
-        import io
-
-        jvm, fs, p = _hadoop_fs(spark, path)
-        src = fs.open(p)
-        try:
-            data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(src))
-        finally:
-            src.close()
-        fobj = io.BytesIO(data)
-    else:
-        fobj = path
-    with zipfile.ZipFile(fobj) as zf:
+    reference's decompress side, CompressionFactory.kt:22-27), through the
+    store's seekable reader: zip's central directory needs random
+    access."""
+    with storage.store(path, spark).open(path) as fh, zipfile.ZipFile(fh) as zf:
         names = zf.namelist()
         if len(names) != 1:
             raise ValueError(f"{path}: expected single-entry zip, found {names}")

@@ -13,7 +13,7 @@ fix had to land in both or silently diverge):
   rests on.
 - **Atomic meta publish LAST**: every artifact a meta describes is
   durably in place before the meta switches to it in one atomic replace
-  (``compression.write_small_file_atomic``); no crash point leaves the
+  (``storage``'s ``replace``); no crash point leaves the
   layout without a valid meta.
 - **Invalidate FIRST on rebuild** (ADVICE r10): a build that overwrites
   dirs the old meta describes deletes the meta (and the atomic
@@ -41,6 +41,8 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
+
+from restructure_hdfs_topic_spark import storage
 
 GEN_WIDTH = 5
 
@@ -99,26 +101,20 @@ def read_meta(spark: SparkSession, meta_path: str) -> dict:
     fallback can leave the previous version at ``<path>.old`` for one
     instant — reading it honors "the old meta stays valid until the new
     one is durable"."""
-    from restructure_hdfs_topic_spark.compression import read_small_file_fallback
-
-    return json.loads(read_small_file_fallback(meta_path, spark=spark).decode("utf-8"))
+    return json.loads(storage.store(meta_path, spark).read_replaced(meta_path).decode("utf-8"))
 
 
 def write_meta(spark: SparkSession, meta_path: str, meta: dict) -> None:
     """Plain (non-atomic) meta write — ONLY for a fresh build, after
     ``invalidate_meta``: there is no previous version a torn write could
     corrupt, and "no meta" is the defined crashed-build state."""
-    from restructure_hdfs_topic_spark.compression import write_small_file
-
-    write_small_file(meta_path, json.dumps(meta).encode("utf-8"), spark=spark)
+    storage.store(meta_path, spark).write(meta_path, json.dumps(meta).encode("utf-8"))
 
 
 def publish_meta(spark: SparkSession, meta_path: str, meta: dict) -> None:
     """THE atomic publish: until this returns, readers see the previous
     meta and its dirs, both fully intact."""
-    from restructure_hdfs_topic_spark.compression import write_small_file_atomic
-
-    write_small_file_atomic(meta_path, json.dumps(meta).encode("utf-8"), spark=spark)
+    storage.store(meta_path, spark).replace(meta_path, json.dumps(meta).encode("utf-8"))
 
 
 def invalidate_meta(spark: SparkSession, meta_path: str) -> None:
@@ -126,21 +122,17 @@ def invalidate_meta(spark: SparkSession, meta_path: str) -> None:
     resurrection fix): delete the meta AND the atomic publisher's
     fallback copies, so a build killed mid-overwrite presents as "no
     meta", never as a stale meta describing half-written dirs."""
-    from restructure_hdfs_topic_spark.compression import delete_small_file
-
+    st = storage.store(meta_path, spark)
     for suffix in ("", ".old", ".tmp"):
-        delete_small_file(f"{meta_path}{suffix}", spark=spark)
+        st.delete(f"{meta_path}{suffix}")
 
 
 def meta_exists(spark: SparkSession, meta_path: str) -> bool:
     """Whether a (possibly fallback-``.old``) published meta exists — the
     explicit existence check bootstrap decisions need (ADVICE r11: a
     transient read error must not look like "first batch")."""
-    from restructure_hdfs_topic_spark.compression import small_file_exists
-
-    return small_file_exists(meta_path, spark=spark) or small_file_exists(
-        f"{meta_path}.old", spark=spark
-    )
+    st = storage.store(meta_path, spark)
+    return st.exists(meta_path) or st.exists(f"{meta_path}.old")
 
 
 # ---------------------------------------------------------------------------
@@ -216,11 +208,10 @@ def drop_tombstone_generation(
     """Remove a just-written no-hit (empty-delta) candidate generation —
     the committed meta never referenced it — and the ``tombstones/``
     parent too when the index has no committed tombstones at all."""
-    from restructure_hdfs_topic_spark.compression import fs_delete_dir
-
-    fs_delete_dir(f"{path}/tombstones/{name}", spark)
+    st = storage.store(path, spark)
+    st.delete(f"{path}/tombstones/{name}", recursive=True)
     if not meta.get("tomb_dir"):
-        fs_delete_dir(f"{path}/tombstones", spark)
+        st.delete(f"{path}/tombstones", recursive=True)
 
 
 # ---------------------------------------------------------------------------
@@ -238,9 +229,7 @@ def age_gate_deferred(
         return False
     import time
 
-    from restructure_hdfs_topic_spark.compression import fs_mtime
-
-    mt = fs_mtime(meta_path, spark)
+    mt = storage.store(meta_path, spark).mtime(meta_path)
     return mt is not None and time.time() - mt < min_age_s
 
 
@@ -274,43 +263,40 @@ def sweep_generational_litter(
     - ``seg_subdir`` children not in ``referenced_segments``;
     - ``extra_dirs`` (scratch like ``compact-tmp``) and the meta's
       ``.tmp``/``.old`` fallback copies."""
-    from restructure_hdfs_topic_spark.compression import (
-        delete_small_file,
-        fs_delete_dir,
-        fs_list_dir,
-    )
+    st = storage.store(path, spark)
+
+    def drop(name: str) -> bool:
+        return st.delete(f"{path}/{name}", recursive=True)
 
     removed: list[str] = []
     if seg_subdir is not None:
         refs = referenced_segments or set()
-        for name in sorted(set(fs_list_dir(f"{path}/{seg_subdir}", spark)) - refs):
-            fs_delete_dir(f"{path}/{seg_subdir}/{name}", spark)
+        for name in sorted(set(st.list_dir(f"{path}/{seg_subdir}")) - refs):
+            drop(f"{seg_subdir}/{name}")
             removed.append(f"{seg_subdir}/{name}")
         if not refs:
             # Nothing referenced: drop the (now empty) parent too, so
             # artifacts-exist probes never see a hollow segments/ shell.
-            fs_delete_dir(f"{path}/{seg_subdir}", spark)
-    for child in sorted(fs_list_dir(path, spark)):
+            drop(seg_subdir)
+    for child in sorted(st.list_dir(path)):
         if child.startswith(tuple(child_prefixes)) and child not in keep_children:
-            fs_delete_dir(f"{path}/{child}", spark)
+            drop(child)
             removed.append(child)
     for d in legacy_kinds:
-        if fs_delete_dir(f"{path}/{d}", spark):
+        if drop(d):
             removed.append(d)
-    for child in sorted(fs_list_dir(f"{path}/tombstones", spark)):
+    for child in sorted(st.list_dir(f"{path}/tombstones")):
         if child != tomb_dir:
-            fs_delete_dir(f"{path}/tombstones/{child}", spark)
+            drop(f"tombstones/{child}")
             removed.append(f"tombstones/{child}")
-    if not tomb_dir and sweep_tomb_parent and fs_delete_dir(
-        f"{path}/tombstones", spark
-    ):
+    if not tomb_dir and sweep_tomb_parent and drop("tombstones"):
         removed.append("tombstones")
     for d in extra_dirs:
-        if fs_delete_dir(f"{path}/{d}", spark):
+        if drop(d):
             removed.append(d)
     if sweep_meta_litter:
         for suffix in (".tmp", ".old"):
-            if delete_small_file(f"{path}/{meta_name}{suffix}", spark=spark):
+            if drop(f"{meta_name}{suffix}"):
                 removed.append(f"{meta_name}{suffix}")
     return removed
 

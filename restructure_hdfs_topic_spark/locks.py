@@ -8,13 +8,11 @@ the key only when the stored UUID is the closer's own (owner-only unlock).
 This is the same lease on the engine's storage instead of Redis — no extra
 service dependency: a lock is an exclusively-created file
 ``<state_dir>/_lock/<name>.lock`` holding ``{owner, expires_at}``.
-``create_exclusive`` is the NX primitive.  On HDFS it is
-``fs.create(path, overwrite=False)``, which the NameNode makes atomic.  On
-a ``file:`` path Hadoop's create is not atomic (``RawLocalFileSystem``
-checks ``exists()`` and then opens, so two creators can both win), and
-the create is ``os.open`` with ``O_CREAT | O_EXCL`` instead.  Object
-stores without atomic create — plain S3 — should keep the STATE dir on a
-consistent store, which the offset commit protocol already requires.
+``storage``'s ``create_exclusive`` is the NX primitive: ``create(path,
+overwrite=False)`` on HDFS, which the NameNode makes atomic, and
+``O_CREAT | O_EXCL`` on the local file system.  Object stores without
+atomic create — plain S3 — should keep the STATE dir on a consistent
+store, which the offset commit protocol already requires.
 The 24 h TTL matches the reference; an expired lock file is broken and
 re-acquired.
 
@@ -25,13 +23,13 @@ one-tree deployment the reference supports.
 
 from __future__ import annotations
 
-import contextlib
 import json
-import os
 import time
 import uuid
 
 from pyspark.sql import SparkSession
+
+from restructure_hdfs_topic_spark import storage
 
 DEFAULT_TTL_S = 24 * 3600  # RedisRemoteLockManager.kt:43 — 24 h lease
 # A crashed breaker's <name>.break mutex file is reclaimable after this.
@@ -39,44 +37,6 @@ BREAK_TTL_S = 300
 # _release refuses to delete a lease this close to expiry: a breaker may
 # already be mid-takeover, and deleting then could remove ITS fresh lock.
 RELEASE_MARGIN_S = 5.0
-
-
-def create_exclusive(fs, path, data: bytes) -> bool:
-    """Create the file ``path`` holding ``data`` unless a file is already
-    there: True when this call created it.  ``fs`` is the Hadoop
-    FileSystem of the Hadoop ``path``, or None when ``path`` is a local
-    path string.  A local file is made with ``O_CREAT | O_EXCL`` and has
-    no ``.crc`` sidecar, which Hadoop's checksummed local FS reads and
-    deletes without complaint.  A create whose write then fails is
-    removed again: a half-written file would hold the name for a TTL."""
-    if fs is None or fs.getScheme() == "file":
-        local = path if fs is None else fs.pathToFile(path).getPath()
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        try:
-            fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o666)
-        except FileExistsError:
-            return False
-        try:
-            with os.fdopen(fd, "wb") as fh:
-                fh.write(data)
-        except OSError:
-            os.remove(local)
-            return False
-        return True
-    try:
-        out = fs.create(path, False)
-    except Exception:
-        return False
-    try:
-        with contextlib.closing(out):
-            out.write(bytearray(data))
-    except Exception:
-        try:
-            fs.delete(path, False)
-        except Exception:
-            pass
-        return False
-    return True
 
 
 class StorageLock:
@@ -106,38 +66,23 @@ class StorageLockManager:
     """
 
     def __init__(self, spark: SparkSession, state_dir: str, ttl_s: int = DEFAULT_TTL_S):
-        self._spark = spark
         self._dir = state_dir.rstrip("/") + "/_lock"
         self._ttl_s = ttl_s
         self.owner = str(uuid.uuid4())
-        jvm = spark._jvm
-        self._HPath = jvm.org.apache.hadoop.fs.Path
-        root = self._HPath(self._dir)
-        self._fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        self._fs.mkdirs(root)
+        self._st = storage.store(self._dir, spark)
 
-    def _path(self, name: str):
-        return self._HPath(self._dir, f"{name}.lock")
+    def _path(self, name: str) -> str:
+        return f"{self._dir}/{name}.lock"
 
-    def _read(self, path) -> dict | None:
+    def _read(self, path: str) -> dict | None:
         try:
-            stream = self._fs.open(path)
-            try:
-                return json.loads(bytes(stream.readAllBytes()).decode())
-            finally:
-                stream.close()
+            return json.loads(self._st.read(path).decode())
         except Exception:
             return None
 
-    def _try_create(self, path) -> bool:
+    def _try_create(self, path: str) -> bool:
         meta = {"owner": self.owner, "expires_at": time.time() + self._ttl_s}
-        return create_exclusive(self._fs, path, json.dumps(meta).encode())
-
-    def _mtime_s(self, path) -> float | None:
-        try:
-            return self._fs.getFileStatus(path).getModificationTime() / 1000.0
-        except Exception:
-            return None
+        return self._st.create_exclusive(path, json.dumps(meta).encode())
 
     def acquire(self, name: str) -> StorageLock | None:
         path = self._path(name)
@@ -154,7 +99,7 @@ class StorageLockManager:
             # Unreadable: likely another creator mid-write (create+write is
             # not atomic) — treat as HELD unless the file itself is
             # TTL-stale by storage mtime (crashed writer).
-            mt = self._mtime_s(path)
+            mt = self._st.mtime(path)
             if mt is not None and mt + self._ttl_s >= time.time():
                 return None
         return self._break_and_reacquire(name, path)
@@ -176,9 +121,9 @@ class StorageLockManager:
         breaker detects by its create failing or by verify-after-create.
         A crashed breaker's mutex file is reclaimed after BREAK_TTL_S.
         """
-        brk = self._HPath(self._dir, f"{name}.break")
+        brk = f"{self._dir}/{name}.break"
         if not self._try_create(brk):
-            mt = self._mtime_s(brk)
+            mt = self._st.mtime(brk)
             if mt is not None and mt + BREAK_TTL_S < time.time():
                 # Crashed-breaker reclaim.  NOT a plain delete: between our
                 # stat and the delete another breaker may have reclaimed
@@ -186,23 +131,23 @@ class StorageLockManager:
                 # two breakers into the critical section.  Tombstone-rename
                 # (one winner), re-check the preserved mtime, and restore
                 # the file if we actually stole a live mutex.
-                tomb = self._HPath(self._dir, f"{name}.break.{self.owner}")
+                tomb = f"{self._dir}/{name}.break.{self.owner}"
                 try:
-                    renamed = self._fs.rename(brk, tomb)
+                    renamed = self._st.rename_no_replace(brk, tomb)
                 except Exception:
                     renamed = False
                 if renamed:
-                    tmt = self._mtime_s(tomb)
+                    tmt = self._st.mtime(tomb)
                     if tmt is not None and tmt + BREAK_TTL_S < time.time():
-                        self._fs.delete(tomb, False)  # truly stale
-                    elif not self._fs.rename(tomb, brk):
-                        self._fs.delete(tomb, False)  # holder re-created; drop ours
+                        self._st.delete(tomb)  # truly stale
+                    elif not self._st.rename_no_replace(tomb, brk):
+                        self._st.delete(tomb)  # holder re-created; drop ours
             return None
         try:
             meta = self._read(path)
             if meta is not None and meta.get("expires_at", 0) >= time.time():
                 return None  # renewed/re-broken while we took the mutex
-            self._fs.delete(path, False)
+            self._st.delete(path)
             if not self._try_create(path):
                 return None  # a fresh NX acquirer slipped in — it owns now
             # Verify-after-create (ADVICE r4): on stores whose create-NX
@@ -214,13 +159,13 @@ class StorageLockManager:
                 # abandoning the file would wedge the topic for the full
                 # TTL with a lock nobody holds.  We created it under the
                 # break mutex, so it is ours — remove it and walk away.
-                self._fs.delete(path, False)
+                self._st.delete(path)
                 return None
             if meta.get("owner") != self.owner:
                 return None
             return StorageLock(self, name)
         finally:
-            self._fs.delete(brk, False)
+            self._st.delete(brk)
 
     def _release(self, name: str) -> None:
         path = self._path(name)
@@ -232,7 +177,7 @@ class StorageLockManager:
             # and our delete could remove ITS fresh lock — abandon the file
             # instead; breakers reclaim it via the expiry path.
             return
-        self._fs.delete(path, False)
+        self._st.delete(path)
 
 
 # A crashed artifact writer's lease self-expires after this; break it

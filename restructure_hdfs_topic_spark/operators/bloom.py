@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from restructure_hdfs_topic_spark import storage
+
 __all__ = [
     "bloom_from_fingerprints",
     "write_bloom_sidecar",
@@ -138,30 +140,25 @@ def _finish_sidecar(
     spark: SparkSession, state_dir: str, meta: dict, keep: set[int]
 ) -> dict:
     """Swap the meta, then best-effort GC of superseded ``data_v*`` dirs
-    through the Hadoop FileSystem (scheme-aware — a local-only rmtree
-    would leak one full sidecar copy PER COMMIT on hdfs://-style state
-    dirs).  ``keep`` retains the new version AND its predecessor: a
+    through ``storage`` (scheme-aware — a local-only rmtree would leak one
+    full sidecar copy PER COMMIT on hdfs://-style state dirs).  ``keep`` retains the new version AND its predecessor: a
     concurrent reader that planned against the prior meta only touches
     the parquet files when its action runs, so the directory it read
     must outlive one more swap (deleting it immediately would fail that
     reader instead of letting the next call rebuild)."""
-    from restructure_hdfs_topic_spark.compression import _hadoop_fs, write_small_file
-
     sub = f"{state_dir.rstrip('/')}/{BLOOM_SUBDIR}"
-    write_small_file(f"{sub}/{_BLOOM_META}", json.dumps(meta).encode(), spark=spark)
+    st = storage.store(sub, spark)
+    st.write(f"{sub}/{_BLOOM_META}", json.dumps(meta).encode())
     try:
-        _jvm, fs, root = _hadoop_fs(spark, sub)
-        if fs.exists(root):
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                drop = name == "data"  # pre-versioned layout leftover
-                if name.startswith("data_v"):
-                    try:
-                        drop = int(name[len("data_v"):]) not in keep
-                    except ValueError:
-                        drop = False
-                if drop:
-                    fs.delete(st.getPath(), True)
+        for name in st.list_dir(sub):
+            drop = name == "data"  # pre-versioned layout leftover
+            if name.startswith("data_v"):
+                try:
+                    drop = int(name[len("data_v"):]) not in keep
+                except ValueError:
+                    drop = False
+            if drop:
+                st.delete(f"{sub}/{name}", recursive=True)
     except Exception:
         pass  # GC is best-effort; a leaked dir is cost, never corruption
     return meta
@@ -335,12 +332,9 @@ def update_bloom_sidecar(
 
 
 def read_bloom_meta(spark: SparkSession, state_dir: str) -> dict | None:
-    from restructure_hdfs_topic_spark.compression import read_small_file
-
+    path = f"{state_dir.rstrip('/')}/{BLOOM_SUBDIR}/{_BLOOM_META}"
     try:
-        raw = read_small_file(
-            f"{state_dir.rstrip('/')}/{BLOOM_SUBDIR}/{_BLOOM_META}", spark=spark
-        )
+        raw = storage.store(path, spark).read(path)
     except Exception:
         return None
     meta = json.loads(raw.decode("utf-8"))

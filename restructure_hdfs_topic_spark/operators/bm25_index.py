@@ -80,6 +80,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from restructure_hdfs_topic_spark import storage
 from restructure_hdfs_topic_spark.functions.text import tokens
 from restructure_hdfs_topic_spark.operators.retrieval import (
     bm25_idf,
@@ -465,9 +466,7 @@ def _write_segment(
         for fut in futs:
             fut.result()
 
-    from restructure_hdfs_topic_spark.compression import fs_list_dir
-
-    children = fs_list_dir(f"{seg_path}/doclens", spark)
+    children = storage.store(seg_path, spark).list_dir(f"{seg_path}/doclens")
     if not any(c.startswith("bucket=") for c in children):
         # Empty input: no part dirs were written, the metrics node may
         # have been pruned — never consult the observation (ADVICE r13
@@ -616,8 +615,7 @@ def compact_bm25_index(
     — now a compactor and an appender serialize on ``<path>/_lock/``
     instead of racing the segment list.
     """
-    from restructure_hdfs_topic_spark.compression import fs_delete_dir
-
+    st = storage.store(path, spark)
     lease = _mutation_lease(spark, path, lock, lock_ttl_s)
     try:
         meta = load_bm25_meta(spark, path)
@@ -772,13 +770,13 @@ def compact_bm25_index(
         # the module docstring).
         if sweep_superseded:
             if (post_dirs or dl_dirs) and old_base != _base_root(meta, path):
-                fs_delete_dir(f"{old_base}/postings", spark)
-                fs_delete_dir(f"{old_base}/vocab", spark)
-                fs_delete_dir(f"{old_base}/doclens", spark)
+                st.delete(f"{old_base}/postings", recursive=True)
+                st.delete(f"{old_base}/vocab", recursive=True)
+                st.delete(f"{old_base}/doclens", recursive=True)
                 if old_base != path:
-                    fs_delete_dir(old_base, spark)
-            fs_delete_dir(f"{path}/segments", spark)
-            fs_delete_dir(f"{path}/tombstones", spark)
+                    st.delete(old_base, recursive=True)
+            st.delete(f"{path}/segments", recursive=True)
+            st.delete(f"{path}/tombstones", recursive=True)
         return meta
     finally:
         if lease is not None:
@@ -824,8 +822,7 @@ def delete_bm25_docs(
     built before it must rebuild once to enable deletes.  Runs under the
     single-writer mutation lease.
     """
-    from restructure_hdfs_topic_spark.compression import fs_delete_dir
-
+    st = storage.store(path, spark)
     lease = _mutation_lease(spark, path, lock, lock_ttl_s)
     try:
         meta = load_bm25_meta(spark, path)
@@ -943,7 +940,7 @@ def delete_bm25_docs(
         # tombstones, so the union converges).
         _write_meta_atomic(spark, f"{path}/{_META}", meta)
         if old_name and sweep_superseded:
-            fs_delete_dir(f"{path}/tombstones/{old_name}", spark)
+            st.delete(f"{path}/tombstones/{old_name}", recursive=True)
         return meta
     finally:
         if lease is not None:
@@ -982,16 +979,12 @@ def repair_bm25_index(
     Returns ``{"removed": [...], "kept": [...]}`` (plus
     ``"deferred": True`` when the age gate skipped the sweep).
     """
-    from restructure_hdfs_topic_spark.compression import (
-        fs_list_dir,
-        small_file_exists,
-    )
-
+    st = storage.store(path, spark)
     lease = _mutation_lease(spark, path, lock, lock_ttl_s)
     try:
         meta = load_bm25_meta(spark, path)  # raises if absent/corrupt
         referenced = [s["name"] for s in meta.get("segments", [])]
-        on_disk = set(fs_list_dir(f"{path}/segments", spark))
+        on_disk = set(st.list_dir(f"{path}/segments"))
         missing = sorted(set(referenced) - on_disk)
         if missing:
             raise RuntimeError(
@@ -1000,16 +993,14 @@ def repair_bm25_index(
                 "the corpus"
             )
         base_name = meta.get("base_dir", "")
-        if int(meta["n_docs"]) > 0 and not small_file_exists(
-            f"{_base_root(meta, path)}/postings", spark=spark
-        ):
+        if int(meta["n_docs"]) > 0 and not st.exists(f"{_base_root(meta, path)}/postings"):
             raise RuntimeError(
                 f"repair_bm25_index: meta references base dir "
                 f"{base_name or '<root>'} whose postings are missing on "
                 "disk — the index is damaged; rebuild from the corpus"
             )
         tomb_name = meta.get("tomb_dir", "")
-        tombs_on_disk = set(fs_list_dir(f"{path}/tombstones", spark))
+        tombs_on_disk = set(st.list_dir(f"{path}/tombstones"))
         if tomb_name and tomb_name not in tombs_on_disk:
             raise RuntimeError(
                 f"repair_bm25_index: meta references tombstone dir "
@@ -1248,14 +1239,10 @@ def bm25_artifacts_exist(spark: SparkSession, path: str) -> bool:
     vocab, doclens, segments, tombstones, or a generational ``base-g*``)
     — artifacts-without-meta means an interrupted build or external
     damage, never a safe bootstrap target."""
-    from restructure_hdfs_topic_spark.compression import (
-        fs_list_dir,
-        small_file_exists,
-    )
-
+    st = storage.store(path, spark)
     if any(
-        small_file_exists(f"{path}/{d}", spark=spark)
+        st.exists(f"{path}/{d}")
         for d in ("postings", "vocab", "doclens", "segments", "tombstones")
     ):
         return True
-    return any(c.startswith("base-g") for c in fs_list_dir(path, spark))
+    return any(c.startswith("base-g") for c in st.list_dir(path))

@@ -308,9 +308,9 @@ def save_bpe(
     application order + optionally the learner's word → pieces table) —
     the piece every real pipeline needs between "learn the tokenizer
     once" and "encode corpora with it forever" (the reference's schema
-    sidecar plays the same artifact role for Avro, SURVEY O24).  Local
-    paths write directly; ``scheme://`` paths stream through the Hadoop
-    FS API (pass ``spark``).  Published ATOMICALLY (r13): concurrent or
+    sidecar plays the same artifact role for Avro, SURVEY O24), through
+    ``storage`` (a non-local path needs ``spark``).  Published ATOMICALLY
+    (r13): concurrent or
     crashed saves leave a complete old or new version, never a torn
     file — last-writer-wins, no lease needed for one self-contained
     artifact."""
@@ -325,9 +325,9 @@ def save_bpe(
         },
         ensure_ascii=False,
     ).encode("utf-8")
-    from restructure_hdfs_topic_spark.compression import write_small_file_atomic
+    from restructure_hdfs_topic_spark import storage
 
-    write_small_file_atomic(path, payload, spark=spark)
+    storage.store(path, spark).replace(path, payload)
 
 
 def load_bpe(
@@ -340,9 +340,9 @@ def load_bpe(
     marker straight to ``bpe_encode``."""
     import json
 
-    from restructure_hdfs_topic_spark.compression import read_small_file
+    from restructure_hdfs_topic_spark import storage
 
-    doc = json.loads(read_small_file(path, spark=spark).decode("utf-8"))
+    doc = json.loads(storage.store(path, spark).read(path).decode("utf-8"))
     if doc.get("format") != "restructure_hdfs_topic_spark/bpe/v1":
         raise ValueError(f"{path}: not a bpe/v1 artifact")
     merges = [tuple(m) for m in doc["merges"]]

@@ -74,11 +74,11 @@ def save_classifier(path: str, model: dict, spark=None) -> None:
     Published ATOMICALLY (r13): last-writer-wins, never a torn file."""
     import json
 
-    from restructure_hdfs_topic_spark.compression import write_small_file_atomic
+    from restructure_hdfs_topic_spark import storage
 
     payload = dict(model, format="restructure_hdfs_topic_spark/quality-clf/v1")
-    write_small_file_atomic(
-        path, json.dumps(payload).encode("utf-8"), spark=spark
+    storage.store(path, spark).replace(
+        path, json.dumps(payload).encode("utf-8")
     )
 
 
@@ -86,9 +86,9 @@ def load_classifier(path: str, spark=None) -> dict:
     """Load a ``save_classifier`` artifact; validates format and shape."""
     import json
 
-    from restructure_hdfs_topic_spark.compression import read_small_file
+    from restructure_hdfs_topic_spark import storage
 
-    doc = json.loads(read_small_file(path, spark=spark).decode("utf-8"))
+    doc = json.loads(storage.store(path, spark).read(path).decode("utf-8"))
     if doc.get("format") != "restructure_hdfs_topic_spark/quality-clf/v1":
         raise ValueError(f"{path}: not a quality-clf/v1 artifact")
     try:

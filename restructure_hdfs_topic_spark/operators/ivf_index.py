@@ -55,6 +55,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from restructure_hdfs_topic_spark import storage
 from restructure_hdfs_topic_spark.operators.similarity import (
     _calibrate_nprobe,
     _collect_lloyd_partials,
@@ -428,9 +429,7 @@ def append_to_ivf_index(
     _check_integral_id(embeddings, id_col)
     lease = artifact_mutation_lease(spark, path, "ivf-mutate", lock=lock)
     try:
-        from restructure_hdfs_topic_spark.compression import small_file_exists
-
-        if small_file_exists(f"{path}/_pq_meta.json", spark=spark):
+        if storage.store(path, spark).exists(f"{path}/_pq_meta.json"):
             raise ValueError(
                 "append_to_ivf_index: this index carries a PQ code store — "
                 "append through append_to_ivfpq_index so the new vectors "
@@ -497,9 +496,8 @@ def _append_generation(
     # only consult the observation when part files exist (ADVICE r13 #3:
     # ``Observation.get`` blocking semantics when metrics never fire are
     # version-sensitive — on a dirless write we never touch it).
-    from restructure_hdfs_topic_spark.compression import fs_list_dir
-
-    children = fs_list_dir(f"{path}/{name}/assignments", spark)
+    st = storage.store(path, spark)
+    children = st.list_dir(f"{path}/{name}/assignments")
     has_data = any(c.startswith("cluster=") for c in children)
     if not has_data:
         n_batch = 0
@@ -521,9 +519,7 @@ def _append_generation(
         # schema inference at read): drop the empty dir and commit only
         # the meta_extra keys, if any (the streaming sink's exactly-once
         # state must advance even on empty batches).
-        from restructure_hdfs_topic_spark.compression import fs_delete_dir
-
-        fs_delete_dir(f"{path}/{name}", spark)
+        st.delete(f"{path}/{name}", recursive=True)
         if meta_extra:
             meta.update(meta_extra)
             meta["version"] = int(meta.get("version", 0)) + 1
@@ -747,9 +743,9 @@ def delete_ivf_vectors(
     with the durable ids; a no-hit delete cleans up its empty-delta
     generation and returns the meta unchanged.  Runs under the
     artifact's single-writer mutation lease."""
-    from restructure_hdfs_topic_spark.compression import fs_delete_dir
     from restructure_hdfs_topic_spark.locks import artifact_mutation_lease
 
+    st = storage.store(path, spark)
     _check_integral_id(ids, id_col)
     lease = artifact_mutation_lease(spark, path, "ivf-mutate", lock=lock)
     try:
@@ -808,7 +804,7 @@ def delete_ivf_vectors(
         meta["version"] = int(meta.get("version", 0)) + 1
         _write_meta_atomic(spark, f"{path}/{_META}", meta)
         if old_name and sweep_superseded:
-            fs_delete_dir(f"{path}/tombstones/{old_name}", spark)
+            st.delete(f"{path}/tombstones/{old_name}", recursive=True)
         return meta
     finally:
         if lease is not None:
@@ -847,13 +843,9 @@ def vacuum_ivf_index(
     ``vacuum_ivf_index`` (equivalence pinned in tests/test_ivf_delete.py).
     The published ``n`` derives from an ``Observation`` riding the
     rewrite (guide §1.4), so it can never disagree with the durable rows."""
-    from restructure_hdfs_topic_spark.compression import (
-        fs_delete_dir,
-        fs_list_dir,
-        small_file_exists,
-    )
     from restructure_hdfs_topic_spark.locks import artifact_mutation_lease
 
+    st = storage.store(path, spark)
     lease = artifact_mutation_lease(spark, path, "ivf-mutate", lock=lock)
     try:
         meta = load_ivf_meta(spark, path)
@@ -881,9 +873,7 @@ def vacuum_ivf_index(
         # The code store moves with the assignments: present when the
         # index carries a PQ meta (covers the fileless-base case where
         # only append generations hold codes) or a base codes/ dir.
-        if small_file_exists(
-            f"{path}/_pq_meta.json", spark=spark
-        ) or small_file_exists(f"{old_base}/codes", spark=spark):
+        if st.exists(f"{path}/_pq_meta.json") or st.exists(f"{old_base}/codes"):
             kinds.append("codes")
         obs = Observation()
 
@@ -916,7 +906,7 @@ def vacuum_ivf_index(
         # all-deleted corpus writes no part files and may prune the
         # metrics node — the append path's ADVICE r13 #3 discipline),
         # observation only when data exists.
-        children = fs_list_dir(f"{path}/{new_base}/assignments", spark)
+        children = st.list_dir(f"{path}/{new_base}/assignments")
         if any(c.startswith("cluster=") for c in children):
             n_live = int(obs.get["n"])
         else:
@@ -934,12 +924,12 @@ def vacuum_ivf_index(
         # the module docstring.
         if sweep_superseded:
             for kind in kinds:
-                fs_delete_dir(f"{old_base}/{kind}", spark)
+                st.delete(f"{old_base}/{kind}", recursive=True)
             if old_base != path:
-                fs_delete_dir(old_base, spark)
+                st.delete(old_base, recursive=True)
             for a in appends:
-                fs_delete_dir(f"{path}/{a['name']}", spark)
-            fs_delete_dir(f"{path}/tombstones", spark)
+                st.delete(f"{path}/{a['name']}", recursive=True)
+            st.delete(f"{path}/tombstones", recursive=True)
         return meta
     finally:
         if lease is not None:
@@ -962,27 +952,21 @@ def repair_ivf_index(
     while the committed meta is younger than that (reader grace — see
     the module docstring's reader contract); damage validation still
     runs.  Returns ``{"removed": [...]}.``"""
-    from restructure_hdfs_topic_spark.compression import (
-        fs_delete_dir,
-        fs_list_dir,
-        small_file_exists,
-    )
     from restructure_hdfs_topic_spark.locks import artifact_mutation_lease
 
+    st = storage.store(path, spark)
     lease = artifact_mutation_lease(spark, path, "ivf-mutate", lock=lock)
     try:
         meta = load_ivf_meta(spark, path)
         base_name = meta.get("base_dir", "")
-        if not small_file_exists(
-            f"{_ivf_base_root(meta, path)}/assignments", spark=spark
-        ):
+        if not st.exists(f"{_ivf_base_root(meta, path)}/assignments"):
             raise RuntimeError(
                 f"repair_ivf_index: meta references base "
                 f"{base_name or '<root>'} whose assignments are missing — "
                 "the index is damaged; rebuild from the corpus"
             )
         tomb_name = meta.get("tomb_dir", "")
-        tombs_on_disk = set(fs_list_dir(f"{path}/tombstones", spark))
+        tombs_on_disk = set(st.list_dir(f"{path}/tombstones"))
         if tomb_name and tomb_name not in tombs_on_disk:
             raise RuntimeError(
                 f"repair_ivf_index: meta references tombstone dir "
@@ -993,7 +977,7 @@ def repair_ivf_index(
         missing_appends = [
             a
             for a in append_names
-            if not small_file_exists(f"{path}/{a}/assignments", spark=spark)
+            if not st.exists(f"{path}/{a}/assignments")
         ]
         if missing_appends:
             raise RuntimeError(
@@ -1098,36 +1082,26 @@ def ivf_artifacts_exist(spark: SparkSession, path: str) -> bool:
     — artifacts-without-meta means an interrupted build or external
     damage, never a safe bootstrap target (the ``bm25_artifacts_exist``
     twin)."""
-    from restructure_hdfs_topic_spark.compression import (
-        fs_list_dir,
-        small_file_exists,
-    )
-
+    st = storage.store(path, spark)
     if any(
-        small_file_exists(f"{path}/{d}", spark=spark)
+        st.exists(f"{path}/{d}")
         for d in ("assignments", "centroids", "tombstones")
     ):
         return True
     return any(
-        c.startswith(("base-g", "append-g")) for c in fs_list_dir(path, spark)
+        c.startswith(("base-g", "append-g")) for c in st.list_dir(path)
     )
 
 
 def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    from restructure_hdfs_topic_spark.compression import write_small_file
-
-    write_small_file(path, json.dumps(meta).encode("utf-8"), spark=spark)
+    storage.store(path, spark).write(path, json.dumps(meta).encode("utf-8"))
 
 
 def _write_meta_atomic(spark: SparkSession, path: str, meta: dict) -> None:
-    from restructure_hdfs_topic_spark.compression import write_small_file_atomic
-
-    write_small_file_atomic(path, json.dumps(meta).encode("utf-8"), spark=spark)
+    storage.store(path, spark).replace(path, json.dumps(meta).encode("utf-8"))
 
 
 def _read_meta(spark: SparkSession, path: str) -> dict:
     # Fallback-aware: the atomic publish's object-store fallback can
     # leave the previous version at <path>.old for one instant.
-    from restructure_hdfs_topic_spark.compression import read_small_file_fallback
-
-    return json.loads(read_small_file_fallback(path, spark=spark).decode("utf-8"))
+    return json.loads(storage.store(path, spark).read_replaced(path).decode("utf-8"))

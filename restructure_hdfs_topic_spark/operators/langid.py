@@ -396,17 +396,17 @@ def save_lang_profiles(path: str, profiles: dict, spark=None) -> None:
     """One JSON artifact via the shared small-file plumbing (local or any
     Hadoop ``scheme://``) — train rarely, classify everywhere.
     Published ATOMICALLY (r13): last-writer-wins, never a torn file."""
-    from restructure_hdfs_topic_spark.compression import write_small_file_atomic
+    from restructure_hdfs_topic_spark import storage
 
     if profiles.get("format") != "restructure_hdfs_topic_spark/langid/v1":
         raise ValueError("not a langid/v1 profile artifact")
-    write_small_file_atomic(path, json.dumps(profiles).encode("utf-8"), spark=spark)
+    storage.store(path, spark).replace(path, json.dumps(profiles).encode("utf-8"))
 
 
 def load_lang_profiles(path: str, spark=None) -> dict:
-    from restructure_hdfs_topic_spark.compression import read_small_file
+    from restructure_hdfs_topic_spark import storage
 
-    profiles = json.loads(read_small_file(path, spark=spark).decode("utf-8"))
+    profiles = json.loads(storage.store(path, spark).read(path).decode("utf-8"))
     if profiles.get("format") != "restructure_hdfs_topic_spark/langid/v1":
         raise ValueError(f"{path}: not a langid/v1 profile artifact")
     return profiles

@@ -204,7 +204,7 @@ def save_pca_model(model: PcaModel, path: str, spark=None) -> None:
     mutation lease is needed."""
     import json
 
-    from restructure_hdfs_topic_spark.compression import write_small_file_atomic
+    from restructure_hdfs_topic_spark import storage
 
     payload = {
         "format": "restructure_hdfs_topic_spark/pca/v1",
@@ -214,16 +214,16 @@ def save_pca_model(model: PcaModel, path: str, spark=None) -> None:
         "comps_int": [[int(x) for x in row] for row in model.comps_int],
         "eigvals_hex": [float(x).hex() for x in model.eigvals],
     }
-    write_small_file_atomic(path, json.dumps(payload).encode("utf-8"), spark=spark)
+    storage.store(path, spark).replace(path, json.dumps(payload).encode("utf-8"))
 
 
 def load_pca_model(path: str, spark=None) -> PcaModel:
     """Load a model saved by ``save_pca_model`` (bit-exact round-trip)."""
     import json
 
-    from restructure_hdfs_topic_spark.compression import read_small_file
+    from restructure_hdfs_topic_spark import storage
 
-    p = json.loads(read_small_file(path, spark=spark).decode("utf-8"))
+    p = json.loads(storage.store(path, spark).read(path).decode("utf-8"))
     if p.get("format") != "restructure_hdfs_topic_spark/pca/v1":
         raise ValueError(f"not a PCA model artifact: {path}")
     return PcaModel(

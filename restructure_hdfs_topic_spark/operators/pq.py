@@ -635,10 +635,10 @@ def _build_pq_for_ivf(
         "dsub_max": int(books.shape[2]),
         "books": flat,
     }
-    from restructure_hdfs_topic_spark.compression import write_small_file
+    from restructure_hdfs_topic_spark import storage
 
-    write_small_file(
-        f"{path}/{_PQ_META}", json.dumps(pq_meta).encode("utf-8"), spark=spark
+    storage.store(path, spark).write(
+        f"{path}/{_PQ_META}", json.dumps(pq_meta).encode("utf-8")
     )
     return pq_meta
 
@@ -646,10 +646,10 @@ def _build_pq_for_ivf(
 def _load_books(spark: SparkSession, path: str):
     import numpy as np
 
-    from restructure_hdfs_topic_spark.compression import read_small_file
+    from restructure_hdfs_topic_spark import storage
 
     try:
-        raw = read_small_file(f"{path}/{_PQ_META}", spark=spark)
+        raw = storage.store(path, spark).read(f"{path}/{_PQ_META}")
     except Exception as exc:
         raise ValueError(
             f"{path}: no ivfpq/v1 code store (run build_pq_for_ivf)"

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from restructure_hdfs_topic_spark import storage
 from restructure_hdfs_topic_spark.config import RestructureConfig
 from restructure_hdfs_topic_spark.functions.paths import sanitize_id
 from restructure_hdfs_topic_spark.functions.time import event_time, time_bin
@@ -281,7 +282,10 @@ def _write_topic(
             writer = writer.option("compression", codec)
         writer.json(dest)
     if config.compression == "zip":
-        repack_to_zip(dest, spark=organized.sparkSession)
+        # Only this topic's files: the hive tree holds every topic's, and
+        # the schema sidecars at its root.
+        in_topic = None if template_mode else (lambda p: f"/topic={topic}/" in p)
+        repack_to_zip(dest, spark=organized.sparkSession, select=in_topic)
     if template_mode:
         from restructure_hdfs_topic_spark.plans.layout import finalize_template_layout
 
@@ -345,28 +349,10 @@ def _sidecar_json(schema: StructType, record_type: StructType) -> str:
 
 def _write_schema_sidecar(spark: SparkSession, schema_json: str, output_dir: str, topic: str) -> None:
     """``schema-<topic>.json`` once per topic dir (worker/FileCacheStore.kt:100-116),
-    written through the Hadoop FileSystem API so the sidecar lands on
-    whatever store the output does (file://, s3a://, …)."""
-    from py4j.protocol import Py4JJavaError
-
-    jvm = spark._jvm
-    out_path = jvm.org.apache.hadoop.fs.Path(output_dir)
-    fs = out_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(out_path)
-    path = jvm.org.apache.hadoop.fs.Path(output_dir, f"schema-{topic}.json")
-    if fs.exists(path):
-        return
-    try:
-        stream = fs.create(path, False)
-    except Py4JJavaError:
-        # Exists-then-create is a TOCTOU window: a concurrent instance
-        # winning the sidecar create is benign — the data write already
-        # succeeded and the sidecar content is identical.
-        return
-    try:
-        stream.write(bytearray(schema_json, "utf-8"))
-    finally:
-        stream.close()
+    created exclusively in the output's store: of concurrent instances one
+    writes it, and the sidecar content is identical anyway."""
+    path = f"{output_dir.rstrip('/')}/schema-{topic}.json"
+    storage.store(output_dir, spark).create_exclusive(path, schema_json.encode())
 
 
 def extract_time_seconds(df: DataFrame, flattened: bool) -> F.Column:
@@ -588,6 +574,7 @@ def run_avro_cleaner_job(
         if tc.exclude or tc.exclude_from_delete
     }
     topics = walk_topics(input_root, exclude=excluded, spark=spark)
+    source = storage.store(input_root, spark)
     counters: dict = {"deleted": [], "rolled_back": [], "kept": [], "locked": []}
     contains = committed_range_index(read_intervals(spark, config.state_dir))
 
@@ -644,13 +631,10 @@ def run_avro_cleaner_job(
                 .collect()
             )
             extracted = {r["filename"]: r["n_records"] == r["n_extracted"] for r in verdict}
-            jvm = spark._jvm
-            hconf = spark._jsc.hadoopConfiguration()
             for f in candidates:
                 fname = f.path.rsplit("/", 1)[-1]
                 if extracted.get(fname):
-                    p = jvm.org.apache.hadoop.fs.Path(f.path)
-                    p.getFileSystem(hconf).delete(p, False)
+                    source.delete(f.path)
                     counters["deleted"].append(f.path)
                 else:
                     rollback_ranges.append(
@@ -737,6 +721,7 @@ def run_avro_restructure_job(
             config.target.local_user_id,
             config.target.local_group_id,
             since_s=job_start - 60,
+            spark=spark,
         )
     return counters
 

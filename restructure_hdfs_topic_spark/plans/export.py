@@ -137,10 +137,7 @@ def _write_manifest(spark, tagged: DataFrame, path: str, token_count_col):
     ``executeCollect`` — no job, no Python worker."""
     import json as _json
 
-    from restructure_hdfs_topic_spark.compression import (
-        fs_delete_dir,
-        write_small_file,
-    )
+    from restructure_hdfs_topic_spark import storage
 
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     if token_count_col is not None:
@@ -156,15 +153,10 @@ def _write_manifest(spark, tagged: DataFrame, path: str, token_count_col):
         _json.dumps({f: r[f] for f in fields}, separators=(",", ":")) + "\n"
         for r in rows
     )
-    fs_delete_dir(f"{path}/manifest", spark)
-    if "://" not in path:
-        import os as _os
-
-        _os.makedirs(f"{path}/manifest", exist_ok=True)
-    write_small_file(
-        f"{path}/manifest/part-00000.json", payload.encode("utf-8"), spark=spark
-    )
-    write_small_file(f"{path}/manifest/_SUCCESS", b"", spark=spark)
+    st = storage.store(path, spark)
+    st.delete(f"{path}/manifest", recursive=True)
+    st.write(f"{path}/manifest/part-00000.json", payload.encode("utf-8"))
+    st.write(f"{path}/manifest/_SUCCESS", b"")
     if not rows:
         return spark.createDataFrame([], agg.schema)
     # All-integer manifest rows → a literal VALUES relation (safe to

@@ -26,11 +26,10 @@ directories, not filenames), so template mode is a two-phase sink:
    once per bin instead of once per append).  Moves run on a thread pool:
    S3/ABFS metadata latency dominates, not CPU.
 
-On a checksummed filesystem (Hadoop's local FS) the staged parts carry
-hidden ``.crc`` sidecars.  Files are placed through the raw filesystem
-underneath, so no sidecar follows them into the analyst-facing tree, and a
-replaced destination is deleted through the checksummed one, so its old
-sidecar goes with it (a stale one fails every later checksummed read).
+All I/O goes through ``storage``.  On the local file system the staged
+parts carry hidden ``.crc`` sidecars (Spark writes through Hadoop's
+checksummed local FS): reads of staged parts verify them, while renames,
+merged writes and sidecar creates leave none in the analyst-facing tree.
 
 Append semantics across batches match the reference: when the destination
 file already exists (a later batch touched an old bin), the staged part is
@@ -54,12 +53,12 @@ import io
 import os
 import re
 from concurrent.futures import ThreadPoolExecutor
-from urllib.parse import unquote, urlparse
+from urllib.parse import unquote
 
-from py4j.java_gateway import is_instance_of
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from restructure_hdfs_topic_spark import storage
 from restructure_hdfs_topic_spark.functions.paths import sanitize_id, validate_template
 
 _PART_EXT_RE = re.compile(r"\.(csv|json)(\.[A-Za-z0-9]+)?$")
@@ -257,8 +256,10 @@ def finalize_template_layout(
     sidecar in every touched output directory
     (worker/FileCacheStore.kt:100-116 puts it next to the data files).
 
-    All I/O goes through the Hadoop FileSystem API, so the layout works on
-    whatever store ``target_dir`` names.  Returns the final paths written.
+    All I/O goes through ``storage``, so the layout works on whatever
+    store ``target_dir`` names.  Returns the final paths written, in the
+    form ``target_dir`` was given.  A merged destination is replaced
+    atomically.
 
     ``apply_local_attrs`` applies the reference's STORE-time POSIX
     attributes right after each checked rename — 0644 on the stored
@@ -271,27 +272,20 @@ def finalize_template_layout(
     flag a no-op.
     """
     check_physical_template(template)
+    # Staging lives under the target: one store serves both.
+    st = storage.store(staging_dir, spark)
+    target = target_dir.rstrip("/")
+    # POSIX attributes exist only on the local file system (a scheme-less
+    # target can resolve to hdfs:// through fs.defaultFS): the documented
+    # no-op elsewhere.
+    attrs_root = storage.local_path(target_dir, spark) if apply_local_attrs else None
 
-    def _local_path(p: str) -> str | None:
-        # Hadoop stringifies local paths as file:/abs (single slash) or
-        # file:///abs; plain paths pass through; any authority
-        # (file://host/...) or other scheme is not locally addressable.
-        u = urlparse(p)
-        if u.scheme in ("", "file") and not u.netloc:
-            return u.path or "/"
-        return None
-
-    attrs_root = None
-
-    def _store_attrs(dest_str: str) -> None:
+    def _store_attrs(dest: str) -> None:
         """Reference store()-parity attributes, applied right after the
         checked rename: 0644 file, 0755 dirs up to the target root,
         uid/gid when configured >= 0.  chown errors propagate like the
         reference's unhandled IOException."""
         if attrs_root is None:
-            return
-        lp = _local_path(dest_str)
-        if lp is None:
             return
         from restructure_hdfs_topic_spark.target_attrs import (
             DIR_MODE,
@@ -299,6 +293,7 @@ def finalize_template_layout(
         )
 
         root_abs = os.path.abspath(attrs_root)
+        lp = os.path.join(root_abs, dest[len(target) + 1 :])
 
         def _own(path: str) -> None:
             if local_user_id >= 0 or local_group_id >= 0:
@@ -310,7 +305,7 @@ def finalize_template_layout(
 
         os.chmod(lp, FILE_MODE)
         _own(lp)
-        d = os.path.dirname(os.path.abspath(lp))
+        d = os.path.dirname(lp)
         # Exact-boundary prefix check: a sibling like <root>2 must not
         # match <root>.
         while d == root_abs or d.startswith(root_abs + os.sep):
@@ -320,39 +315,15 @@ def finalize_template_layout(
                 break
             d = os.path.dirname(d)
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    staging_path = HPath(staging_dir)
-    fs = staging_path.getFileSystem(hconf)
-    # ``place_fs`` creates and renames without .crc sidecars; ``fs`` reads
-    # (verifying staged parts) and deletes (taking sidecars along).
-    place_fs = (
-        fs.getRawFileSystem()
-        if is_instance_of(spark.sparkContext._gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem")
-        else fs
-    )
-    if apply_local_attrs:
-        # Gate on the TARGET's actual filesystem (a scheme-less path can
-        # resolve to hdfs:// via fs.defaultFS): POSIX attributes exist
-        # only on the local FS — the documented no-op otherwise.
-        t_fs = HPath(target_dir).getFileSystem(hconf)
-        if t_fs.getScheme() == "file":
-            attrs_root = _local_path(target_dir)
-    if not fs.exists(staging_path):
-        return []
-
-    # Group staged parts by their full partition-value tuple: RemoteIterator
-    # walk, driver memory O(parts this batch) — the same listing the write
-    # itself produced.  Every `name=value` path segment is a partition key
-    # (default four plus whatever extra_staging_cols added); values are
+    # Group staged parts by their full partition-value tuple: driver memory
+    # O(parts this batch) — the same listing the write itself produced.
+    # Every `name=value` path segment under the staging root is a partition
+    # key (default four plus whatever extra_staging_cols added); values are
     # percent-decoded to undo Hive path escaping.
     groups: dict[tuple[tuple[str, str], ...], list[tuple[str, str]]] = {}
-    it = fs.listFiles(staging_path, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        segs = p.split("/")
+    under = len(staging_dir.rstrip("/"))
+    for p, _mtime, _size in st.list_files(staging_dir):
+        segs = p[under:].split("/")
         fname = segs[-1]
         if fname.startswith(("_", ".")):
             continue
@@ -368,7 +339,6 @@ def finalize_template_layout(
         )
         groups.setdefault(kv, []).append((p, ext_m.group(0)))
 
-    final_paths: list[str] = []
     sidecar_dirs: set[str] = set()
     # Templates without ${attempt} can render the SAME dest for two staged
     # groups; serialize per rendered path so racing place() calls cannot
@@ -378,49 +348,41 @@ def finalize_template_layout(
     dest_locks: dict[str, threading.Lock] = {}
     dest_locks_guard = threading.Lock()
 
-    def _lock_for(dest_str: str) -> threading.Lock:
+    def _lock_for(dest: str) -> threading.Lock:
         with dest_locks_guard:
-            return dest_locks.setdefault(dest_str, threading.Lock())
+            return dest_locks.setdefault(dest, threading.Lock())
 
-    def _bumped(orig_dest, n: int):
+    def _bumped(orig_dest: str, n: int) -> str:
         """``orig_dest`` with attempt suffix ``_n`` APPENDED to its base
         (reference retry naming, RecordPathFactory.kt:56-75).  Appending —
         never stripping — keeps bins whose own name ends in digits (e.g.
         ``20240101_0000``) intact."""
-        name = orig_dest.getName()
+        head, name = orig_dest.rsplit("/", 1)
         ext = _PART_EXT_RE.search(name).group(0)
-        return HPath(
-            orig_dest.getParent(), f"{name[: -len(ext)]}_{n}{ext}"
-        )
+        return f"{head}/{name[: -len(ext)]}_{n}{ext}"
 
     def place(key: tuple[tuple[str, str], ...], parts: list[tuple[str, str]]) -> str:
         kv = dict(key)
         parts = sorted(parts)
         ext = parts[0][1]
-        rel = render_final_path(template, topic, kv, ext)
-        orig_dest = HPath(target_dir, rel)
-        fs.mkdirs(orig_dest.getParent())
-        sidecar_dirs.add(orig_dest.getParent().toString())
+        orig_dest = f"{target}/{render_final_path(template, topic, kv, ext)}"
+        sidecar_dirs.add(orig_dest.rsplit("/", 1)[0])
         codec = ext.rsplit(".", 1)[1] if ext.count(".") > 1 else None
         is_csv = ".csv" in ext
         part_header: list[bytes | None] = [None]
 
-        def _divert(d):
+        def _divert(d: str) -> str:
             # A later batch's records for an old bin may carry a DIFFERENT
             # CSV header (new map keys ⇒ new columns); blindly appending
             # would misalign rows.  Divert to the reference's attempt
             # naming: the first ``_N`` destination whose header matches or
             # that does not exist yet.
-            if not (is_csv and fs.exists(d)):
+            if not (is_csv and st.exists(d)):
                 return d
             if part_header[0] is None:
-                part_header[0] = _csv_header(
-                    _read_bytes(fs, HPath(parts[0][0])), codec
-                )
+                part_header[0] = _csv_header(st.read(parts[0][0]), codec)
             n, cand = 0, d
-            while fs.exists(cand) and _csv_header(
-                _read_bytes(fs, cand), codec
-            ) != part_header[0]:
+            while st.exists(cand) and _csv_header(st.read(cand), codec) != part_header[0]:
                 n += 1
                 cand = _bumped(d, n)
             return cand
@@ -432,54 +394,40 @@ def finalize_template_layout(
         # exists()/read-merge-write sequence and drop one group's rows).
         # Re-run the divert under each newly acquired lock — conditions may
         # have changed between the handoff.
-        lock = _lock_for(orig_dest.toString())
+        lock = _lock_for(orig_dest)
         lock.acquire()
-        locked_path = orig_dest.toString()
+        locked_path = orig_dest
         try:
             while True:
                 dest = _divert(orig_dest)
-                if dest.toString() == locked_path:
+                if dest == locked_path:
                     break
-                nxt = _lock_for(dest.toString())
+                nxt = _lock_for(dest)
                 lock.release()
                 lock = nxt
                 lock.acquire()
-                locked_path = dest.toString()
+                locked_path = dest
             return _write_parts(dest, parts, is_csv, codec)
         finally:
             lock.release()
 
-    def _write_parts(dest, parts, is_csv, codec) -> str:
-        if len(parts) == 1 and not fs.exists(dest):
-            # Metadata-only on HDFS; rename signals failure by
-            # RETURNING false (it does not raise) — fall through to
-            # the copy path rather than silently dropping the part.
-            if place_fs.rename(HPath(parts[0][0]), dest):
-                _store_attrs(dest.toString())
-                return dest.toString()
-        # Append/merge path (existing destination or a bin split
-        # across parts): reference-parity
-        # decompress-append-recompress, O(file).
-        chunks: list[bytes] = []
-        if fs.exists(dest):
-            chunks.append(_read_bytes(fs, dest))
-        for p, _e in parts:
-            chunks.append(_read_bytes(fs, HPath(p)))
+    def _write_parts(dest: str, parts, is_csv, codec) -> str:
+        # One part and no destination yet: a metadata-only move.  A refused
+        # rename falls through to the copy path rather than silently
+        # dropping the part.
+        if len(parts) == 1 and st.rename_no_replace(parts[0][0], dest):
+            _store_attrs(dest)
+            return dest
+        # Append/merge path (existing destination or a bin split across
+        # parts): reference-parity decompress-append-recompress, O(file).
+        # Staged parts are read checksum-verified.
+        chunks = [st.read(dest)] if st.exists(dest) else []
+        chunks += [st.read(p) for p, _e in parts]
         merged = _merge_csv_like(chunks, is_csv=is_csv, codec=codec)
-        tmp = HPath(dest.getParent(), f".{dest.getName()}.tmp")
-        out = place_fs.create(tmp, True)
-        try:
-            out.write(bytearray(merged))
-        finally:
-            out.close()
-        if fs.exists(dest):
-            fs.delete(dest, False)
-        if not place_fs.rename(tmp, dest):
-            raise RuntimeError(
-                f"finalize_template_layout: rename {tmp} -> {dest} failed"
-            )
-        _store_attrs(dest.toString())
-        return dest.toString()
+        head, name = dest.rsplit("/", 1)
+        st.replace(dest, merged, tmp=f"{head}/.{name}.tmp")
+        _store_attrs(dest)
+        return dest
 
     # py4j is thread-safe (one gateway connection per thread); object-store
     # rename latency, not CPU, is the bottleneck this pool hides.
@@ -488,21 +436,8 @@ def finalize_template_layout(
 
     if schema_json is not None:
         for d in sorted(sidecar_dirs):
-            sc = HPath(d, f"schema-{topic}.json")
-            if not fs.exists(sc):
-                out = place_fs.create(sc, False)
-                try:
-                    out.write(bytearray(schema_json, "utf-8"))
-                finally:
-                    out.close()
-                _store_attrs(sc.toString())
-    fs.delete(staging_path, True)
+            sidecar = f"{d}/schema-{topic}.json"
+            if st.create_exclusive(sidecar, schema_json.encode("utf-8")):
+                _store_attrs(sidecar)
+    st.delete(staging_dir, recursive=True)
     return sorted(final_paths)
-
-
-def _read_bytes(fs, path) -> bytes:
-    stream = fs.open(path)
-    try:
-        return bytes(stream.readAllBytes())
-    finally:
-        stream.close()

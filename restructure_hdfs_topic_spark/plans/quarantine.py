@@ -11,7 +11,7 @@ so subsequent reads skip them (Spark readers match on extension).
 
 Scale shape: validation runs INSIDE executors (binaryFile distributes the
 files); only the tiny bad-file list returns to the driver, which performs
-the renames through the Hadoop FileSystem API (works on object stores).
+the renames through ``storage`` (works on object stores).
 """
 
 from __future__ import annotations
@@ -22,6 +22,8 @@ import json as _json
 import os
 
 from pyspark.sql import SparkSession
+
+from restructure_hdfs_topic_spark import storage
 
 
 def _validate_bytes(name: str, data: bytes, fmt: str) -> str | None:
@@ -55,22 +57,16 @@ def find_corrupt_targets(spark: SparkSession, target_dir: str, fmt: str) -> list
     """Distributed scan: validate every data file under ``target_dir``;
     returns the corrupt paths."""
     ext = {"json": ".json", "csv": ".csv"}.get(fmt)
-    # Listing is driver-side Hadoop FS metadata (same O(#files) the
+    # Listing is driver-side storage metadata (same O(#files) the
     # reference's walker holds); byte validation runs in executors through
     # pyarrow's filesystem.  Neither Spark's file sources nor sc.binaryFiles
     # fit here: a recovery tool runs precisely when files changed underneath
     # Spark, where the DataFrame source's FileStatusCache serves stale sizes
     # and Hadoop's local checksum layer (.crc sidecars) throws inside the
     # JVM before any validator sees the bytes.
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(target_dir)
-    fs = root.getFileSystem(conf)
     paths: list[str] = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        status = it.next()
-        name = status.getPath().getName()
+    for path, _mtime, _size in storage.store(target_dir, spark).list_files(target_dir):
+        name = path.rsplit("/", 1)[-1]
         if name.startswith(("_", ".")) or ".corrupted" in name:
             continue
         if name.startswith("schema-"):
@@ -81,14 +77,17 @@ def find_corrupt_targets(spark: SparkSession, target_dir: str, fmt: str) -> list
             continue
         if ext is not None and ext not in name:
             continue
-        paths.append(status.getPath().toString())
+        paths.append(path)
     if not paths:
         return []
 
     def check(path: str) -> str | None:
         import pyarrow.fs as pafs
 
-        filesystem, fpath = pafs.FileSystem.from_uri(path)
+        try:
+            filesystem, fpath = pafs.FileSystem.from_uri(path)
+        except ValueError:  # a relative plain path
+            filesystem, fpath = pafs.LocalFileSystem(), os.path.abspath(path)
         try:
             with filesystem.open_input_stream(fpath) as stream:
                 data = stream.read()
@@ -106,17 +105,13 @@ def quarantine_corrupt_targets(
 ) -> list[str]:
     """Find corrupt target files and rename each to ``<name>.corrupted[-N]``
     (FileCache.kt:173-201 naming).  Returns the quarantined paths."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    st = storage.store(target_dir, spark)
     moved = []
     for path in find_corrupt_targets(spark, target_dir, fmt):
-        src = jvm.org.apache.hadoop.fs.Path(path)
-        fs = src.getFileSystem(conf)
-        dest = jvm.org.apache.hadoop.fs.Path(path + ".corrupted")
-        n = 0
-        while fs.exists(dest):
+        dest, n = f"{path}.corrupted", 0
+        while st.exists(dest):
             n += 1
-            dest = jvm.org.apache.hadoop.fs.Path(f"{path}.corrupted-{n}")
-        fs.rename(src, dest)
-        moved.append(dest.toString())
+            dest = f"{path}.corrupted-{n}"
+        if st.rename_no_replace(path, dest):
+            moved.append(dest)
     return moved

@@ -21,10 +21,14 @@ update at 100%).
 
 from __future__ import annotations
 
+import logging
 import threading
 import time as _time
 
 __all__ = ["Timer", "timer", "ProgressBar"]
+
+# A bar's default sink: the reference logs its progress.
+_log = logging.getLogger(__name__)
 
 
 class _TimerEntry:
@@ -155,7 +159,8 @@ class ProgressBar:
     """Rate-limited textual progress: ``[***----]  42% - ETA 01:23 -
     MemFree 512 MB <label>``.  ``update`` is thread-safe, drops calls
     inside the update interval unless forced, validates the progress
-    range, and reports 100% exactly once."""
+    range, and reports 100% exactly once.  Lines go to ``sink``, by
+    default this module's logger at INFO."""
 
     def __init__(
         self,
@@ -174,7 +179,7 @@ class ProgressBar:
         self.total = total
         self.num_stripes = num_stripes
         self.update_interval_s = update_interval_s
-        self._sink = sink if sink is not None else print
+        self._sink = sink if sink is not None else _log.info
         self._spark = spark
         self._start = _time.monotonic()
         self._last = 0.0

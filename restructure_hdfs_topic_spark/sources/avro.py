@@ -23,12 +23,17 @@ splits one large file across tasks at sync markers.  The window costs one
 shuffle, and Catalyst prunes it from any plan that never reads ``offset``
 (the cleaner's, and the restructure job's, whose keep-last dedup orders
 records by ``file_order`` instead).
+
+Storage: the walk lists and the driver reads container headers through
+``storage``, so a local root takes ``os.walk`` and OS reads and any other
+store its Hadoop FileSystem; listed paths keep the root's form, and a
+file's mtime is whole milliseconds on every store, the value Spark's
+``_metadata.file_modification_time`` gives its records.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import re
 from dataclasses import dataclass
 from typing import Any
@@ -50,6 +55,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from restructure_hdfs_topic_spark import storage
 
 MAGIC = b"Obj\x01"
 
@@ -274,52 +281,37 @@ def _read_long_stream(fh) -> int | None:
     return (acc >> 1) ^ -(acc & 1)
 
 
-def count_container_records(path: str, opener=open) -> int:
-    """Record count of an Avro container from BLOCK HEADERS only: each block
-    prefixes (record count, byte size) — sum the counts, seek past the data.
-    No block is decompressed or decoded, so this is O(#blocks) metadata I/O —
-    the local-filesystem analogue of the endOffset object tag the reference
-    reads for single-offset filenames (source/S3SourceStorage.kt:40-59,
-    source/AzureSourceStorage.kt:28-46).  ``opener`` abstracts the byte
-    source (the Hadoop-FS walk passes a remote reader)."""
-    with opener(path, "rb") as fh:
-        if fh.read(4) != MAGIC:
-            raise ValueError("not an Avro object container file")
-        while True:  # header metadata map (skip values)
-            n = _read_long_stream(fh)
-            if n is None:
-                raise EOFError("truncated header")
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                _read_long_stream(fh)  # byte-size prefix of the map block
-            for _ in range(n):
-                fh.seek(_read_long_stream(fh), 1)  # key
-                fh.seek(_read_long_stream(fh), 1)  # value
+def count_container_records(fh) -> int:
+    """Record count of the Avro container open as ``fh`` (seekable) from
+    BLOCK HEADERS only: each block prefixes (record count, byte size) —
+    sum the counts, seek past the data.  No block is decompressed or
+    decoded, so this is O(#blocks) metadata I/O — the storage-agnostic
+    analogue of the endOffset object tag the reference reads for
+    single-offset filenames (source/S3SourceStorage.kt:40-59,
+    source/AzureSourceStorage.kt:28-46)."""
+    if fh.read(4) != MAGIC:
+        raise ValueError("not an Avro object container file")
+    while True:  # header metadata map (skip values)
+        n = _read_long_stream(fh)
+        if n is None:
+            raise EOFError("truncated header")
+        if n == 0:
+            break
+        if n < 0:
+            n = -n
+            _read_long_stream(fh)  # byte-size prefix of the map block
+        for _ in range(n):
+            fh.seek(_read_long_stream(fh), 1)  # key
+            fh.seek(_read_long_stream(fh), 1)  # value
+    fh.seek(16, 1)  # sync marker
+    total = 0
+    while True:
+        n_records = _read_long_stream(fh)
+        if n_records is None:
+            return total
+        total += n_records
+        fh.seek(_read_long_stream(fh), 1)  # block payload
         fh.seek(16, 1)  # sync marker
-        total = 0
-        while True:
-            n_records = _read_long_stream(fh)
-            if n_records is None:
-                return total
-            total += n_records
-            fh.seek(_read_long_stream(fh), 1)  # block payload
-            fh.seek(16, 1)  # sync marker
-
-
-def _object_key(path: str) -> str:
-    """Storage object key from a walk path: the walk hands readers paths
-    VERBATIM, which for URI roots are full ``s3a://bucket/key`` URIs — the
-    scheme and authority (bucket/container) must be stripped or every tag
-    lookup 404s and the code silently falls back to block-header reads
-    (ADVICE r4: the cloud-tag fast path was dead for exactly the URI roots
-    it was built for)."""
-    if _URI_RE.match(path):
-        from urllib.parse import urlparse
-
-        return urlparse(path).path.lstrip("/")
-    return path.lstrip("/")
 
 
 def s3_tag_end_offset_reader(s3_client, bucket: str):
@@ -331,7 +323,7 @@ def s3_tag_end_offset_reader(s3_client, bucket: str):
 
     def read(path: str) -> int | None:
         try:
-            resp = s3_client.get_object_tagging(Bucket=bucket, Key=_object_key(path))
+            resp = s3_client.get_object_tagging(Bucket=bucket, Key=storage.object_key(path))
             tags = {t["Key"]: t["Value"] for t in resp.get("TagSet", [])}
             return int(tags["endOffset"])
         except Exception:
@@ -349,112 +341,13 @@ def azure_metadata_end_offset_reader(blob_service, container: str):
     def read(path: str) -> int | None:
         try:
             props = blob_service.get_blob_client(
-                container, _object_key(path)
+                container, storage.object_key(path)
             ).get_blob_properties()
             return int((props.metadata or {})["endOffset"])
         except Exception:
             return None
 
     return read
-
-
-# Hadoop normalizes file:///x to file:/x, so match any scheme prefix, not
-# just the "://" form.
-_URI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:/")
-
-
-def _hadoop_listing(spark, root: str) -> list[tuple[str, float, int]]:
-    """(path, mtime_s, size) for every file under a Hadoop-FS URI —
-    the cluster-storage form of the walk (hdfs://, s3a://, file://...).
-    One recursive LIST, same O(#files) metadata as the local walk."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out: list[tuple[str, float, int]] = []
-    it = fs.listFiles(hpath, True)
-    while it.hasNext():
-        st = it.next()
-        out.append((st.getPath().toString(), st.getModificationTime() / 1000.0, st.getLen()))
-    return out
-
-
-def _hadoop_opener(spark, chunk_bytes: int = 1 << 16):
-    """``opener(path, mode)`` over Hadoop FS: a SEEKABLE buffered reader
-    over ``FSDataInputStream`` positioned reads — the block-header scan
-    touches O(#blocks × chunk) ranged bytes instead of downloading the
-    whole object (ADVICE r4: ``readAllBytes`` turned the single-offset
-    fallback into a full-object read per file), and seeks past block
-    payloads without fetching them.  Chunked buffering keeps py4j
-    round-trips to one per ``chunk_bytes``, not one per byte."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    class _Reader:
-        def __init__(self, path: str):
-            hp = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hp.getFileSystem(hconf)
-            self._size = fs.getFileStatus(hp).getLen()
-            self._stream = fs.open(hp)
-            self._pos = 0
-            self._buf = b""
-            self._buf_start = 0
-
-        def _fill(self, pos: int) -> None:
-            n = int(min(chunk_bytes, self._size - pos))
-            if n <= 0:
-                self._buf, self._buf_start = b"", pos
-                return
-            # Seek + bounded read; commons-io (shipped with Hadoop) returns
-            # a byte[], which py4j converts to Python bytes — one JVM
-            # round-trip per chunk.
-            self._stream.seek(pos)
-            self._buf = bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(self._stream, n)
-            )
-            self._buf_start = pos
-
-        def read(self, n: int = -1) -> bytes:
-            if n < 0:
-                n = self._size - self._pos
-            out = bytearray()
-            while n > 0 and self._pos < self._size:
-                off = self._pos - self._buf_start
-                if not (0 <= off < len(self._buf)):
-                    self._fill(self._pos)
-                    if not self._buf:
-                        break
-                    off = 0
-                take = min(n, len(self._buf) - off)
-                out += self._buf[off : off + take]
-                self._pos += take
-                n -= take
-            return bytes(out)
-
-        def seek(self, offset: int, whence: int = 0) -> int:
-            if whence == 0:
-                self._pos = offset
-            elif whence == 1:
-                self._pos += offset
-            else:
-                self._pos = self._size + offset
-            return self._pos
-
-        def tell(self) -> int:
-            return self._pos
-
-        def close(self) -> None:
-            self._stream.close()
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *exc) -> None:
-            self.close()
-
-    def opener(path: str, mode: str = "rb"):
-        return _Reader(path)
-
-    return opener
 
 
 def walk_topics(
@@ -468,11 +361,11 @@ def walk_topics(
     dirs are skipped; optional exclude set
     (worker/RadarKafkaRestructure.kt:56-59).
 
-    ``root`` may be a plain local path (os.walk) or, when ``spark`` is
-    given, any Hadoop-FS URI — hdfs://, s3a://, file:// — listed through
-    the cluster's FileSystem (the reference's storage drivers,
-    source/*SourceStorage.kt); single-offset end-offset resolution then
-    reads block headers through the same FS.
+    ``root`` is listed through ``storage`` (the reference's storage
+    drivers, source/*SourceStorage.kt): a local root with ``os.walk``, any
+    other store (hdfs://, s3a://, ...; pass ``spark``) through its Hadoop
+    FileSystem.  Single-offset end-offset resolution reads block headers
+    through the same store.
 
     ``end_offset_reader`` resolves single-offset filenames' true end offset
     from storage metadata — pass ``s3_tag_end_offset_reader(...)`` /
@@ -484,23 +377,9 @@ def walk_topics(
     walker sequences; on object stores this becomes a LIST call per prefix.
     """
     exclude = exclude or set()
-    remote = _URI_RE.match(root) is not None and spark is not None
-    if remote:
-        listing = [
-            (p, m, s)
-            for p, m, s in _hadoop_listing(spark, root)
-            if "/+tmp/" not in p
-        ]
-        opener = _hadoop_opener(spark)
-    else:
-        listing = []
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames[:] = [d for d in dirnames if d != "+tmp"]
-            for fname in filenames:
-                full = os.path.join(dirpath, fname)
-                st = os.stat(full)
-                listing.append((full, st.st_mtime, st.st_size))
-        opener = open
+    st = storage.store(root, spark)
+    under = len(root.rstrip("/"))
+    listing = [f for f in st.list_files(root) if "/+tmp/" not in f[0][under:]]
     topics: dict[str, list[SourceFile]] = {}
     for full, mtime, size in listing:
         fname = full.rsplit("/", 1)[-1]
@@ -527,7 +406,8 @@ def walk_topics(
             # cannot parse keeps the 1-record assumption; the decoder
             # will surface the corruption downstream.
             try:
-                oto = ofrom + max(count_container_records(full, opener), 1) - 1
+                with st.open(full) as fh:
+                    oto = ofrom + max(count_container_records(fh), 1) - 1
             except Exception:
                 oto = ofrom
         topics.setdefault(topic, []).append(
@@ -542,12 +422,11 @@ def walk_topics(
 # Record source (O2) — distributed decode.
 # ---------------------------------------------------------------------------
 
-def read_schema(path: str, opener=open) -> Any:
-    """Read just the container header of one file (driver-side, a few KB);
-    None for an empty file.  ``opener`` abstracts the byte source for
-    Hadoop-FS URIs."""
-    with opener(path, "rb") as fh:
-        head = fh.read(65536)
+def read_schema(fh) -> Any:
+    """The writer schema in the container header of ``fh`` (seekable,
+    positioned at the start; driver-side, a few KB); None for an empty
+    file."""
+    head = fh.read(65536)
     if not head:
         return None
     try:
@@ -556,8 +435,8 @@ def read_schema(path: str, opener=open) -> Any:
         # IndexError: the 64KB cut can land mid-varint inside a large
         # header (big evolved schema JSON) — the decoder indexes past the
         # buffer instead of raising EOFError; both mean "need more bytes".
-        with opener(path, "rb") as fh:
-            return AvroContainer.parse(fh.read()).schema
+        fh.seek(0)
+        return AvroContainer.parse(fh.read()).schema
 
 
 def union_avro_schemas(schemas: list) -> Any:
@@ -790,12 +669,13 @@ def writer_schemas(spark: SparkSession, paths: list[str]) -> tuple[list[str], li
     schemas in first-seen order).
 
     Per-file header reads are a few KB each (driver-side, path count is
-    bounded by maxFilesPerTopic).  URI paths (hdfs://, s3a://, file://)
-    read through the cluster FileSystem."""
+    bounded by maxFilesPerTopic), through the store of the first path:
+    the paths come from one walk."""
     kept, distinct = [], {}
+    st = storage.store(paths[0], spark) if paths else None
     for p in paths:
-        opener = _hadoop_opener(spark) if _URI_RE.match(p) else open
-        schema = read_schema(p, opener)
+        with st.open(p) as fh:
+            schema = read_schema(fh)
         if schema is not None:
             kept.append(p)
             distinct.setdefault(json.dumps(schema, sort_keys=True), schema)

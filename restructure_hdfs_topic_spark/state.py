@@ -34,18 +34,18 @@ died is broken after ``CLAIM_TTL_S`` and its durable orphan version is
 adopted.  Call ``commit`` only after the data the state records is durably
 written (commit-after-store, worker/FileCache.kt:128-158).
 
-Storage: ``state_dir`` is resolved through the Hadoop FS, so plain paths,
-``file://``, ``hdfs://`` and ``s3a://`` take one code path.  The ``file``
-scheme differs in three primitives only: the exclusive create
-(``locks.create_exclusive``, also of every small file: no ``.crc``
-sidecars), the no-replace directory rename (``_rename_no_replace``) and
-the pointer swap (``_write_pointer``).
+Storage: every file operation goes through the store ``storage.store``
+resolves ``state_dir`` to, so plain paths, ``file://``, ``hdfs://`` and
+``s3a://`` take one code path.  The protocol uses four of its primitives:
+the exclusive create (claims and every small file), the no-replace
+directory rename (staging to version), the atomic replace (the pointer
+swap) and the read; a fallback replace that crashed between its renames
+leaves no pointer, which ``current_version``'s recovery scan covers.
 """
 
 from __future__ import annotations
 
 import contextlib
-import os
 import random
 import re
 import time
@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from restructure_hdfs_topic_spark.locks import create_exclusive
+from restructure_hdfs_topic_spark import storage
 from restructure_hdfs_topic_spark.session import local_frame
 
 _POINTER = "offsets.CURRENT"
@@ -80,40 +80,23 @@ def _claim(v: int) -> str:
     return f"offsets/.claim.v{v:08d}"
 
 
-def _hfs(spark: SparkSession, state_dir: str):
-    """(jvm, FileSystem, Path) of ``state_dir`` through the Hadoop FS API."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    return jvm, root.getFileSystem(spark._jsc.hadoopConfiguration()), root
-
-
 def _open(spark: SparkSession, state_dir: str):
-    """(FileSystem, name -> Hadoop Path under ``state_dir``)."""
-    jvm, fs, root = _hfs(spark, state_dir)
-    return fs, lambda name: jvm.org.apache.hadoop.fs.Path(root, name)
+    """(store of ``state_dir``, name -> path under ``state_dir``)."""
+    root = state_dir.rstrip("/")
+    return storage.store(state_dir, spark), lambda name: f"{root}/{name}"
 
 
-def _local(fs, path) -> str | None:
-    """The local path of ``path`` on the ``file`` scheme, else None."""
-    return fs.pathToFile(path).getPath() if fs.getScheme() == "file" else None
-
-
-def _read_text(fs, path) -> str | None:
+def _read_text(st, path: str) -> str | None:
     """Stripped text of a small file; None when missing or unreadable."""
     try:
-        stream = fs.open(path)
+        return st.read(path).decode().strip()
     except Exception:
         return None
-    try:
-        return bytes(stream.readAllBytes()).decode().strip()
-    finally:
-        stream.close()
 
 
-def _create(fs, path, text: str) -> None:
-    """Create the small file ``path``, a fresh name, holding ``text`` (on
-    ``file``: plain file I/O, no ``.crc`` sidecar)."""
-    if not create_exclusive(fs, path, text.encode()):
+def _create(st, path: str, text: str) -> None:
+    """Create the small file ``path``, a fresh name, holding ``text``."""
+    if not st.create_exclusive(path, text.encode()):
         raise OSError(f"state store: could not create {path}")
 
 
@@ -159,14 +142,14 @@ class Document:
     def read(self, spark: SparkSession, path: str | None):
         if path is None:
             return self.decode(None)
-        fs, at = _open(spark, path)
-        text = _read_text(fs, at(self.NAME))
+        st, at = _open(spark, path)
+        text = _read_text(st, at(self.NAME))
         return self.legacy(spark, path) if text is None else self.decode(text)
 
     def write(self, spark: SparkSession, path: str, state) -> None:
-        fs, at = _open(spark, path)
+        st, at = _open(spark, path)
         for name, text in ((self.NAME, self.encode(state)), ("_SUCCESS", "")):
-            _create(fs, at(name), text)
+            _create(st, at(name), text)
 
 
 def current_version(spark: SparkSession, state_dir: str) -> int | None:
@@ -179,18 +162,13 @@ def current_version(spark: SparkSession, state_dir: str) -> int | None:
     fully-written ``offsets/v*`` (``_SUCCESS`` present) IS the last commit
     — a commit only runs after its data write succeeded, so adopting it is
     always safe."""
-    fs, at = _open(spark, state_dir)
-    text = _read_text(fs, at(_POINTER))
+    st, at = _open(spark, state_dir)
+    text = _read_text(st, at(_POINTER))
     if text is not None:
         return int(text.lstrip("v"))
-    try:
-        entries = fs.listStatus(at("offsets"))
-    except Exception:
-        return None
-    names = [st.getPath().getName() for st in entries]
     done = [
-        int(n[1:]) for n in names
-        if re.fullmatch(r"v\d+", n) and fs.exists(at(f"offsets/{n}/_SUCCESS"))
+        int(n[1:]) for n in st.list_dir(at("offsets"))
+        if re.fullmatch(r"v\d+", n) and st.exists(at(f"offsets/{n}/_SUCCESS"))
     ]
     return max(done, default=None)
 
@@ -256,15 +234,15 @@ def _claim_version(spark: SparkSession, state_dir: str, nxt: int) -> str | None:
     past the claim TTL whose claim a peer broke and re-claimed fails that
     check instead of overwriting the peer's state.  Returns the token, or
     None if the claim is held.  Claims are pruned with their versions."""
-    fs, at = _open(spark, state_dir)
+    st, at = _open(spark, state_dir)
     token = uuid.uuid4().hex
-    return token if create_exclusive(fs, at(_claim(nxt)), token.encode()) else None
+    return token if st.create_exclusive(at(_claim(nxt)), token.encode()) else None
 
 
 def _claim_owner(spark: SparkSession, state_dir: str, nxt: int) -> str | None:
     """Owner token in the claim marker of ``nxt`` (None when missing)."""
-    fs, at = _open(spark, state_dir)
-    return _read_text(fs, at(_claim(nxt)))
+    st, at = _open(spark, state_dir)
+    return _read_text(st, at(_claim(nxt)))
 
 
 def _break_stale_claim(
@@ -285,31 +263,28 @@ def _break_stale_claim(
     and its pointer write, and successors would livelock on rename-refused
     ``ClaimLost`` retries against the orphan.  A >TTL-stalled committer
     that later wakes loses its claim, the lease semantics of ``locks.py``."""
-    fs, at = _open(spark, state_dir)
+    st, at = _open(spark, state_dir)
     path = at(_claim(nxt))
-    try:
-        if time.time() - fs.getFileStatus(path).getModificationTime() / 1000 < ttl_s:
-            return
-    except Exception:
+    mtime = st.mtime(path)
+    if mtime is None or time.time() - mtime < ttl_s:
         return
     if (current_version(spark, state_dir) or 0) >= nxt:
         return
     tomb = at(f"{_claim(nxt)}.broken.{uuid.uuid4().hex}")
     try:
-        if not fs.rename(path, tomb):
+        if not st.rename_no_replace(path, tomb):
             return
     except Exception:
         return  # another breaker won
-    try:
+    with contextlib.suppress(Exception):
         # Rename preserves mtime: restore a claim that turned out FRESH
         # (broken and re-created between our stat and rename — the
         # re-claimer may be mid-commit).
-        if time.time() - fs.getFileStatus(tomb).getModificationTime() / 1000 < ttl_s:
-            fs.rename(tomb, path)
+        mtime = st.mtime(tomb)
+        if mtime is not None and time.time() - mtime < ttl_s:
+            st.rename_no_replace(tomb, path)
             return
-        fs.delete(tomb, False)
-    except Exception:
-        pass
+        st.delete(tomb)
     _adopt_orphan_version(spark, state_dir, nxt)
 
 
@@ -320,9 +295,9 @@ def _adopt_orphan_version(spark: SparkSession, state_dir: str, nxt: int) -> None
     own later pointer write, and required to unblock successors (see
     ``_break_stale_claim``).  No-op when the directory is absent or
     incomplete."""
-    fs, at = _open(spark, state_dir)
+    st, at = _open(spark, state_dir)
     try:
-        if not fs.exists(at(f"{_version(nxt)}/_SUCCESS")):
+        if not st.exists(at(f"{_version(nxt)}/_SUCCESS")):
             return
     except Exception:
         return
@@ -331,53 +306,11 @@ def _adopt_orphan_version(spark: SparkSession, state_dir: str, nxt: int) -> None
 
 
 def _write_pointer(spark: SparkSession, state_dir: str, nxt: int) -> None:
-    """Atomically swap ``offsets.CURRENT`` to version ``nxt``.  On ``file``:
-    ``os.replace`` of a tempfile.  Elsewhere: a temp object renamed with
-    ``FileContext`` and ``Rename.OVERWRITE`` (one atomic metadata op on
-    HDFS), falling back to delete+rename on stores without it — that
-    fallback's no-pointer crash window is closed by ``current_version``'s
-    recovery."""
-    fs, at = _open(spark, state_dir)
-    pointer, text = at(_POINTER), f"v{nxt:08d}"
-    tmp = at(f".{_POINTER}.{text}.{uuid.uuid4().hex}")
-    _create(fs, tmp, text)
-    local = _local(fs, pointer)
-    if local is not None:
-        os.replace(_local(fs, tmp), local)
-        # A pointer once written through Hadoop's checksummed local FS left
-        # a ``.crc`` sidecar that no longer matches.
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(os.path.dirname(local), f".{_POINTER}.crc"))
-        return
-    jvm = spark._jvm
-    try:
-        opts = spark.sparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            pointer.toUri(), spark._jsc.hadoopConfiguration()
-        ).rename(tmp, pointer, opts)
-    except Exception:
-        if fs.exists(pointer):
-            fs.delete(pointer, False)
-        fs.rename(tmp, pointer)
-
-
-def _rename_no_replace(spark: SparkSession, state_dir: str, src: str, dst: str) -> bool:
-    """Rename directory ``src`` to ``dst`` (names under ``state_dir``)
-    unless ``dst`` exists; True when renamed.  On ``file`` this is
-    ``os.rename``, which refuses a non-empty target atomically.  Hadoop's
-    rename moves ``src`` INTO an existing ``dst`` instead of failing, so
-    elsewhere ``dst`` is checked first (the residual race is the rename
-    itself, a metadata op after ``_replace_at``'s owner-token check)."""
-    fs, at = _open(spark, state_dir)
-    local = _local(fs, at(src))
-    if local is not None:
-        try:
-            os.rename(local, _local(fs, at(dst)))
-        except OSError:
-            return False
-        return True
-    return not fs.exists(at(dst)) and bool(fs.rename(at(src), at(dst)))
+    """Atomically swap ``offsets.CURRENT`` to version ``nxt`` (``replace``,
+    through a temp file of this writer's own)."""
+    st, at = _open(spark, state_dir)
+    text = f"v{nxt:08d}"
+    st.replace(at(_POINTER), text.encode(), tmp=at(f".{_POINTER}.{text}.{uuid.uuid4().hex}"))
 
 
 def _replace_at(
@@ -394,18 +327,18 @@ def _replace_at(
     staging, its write lands in its own scratch dir, and the ownership
     check (and the rename's refusal to replace an existing version dir)
     turns the wake-up into a clean ``ClaimLost`` retry."""
-    fs, at = _open(spark, state_dir)
+    st, at = _open(spark, state_dir)
     staging = f"offsets/.staging.v{nxt:08d}.{token}"
     payload.write(spark, f"{state_dir}/{staging}", state)
     if _claim_owner(spark, state_dir, nxt) != token:
         lost = "owner token changed"
     else:
         _clear_incomplete_version(spark, state_dir, nxt)
-        renamed = _rename_no_replace(spark, state_dir, staging, _version(nxt))
+        renamed = st.rename_no_replace(at(staging), at(_version(nxt)))
         lost = None if renamed else "version directory already exists"
     if lost:
         with contextlib.suppress(Exception):
-            fs.delete(at(staging), True)
+            st.delete(at(staging), recursive=True)
         # If a fully-committed v{nxt} sits there with a trailing pointer
         # (its committer died between rename and pointer write), finish
         # that commit now — otherwise every retry recomputes the same nxt
@@ -420,12 +353,12 @@ def _replace_at(
     # our just-renamed directory, so `<=` is what still creates it).
     if (current_version(spark, state_dir) or 0) <= nxt:
         _write_pointer(spark, state_dir, nxt)
-    for st in fs.listStatus(at("offsets")):
-        m = _VERSIONED.fullmatch(st.getPath().getName())
+    for name in st.list_dir(at("offsets")):
+        m = _VERSIONED.fullmatch(name)
         if m and int(m.group(1) or m.group(2)) < nxt - 1:
             # Old versions and their claims, and scratch left by a
             # committer that died (or lost its claim) long ago.
-            fs.delete(st.getPath(), True)
+            st.delete(at(f"offsets/{name}"), recursive=True)
 
 
 def _clear_incomplete_version(spark: SparkSession, state_dir: str, nxt: int) -> None:
@@ -438,7 +371,7 @@ def _clear_incomplete_version(spark: SparkSession, state_dir: str, nxt: int) -> 
     commit that reaches ``nxt``: the rename is refused, adoption no-ops on
     the incomplete dir, and the ``ClaimLost`` retry recomputes the same
     ``nxt`` forever."""
-    fs, at = _open(spark, state_dir)
+    st, at = _open(spark, state_dir)
     with contextlib.suppress(Exception):
-        if fs.exists(at(_version(nxt))) and not fs.exists(at(f"{_version(nxt)}/_SUCCESS")):
-            fs.delete(at(_version(nxt)), True)
+        if st.exists(at(_version(nxt))) and not st.exists(at(f"{_version(nxt)}/_SUCCESS")):
+            st.delete(at(_version(nxt)), recursive=True)

@@ -19,19 +19,10 @@ from __future__ import annotations
 import os
 import stat
 
+from restructure_hdfs_topic_spark import storage
+
 FILE_MODE = 0o644  # PosixFilePermissions.fromString("rw-r--r--")
 DIR_MODE = 0o755  # PosixFilePermissions.fromString("rwxr-xr-x")
-
-
-def local_root(target_dir: str) -> str | None:
-    """Return the local filesystem path for ``target_dir`` or None when the
-    target is not a local filesystem (s3a://, hdfs://, ...)."""
-    if "://" not in target_dir:
-        return target_dir
-    if target_dir.startswith("file://"):
-        # file:///abs/path → /abs/path (authority is empty for local URIs)
-        return target_dir[len("file://") :] or "/"
-    return None
 
 
 def apply_local_target_attrs(
@@ -39,11 +30,14 @@ def apply_local_target_attrs(
     user_id: int = -1,
     group_id: int = -1,
     since_s: float | None = None,
+    spark=None,
 ) -> int:
     """Walk a local target tree applying the reference's stored-file
     attributes: 0644 files, 0755 dirs, optional uid/gid
     (LocalTargetStorage.kt:58-75).  Returns the number of paths touched;
-    no-op (0) for non-local targets or a missing tree.
+    no-op (0) for non-local targets or a missing tree.  The target resolves
+    through ``storage`` (given ``spark``, through Hadoop: a scheme-less
+    path under a non-local ``fs.defaultFS`` is not local).
 
     ``since_s`` bounds the pass to THIS run's output — files with
     ``st_mtime < since_s`` are skipped (they got their attributes when they
@@ -58,7 +52,7 @@ def apply_local_target_attrs(
     reference's unhandled IOException (running unprivileged with a foreign
     uid is a deployment error, not a silent skip).
     """
-    root = local_root(target_dir)
+    root = storage.local_path(target_dir, spark)
     if root is None or not os.path.isdir(root):
         return 0
     touched = 0

@@ -27,3 +27,21 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def viewfs(spark):
+    """``mount(local_dir) -> "viewfs://<name>/data"``: a Hadoop
+    ``ViewFileSystem`` mount over a local directory, under a fresh mount
+    table name (the FileSystem cache keys on it).  Paths under it take
+    ``storage``'s Hadoop branch while the bytes stay in ``local_dir``."""
+    import uuid
+
+    def mount(local_dir) -> str:
+        name = f"t{uuid.uuid4().hex[:12]}"
+        spark._jsc.hadoopConfiguration().set(
+            f"fs.viewfs.mounttable.{name}.link./data", f"file://{local_dir}"
+        )
+        return f"viewfs://{name}/data"
+
+    return mount

@@ -428,10 +428,10 @@ def test_claim_version_failure_after_create_cleans_up(spark, tmp_path, monkeypat
     state_dir = f"file://{tmp_path}/state"
     _os.makedirs(tmp_path / "state" / "offsets")
 
-    # Force the write-after-create to blow up by breaking bytearray usage:
-    # patch _hfs to return a wrapper whose create() yields a stream that
+    # Force the write-after-create to blow up: serve the state dir through
+    # a Hadoop store whose FileSystem's create() yields a stream that
     # raises on write.
-    real_hfs = S._hfs
+    from restructure_hdfs_topic_spark import storage
 
     class BoomStream:
         def write(self, *_a):
@@ -444,9 +444,6 @@ def test_claim_version_failure_after_create_cleans_up(spark, tmp_path, monkeypat
         def __init__(self, fs):
             self._fs = fs
 
-        def getScheme(self):
-            return "hdfs"  # a file: scheme would be created through os.open
-
         def create(self, path, overwrite):
             self._fs.create(path, overwrite).close()  # real create-NX lands
             return BoomStream()
@@ -454,11 +451,12 @@ def test_claim_version_failure_after_create_cleans_up(spark, tmp_path, monkeypat
         def __getattr__(self, name):
             return getattr(self._fs, name)
 
-    def fake_hfs(spark_, dir_):
-        jvm, fs, p = real_hfs(spark_, dir_)
-        return jvm, FsWrapper(fs), p
-
-    monkeypatch.setattr(S, "_hfs", fake_hfs)
+    real_fs = spark._jvm.org.apache.hadoop.fs.Path(state_dir).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+    monkeypatch.setattr(
+        storage, "store", lambda path, spark_=None: storage.Hadoop(spark_, FsWrapper(real_fs))
+    )
     assert S._claim_version(spark, state_dir, 1) is None
     monkeypatch.undo()
     # The half-made claim was removed: a fresh claim succeeds immediately.

@@ -10,10 +10,9 @@
 3. low — ``near_dup_groups``'s memo folds a content fingerprint into
    its key, so a corpus regenerated in place under an identical plan is
    served FRESH groups.
-4. low — ``write_small_file_atomic``'s URI branch replaces in one
-   FileContext rename (no neither-version crash window);
-   ``read_small_file_fallback`` recovers the ``.old`` aside-copy the
-   object-store fallback path can leave.
+4. low — ``storage``'s Hadoop ``replace`` replaces in one FileContext
+   rename (no neither-version crash window); ``read_replaced`` recovers
+   the ``.old`` aside-copy the object-store fallback path can leave.
 """
 
 import json
@@ -25,12 +24,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
-from restructure_hdfs_topic_spark.compression import (
-    read_small_file,
-    read_small_file_fallback,
-    small_file_exists,
-    write_small_file_atomic,
-)
+from restructure_hdfs_topic_spark import storage
 from restructure_hdfs_topic_spark.operators.bm25_index import (
     bm25_artifacts_exist,
     bm25_meta_exists,
@@ -159,15 +153,18 @@ def test_near_dup_groups_memo_still_hits_on_same_content(spark):
 # ---------------------------------------------------------------- finding 4
 
 
-def test_atomic_replace_over_uri_keeps_one_valid_version(spark, tmp_path):
-    path = f"file://{tmp_path}/meta.json"
-    write_small_file_atomic(path, b'{"v": 1}', spark=spark)
-    assert json.loads(read_small_file(path, spark=spark)) == {"v": 1}
-    write_small_file_atomic(path, b'{"v": 2}', spark=spark)
-    assert json.loads(read_small_file(path, spark=spark)) == {"v": 2}
+def test_atomic_replace_over_uri_keeps_one_valid_version(spark, tmp_path, viewfs):
+    # A viewfs:// mount takes the Hadoop store (file:// URIs are local).
+    path = f"{viewfs(tmp_path)}/meta.json"
+    st = storage.store(path, spark)
+    assert isinstance(st, storage.Hadoop)
+    st.replace(path, b'{"v": 1}')
+    assert json.loads(st.read(path)) == {"v": 1}
+    st.replace(path, b'{"v": 2}')
+    assert json.loads(st.read(path)) == {"v": 2}
     # The one-op rename leaves no .tmp/.old litter on the FileContext path.
-    assert not small_file_exists(f"{path}.tmp", spark=spark)
-    assert not small_file_exists(f"{path}.old", spark=spark)
+    assert not st.exists(f"{path}.tmp")
+    assert not st.exists(f"{path}.old")
 
 
 def test_read_small_file_fallback_recovers_old(tmp_path):
@@ -177,11 +174,11 @@ def test_read_small_file_fallback_recovers_old(tmp_path):
     path = str(tmp_path / "meta.json")
     with open(f"{path}.old", "w") as fh:
         fh.write('{"v": 1}')
-    assert json.loads(read_small_file_fallback(path)) == {"v": 1}
+    assert json.loads(storage.store(path).read_replaced(path)) == {"v": 1}
     with open(path, "w") as fh:
         fh.write('{"v": 2}')
-    assert json.loads(read_small_file_fallback(path)) == {"v": 2}
+    assert json.loads(storage.store(path).read_replaced(path)) == {"v": 2}
     os.remove(path)
     os.remove(f"{path}.old")
     with pytest.raises(FileNotFoundError):
-        read_small_file_fallback(path)
+        storage.store(path).read_replaced(path)

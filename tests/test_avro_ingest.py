@@ -689,26 +689,51 @@ def test_max_files_per_topic_takes_earliest(spark, tmp_path):
         assert capped_runs(str(tmp_path / "fixtures"), tmp_path / "golden") == [1003, 3, 0]
 
 
-@needs_fixtures
+def _status_files(root: str, fixture_names=(), mtime_s=None) -> str:
+    """Status-topic files of partition 1 under ``root``: each of
+    ``fixture_names`` copied from the reference's fixtures when given,
+    else generated — offsets 18-20 and the single-offset file from 21,
+    three records each (``reference_shaped_tree``'s status files)."""
+    import shutil
+
+    part = os.path.join(root, STATUS_TOPIC, "partition=1")
+    if fixture_names:
+        os.makedirs(part, exist_ok=True)
+        for name in fixture_names:
+            shutil.copy(f"{FIXTURES}/{STATUS_TOPIC}/partition=1/{name}", part)
+            if mtime_s is not None:
+                os.utime(os.path.join(part, name), ns=(int(mtime_s * 1e9),) * 2)
+        return root
+    project, user, source = STATUS_KEY
+    for lo, single in ((18, False), (21, True)):
+        recs = [
+            {
+                "key": {"projectId": project, "userId": user, "sourceId": source},
+                "value": {"time": 1580220600.5 + i, "serverStatus": "CONNECTED", "ipAddress": None},
+            }
+            for i in range(3)
+        ]
+        write_topic_file(
+            root, STATUS_TOPIC, 1, lo, recs, schema=STATUS_SCHEMA, codec="deflate",
+            single_offset=single, mtime_s=mtime_s,
+        )
+    return root
+
+
+_SINGLE = f"{STATUS_TOPIC}+1+0000000021.avro"
+_RANGED = f"{STATUS_TOPIC}+1+0000000018+0000000020.avro"
+
+
 def test_cloud_tag_end_offset_readers(tmp_path):
     """O3 cloud-tag parity (S3SourceStorage.kt:40-66, AzureSourceStorage
     .kt:28-46): a configured tag reader resolves single-offset filenames'
     end offsets from storage metadata, with the block-header count as the
-    fallback when the reader yields nothing."""
-    import shutil
-
+    fallback when the reader yields nothing — on a generated single-offset
+    file and, when present, the reference's fixture."""
     from restructure_hdfs_topic_spark.sources.avro import (
         azure_metadata_end_offset_reader,
         s3_tag_end_offset_reader,
         walk_topics,
-    )
-
-    src = tmp_path / "in" / "application_server_status" / "partition=1"
-    src.mkdir(parents=True)
-    shutil.copy(
-        f"{FIXTURES}/application_server_status/partition=1/"
-        "application_server_status+1+0000000021.avro",
-        src,
     )
 
     class StubS3:
@@ -719,23 +744,6 @@ def test_cloud_tag_end_offset_readers(tmp_path):
         def get_object_tagging(self, Bucket, Key):
             self.requests.append((Bucket, Key))
             return {"TagSet": [{"Key": k, "Value": v} for k, v in self.tags.items()]}
-
-    # Tag present → its value wins (even over the block-header count).
-    s3 = StubS3({"endOffset": "99"})
-    topics = walk_topics(
-        str(tmp_path / "in"), end_offset_reader=s3_tag_end_offset_reader(s3, "bkt")
-    )
-    (f,) = topics["application_server_status"]
-    assert (f.offset_from, f.offset_to) == (21, 99)
-    assert s3.requests and s3.requests[0][0] == "bkt"
-
-    # No endOffset tag → reader returns None → block-header fallback (23).
-    topics = walk_topics(
-        str(tmp_path / "in"),
-        end_offset_reader=s3_tag_end_offset_reader(StubS3({"other": "1"}), "bkt"),
-    )
-    (f,) = topics["application_server_status"]
-    assert (f.offset_from, f.offset_to) == (21, 23)
 
     class StubBlobProps:
         metadata = {"endOffset": "55"}
@@ -748,99 +756,99 @@ def test_cloud_tag_end_offset_readers(tmp_path):
         def get_blob_client(self, container, path):
             return StubBlobClient()
 
-    topics = walk_topics(
-        str(tmp_path / "in"),
-        end_offset_reader=azure_metadata_end_offset_reader(StubBlobService(), "c"),
-    )
-    (f,) = topics["application_server_status"]
-    assert (f.offset_from, f.offset_to) == (21, 55)
+    def check(root: str) -> None:
+        # Tag present → its value wins (even over the block-header count).
+        s3 = StubS3({"endOffset": "99"})
+        (f,) = walk_topics(root, end_offset_reader=s3_tag_end_offset_reader(s3, "bkt"))[STATUS_TOPIC]
+        assert (f.offset_from, f.offset_to) == (21, 99)
+        assert s3.requests and s3.requests[0][0] == "bkt"
+        # No endOffset tag → reader returns None → block-header fallback (23).
+        reader = s3_tag_end_offset_reader(StubS3({"other": "1"}), "bkt")
+        (f,) = walk_topics(root, end_offset_reader=reader)[STATUS_TOPIC]
+        assert (f.offset_from, f.offset_to) == (21, 23)
+        reader = azure_metadata_end_offset_reader(StubBlobService(), "c")
+        (f,) = walk_topics(root, end_offset_reader=reader)[STATUS_TOPIC]
+        assert (f.offset_from, f.offset_to) == (21, 55)
+
+    src = _status_files(str(tmp_path / "in"))
+    os.remove(os.path.join(src, STATUS_TOPIC, "partition=1", _RANGED))
+    check(src)
+    if os.path.isdir(FIXTURES):  # the reference's fixture file
+        check(_status_files(str(tmp_path / "fixture"), [_SINGLE]))
 
 
-@needs_fixtures
-def test_walk_topics_hadoop_fs_uri(spark, tmp_path):
-    """O1 over a Hadoop-FS URI (file:// here; hdfs://, s3a:// share the
-    FileSystem API): listing, +tmp skip, zero-length guard, and the
-    single-offset block-header end-offset resolution through the remote
-    opener must all match the local walk."""
-    import shutil
+def test_walk_topics_hadoop_fs_uri(spark, tmp_path, viewfs):
+    """O1 over URIs: a ``file://`` root (the local store) and a viewfs://
+    mount (the Hadoop store; hdfs://, s3a:// share its FileSystem API)
+    match the plain local walk — listing, +tmp skip, zero-length guard,
+    the single-offset block-header end offset through each store's
+    reader, and one millisecond mtime convention; listed paths keep the
+    root's form.  On generated files and, when present, the fixtures."""
 
-    src = tmp_path / "in" / "application_server_status" / "partition=1"
-    src.mkdir(parents=True)
-    for f in (
-        "application_server_status+1+0000000018+0000000020.avro",
-        "application_server_status+1+0000000021.avro",
-    ):
-        shutil.copy(f"{FIXTURES}/application_server_status/partition=1/{f}", src)
-    tmpdir = tmp_path / "in" / "application_server_status" / "+tmp"
-    tmpdir.mkdir()
-    shutil.copy(
-        f"{FIXTURES}/application_server_status/partition=1/"
-        "application_server_status+1+0000000018+0000000020.avro",
-        tmpdir / "application_server_status+1+0000000099.avro",
-    )
-    (src / "application_server_status+1+0000000050.avro").write_bytes(b"")
+    def check(root) -> None:
+        tmpdir = root / STATUS_TOPIC / "+tmp"
+        tmpdir.mkdir()
+        (tmpdir / f"{STATUS_TOPIC}+1+0000000099.avro").write_bytes(
+            (root / STATUS_TOPIC / "partition=1" / _RANGED).read_bytes()
+        )
+        (root / STATUS_TOPIC / "partition=1" / f"{STATUS_TOPIC}+1+0000000050.avro").write_bytes(b"")
+        key = lambda f: (f.partition, f.offset_from, f.offset_to, f.size, f.mtime)  # noqa: E731
+        local = walk_topics(str(root))[STATUS_TOPIC]
+        assert {(f.offset_from, f.offset_to) for f in local} == {(18, 20), (21, 23)}
+        for uri, scheme in ((f"file://{root}", "file:/"), (viewfs(root), "viewfs://")):
+            walked = walk_topics(uri, spark=spark)[STATUS_TOPIC]
+            assert sorted(map(key, walked)) == sorted(map(key, local))
+            assert all(f.path.startswith(f"{uri}/") for f in walked), scheme
 
-    local = walk_topics(str(tmp_path / "in"))
-    via_uri = walk_topics(f"file://{tmp_path}/in", spark=spark)
-    key = lambda f: (f.partition, f.offset_from, f.offset_to, f.size)  # noqa: E731
-    assert sorted(map(key, via_uri["application_server_status"])) == sorted(
-        map(key, local["application_server_status"])
-    )
-    # Single-offset file resolved through the Hadoop opener: [21, 23].
-    offs = {(f.offset_from, f.offset_to) for f in via_uri["application_server_status"]}
-    assert (21, 23) in offs and (18, 20) in offs
-    assert all(f.path.startswith("file:/") for f in via_uri["application_server_status"])
+    mtime = 1_700_000_000.123456789  # sub-ms digits: ms on every store
+    _status_files(str(tmp_path / "in"), mtime_s=mtime)
+    check(tmp_path / "in")
+    if os.path.isdir(FIXTURES):  # the reference's fixture files
+        _status_files(str(tmp_path / "fixture"), [_RANGED, _SINGLE], mtime_s=mtime)
+        check(tmp_path / "fixture")
 
 
-def test_restructure_job_over_hadoop_fs_uri(spark, tmp_path):
-    """The whole restructure job runs against a Hadoop-FS URI input root
-    and state dir (file:// here; hdfs://, s3a:// share the FileSystem
-    API): walk, header read, binaryFile decode, write, commit — and the
-    rerun is idempotent.  Over a tree shaped like the reference's fixtures
-    and, when present, the fixtures themselves."""
+def test_restructure_job_over_hadoop_fs_uri(spark, tmp_path, viewfs):
+    """The whole restructure job runs against a URI input root and state
+    dir — ``file://`` (the local store) and a viewfs:// mount (the Hadoop
+    store; hdfs://, s3a:// share its FileSystem API): walk, header read,
+    decode, write, commit — and the rerun is idempotent.  Over a tree
+    shaped like the reference's fixtures and, when present, the fixtures
+    themselves."""
 
-    def records_written(src: str, out) -> list[int]:
+    def records_written(src: str, state_dir: str, out) -> list[int]:
         cfg = RestructureConfig(
-            target_dir=str(out / "out"),
-            state_dir=f"file://{out}/state",
+            target_dir=str(out),
+            state_dir=state_dir,
             format="csv",
             worker=WorkerConfig(minimum_file_age_s=0),
         )
-        os.makedirs(out / "state", exist_ok=True)
-        return [run_avro_restructure_job(spark, f"file://{src}", cfg)["records_written"] for _ in range(2)]
+        return [run_avro_restructure_job(spark, src, cfg)["records_written"] for _ in range(2)]
 
-    src = reference_shaped_tree(str(tmp_path / "in"), accel_records=40)
-    assert records_written(src, tmp_path / "tree") == [46, 0]
+    reference_shaped_tree(str(tmp_path / "in"), accel_records=40)
+    for base, name in ((f"file://{tmp_path}", "tree"), (viewfs(tmp_path), "view")):
+        got = records_written(f"{base}/in", f"{base}/{name}/state", tmp_path / name / "out")
+        assert got == [46, 0], base
     if os.path.isdir(FIXTURES):  # the reference's golden tree
-        assert records_written(FIXTURES, tmp_path / "golden") == [1006, 0]
+        got = records_written(f"file://{FIXTURES}", f"file://{tmp_path}/golden/state", tmp_path / "golden")
+        assert got == [1006, 0]
 
 
-@needs_fixtures
 def test_object_key_strips_uri_scheme_and_bucket(spark, tmp_path):
     """ADVICE r4: for URI roots the walk hands full URIs to the end-offset
     readers; the S3 key / blob name must strip the scheme + authority or
-    every tag lookup fails and the fast path silently dies."""
-    import shutil
-
+    every tag lookup fails and the fast path silently dies.  On a
+    generated single-offset file and, when present, the fixture."""
     from restructure_hdfs_topic_spark.sources.avro import (
-        _object_key,
         s3_tag_end_offset_reader,
         walk_topics,
     )
+    from restructure_hdfs_topic_spark.storage import object_key
 
-    assert _object_key("s3a://bkt/in/topic/partition=1/f.avro") == "in/topic/partition=1/f.avro"
-    assert _object_key("abfss://cont@acct.dfs.core.windows.net/in/f.avro") == "in/f.avro"
-    assert _object_key("/plain/local/f.avro") == "plain/local/f.avro"
-    assert _object_key("relative/f.avro") == "relative/f.avro"
-
-    # Integration: URI-rooted walk → the stub sees a clean relative key.
-    src = tmp_path / "in" / "application_server_status" / "partition=1"
-    src.mkdir(parents=True)
-    shutil.copy(
-        f"{FIXTURES}/application_server_status/partition=1/"
-        "application_server_status+1+0000000021.avro",
-        src,
-    )
+    assert object_key("s3a://bkt/in/topic/partition=1/f.avro") == "in/topic/partition=1/f.avro"
+    assert object_key("abfss://cont@acct.dfs.core.windows.net/in/f.avro") == "in/f.avro"
+    assert object_key("/plain/local/f.avro") == "plain/local/f.avro"
+    assert object_key("relative/f.avro") == "relative/f.avro"
 
     class StubS3:
         def __init__(self):
@@ -850,16 +858,21 @@ def test_object_key_strips_uri_scheme_and_bucket(spark, tmp_path):
             self.requests.append((Bucket, Key))
             return {"TagSet": [{"Key": "endOffset", "Value": "77"}]}
 
-    s3 = StubS3()
-    topics = walk_topics(
-        f"file://{tmp_path}/in",
-        end_offset_reader=s3_tag_end_offset_reader(s3, "bkt"),
-        spark=spark,
-    )
-    (f,) = topics["application_server_status"]
-    assert (f.offset_from, f.offset_to) == (21, 77)
-    (bucket, key), = s3.requests
-    assert bucket == "bkt"
-    assert "://" not in key and not key.startswith("file:")
-    assert key.endswith("application_server_status+1+0000000021.avro")
-    assert not key.startswith("/")
+    def check(root: str) -> None:
+        # Integration: URI-rooted walk → the stub sees a clean relative key.
+        s3 = StubS3()
+        topics = walk_topics(
+            f"file://{root}", end_offset_reader=s3_tag_end_offset_reader(s3, "bkt"), spark=spark
+        )
+        (f,) = topics[STATUS_TOPIC]
+        assert (f.offset_from, f.offset_to) == (21, 77)
+        (bucket, key), = s3.requests
+        assert bucket == "bkt"
+        assert "://" not in key and not key.startswith("file:")
+        assert key.endswith(_SINGLE)
+
+    src = _status_files(str(tmp_path / "in"))
+    os.remove(os.path.join(src, STATUS_TOPIC, "partition=1", _RANGED))
+    check(src)
+    if os.path.isdir(FIXTURES):  # the reference's fixture file
+        check(_status_files(str(tmp_path / "fixture"), [_SINGLE]))

@@ -27,6 +27,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from restructure_hdfs_topic_spark import storage
 from restructure_hdfs_topic_spark.config import (
     CleanerConfig,
     PathConfig,
@@ -142,7 +143,7 @@ def test_two_polls_and_reupload_reprocess(spark, tmp_path):
         ]
 
     def lp(path):  # the µs last_processed a commit of ``path`` records
-        return file_micros(os.stat(path).st_mtime)
+        return file_micros(storage.store(path).mtime(path))
 
     mt = [BASE_S + k * 10.000000333 for k in range(4)]
     write_topic_file(src, TOPIC, 0, 0, recs(0, 3), mtime_s=mt[0])

@@ -175,8 +175,8 @@ def test_stale_breaker_cannot_remove_fresh_lock(spark, tmp_path):
     assert meta is not None and meta["owner"] == a.owner
 
     # And the break mutex was released — a future legitimate break works
-    # (recreate an expired lease through the fs API to keep checksums valid).
-    a._fs.delete(a._path("topic_x"), False)
+    # (recreate an expired lease through the store).
+    a._st.delete(a._path("topic_x"))
     assert stale.acquire("topic_x") is not None
     assert b.acquire("topic_x") is not None
 

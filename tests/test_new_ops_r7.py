@@ -590,12 +590,13 @@ def test_duplicated_unit_spans_duckdb_cross_check(spark):
 # --- Hadoop-FS streaming zip repack ------------------------------------------
 
 
-def test_zip_repack_streams_through_hadoop_fs(spark, tmp_path):
-    """A scheme:// target repacks through the real Hadoop FileSystem API
-    (FSDataOutputStream sink in data-descriptor mode, chunked reads):
-    file:// exercises the identical py4j stream plumbing used for
-    hdfs:///s3a://.  Round-trip: decompressed bytes equal the originals,
-    sources deleted, zipfile accepts the stream-written archive."""
+def test_zip_repack_streams_through_hadoop_fs(spark, tmp_path, viewfs):
+    """A URI target repacks through its store: a viewfs:// mount through
+    the real Hadoop FileSystem API (FSDataOutputStream sink in
+    data-descriptor mode, chunked reads — the py4j stream plumbing used
+    for hdfs:///s3a://), a file:// one through local files.  Round-trip:
+    decompressed bytes equal the originals, sources deleted, zipfile
+    accepts the written archive."""
     import os
 
     from restructure_hdfs_topic_spark.compression import (
@@ -603,27 +604,28 @@ def test_zip_repack_streams_through_hadoop_fs(spark, tmp_path):
         repack_to_zip,
     )
 
-    root = tmp_path / "out"
-    (root / "topic=a").mkdir(parents=True)
-    big = "x,y\n" + "\n".join(f"{i},{i * i}" for i in range(50_000))
-    (root / "topic=a" / "part-0001.csv").write_text(big)
-    (root / "part-0002.csv").write_text("a,b\n1,2\n")
-    (root / "_SUCCESS").write_text("")  # marker: must survive untouched
+    for name, uri in (("view", viewfs), ("out", lambda d: f"file://{d}")):
+        root = tmp_path / name
+        (root / "topic=a").mkdir(parents=True)
+        big = "x,y\n" + "\n".join(f"{i},{i * i}" for i in range(50_000))
+        (root / "topic=a" / "part-0001.csv").write_text(big)
+        (root / "part-0002.csv").write_text("a,b\n1,2\n")
+        (root / "_SUCCESS").write_text("")  # marker: must survive untouched
 
-    created = repack_to_zip(f"file://{root}", extensions=(".csv",), spark=spark)
-    assert len(created) == 2 and all(c.endswith(".csv.zip") for c in created)
-    assert not (root / "topic=a" / "part-0001.csv").exists()
-    assert (root / "_SUCCESS").exists()
+        created = repack_to_zip(uri(root), extensions=(".csv",), spark=spark)
+        assert len(created) == 2 and all(c.endswith(".csv.zip") for c in created)
+        assert not (root / "topic=a" / "part-0001.csv").exists()
+        assert (root / "_SUCCESS").exists()
 
-    by_name = {os.path.basename(c): c for c in created}
-    got_big = read_zip_entry(by_name["part-0001.csv.zip"], spark=spark).decode()
-    assert got_big == big
-    # The same archive also opens via the plain local reader (an on-disk
-    # zip is an on-disk zip — data-descriptor layout is standard).
-    local = str(root / "topic=a" / "part-0001.csv.zip")
-    assert read_zip_entry(local).decode() == big
-    got_small = read_zip_entry(by_name["part-0002.csv.zip"], spark=spark).decode()
-    assert got_small == "a,b\n1,2\n"
+        by_name = {os.path.basename(c): c for c in created}
+        got_big = read_zip_entry(by_name["part-0001.csv.zip"], spark=spark).decode()
+        assert got_big == big
+        # The same archive also opens via the plain local reader (an on-disk
+        # zip is an on-disk zip — data-descriptor layout is standard).
+        local = str(root / "topic=a" / "part-0001.csv.zip")
+        assert read_zip_entry(local).decode() == big
+        got_small = read_zip_entry(by_name["part-0002.csv.zip"], spark=spark).decode()
+        assert got_small == "a,b\n1,2\n"
 
     with pytest.raises(ValueError):
         repack_to_zip("hdfs://nowhere/x", spark=None)

@@ -169,21 +169,19 @@ _CRASH_TAGS = [
     )
 )
 def test_atomic_fallback_reader_always_recovers_a_version(
-    spark, tmp_path_factory, publishes
+    spark, tmp_path_factory, viewfs, publishes
 ):
     """Force the rename-aside fallback and crash at every protocol point:
     the fallback-aware reader must always return the PREVIOUS committed
     payload (crash before rename-in) or the NEW one (crash after) —
     never nothing, never a torn value; and a crash-free retry always
-    converges to the new payload."""
-    from restructure_hdfs_topic_spark import compression as cz
-    from restructure_hdfs_topic_spark.compression import (
-        read_small_file_fallback,
-        write_small_file_atomic,
-    )
+    converges to the new payload.  The path is on a viewfs:// mount, so
+    ``replace`` takes the Hadoop store that has the fallback."""
+    from restructure_hdfs_topic_spark import storage as cz
 
     root = tmp_path_factory.mktemp("atomic_prop")
-    path = f"file://{root}/meta.json"
+    path = f"{viewfs(root)}/meta.json"
+    store = cz.store(path, spark)
 
     def hook_for(crash_tag):
         def hook(tag):
@@ -199,21 +197,21 @@ def test_atomic_fallback_reader_always_recovers_a_version(
     cz._fault_point = hook_for(None)
     try:
         committed = b"v0"
-        write_small_file_atomic(path, committed, spark=spark)
+        store.replace(path, committed)
         for payload, crash_tag in publishes:
             cz._fault_point = hook_for(crash_tag)
             try:
-                write_small_file_atomic(path, payload, spark=spark)
+                store.replace(path, payload)
                 committed = payload
             except RuntimeError:
-                got = read_small_file_fallback(path, spark=spark)
+                got = store.read_replaced(path)
                 assert got in (committed, payload)
                 committed = got  # whatever survived IS the committed state
-            assert read_small_file_fallback(path, spark=spark) == committed
+            assert store.read_replaced(path) == committed
             # Crash-free retry converges to the new payload.
             cz._fault_point = hook_for(None)
-            write_small_file_atomic(path, payload, spark=spark)
+            store.replace(path, payload)
             committed = payload
-            assert read_small_file_fallback(path, spark=spark) == committed
+            assert store.read_replaced(path) == committed
     finally:
         cz._fault_point = orig_hook

@@ -1,6 +1,8 @@
 """The versioned state store (``restructure_hdfs_topic_spark/state.py``):
 it alone spells the on-disk layout, and its lanes' reads are pinned."""
 
+import dataclasses
+import os
 import pathlib
 import re
 
@@ -69,12 +71,21 @@ def test_offset_read_of_committed_state_runs_no_job(spark, tmp_path):
     assert [tuple(r)[:4] for r in got[0].collect()] == [("t", 0, 0, 9)]
 
 
-@pytest.mark.parametrize("spelling", ["plain", "uri"])
-def test_offset_commit_and_rollback_run_no_job(spark, tmp_path, spelling):
+def _spelled(tmp_path, spelling: str, viewfs) -> str:
+    """``tmp_path`` as a plain path, a ``file://`` URI (both the local
+    store) or a viewfs:// mount over it (the Hadoop store)."""
+    if spelling == "plain":
+        return str(tmp_path)
+    return f"file://{tmp_path}" if spelling == "uri" else viewfs(tmp_path)
+
+
+@pytest.mark.parametrize("spelling", ["plain", "uri", "viewfs"])
+def test_offset_commit_and_rollback_run_no_job(spark, tmp_path, spelling, viewfs):
     """The ledger lives on the driver: ``commit_offsets`` (a merge) and a
     cleaner-style ``replace_offsets`` (a remove) each read and write one
     document and run no Spark job; each version directory holds just the
-    document and ``_SUCCESS``."""
+    document and ``_SUCCESS`` (on the viewfs mount, over Hadoop's
+    checksummed local file system, with their ``.crc`` sidecars)."""
     from restructure_hdfs_topic_spark.operators.offsets import (
         commit_offsets,
         read_intervals,
@@ -82,7 +93,7 @@ def test_offset_commit_and_rollback_run_no_job(spark, tmp_path, spelling):
         replace_offsets,
     )
 
-    state_dir = str(tmp_path) if spelling == "plain" else f"file://{tmp_path}"
+    state_dir = _spelled(tmp_path, spelling, viewfs)
     lp = 1_700_000_000_123_456
     new = [("t", 0, 0, 9, lp), ("t", 0, 10, 19, lp + 1), ("t", 1, 0, 3, None)]
     assert _jobs_run(spark, lambda: commit_offsets(spark, state_dir, new)) == 0
@@ -93,11 +104,11 @@ def test_offset_commit_and_rollback_run_no_job(spark, tmp_path, spelling):
         ("t", 0, 8, 19, lp + 1),
         ("t", 1, 0, 3, None),
     ]
+    sidecars = [".state.json.crc", "._SUCCESS.crc"] if spelling == "viewfs" else []
     for version in ("v00000001", "v00000002"):
-        assert sorted(p.name for p in (tmp_path / "offsets" / version).iterdir()) == [
-            "_SUCCESS",
-            "state.json",
-        ]
+        assert sorted(p.name for p in (tmp_path / "offsets" / version).iterdir()) == sorted(
+            ["_SUCCESS", "state.json", *sidecars]
+        )
 
 
 def test_parquet_ledger_version_is_read_once_and_replaced(spark, tmp_path):
@@ -131,10 +142,14 @@ def test_parquet_ledger_version_is_read_once_and_replaced(spark, tmp_path):
 
     land(0), land(1)
     # The state as the previous layout committed it: the manifest's
-    # intervals, ``last_processed`` = timestamp_seconds(mtime), merged, in
-    # parquet, with the pointer naming it.
+    # intervals, ``last_processed`` = timestamp_seconds(mtime) of a walk
+    # that read ``st_mtime``, merged, in parquet, with the pointer naming it.
+    walked = [
+        dataclasses.replace(f, mtime=os.stat(f.path).st_mtime)
+        for f in walk_topics(src)["events"]
+    ]
     previous = merge_offset_intervals(
-        manifest_df(spark, walk_topics(src)["events"]).select(
+        manifest_df(spark, walked).select(
             "topic", "partition", "offset_from", "offset_to",
             F.col("mtime").alias("last_processed"),
         )
@@ -162,28 +177,32 @@ def test_parquet_ledger_version_is_read_once_and_replaced(spark, tmp_path):
     assert (res["files_processed"], res["records_written"]) == (1, 4)
     v2 = state_dir / "offsets" / "v00000002"
     assert sorted(p.name for p in v2.iterdir()) == ["_SUCCESS", "state.json"]
-    ledger = [("events", 0, 0, 11, file_micros(mtimes[2]))]
+    # The new commit records the walk's millisecond mtime.
+    newest = walk_topics(src)["events"][-1]
+    ledger = [("events", 0, 0, 11, file_micros(newest.mtime))]
+    assert newest.mtime == int(mtimes[2] * 1000) / 1000
     assert decode_ledger((v2 / "state.json").read_text()) == ledger
     assert read_intervals(spark, sd) == ledger
 
 
-@pytest.mark.parametrize("spelling", ["plain", "uri"])
-def test_no_replace_rename_refuses_a_nonempty_target(spark, tmp_path, spelling):
+@pytest.mark.parametrize("spelling", ["plain", "uri", "viewfs"])
+def test_no_replace_rename_refuses_a_nonempty_target(spark, tmp_path, spelling, viewfs):
     """The staging-to-version rename never replaces an existing version
     directory: a non-empty target is refused and left untouched, and the
     source stays where it was (Hadoop's own rename would move it INTO the
     target)."""
-    from restructure_hdfs_topic_spark import state
+    from restructure_hdfs_topic_spark import storage
 
-    state_dir = str(tmp_path) if spelling == "plain" else f"file://{tmp_path}"
+    state_dir = _spelled(tmp_path, spelling, viewfs)
+    st = storage.store(state_dir, spark)
     for name, body in (("src", "staged"), ("dst", "committed")):
         (tmp_path / name).mkdir()
         (tmp_path / name / "part").write_text(body)
-    assert not state._rename_no_replace(spark, state_dir, "src", "dst")
+    assert not st.rename_no_replace(f"{state_dir}/src", f"{state_dir}/dst")
     assert sorted(p.name for p in (tmp_path / "dst").iterdir()) == ["part"]
     assert (tmp_path / "dst" / "part").read_text() == "committed"
     assert (tmp_path / "src" / "part").read_text() == "staged"
     # A free target is taken.
-    assert state._rename_no_replace(spark, state_dir, "src", "fresh")
+    assert st.rename_no_replace(f"{state_dir}/src", f"{state_dir}/fresh")
     assert (tmp_path / "fresh" / "part").read_text() == "staged"
     assert not (tmp_path / "src").exists()

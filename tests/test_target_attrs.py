@@ -3,12 +3,13 @@
 import os
 import stat
 
+import pytest
+
 from restructure_hdfs_topic_spark.config import RestructureConfig
 from restructure_hdfs_topic_spark.target_attrs import (
     DIR_MODE,
     FILE_MODE,
     apply_local_target_attrs,
-    local_root,
 )
 
 
@@ -43,15 +44,32 @@ def test_apply_local_target_attrs_sets_reference_modes(tmp_path):
 def test_apply_local_target_attrs_uri_scoping(tmp_path):
     # file:// URIs resolve to their local path; object stores are no-ops
     # (the reference scopes this behavior to LocalTargetStorage).
-    assert local_root("s3a://bucket/out") is None
-    assert local_root("hdfs://nn/out") is None
-    assert local_root(str(tmp_path)) == str(tmp_path)
-    assert local_root(f"file://{tmp_path}") == str(tmp_path)
+    from restructure_hdfs_topic_spark.storage import local_path
+
+    assert local_path("s3a://bucket/out") is None
+    assert local_path("hdfs://nn/out") is None
+    assert local_path(str(tmp_path)) == str(tmp_path)
+    assert local_path(f"file://{tmp_path}") == str(tmp_path)
     _build_tree(tmp_path)
     assert apply_local_target_attrs("s3a://bucket/out") == 0
     assert apply_local_target_attrs(f"file://{tmp_path}") >= 6
     # Missing tree: no-op, not an error.
     assert apply_local_target_attrs(str(tmp_path / "absent")) == 0
+
+
+@pytest.mark.parametrize("resolve", ["os", "hadoop"])
+@pytest.mark.parametrize("form", ["file:{}", "file://{}"])
+def test_apply_local_target_attrs_on_file_uri_targets(spark, tmp_path, form, resolve):
+    """A ``file:/abs`` target (the single-slash form Hadoop renders) and a
+    ``file:///abs`` target get the attributes a plain path gets, resolved
+    without a session and through Hadoop alike."""
+    f1, f2, sub = _build_tree(tmp_path)
+    kw = {"spark": spark} if resolve == "hadoop" else {}
+    assert apply_local_target_attrs(form.format(tmp_path), **kw) >= 6
+    for f in (f1, f2):
+        assert stat.S_IMODE(os.stat(f).st_mode) == FILE_MODE
+    for d in (sub, tmp_path):
+        assert stat.S_IMODE(os.stat(d).st_mode) == DIR_MODE
 
 
 def test_target_config_from_dict():
