@@ -1,9 +1,13 @@
 import os
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# The checkout these tests belong to: its package and entry points are the
+# ones under test, wherever the checkout lives.
+CHECKOUT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(CHECKOUT))
 
 
 def prop_examples(n: int) -> int:

@@ -10,10 +10,11 @@ Usage:  python tests/oracle_check.py [query ...]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import os
 

@@ -41,8 +41,10 @@ import os
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+CHECKOUT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(CHECKOUT))
 
 SRC = "/root/testdata/sf0.1"
 DERIVED = "/tmp/spark_graft_sf1"
@@ -299,7 +301,7 @@ def derive() -> None:
 
 _RUNNER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, CHECKOUT)
 import __spark_entry__ as e
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -331,7 +333,7 @@ def consistency_pass() -> int:
     os.makedirs("/tmp/scale_check", exist_ok=True)
     runner = "/tmp/scale_check/runner.py"
     with open(runner, "w") as fh:
-        fh.write(_RUNNER)
+        fh.write(_RUNNER.replace("CHECKOUT", repr(str(CHECKOUT)), 1))
     failures = 0
     for name in CONSISTENCY_QUERIES:
         results = []
@@ -378,7 +380,7 @@ def oracle_pass() -> int:
     ]
     env = dict(os.environ, ORACLE_SF_DIR=DERIVED)
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tests/oracle_check.py", *names],
+        [sys.executable, str(CHECKOUT / "tests" / "oracle_check.py"), *names],
         env=env, timeout=7200, text=True, capture_output=True,
     )
     sys.stdout.write(proc.stdout)

@@ -3,13 +3,9 @@ offsets pointer-loss recovery, overflow-safe hash sampling, per-query
 top-k in probed buckets, multi-branch Avro unions.
 """
 
-import sys
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_offsets_pointer_loss_recovers_latest_version(spark, tmp_path):

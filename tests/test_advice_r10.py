@@ -10,12 +10,9 @@
 """
 
 import json
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators import bm25_index as bix
 from restructure_hdfs_topic_spark.operators.bm25_index import (

@@ -17,12 +17,9 @@
 
 import json
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark import storage
 from restructure_hdfs_topic_spark.operators.bm25_index import (

@@ -15,11 +15,7 @@
    pins raise.
 """
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

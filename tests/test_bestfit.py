@@ -4,13 +4,10 @@ oversize-split semantics, and partitioning independence."""
 
 import math
 import os
-import sys
 from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
 

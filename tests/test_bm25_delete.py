@@ -7,11 +7,8 @@ lifecycle."""
 
 import json
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -2,10 +2,6 @@
 ``bm25_topk`` path, partition-pruning / pushdown plan shape, meta
 round-trip, and query edges."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -4,11 +4,7 @@ committed segment count, and append∥compact raced the segment list — the
 ``<path>/_lock/`` lease makes the second writer fail loudly instead.
 Plus the streaming sink's auto-compaction policy (VERDICT r11 #5)."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.locks import StorageLockManager
 from restructure_hdfs_topic_spark.operators import bm25_index as bix

@@ -3,11 +3,7 @@ BIT-IDENTICAL to a from-scratch rebuild on the concatenated corpus,
 because N/avgdl/df are derived at serve time from per-segment exact ints
 instead of being frozen into any segment."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators import bm25_index as bix
 from restructure_hdfs_topic_spark.operators.bm25_index import (

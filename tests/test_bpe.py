@@ -3,9 +3,6 @@ reference equivalence on random corpora (catches heap/bookkeeping bugs in
 the incremental learner), encode/learn agreement, kernel contracts."""
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.bpe import (
     _encode_word,
@@ -14,8 +11,8 @@ from restructure_hdfs_topic_spark.operators.bpe import (
     word_frequencies,
 )
 
-
 # --- naive reference (full recount per merge — the textbook definition) ---
+
 
 def _ref_learn(word_counts, n_merges, min_pair_count=2):
     vocab = {}

@@ -3,13 +3,10 @@ re-derivation of the line keep + page drops over synthetic edge cases
 AND the documents table, plus partitioning independence."""
 
 import os
-import sys
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
 

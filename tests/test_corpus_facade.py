@@ -2,10 +2,6 @@
 verify the chain composes lazily and matches calling the operators
 directly."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from restructure_hdfs_topic_spark.corpus import Corpus

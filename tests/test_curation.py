@@ -4,11 +4,8 @@ packing composed as ONE plan over the sf0.1 documents table, with
 attrition and partitioning-independence assertions."""
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

@@ -6,13 +6,10 @@ semantics over the documents table and partitioning independence."""
 import math
 import os
 import re
-import sys
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -57,8 +54,6 @@ def _gram_hashes(text):
 
 def _doc_counts(text, n_buckets):
     return Counter(h % n_buckets for h in _gram_hashes(text))
-
-
 
 
 def _model(raw_rows, target_rows, n_buckets, smoothing, k):

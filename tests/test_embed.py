@@ -1,10 +1,6 @@
 """feature_hash_embed: DuckDB bit-for-bit cross-check (shared polynomial
 token hash), cosine fixture semantics, contracts."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from restructure_hdfs_topic_spark.operators.embed import feature_hash_embed

@@ -1,10 +1,6 @@
 """export_jsonl_shards: roundtrip, shard determinism, manifest totals."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

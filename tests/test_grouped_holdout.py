@@ -2,10 +2,6 @@
 singletons match plain holdout_split exactly, and the real near-dup
 pipeline composes end-to-end."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -2,11 +2,7 @@
 cross-check), commit-after-store ingest protocol, idempotent reruns,
 state round-trips, partitioning independence."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.incremental import (
     commit_fingerprints,

@@ -11,14 +11,10 @@ difference.  The ledger's driver algebra (``merge_intervals``,
 ``last_processed`` included — unknown (None) and the
 ``_MTIME_UNKNOWN_US`` sentinel among its values."""
 
-import sys
-
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.offsets import _MTIME_UNKNOWN_US
 

@@ -9,11 +9,8 @@ append (the ``append_bm25_segment`` discipline, applied to the vector
 family)."""
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

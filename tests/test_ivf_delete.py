@@ -8,11 +8,8 @@ the PQ code store together) with the generational publish discipline."""
 import json
 import os
 import shutil
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

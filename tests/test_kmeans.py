@@ -2,9 +2,6 @@
 partitionings, Lloyd improvement over seeds."""
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.similarity import kmeans_clusters
 

@@ -4,10 +4,6 @@ table (the raw testdata texts are single-line, so the cross-check wraps
 each text in a per-source header and a corpus-wide footer — real
 boilerplate shape)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from restructure_hdfs_topic_spark.operators.dedup import (

@@ -6,13 +6,9 @@ lines never count; untouched docs byte-exact; all-dropped docs -> "").
 One DataFrame per hypothesis example (many docs per case) so Spark jobs
 amortize and the suite stays fast."""
 
-import sys
-
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.dedup import strip_duplicated_lines
 

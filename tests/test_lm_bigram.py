@@ -2,11 +2,8 @@
 cross-check over the real documents table."""
 
 import math
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -2,11 +2,8 @@
 semantics — SET NX with 24h TTL, owner-only unlock) over the state dir."""
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.config import (
     PathConfig,

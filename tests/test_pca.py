@@ -2,10 +2,6 @@
 partitioning independence, orthonormality / variance-ordering / whitening
 properties, and degenerate-input edges."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 import numpy as np
 import pytest

@@ -3,13 +3,9 @@ the r10 negative result (recall 0.25 on the near-isotropic driver
 embeddings) becomes a real recall gate once the corpus has the decaying
 spectrum real encoder outputs have."""
 
-import sys
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.pca import pca_fit, pca_project
 from restructure_hdfs_topic_spark.operators.similarity import cosine_topk, ivf_ann_topk

@@ -5,10 +5,6 @@ follow their group's pinned members (merges resolve toward the most-eval
 pinned split), and the residual frozen-straddle window is auditable with
 ``pinned_split_conflicts``."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from pyspark.sql import functions as F
 

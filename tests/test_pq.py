@@ -233,9 +233,6 @@ def test_ann_pq_recall_check_table(spark):
     """The extras recall gate (q_ann_pq_recall) must produce the exact
     constant rows the harness digests: 100 queries, 500 exact pairs,
     reranked recall >= 0.90."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
 
     rows = {

@@ -1,10 +1,6 @@
 """corpus_profile: per-source monitoring aggregate, DuckDB cross-check
 (reusing the gopher_quality oracle SQL as the pass-rate CTE)."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from restructure_hdfs_topic_spark.operators.profile import corpus_profile
 
 

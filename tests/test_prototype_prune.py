@@ -2,10 +2,6 @@
 witness over the deterministic k-means labels, partitioning
 independence, and parameter edges."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import numpy as np
 import pytest
 

@@ -15,14 +15,11 @@ One DataFrame per hypothesis example so Spark jobs amortize."""
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter
 
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 _words = st.sampled_from(
     ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "the", "of"]

@@ -17,12 +17,9 @@ Pure Python — no Spark jobs, so examples run in bulk.
 from __future__ import annotations
 
 import math
-import sys
 
 from hypothesis import given
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.sampling import unimax_allocation
 

@@ -14,13 +14,9 @@ One DataFrame per hypothesis example so Spark jobs amortize."""
 
 from __future__ import annotations
 
-import sys
-
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 _ids = st.lists(
     st.integers(min_value=0, max_value=10_000), min_size=1, max_size=40, unique=True

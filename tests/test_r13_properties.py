@@ -15,13 +15,9 @@
 
 from __future__ import annotations
 
-import sys
-
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 import pytest
 

@@ -6,13 +6,10 @@ One DataFrame per hypothesis example so Spark jobs amortize."""
 from __future__ import annotations
 
 import math
-import sys
 
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.packing import epoch_shuffle  # noqa: E402
 from restructure_hdfs_topic_spark.operators.sampling import (  # noqa: E402

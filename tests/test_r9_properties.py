@@ -9,14 +9,11 @@ One DataFrame per hypothesis example so Spark jobs amortize."""
 from __future__ import annotations
 
 import math
-import sys
 from collections import defaultdict
 
 from conftest import prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.operators.packing import (  # noqa: E402
     best_fit_pack,

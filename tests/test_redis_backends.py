@@ -3,12 +3,9 @@ RedisRemoteLockManager.kt SET NX PX semantics and OffsetRedisPersistence.kt
 JSON wire format, against the redis-py client surface."""
 
 import json
-import sys
 import time
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.redis_backends import (
     RedisLock,

@@ -5,13 +5,10 @@ semantics, and the curate_corpus composition."""
 
 import os
 import re
-import sys
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
 

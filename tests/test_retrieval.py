@@ -3,9 +3,6 @@ cross-check over the real documents table (corpus-derived query set),
 and the self-retrieval sanity property."""
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import duckdb
 import pytest

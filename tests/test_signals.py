@@ -4,12 +4,9 @@ annotated frame equal the gates applied directly, and the plan is one
 shuffle-free scan."""
 
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.01"
 

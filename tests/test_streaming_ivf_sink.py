@@ -5,11 +5,8 @@ train-on-first-batch bootstrap, auto-vacuum bounding the generation
 count, and an engine-driven restart e2e mirroring the BM25 sink's."""
 
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -6,11 +6,7 @@ follows via its version gate, and ``Corpus.forget`` composes all three
 index-like states into one fan-out whose serve paths then behave as if
 the documents never existed."""
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -6,11 +6,8 @@ including schema sidecar placement and byte-exact golden CSV content.
 import glob
 import gzip
 import os
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.config import (
     PathConfig,

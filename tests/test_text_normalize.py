@@ -1,10 +1,6 @@
 """Text normalization + URL domain extraction: hand-built fixtures,
 NFC behavior, DuckDB cross-check of the JVM normalization chain."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from restructure_hdfs_topic_spark.functions.text import (

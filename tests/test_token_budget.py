@@ -4,9 +4,6 @@ window cross-check over the real documents table, monotonicity,
 partitioning independence."""
 
 import random
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 

@@ -2,12 +2,8 @@
 attrition identity (every input doc in exactly one terminal bucket),
 leakage-safe split composition, packed-train export round-trip."""
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 from restructure_hdfs_topic_spark.plans.export import read_shards
 from restructure_hdfs_topic_spark.plans.train_job import train_data_job

@@ -2,10 +2,6 @@
 exact realization witness (hash-order token prefix re-derived in
 Python), budget accounting, and edges."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 from pyspark.sql import functions as F
 
