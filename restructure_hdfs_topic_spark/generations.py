@@ -163,12 +163,6 @@ def tombstone_df(
     return reader.parquet(f"{path}/tombstones/{tomb}").select(id_col)
 
 
-def append_roots(meta: dict, path: str) -> list[str]:
-    """Referenced append-generation dirs (``path/append-gNNNNN`` each),
-    in append order — empty for layouts without replay-safe appends."""
-    return [f"{path}/{a['name']}" for a in meta.get("appends", [])]
-
-
 # ---------------------------------------------------------------------------
 # Tombstone generation write (shared by both delete lanes)
 # ---------------------------------------------------------------------------

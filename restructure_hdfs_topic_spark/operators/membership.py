@@ -44,16 +44,3 @@ def contains_records(
     return records.join(
         target, _join_cond(target, records, on, null_safe), "left_semi"
     )
-
-
-def missing_records(
-    target: DataFrame,
-    records: DataFrame,
-    on: list[str] | list[tuple[str, str]],
-    null_safe: bool = True,
-) -> DataFrame:
-    """Complement: rows of ``records`` NOT present in ``target`` (anti join) —
-    the cleaner's not-fully-extracted evidence."""
-    return records.join(
-        target, _join_cond(target, records, on, null_safe), "left_anti"
-    )

@@ -103,32 +103,6 @@ def cosine_near_dup_pairs(
     )
 
 
-def hyperplane_bucket(vec_col, planes: int = 8, table: int = 0) -> F.Column:
-    """Deterministic random-hyperplane signature: bit j = sign of the dot
-    product with pseudo-plane_j, where plane_j[i] = ((2j+3)*(i+1)*2654435761
-    mod 1009) - 504 — a fixed, engine-independent integer lattice.
-    ``table`` offsets the plane family so independent hash tables use
-    disjoint plane sets."""
-    def plane_term(j: int):
-        return lambda x, i: x * (
-            ((F.lit(2 * j + 3) * i * F.lit(2654435761)) % F.lit(1009)) - F.lit(504)
-        )
-
-    qv = _quantize(vec_col)
-    bits = []
-    for j in range(planes):
-        plane_dot = F.aggregate(
-            F.zip_with(qv, F.sequence(F.lit(1), F.size(qv)), plane_term(table * planes + j)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(plane_dot >= 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket
-
-
 def lsh_cosine_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float,
@@ -711,7 +685,7 @@ def lsh_ann_topk(
     def tag(batches):
         import numpy as np
 
-        # Same lattice as hyperplane_bucket: plane_{jj}[i] =
+        # A fixed integer lattice of pseudo-planes: plane_{jj}[i] =
         # ((2*jj+3)*(i+1)*2654435761 mod 1009) - 504, jj = t*planes + j.
         lattices = {}
 

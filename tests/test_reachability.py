@@ -195,7 +195,6 @@ ALLOWED: dict[str, str] = {
     "operators.flatten:to_json_lines": _DEFERRED + "1 test",
     "sources.tables:register_tables": _DEFERRED + "1 test",
     "functions.text:lang_id": _DEFERRED + "no entry point calls it",
-    "generations:append_roots": _DEFERRED + "no entry point calls it",
     "operators.audiofp:audio_near_dup_pairs": _DEFERRED + "no entry point calls it",
     "operators.audiofp:text_as_audio": _DEFERRED + "no entry point calls it",
     "operators.bpe:load_bpe": _DEFERRED + "no entry point calls it",
@@ -207,10 +206,8 @@ ALLOWED: dict[str, str] = {
     "operators.langid:doc_trigram_ranks": _DEFERRED + "no entry point calls it",
     "operators.langid:load_lang_profiles": _DEFERRED + "no entry point calls it",
     "operators.langid:save_lang_profiles": _DEFERRED + "no entry point calls it",
-    "operators.membership:missing_records": _DEFERRED + "no entry point calls it",
     "operators.pca:load_pca_model": _DEFERRED + "no entry point calls it",
     "operators.pca:save_pca_model": _DEFERRED + "no entry point calls it",
-    "operators.similarity:hyperplane_bucket": _DEFERRED + "no entry point calls it",
     "plans.signals:filter_by_signals": _DEFERRED + "no entry point calls it",
 }
 
