@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from restructure_hdfs_topic_spark.functions.text import HASH_BASE, HASH_MOD, poly_hash
+from restructure_hdfs_topic_spark.functions.text import HASH_BASE, HASH_MOD
 
 
 def keep_last_dedup(
@@ -126,85 +126,6 @@ def shingles_from(toks: F.Column, n: int = 3) -> F.Column:
     # sequence(0, k-1) would generate a DESCENDING range when k <= 0 —
     # guard short documents to an empty shingle set instead.
     return F.when(k > 0, grams).otherwise(F.array().cast("array<string>"))
-
-
-def shingles(text_col: str, n: int = 3) -> F.Column:
-    """Inline column form (kept for the oracle-checked O(n²) baseline) —
-    prefer projecting tokens first and using ``shingles_from``."""
-    tokens = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    return shingles_from(tokens, n)
-
-
-def hashed_shingles(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """(id, hs: array<long>) — distinct hashed word-n-gram shingles.
-
-    hash_fn="xxhash64" is the production path: one JVM hash intrinsic per
-    shingle (codegen-friendly).  "poly" keeps the deterministic polynomial
-    char fold — an interpreted higher-order fold, ~20× slower (BENCH_r01:
-    minhash_lsh_pairs 26.9 s/5k docs) — only where an external oracle must
-    reproduce the hash arithmetic.
-    """
-    # Tokens materialize in their own projection so each element_at reads
-    # the array instead of re-splitting the text.
-    toked = df.select(
-        F.col(id_col).alias("id"),
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("__toks"),
-    )
-    sh = F.array_distinct(shingles_from(F.col("__toks"), n))
-    # Wrapped lambda: F.xxhash64 is *cols-variadic, which breaks PySpark's
-    # higher-order-function arity introspection.
-    hasher = (lambda s: F.xxhash64(s)) if hash_fn == "xxhash64" else poly_hash
-    return toked.select("id", F.transform(sh, hasher).alias("hashed"))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """MinHash signature per document: h_i(S) = min over shingles s of
-    pmod(a_i * h(s) + b_i, p), with a fixed affine family (a_i, b_i).
-
-    Returns (id, sig: array<long> length ``num_hashes``).  All distributed,
-    one narrow projection — no shuffle until LSH banding.
-    """
-    hashed_df = hashed_shingles(df, id_col, text_col, n, hash_fn)
-    return with_minhash_sig(hashed_df, num_hashes).select("id", "sig")
-
-
-def with_minhash_sig(hashed_df: DataFrame, num_hashes: int = 32) -> DataFrame:
-    """Append the minhash signature to a hashed-shingle frame.
-
-    The per-shingle hash lives in its OWN projection (``hashed``):
-    referencing it ``num_hashes`` times inline would make Catalyst
-    re-inline (and re-evaluate) the hash per affine function —
-    CollapseProject keeps a multi-referenced non-cheap alias un-inlined.
-    """
-
-    def affine(i: int):
-        # Closure factory: default-arg lambdas break PySpark's higher-order
-        # lambda arity introspection (second param would bind the index).
-        # Inner pmod first: xxhash64 is a full-range signed long and the
-        # affine multiply would overflow int64 under ANSI; reduced to
-        # [0, p) the product stays < p * (2*num_hashes+1) « 2^63.
-        return lambda h: F.pmod(
-            F.pmod(h, F.lit(HASH_MOD)) * F.lit(2 * i + 1) + F.lit(7919 * (i + 1)),
-            F.lit(HASH_MOD),
-        )
-
-    sigs = F.array(
-        *[F.array_min(F.transform(F.col("hashed"), affine(i))) for i in range(num_hashes)]
-    )
-    return hashed_df.withColumn("sig", sigs)
 
 
 def _tokenize_hash(texts, lowercase: bool):

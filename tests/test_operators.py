@@ -12,7 +12,7 @@ from restructure_hdfs_topic_spark.functions.paths import parse_source_filename, 
 from restructure_hdfs_topic_spark.operators.dedup import (
     keep_last_dedup,
     ngram_jaccard_pairs,
-    shingles,
+    shingles_from,
 )
 from restructure_hdfs_topic_spark.operators.offsets import (
     filter_unseen_records,
@@ -115,7 +115,8 @@ def test_seen_record_filter_mtime_dimension(spark):
 
 def test_shingles_short_doc_is_empty(spark):
     df = spark.createDataFrame([("one two",), ("a b c d",)], "text string")
-    out = df.select(shingles("text", 3).alias("sh")).collect()
+    toks = df.select(F.split("text", " ").alias("toks"))
+    out = toks.select(shingles_from(F.col("toks"), 3).alias("sh")).collect()
     assert out[0].sh == []
     assert out[1].sh == ["a b c", "b c d"]
 

@@ -201,8 +201,6 @@ ALLOWED: dict[str, str] = {
     "operators.bpe:save_bpe": _DEFERRED + "no entry point calls it",
     "operators.classifier:load_classifier": _DEFERRED + "no entry point calls it",
     "operators.classifier:save_classifier": _DEFERRED + "no entry point calls it",
-    "operators.dedup:shingles": _DEFERRED + "no entry point calls it",
-    "operators.dedup:minhash_signatures": _DEFERRED + "no entry point calls it",
     "operators.langid:doc_trigram_ranks": _DEFERRED + "no entry point calls it",
     "operators.langid:load_lang_profiles": _DEFERRED + "no entry point calls it",
     "operators.langid:save_lang_profiles": _DEFERRED + "no entry point calls it",
