@@ -212,21 +212,6 @@ def lang_scores(text: Column) -> list[tuple[str, Column]]:
     ]
 
 
-def lang_id(text: Column) -> Column:
-    """Argmax language by marker hits; ties break to the lexicographically
-    smallest language code; zero hits → 'und' (undetermined)."""
-    scores = lang_scores(text)
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    # Iterate in reverse-sorted order so earlier codes win ties with >=.
-    for lang, score in sorted(scores, key=lambda p: p[0], reverse=True):
-        better = score > F.lit(0)
-        take = better & (score >= best_score)
-        best_lang = F.when(take, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(take, score).otherwise(best_score)
-    return best_lang
-
-
 def chunk_documents(
     df,
     id_col: str = "doc_id",

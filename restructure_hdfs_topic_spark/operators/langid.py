@@ -24,10 +24,8 @@ Engine shapes:
   language for displacements — no shuffle, no join, per-row pure (a
   per-ROW Python kernel measured ~15× slower than the old JVM explode
   pipeline; the batch kernel beats both).
-- **Artifact**: ``save_lang_profiles`` / ``load_lang_profiles`` write
-  one JSON file through the shared small-file plumbing (local or any
-  Hadoop ``scheme://``), so training and classification jobs decouple
-  like the quality classifier's.
+- **Profiles** are a small dict (languages × ``top_k`` grams), passed
+  from the trainer to the classifier in the same driver.
 
 Determinism: counts are exact; ranks tie-break on the gram string; the
 classifier tie-breaks on language name — bit-stable across partitionings
@@ -36,17 +34,12 @@ and engines (pinned by an exact pure-Python model test).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
     "train_lang_profiles",
     "classify_lang",
-    "save_lang_profiles",
-    "load_lang_profiles",
-    "doc_trigram_ranks",
 ]
 
 
@@ -56,8 +49,7 @@ _PACK_BITS = 21
 
 
 def _normalize_batch(texts_iter, max_chars: int | None = None) -> list[str]:
-    """The ONE normalization both langid kernels (and the pure-Python
-    model) share: optional prefix cap, lower, Unicode-``\\s`` runs → one
+    """The ONE normalization both langid kernels share: optional prefix cap, lower, Unicode-``\\s`` runs → one
     space.  NULL → ''."""
     import re
 
@@ -210,28 +202,6 @@ def train_lang_profiles(
             for lang, entries in sorted(profiles.items())
         },
     }
-
-
-def doc_trigram_ranks(
-    text: str, n: int, doc_top: int, max_chars: int | None = 4096
-) -> list[str]:
-    """Rank-ordered top ``doc_top`` n-grams of one document — the exact
-    counting/tie-break rule the classifier kernel uses (exposed for the
-    pure-Python model test).  Normalization mirrors ``_trigrams_expr``;
-    ``max_chars`` mirrors ``classify_lang``'s prefix cap."""
-    import re
-
-    t = (text or "")
-    if max_chars is not None:
-        t = t[:max_chars]
-    t = re.sub(r"\s+", " ", t.lower())
-    counts: dict[str, int] = {}
-    for i in range(len(t) - n + 1):
-        g = t[i : i + n]
-        counts[g] = counts.get(g, 0) + 1
-    return [g for g, _ in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))][
-        :doc_top
-    ]
 
 
 def classify_lang(
@@ -390,23 +360,3 @@ def classify_lang(
             yield out
 
     return docs.mapInPandas(kernel, out_schema)
-
-
-def save_lang_profiles(path: str, profiles: dict, spark=None) -> None:
-    """One JSON artifact via the shared small-file plumbing (local or any
-    Hadoop ``scheme://``) — train rarely, classify everywhere.
-    Published ATOMICALLY (r13): last-writer-wins, never a torn file."""
-    from restructure_hdfs_topic_spark import storage
-
-    if profiles.get("format") != "restructure_hdfs_topic_spark/langid/v1":
-        raise ValueError("not a langid/v1 profile artifact")
-    storage.store(path, spark).replace(path, json.dumps(profiles).encode("utf-8"))
-
-
-def load_lang_profiles(path: str, spark=None) -> dict:
-    from restructure_hdfs_topic_spark import storage
-
-    profiles = json.loads(storage.store(path, spark).read(path).decode("utf-8"))
-    if profiles.get("format") != "restructure_hdfs_topic_spark/langid/v1":
-        raise ValueError(f"{path}: not a langid/v1 profile artifact")
-    return profiles

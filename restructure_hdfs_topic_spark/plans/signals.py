@@ -21,7 +21,7 @@ measured CollapseProject discipline); the 13 n-gram repetition
 fractions ride ``gopher_repetition_metrics``' one Arrow ``mapInPandas``
 kernel crossing.  No shuffle anywhere, so annotation cost is one scan
 (plus that single Python crossing) regardless of how many signals ride
-along.  Gate-equality witness + partitioning independence:
+along.  Signal-equality witness + partitioning independence:
 tests/test_signals.py.
 """
 
@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from restructure_hdfs_topic_spark.functions.text import (
-    GOPHER_REPETITION_THRESHOLDS,
     bpe_token_count,
     c4_line_keep,
     gopher_metrics_from,
@@ -169,57 +168,3 @@ def annotate_quality_signals(
 
 
 _SIGNAL_COLS_MEMO: dict = {}
-
-
-#: ``filter_by_signals`` preset replicating the full Gopher gate — BOTH
-#: table-A1 halves (Rae et al. 2021): the word-level quality bounds of
-#: ``gopher_passes`` plus every repetition-fraction ceiling of
-#: ``gopher_repetition_passes``.  Equality witness vs the gates
-#: themselves: tests/test_signals.py.
-GOPHER_SIGNAL_RECIPE: dict = {
-    "n_words": (50, 100_000),
-    "mean_word_len": (3.0, 10.0),
-    "symbol_word_ratio": (None, 0.1),
-    "bullet_line_ratio": (None, 0.9),
-    "ellipsis_line_ratio": (None, 0.3),
-    "alpha_word_ratio": (0.8, None),
-    "n_stopword_kinds": (2, None),
-    **{
-        name: (None, limit)
-        for name, limit in GOPHER_REPETITION_THRESHOLDS.items()
-    },
-}
-
-#: ``filter_by_signals`` preset replicating ``c4_clean``'s PAGE-level
-#: drops at its default thresholds (Raffel et al. 2020 §2.2: <5
-#: sentences in the retained text, "lorem ipsum", curly brackets) —
-#: the ``c4_page_keep`` signal is that exact decision, NULL-text-passes
-#: convention included.  (C4's LINE-level rewrite is a transformation,
-#: not a filter — apply ``c4_clean`` itself to also rewrite the text.)
-C4_SIGNAL_RECIPE: dict = {"c4_page_keep": True}
-
-
-def filter_by_signals(docs: DataFrame, thresholds: dict) -> DataFrame:
-    """The annotate-once/filter-many consumer (RedPajama-v2's product
-    shape): keep rows where EVERY named signal satisfies its spec —
-    ``(lo, hi)`` inclusive numeric bounds (``None`` = unbounded on that
-    side) or a bare ``bool`` for flag equality.  A NULL signal fails its
-    predicate (the same convention as every gate here — a NULL must not
-    silently pass a threshold).  One codegen filter, no shuffle.
-
-    Published presets: ``GOPHER_SIGNAL_RECIPE`` (== ``gopher_passes`` ∧
-    ``gopher_repetition_passes``), ``C4_SIGNAL_RECIPE`` (==
-    ``c4_clean``'s page-drop survivor set)."""
-    cond = F.lit(True)
-    for name in sorted(thresholds):
-        spec = thresholds[name]
-        c = F.col(name)
-        if isinstance(spec, bool):
-            cond = cond & (c == F.lit(spec))
-        else:
-            lo, hi = spec
-            if lo is not None:
-                cond = cond & (c >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (c <= F.lit(hi))
-    return docs.filter(cond)

@@ -194,19 +194,14 @@ ALLOWED: dict[str, str] = {
     "caching:release_scope": _DEFERRED + "1 test",
     "operators.flatten:to_json_lines": _DEFERRED + "1 test",
     "sources.tables:register_tables": _DEFERRED + "1 test",
-    "functions.text:lang_id": _DEFERRED + "no entry point calls it",
     "operators.audiofp:audio_near_dup_pairs": _DEFERRED + "no entry point calls it",
     "operators.audiofp:text_as_audio": _DEFERRED + "no entry point calls it",
     "operators.bpe:load_bpe": _DEFERRED + "no entry point calls it",
     "operators.bpe:save_bpe": _DEFERRED + "no entry point calls it",
     "operators.classifier:load_classifier": _DEFERRED + "no entry point calls it",
     "operators.classifier:save_classifier": _DEFERRED + "no entry point calls it",
-    "operators.langid:doc_trigram_ranks": _DEFERRED + "no entry point calls it",
-    "operators.langid:load_lang_profiles": _DEFERRED + "no entry point calls it",
-    "operators.langid:save_lang_profiles": _DEFERRED + "no entry point calls it",
     "operators.pca:load_pca_model": _DEFERRED + "no entry point calls it",
     "operators.pca:save_pca_model": _DEFERRED + "no entry point calls it",
-    "plans.signals:filter_by_signals": _DEFERRED + "no entry point calls it",
 }
 
 

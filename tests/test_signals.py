@@ -21,11 +21,24 @@ def _docs(spark):
     return load_table(spark, SF_DIR, "documents").select("doc_id", "text")
 
 
+def _lang_id(text):
+    """Reference model of the marker-argmax language: a running best over
+    the per-language marker scores; ties break to the smallest language
+    code, zero hits give 'und'."""
+    from restructure_hdfs_topic_spark.functions.text import lang_scores
+
+    best_lang, best_score = F.lit("und"), F.lit(0)
+    for lang, score in sorted(lang_scores(text), key=lambda p: p[0], reverse=True):
+        take = (score > F.lit(0)) & (score >= best_score)
+        best_lang = F.when(take, F.lit(lang)).otherwise(best_lang)
+        best_score = F.when(take, score).otherwise(best_score)
+    return best_lang
+
+
 def test_signals_match_component_functions(spark):
     from restructure_hdfs_topic_spark.functions.text import (
         gopher_metrics,
         gopher_repetition_metrics,
-        lang_id,
         poly_hash,
         quality_score,
         token_count,
@@ -44,7 +57,7 @@ def test_signals_match_component_functions(spark):
     ref_cols = [
         token_count(F.col("text")).alias("n_tokens"),
         quality_score(F.col("text")).alias("quality_score"),
-        lang_id(F.col("text")).alias("lang_id"),
+        _lang_id(F.col("text")).alias("lang_id"),
         poly_hash(F.col("text")).alias("fingerprint"),
         *[c.alias(n) for n, c in gopher_metrics(F.col("text"))],
     ]
@@ -104,26 +117,50 @@ def test_signals_plan_is_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
+def _keep(docs, spec):
+    """Rows where every named signal lies in its inclusive ``(lo, hi)``
+    bounds (``None`` = open) or equals its ``bool``; a NULL signal fails."""
+    cond = F.lit(True)
+    for name, want in spec.items():
+        c = F.col(name)
+        if isinstance(want, bool):
+            cond = cond & (c == F.lit(want))
+        else:
+            lo, hi = want
+            if lo is not None:
+                cond = cond & (c >= F.lit(lo))
+            if hi is not None:
+                cond = cond & (c <= F.lit(hi))
+    return docs.filter(cond)
+
+
 def test_filter_by_signals_recipes_equal_gates(spark):
-    """VERDICT r9 #6 — annotate-once/filter-many: the published recipe
-    presets over the annotated frame select EXACTLY the documents the
-    corresponding gates select.  GOPHER_SIGNAL_RECIPE == gopher_passes ∧
-    gopher_repetition_passes; C4_SIGNAL_RECIPE == c4_clean's survivor
+    """VERDICT r9 #6 — annotate-once/filter-many: thresholds over the
+    annotated signal columns select EXACTLY the documents the gates
+    select.  The Gopher bounds (both table-A1 halves) == gopher_passes ∧
+    gopher_repetition_passes; ``c4_page_keep`` == c4_clean's survivor
     set (page drops at default thresholds, NULL-text-passes convention
     included — edge rows planted for every rule)."""
     from restructure_hdfs_topic_spark.functions.text import (
+        GOPHER_REPETITION_THRESHOLDS,
         c4_clean,
         gopher_metrics,
         gopher_passes,
         gopher_repetition_metrics,
         gopher_repetition_passes,
     )
-    from restructure_hdfs_topic_spark.plans.signals import (
-        C4_SIGNAL_RECIPE,
-        GOPHER_SIGNAL_RECIPE,
-        annotate_quality_signals,
-        filter_by_signals,
-    )
+    from restructure_hdfs_topic_spark.plans.signals import annotate_quality_signals
+
+    gopher_spec = {
+        "n_words": (50, 100_000),
+        "mean_word_len": (3.0, 10.0),
+        "symbol_word_ratio": (None, 0.1),
+        "bullet_line_ratio": (None, 0.9),
+        "ellipsis_line_ratio": (None, 0.3),
+        "alpha_word_ratio": (0.8, None),
+        "n_stopword_kinds": (2, None),
+        **{name: (None, limit) for name, limit in GOPHER_REPETITION_THRESHOLDS.items()},
+    }
 
     edge = spark.createDataFrame(
         [
@@ -167,7 +204,7 @@ def test_filter_by_signals_recipes_equal_gates(spark):
     }
     got_gopher = {
         r["doc_id"]
-        for r in filter_by_signals(annotated, GOPHER_SIGNAL_RECIPE).collect()
+        for r in _keep(annotated, gopher_spec).collect()
     }
     assert got_gopher == want_gopher and want_gopher
 
@@ -176,7 +213,7 @@ def test_filter_by_signals_recipes_equal_gates(spark):
     want_c4 = {r["doc_id"] for r in c4_clean(docs).collect()}
     got_c4 = {
         r["doc_id"]
-        for r in filter_by_signals(annotated, C4_SIGNAL_RECIPE).collect()
+        for r in _keep(annotated, {"c4_page_keep": True}).collect()
     }
     assert got_c4 == want_c4 and want_c4
     # The planted edges land on the intended sides.
