@@ -297,58 +297,6 @@ def bpe_encode(
     )
 
 
-def save_bpe(
-    path: str,
-    merges: list[tuple[str, str]],
-    word_tokens: dict[str, list[str]] | None = None,
-    spark=None,
-    word_end_marker: str | None = None,
-) -> None:
-    """Persist a learned tokenizer as ONE JSON artifact (merges in
-    application order + optionally the learner's word → pieces table) —
-    the piece every real pipeline needs between "learn the tokenizer
-    once" and "encode corpora with it forever" (the reference's schema
-    sidecar plays the same artifact role for Avro, SURVEY O24), through
-    ``storage`` (a non-local path needs ``spark``).  Published ATOMICALLY
-    (r13): concurrent or
-    crashed saves leave a complete old or new version, never a torn
-    file — last-writer-wins, no lease needed for one self-contained
-    artifact."""
-    import json
-
-    payload = json.dumps(
-        {
-            "format": "restructure_hdfs_topic_spark/bpe/v1",
-            "merges": [list(m) for m in merges],
-            "word_tokens": word_tokens,
-            "word_end_marker": word_end_marker,
-        },
-        ensure_ascii=False,
-    ).encode("utf-8")
-    from restructure_hdfs_topic_spark import storage
-
-    storage.store(path, spark).replace(path, payload)
-
-
-def load_bpe(
-    path: str, spark=None
-) -> tuple[list[tuple[str, str]], dict[str, list[str]] | None, str | None]:
-    """Load a ``save_bpe`` artifact back as ``(merges, word_tokens,
-    word_end_marker)`` — round-trips exactly (merge order, piece lists,
-    unicode, marker mode).  Carrying the marker in the artifact is what
-    stops a scoring job from silently mixing modes: pass the returned
-    marker straight to ``bpe_encode``."""
-    import json
-
-    from restructure_hdfs_topic_spark import storage
-
-    doc = json.loads(storage.store(path, spark).read(path).decode("utf-8"))
-    if doc.get("format") != "restructure_hdfs_topic_spark/bpe/v1":
-        raise ValueError(f"{path}: not a bpe/v1 artifact")
-    merges = [tuple(m) for m in doc["merges"]]
-    return merges, doc.get("word_tokens"), doc.get("word_end_marker")
-
-
 def bpe_decode(
     encoded: DataFrame,
     word_end_marker: str,

@@ -67,45 +67,6 @@ def train_quality_classifier(
     }
 
 
-def save_classifier(path: str, model: dict, spark=None) -> None:
-    """Persist a trained model dict as one JSON artifact (local path or
-    any Hadoop ``scheme://`` store — same artifact plumbing as
-    ``save_bpe``), so training and corpus-scoring jobs decouple.
-    Published ATOMICALLY (r13): last-writer-wins, never a torn file."""
-    import json
-
-    from restructure_hdfs_topic_spark import storage
-
-    payload = dict(model, format="restructure_hdfs_topic_spark/quality-clf/v1")
-    storage.store(path, spark).replace(
-        path, json.dumps(payload).encode("utf-8")
-    )
-
-
-def load_classifier(path: str, spark=None) -> dict:
-    """Load a ``save_classifier`` artifact; validates format and shape."""
-    import json
-
-    from restructure_hdfs_topic_spark import storage
-
-    doc = json.loads(storage.store(path, spark).read(path).decode("utf-8"))
-    if doc.get("format") != "restructure_hdfs_topic_spark/quality-clf/v1":
-        raise ValueError(f"{path}: not a quality-clf/v1 artifact")
-    try:
-        model = {
-            "weights": [float(w) for w in doc["weights"]],
-            "intercept": float(doc["intercept"]),
-            "dim": int(doc["dim"]),
-        }
-    except (KeyError, TypeError) as exc:
-        # Truncated/hand-edited artifacts must surface as the documented
-        # ValueError, not a KeyError/TypeError callers will not catch.
-        raise ValueError(f"{path}: malformed quality-clf artifact: {exc}") from exc
-    if model["dim"] < 1 or len(model["weights"]) != model["dim"]:
-        raise ValueError(f"{path}: weights length != dim (or dim < 1)")
-    return model
-
-
 def classifier_scores(
     docs: DataFrame,
     model: dict,

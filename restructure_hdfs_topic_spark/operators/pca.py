@@ -191,52 +191,6 @@ def pca_project(
     )
 
 
-def save_pca_model(model: PcaModel, path: str, spark=None) -> None:
-    """Persist a fitted model as one small JSON artifact.  The integer
-    fields (mean, components) serialize exactly; eigenvalues are stored
-    as C99 hex floats so the round-trip is BIT-exact — this is how the
-    docstring's cross-platform advice becomes actionable: fit once, ship
-    ``comps_int``, project identically on any LAPACK build.
-
-    Published ATOMICALLY (r13 lease-inventory sweep): a concurrent or
-    crashed save leaves either the old or the new version, never a torn
-    file — last-writer-wins on a single self-contained artifact, so no
-    mutation lease is needed."""
-    import json
-
-    from restructure_hdfs_topic_spark import storage
-
-    payload = {
-        "format": "restructure_hdfs_topic_spark/pca/v1",
-        "n": int(model.n),
-        "dim": int(model.dim),
-        "mean_q": [int(x) for x in model.mean_q],
-        "comps_int": [[int(x) for x in row] for row in model.comps_int],
-        "eigvals_hex": [float(x).hex() for x in model.eigvals],
-    }
-    storage.store(path, spark).replace(path, json.dumps(payload).encode("utf-8"))
-
-
-def load_pca_model(path: str, spark=None) -> PcaModel:
-    """Load a model saved by ``save_pca_model`` (bit-exact round-trip)."""
-    import json
-
-    from restructure_hdfs_topic_spark import storage
-
-    p = json.loads(storage.store(path, spark).read(path).decode("utf-8"))
-    if p.get("format") != "restructure_hdfs_topic_spark/pca/v1":
-        raise ValueError(f"not a PCA model artifact: {path}")
-    return PcaModel(
-        n=int(p["n"]),
-        mean_q=np.array(p["mean_q"], dtype=np.int64),
-        comps_int=np.array(p["comps_int"], dtype=np.int64).reshape(
-            len(p["comps_int"]), int(p["dim"])
-        ),
-        eigvals=np.array([float.fromhex(h) for h in p["eigvals_hex"]]),
-        dim=int(p["dim"]),
-    )
-
-
 def embedding_pca(
     embeddings: DataFrame,
     n_components: int = 8,

@@ -214,27 +214,20 @@ def test_marker_mode_round_trips(spark):
         assert got[doc_id] == want, (doc_id, got[doc_id], want)
 
 
-def test_marker_mode_artifact_and_guards(spark, tmp_path):
-    """The artifact carries the marker; bpe_encode rejects a vocab built
-    under a different marker setting; learning rejects a marker that
-    occurs in the corpus."""
+def test_marker_mode_artifact_and_guards(spark):
+    """bpe_encode rejects a vocab built under a different marker setting;
+    learning rejects a marker that occurs in the corpus."""
     import pytest
 
     from restructure_hdfs_topic_spark.operators.bpe import (
         bpe_encode,
         learn_bpe_with_vocab,
-        load_bpe,
-        save_bpe,
     )
 
     docs = spark.createDataFrame(
         [(1, "low lower lowest newer newest")], "doc_id long, text string"
     )
     merges, vocab = learn_bpe_with_vocab(docs, n_merges=10, word_end_marker="</w>")
-    path = str(tmp_path / "m.json")
-    save_bpe(path, merges, vocab, word_end_marker="</w>")
-    m, v, mk = load_bpe(path)
-    assert mk == "</w>" and m == merges and v == vocab
 
     # Marker-mode vocab + markerless encode call: loud mode-mismatch error.
     with pytest.raises(ValueError, match="different"):

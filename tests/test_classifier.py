@@ -112,34 +112,3 @@ def test_classifier_rejects_bad_model(spark):
     df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with pytest.raises(ValueError):
         classifier_scores(df, {"weights": [0.0] * 3, "intercept": 0.0, "dim": 4})
-
-
-def test_classifier_artifact_round_trip(spark, tmp_path):
-    from restructure_hdfs_topic_spark.operators.classifier import (
-        classifier_scores,
-        load_classifier,
-        save_classifier,
-        train_quality_classifier,
-    )
-
-    labeled = _labeled(spark)
-    model = train_quality_classifier(labeled, dim=64, max_iter=8)
-    local = str(tmp_path / "clf.json")
-    save_classifier(local, model)
-    m2 = load_classifier(local)
-    assert m2 == model
-
-    uri = f"file://{tmp_path}/clf_remote.json"
-    save_classifier(uri, model, spark=spark)
-    m3 = load_classifier(uri, spark=spark)
-    assert m3 == model
-
-    df = spark.createDataFrame([(1, "the quick brown fox")], "doc_id long, text string")
-    a = classifier_scores(df, model).collect()[0]["score"]
-    b = classifier_scores(df, m3).collect()[0]["score"]
-    assert a == b
-
-    bad = tmp_path / "bad.json"
-    bad.write_text('{"format": "other"}')
-    with pytest.raises(ValueError):
-        load_classifier(str(bad))

@@ -766,50 +766,6 @@ def test_canonical_url_duckdb_cross_check(spark):
 # --- BPE artifact round-trip ---------------------------------------------------
 
 
-def test_bpe_artifact_round_trip(spark, tmp_path):
-    from restructure_hdfs_topic_spark.operators.bpe import (
-        bpe_encode,
-        learn_bpe_with_vocab,
-        load_bpe,
-        save_bpe,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "low lower lowest newer newest wide widest café") for i in range(20)],
-        "doc_id long, text string",
-    )
-    merges, vocab = learn_bpe_with_vocab(docs, n_merges=12)
-    assert merges
-
-    local = str(tmp_path / "bpe.json")
-    save_bpe(local, merges, vocab)
-    m2, v2, mk2 = load_bpe(local)
-    assert m2 == merges and v2 == vocab and mk2 is None
-
-    # URI path exercises the Hadoop stream plumbing (file:// = same py4j
-    # code path as hdfs://).
-    uri = f"file://{tmp_path}/bpe_remote.json"
-    save_bpe(uri, merges, vocab, spark=spark)
-    m3, v3, _ = load_bpe(uri, spark=spark)
-    assert m3 == merges and v3 == vocab
-
-    a = sorted(
-        (r["id"], tuple(r["tokens"]))
-        for r in bpe_encode(docs, merges, word_tokens=vocab).collect()
-    )
-    b = sorted(
-        (r["id"], tuple(r["tokens"]))
-        for r in bpe_encode(docs, m3, word_tokens=v3).collect()
-    )
-    assert a == b
-
-    # wrong-format artifact rejected
-    bad = tmp_path / "bad.json"
-    bad.write_text('{"format": "other"}')
-    with pytest.raises(ValueError):
-        load_bpe(str(bad))
-
-
 # --- review regressions -------------------------------------------------------
 
 

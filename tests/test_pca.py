@@ -149,42 +149,3 @@ def test_pca_rejects_mixed_widths(spark):
     ).repartition(2, "vec_id")  # widths land in separate kernel batches
     with pytest.raises(Exception, match="mix widths|stack|shape|dimensions"):
         pca_fit(emb, n_components=2)
-
-
-def test_model_save_load_roundtrip_is_bit_exact(spark, tmp_path):
-    """save/load round-trips the fitted model EXACTLY (ints verbatim,
-    eigenvalues via hex floats), and projections from the loaded model
-    are row-identical — the ship-the-components workflow the module
-    docstring recommends for cross-platform reproducibility."""
-    import numpy as np
-
-    from restructure_hdfs_topic_spark.operators.pca import (
-        load_pca_model,
-        pca_fit,
-        pca_project,
-        save_pca_model,
-    )
-
-    emb = spark.createDataFrame(
-        [(i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(6)]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    model = pca_fit(emb, n_components=4)
-    path = str(tmp_path / "pca_model.json")
-    save_pca_model(model, path)
-    loaded = load_pca_model(path)
-    assert loaded.n == model.n and loaded.dim == model.dim
-    assert np.array_equal(loaded.mean_q, model.mean_q)
-    assert np.array_equal(loaded.comps_int, model.comps_int)
-    assert np.array_equal(loaded.eigvals, model.eigvals)  # bit-exact
-
-    a = sorted(map(tuple, pca_project(emb, model).collect()))
-    b = sorted(map(tuple, pca_project(emb, loaded, whiten=True).collect()))
-    c = sorted(map(tuple, pca_project(emb, model, whiten=True).collect()))
-    assert b == c and len(a) == 40
-
-    import pytest
-
-    with pytest.raises(ValueError, match="not a PCA model"):
-        open(str(tmp_path / "bad.json"), "w").write('{"format": "x"}') or None
-        load_pca_model(str(tmp_path / "bad.json"))

@@ -196,12 +196,6 @@ ALLOWED: dict[str, str] = {
     "sources.tables:register_tables": _DEFERRED + "1 test",
     "operators.audiofp:audio_near_dup_pairs": _DEFERRED + "no entry point calls it",
     "operators.audiofp:text_as_audio": _DEFERRED + "no entry point calls it",
-    "operators.bpe:load_bpe": _DEFERRED + "no entry point calls it",
-    "operators.bpe:save_bpe": _DEFERRED + "no entry point calls it",
-    "operators.classifier:load_classifier": _DEFERRED + "no entry point calls it",
-    "operators.classifier:save_classifier": _DEFERRED + "no entry point calls it",
-    "operators.pca:load_pca_model": _DEFERRED + "no entry point calls it",
-    "operators.pca:save_pca_model": _DEFERRED + "no entry point calls it",
 }
 
 
