@@ -503,57 +503,6 @@ def test_commit_signatures_state_wins_and_deterministic(spark, tmp_path):
 # --- ADVICE r7 regressions ---------------------------------------------------
 
 
-def test_audio_fingerprints_quarantines_short_fmt_chunk(spark):
-    """ADVICE r7 #1 (medium): a WAV whose 'fmt ' chunk declares size < 16
-    used to raise struct.error inside the Arrow kernel and fail the whole
-    task; the quarantine contract says it must become ONE decode_status
-    row instead."""
-    import struct
-
-    from restructure_hdfs_topic_spark.operators.audiofp import (
-        audio_fingerprints,
-        decode_wav,
-        wav_bytes,
-    )
-
-    # RIFF/WAVE with a 4-byte fmt body (declared size 4 < 16) + data chunk.
-    body = b"WAVE" + b"fmt " + struct.pack("<I", 4) + b"\x00" * 4
-    body += b"data" + struct.pack("<I", 2) + b"\x00\x00"
-    bad = b"RIFF" + struct.pack("<I", len(body)) + body
-    with pytest.raises(ValueError):
-        decode_wav(bad)
-
-    good = wav_bytes([0.0] * 4096 + [0.5, -0.5] * 4096, 8000)
-    df = spark.createDataFrame(
-        [(1, "audio/wav", bad), (2, "audio/wav", good)],
-        "media_id long, mime string, payload binary",
-    )
-    out = audio_fingerprints(df).collect()
-    st = {r["media_id"]: r["decode_status"] for r in out}
-    assert st[1] == "undecodable"
-    assert any(r["media_id"] == 2 and r["decode_status"] == "ok" for r in out)
-
-
-def test_audio_fingerprints_string_ids(spark):
-    """ADVICE r7 #5: the output id column follows the INPUT id type (a
-    hardcoded 'media_id long' schema failed opaquely on string ids)."""
-    from restructure_hdfs_topic_spark.operators.audiofp import (
-        audio_fingerprints,
-        wav_bytes,
-    )
-
-    wav = wav_bytes([0.6, -0.6] * 8192, 8000)
-    df = spark.createDataFrame(
-        [("doc-a", "audio/wav", wav), ("doc-b", "text/plain", b"x")],
-        "media_id string, mime string, payload binary",
-    )
-    out = audio_fingerprints(df)
-    assert dict(out.dtypes)["media_id"] == "string"
-    rows = out.collect()
-    assert {r["media_id"] for r in rows} == {"doc-a", "doc-b"}
-    assert any(r["media_id"] == "doc-a" and r["decode_status"] == "ok" for r in rows)
-
-
 def test_hamming_near_dup_single_full_width_band(spark):
     """ADVICE r7 #4: bands=1 at bits=64 (exact fingerprint match) used to
     overflow F.lit with a 2^64-1 mask; it must behave as an equality

@@ -194,8 +194,6 @@ ALLOWED: dict[str, str] = {
     "caching:release_scope": _DEFERRED + "1 test",
     "operators.flatten:to_json_lines": _DEFERRED + "1 test",
     "sources.tables:register_tables": _DEFERRED + "1 test",
-    "operators.audiofp:audio_near_dup_pairs": _DEFERRED + "no entry point calls it",
-    "operators.audiofp:text_as_audio": _DEFERRED + "no entry point calls it",
 }
 
 
