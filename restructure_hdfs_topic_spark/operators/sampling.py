@@ -311,9 +311,8 @@ def grouped_holdout_split(
 
     Frozen-members-never-move also bounds what pinning can fix: a group
     merge that already spans pinned members of two splits stays
-    straddled (moving either member would break the freeze).  Audit
-    those with ``pinned_split_conflicts`` and retire or re-assign them
-    explicitly.  ``pinned`` split names must all appear in ``fractions``
+    straddled (moving either member would break the freeze); retire or
+    re-assign such groups explicitly.  ``pinned`` split names must all appear in ``fractions``
     and must be non-NULL (a renamed split would silently freeze rows
     into a nonexistent split; a NULL pin would silently degrade to
     unpinned) — validated EAGERLY with one narrow column-scan job, the
@@ -470,39 +469,6 @@ def _priority_split(col: F.Column, names: list[str]) -> F.Column:
     for i, n in enumerate(names[1:], 1):
         expr = expr.when(col == i, F.lit(n))
     return expr
-
-
-def pinned_split_conflicts(
-    pinned: DataFrame,
-    groups: DataFrame,
-    id_col: str = "doc_id",
-    group_col: str = "group_id",
-    split_col: str = "split",
-) -> DataFrame:
-    """Audit the residual leakage a pinned re-split cannot fix: groups
-    whose PINNED members already straddle several splits (a group merge
-    joined documents that were frozen into different splits before the
-    merge existed).  Pinning keeps them frozen — moving either side
-    would break the freeze — so these groups remain cross-split near-dup
-    leaks until retired or explicitly re-assigned.
-
-    Returns ``(group_id, n_splits, splits)`` for every group with pinned
-    members in ≥2 splits (``splits`` sorted for determinism).  Shape:
-    one inner join of the slim pinned table against the slim group table
-    + one groupBy — both on 8-byte keys."""
-    _require_integral(pinned, id_col, "pinned_split_conflicts id_col")
-    _require_integral(groups, group_col, "pinned_split_conflicts group_col")
-    j = pinned.select(F.col(id_col).alias("id"), F.col(split_col).alias("s")).join(
-        groups.select(F.col(id_col).alias("id"), F.col(group_col)), "id"
-    )
-    return (
-        j.groupBy(group_col)
-        .agg(
-            F.count_distinct("s").alias("n_splits"),
-            F.sort_array(F.collect_set("s")).alias("splits"),
-        )
-        .filter(F.col("n_splits") > 1)
-    )
 
 
 def assignment_churn(

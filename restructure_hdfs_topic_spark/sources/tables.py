@@ -77,35 +77,6 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-ALL_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def register_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = ALL_TABLES
-) -> None:
-    """Register the parquet tables as temp views (normalized through
-    ``load_table``) so users can query with ``spark.sql(...)`` directly —
-    the SQL half of the DataFrame/SQL surface.  Missing files are skipped
-    (some SF dirs ship a subset)."""
-    for name in names:
-        try:
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-        except Exception:
-            if os.path.exists(os.path.join(sf_dir, f"{name}.parquet")):
-                raise
-
-
 # Inferred file schemas, keyed on (path, mtime_ns, size) so a replaced or
 # regenerated file re-infers.  This memoizes METADATA only (never rows):
 # every load still plans a fresh scan of the parquet input — it just skips

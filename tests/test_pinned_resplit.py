@@ -2,8 +2,7 @@
 pinned=prev)`` freezes every previously-assigned document's split, so
 re-splitting a grown corpus is churn-zero by construction; new documents
 follow their group's pinned members (merges resolve toward the most-eval
-pinned split), and the residual frozen-straddle window is auditable with
-``pinned_split_conflicts``."""
+pinned split)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +12,6 @@ from restructure_hdfs_topic_spark.operators.sampling import (
     MOD,
     assignment_churn,
     grouped_holdout_split,
-    pinned_split_conflicts,
 )
 
 FRACTIONS = {"train": 0.8, "valid": 0.1, "test": 0.1}
@@ -160,18 +158,6 @@ def test_no_near_dup_pair_straddles_after_pinned_resplit(spark):
     assert per_group and all(r["n"] == 1 for r in per_group)
     # And the prior members did not move.
     assert {r["reason"] for r in assignment_churn(prev_assign, resplit.select("doc_id", "split")).collect()} == {"added"}
-
-
-def test_pinned_split_conflicts_witness(spark):
-    """The residual window: groups whose PINNED members straddle splits
-    are reported (and only those)."""
-    pinned = spark.createDataFrame(
-        [(1, "train"), (2, "test"), (3, "train"), (4, "train"), (5, "valid"), (6, "test")],
-        "doc_id long, split string",
-    )
-    groups = _groups(spark, {1: 1, 2: 1, 3: 3, 4: 3, 5: 5, 6: 5})
-    out = {r["group_id"]: (r["n_splits"], list(r["splits"])) for r in pinned_split_conflicts(pinned, groups).collect()}
-    assert out == {1: (2, ["test", "train"]), 5: (2, ["test", "valid"])}
 
 
 def test_pinned_unknown_split_rejected(spark):

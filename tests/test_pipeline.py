@@ -565,23 +565,6 @@ def test_attempt_routing_absorbs_sub_schema(spark):
     assert attempts[5] == 2
 
 
-def test_register_tables_sql_surface(spark):
-    """register_tables exposes the normalized tables to spark.sql —
-    timestamps usable by unix_micros (NTZ normalization applied), joins
-    across views work."""
-    from restructure_hdfs_topic_spark.sources.tables import register_tables
-
-    register_tables(spark, "/root/testdata/sf0.001")
-    row = spark.sql(
-        """SELECT n.n_name, count(*) AS n_cust
-           FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-           GROUP BY n.n_name ORDER BY n_cust DESC, n.n_name LIMIT 1"""
-    ).first()
-    assert row["n_cust"] > 0
-    ts = spark.sql("SELECT unix_micros(ts) AS u FROM events LIMIT 1").first()
-    assert ts["u"] is not None
-
-
 def test_csv_attempt_files_carry_their_own_headers(spark, tmp_path):
     """Each attempt's CSV files carry THEIR OWN dynamic header: attempt-0
     files must not gain the incomparable attempt-1 group's map keys as

@@ -190,10 +190,8 @@ ALLOWED: dict[str, str] = {
     "operators.multimodal:sample_frames": _DEFERRED + "4 tests",
     "operators.pq:append_to_ivfpq_index": _DEFERRED + "3 tests",
     "operators.sampling:hash_sample": _DEFERRED + "1 test",
-    "operators.sampling:pinned_split_conflicts": _DEFERRED + "1 test",
     "caching:release_scope": _DEFERRED + "1 test",
     "operators.flatten:to_json_lines": _DEFERRED + "1 test",
-    "sources.tables:register_tables": _DEFERRED + "1 test",
 }
 
 
