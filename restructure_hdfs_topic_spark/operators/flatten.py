@@ -165,13 +165,15 @@ def to_json_lines(df: DataFrame) -> DataFrame:
     return df.select(F.to_json(F.struct(*[_qcol(c) for c in df.columns])).alias("json"))
 
 
-def _header_descriptor(df: DataFrame) -> Column:
+def _header_descriptor(df: DataFrame) -> Column | None:
     """§1.3 attempt routing: structured form of the record's data-dependent
     flattened HEADER — sorted map keys and array lengths per column as one
     JSON string.  Only data-dependent columns participate
     (RecordConverterFactory.kt:96-135: headers derive from the record);
     static schema fields appear in every header and a null value does NOT
-    change it (null renders as "", CsvAvroDataConverter.kt:81-84)."""
+    change it (null renders as "", CsvAvroDataConverter.kt:81-84).  None
+    when the frame has no map or array column: the schema fixes the
+    header."""
     fields: dict[str, Column] = {}
     for f in df.schema.fields:
         if isinstance(f.dataType, MapType):
@@ -181,7 +183,7 @@ def _header_descriptor(df: DataFrame) -> Column:
         elif isinstance(f.dataType, ArrayType):
             fields[f.name] = F.coalesce(F.size(_qcol(f.name)), F.lit(0))
     if not fields:
-        return F.lit("{}")
+        return None
     return F.to_json(F.struct(*[v.alias(k) for k, v in fields.items()]))
 
 
@@ -243,6 +245,9 @@ def route_by_schema_attempt(
     (plans/layout.py); a cross-run canonical-header store is the remaining
     divergence from the reference's on-disk header check.
 
+    A frame without map and array columns has one header: it routes to
+    attempt 0 with no Spark job, and ``persisted`` is the input frame.
+
     Returns ``(routed, persisted, headers)``: the routed frame, the
     persisted intermediate it is built on, and per attempt its dynamic
     columns (``discover_dynamic_columns`` of that attempt's records, for
@@ -255,9 +260,15 @@ def route_by_schema_attempt(
 
     from pyspark import StorageLevel
 
+    descriptor = _header_descriptor(df)
+    if descriptor is None:
+        # Every record has the schema's header: one attempt with no
+        # dynamic columns, known without a pass over the data.
+        routed = df.withColumn("attempt", F.lit(0))
+        return (routed.drop(order_col) if order_col else routed), df, {0: {}}
     if order_col is None:
         order_col, df = "__mid", df.withColumn("__mid", F.monotonically_increasing_id())
-    fp = df.withColumn("__fp", _header_descriptor(df))
+    fp = df.withColumn("__fp", descriptor)
     # Two consumers — the distinct-header collect below AND the returned
     # routed plan — would each re-run the whole upstream decode/flatten
     # lineage (ADVICE r4: one extra full pass per topic write).  Persist

@@ -24,6 +24,29 @@ def prop_examples(n: int) -> int:
     return max(2, -(-n // 3))
 
 
+def jobs_run(spark, action) -> int:
+    """Spark jobs ``action`` launches: it runs in its own job group, then a
+    sentinel job in another; listener events arrive in order, so once the
+    sentinel is visible every job of ``action`` is too."""
+    import time
+
+    sc = spark.sparkContext
+    tag = f"probe-{time.monotonic_ns()}"
+    sc.setJobGroup(tag, "probe")
+    try:
+        action()
+        sc.setJobGroup(f"{tag}-sentinel", "sentinel")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{tag}-sentinel"):
+        assert time.monotonic() < deadline, "sentinel job never reported"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(tag))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from restructure_hdfs_topic_spark.session import get_spark

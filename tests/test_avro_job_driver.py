@@ -10,6 +10,7 @@ Kafka-Connect trees (tests/avro_tree.py):
 - differential properties: the driver-side O4 index against the
   DataFrame seen filter ``filter_unseen_files``, and the attempt headers
   derived from collected fingerprints against ``discover_dynamic_columns``;
+- attempt routing of a header the schema fixes runs no Spark job;
 - keep-last dedup keyed on a map field;
 - one shuffle per topic write: the executed write plans' Exchange nodes,
   one part file per output directory, attempt routing in record order;
@@ -21,7 +22,7 @@ import json
 import os
 import re
 
-from conftest import prop_examples
+from conftest import jobs_run, prop_examples
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -46,7 +47,7 @@ from restructure_hdfs_topic_spark.plans.avro_job import (
     run_avro_restructure_job,
 )
 from restructure_hdfs_topic_spark.sources.avro import SourceFile, manifest_df, record_struct
-from tests.avro_tree import RECORD_SCHEMA, reading, write_topic_file
+from tests.avro_tree import RECORD_SCHEMA, reading, reference_shaped_tree, write_topic_file
 
 TOPIC = "poll_topic"
 BASE_S = 1_700_000_000.123456789  # sub-µs digits survive into the mtime
@@ -382,6 +383,35 @@ def test_fingerprint_headers_match_discover(spark, rows):
             assert dyn == discover_dynamic_columns(routed.filter(F.col("attempt") == a)), a
     finally:
         persisted.unpersist()
+
+
+def test_schema_fixed_header_routes_without_a_job(spark, tmp_path):
+    """A record type with no map and no array field has one CSV header, so
+    attempt routing runs no Spark job: attempt 0, no dynamic columns, the
+    order column dropped.  Over ``reference_shaped_tree`` (two such
+    topics) a gzip CSV restructure with keep-last dedup runs 4 jobs; the
+    routing aggregation made it 10."""
+    from restructure_hdfs_topic_spark.operators.flatten import route_by_schema_attempt
+
+    df = spark.createDataFrame([(1, "a", 7), (2, None, 8)], "id int, x string, o long")
+    out = []
+    assert jobs_run(spark, lambda: out.append(route_by_schema_attempt(df, "o"))) == 0
+    routed, persisted, headers = out[0]
+    assert headers == {0: {}} and persisted is df
+    assert routed.columns == ["id", "x", "attempt"]
+    assert [r["attempt"] for r in routed.collect()] == [0, 0]
+
+    src = reference_shaped_tree(str(tmp_path / "in"))
+    cfg = RestructureConfig(
+        target_dir=str(tmp_path / "out"),
+        state_dir=str(tmp_path / "state"),
+        format="csv",
+        compression="gzip",
+        dedup_enable=True,
+        worker=WorkerConfig(minimum_file_age_s=0),
+    )
+    os.makedirs(cfg.state_dir)
+    assert jobs_run(spark, lambda: run_avro_restructure_job(spark, src, cfg)) == 4
 
 
 def test_keep_last_dedup_on_map_field(spark):

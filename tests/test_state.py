@@ -7,6 +7,7 @@ import pathlib
 import re
 
 import pytest
+from conftest import jobs_run
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
@@ -29,29 +30,6 @@ def test_state_layout_is_spelled_only_by_the_state_module():
     assert hits == []
 
 
-def _jobs_run(spark, action) -> int:
-    """Spark jobs ``action`` launches: it runs in its own job group, then a
-    sentinel job in another; listener events arrive in order, so once the
-    sentinel is visible every job of ``action`` is too."""
-    import time
-
-    sc = spark.sparkContext
-    tag = f"probe-{time.monotonic_ns()}"
-    sc.setJobGroup(tag, "probe")
-    try:
-        action()
-        sc.setJobGroup(f"{tag}-sentinel", "sentinel")
-        spark.range(1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(f"{tag}-sentinel"):
-        assert time.monotonic() < deadline, "sentinel job never reported"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(tag))
-
-
 def test_offset_read_of_committed_state_runs_no_job(spark, tmp_path):
     """``read_offsets`` reads committed state with the lane's schema, so it
     runs no footer-inference job; the schema read back is the lane's."""
@@ -66,7 +44,7 @@ def test_offset_read_of_committed_state_runs_no_job(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     commit_offsets(spark, state_dir, [("t", 0, 0, 9, None)])
     got = []
-    assert _jobs_run(spark, lambda: got.append(read_offsets(spark, state_dir))) == 0
+    assert jobs_run(spark, lambda: got.append(read_offsets(spark, state_dir))) == 0
     assert got[0].schema == StructType.fromDDL(STATE_SCHEMA)
     assert [tuple(r)[:4] for r in got[0].collect()] == [("t", 0, 0, 9)]
 
@@ -96,9 +74,9 @@ def test_offset_commit_and_rollback_run_no_job(spark, tmp_path, spelling, viewfs
     state_dir = _spelled(tmp_path, spelling, viewfs)
     lp = 1_700_000_000_123_456
     new = [("t", 0, 0, 9, lp), ("t", 0, 10, 19, lp + 1), ("t", 1, 0, 3, None)]
-    assert _jobs_run(spark, lambda: commit_offsets(spark, state_dir, new)) == 0
+    assert jobs_run(spark, lambda: commit_offsets(spark, state_dir, new)) == 0
     rollback = lambda s: remove_intervals(s, [("t", 0, 5, 7)])  # noqa: E731
-    assert _jobs_run(spark, lambda: replace_offsets(spark, state_dir, rollback)) == 0
+    assert jobs_run(spark, lambda: replace_offsets(spark, state_dir, rollback)) == 0
     assert read_intervals(spark, state_dir) == [
         ("t", 0, 0, 4, lp + 1),
         ("t", 0, 8, 19, lp + 1),
