@@ -3,8 +3,6 @@ semantics — SET NX with 24h TTL, owner-only unlock) over the state dir."""
 
 import os
 
-import pytest
-
 from restructure_hdfs_topic_spark.config import (
     PathConfig,
     RestructureConfig,
@@ -12,6 +10,7 @@ from restructure_hdfs_topic_spark.config import (
 )
 from restructure_hdfs_topic_spark.locks import StorageLockManager
 from restructure_hdfs_topic_spark.plans.avro_job import run_avro_restructure_job
+from tests.avro_tree import ACCEL_TOPIC, STATUS_TOPIC, reference_shaped_tree
 
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
@@ -111,13 +110,10 @@ def test_expired_lease_is_broken(spark, tmp_path):
     assert c.acquire("topic_x") is None
 
 
-@pytest.mark.skipif(not os.path.isdir(FIXTURES), reason="reference fixtures unavailable")
-def test_job_skips_locked_topics(spark, tmp_path):
-    """Two-session scenario: a concurrent engine holds one topic's lease;
-    this engine processes the other topic and counts the skip."""
+def _locked_topic_is_skipped(spark, src: str, out) -> None:
     cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
+        target_dir=str(out / "out"),
+        state_dir=str(out / "state"),
         format="csv",
         lock_enable=True,
         worker=WorkerConfig(minimum_file_age_s=0),
@@ -125,19 +121,29 @@ def test_job_skips_locked_topics(spark, tmp_path):
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
     other = StorageLockManager(spark, cfg.state_dir)
-    held = other.acquire("application_server_status")
+    held = other.acquire(STATUS_TOPIC)
     assert held is not None
 
-    result = run_avro_restructure_job(spark, FIXTURES, cfg)
+    result = run_avro_restructure_job(spark, src, cfg)
     assert result["topics_locked"] == 1
-    assert "application_server_status" not in result["topics"]
-    assert result["topics"]["android_phone_acceleration"]["records_written"] > 0
+    assert STATUS_TOPIC not in result["topics"]
+    assert result["topics"][ACCEL_TOPIC]["records_written"] > 0
 
     # Lease released → the next iteration picks the skipped topic up.
     held.close()
-    result2 = run_avro_restructure_job(spark, FIXTURES, cfg)
+    result2 = run_avro_restructure_job(spark, src, cfg)
     assert result2["topics_locked"] == 0
-    assert result2["topics"]["application_server_status"]["records_written"] > 0
+    assert result2["topics"][STATUS_TOPIC]["records_written"] > 0
+
+
+def test_job_skips_locked_topics(spark, tmp_path):
+    """Two-session scenario: a concurrent engine holds one topic's lease;
+    this engine processes the other topic and counts the skip.  Over a
+    tree shaped like the reference's fixtures and, when present, the
+    fixtures themselves."""
+    _locked_topic_is_skipped(spark, reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree")
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        _locked_topic_is_skipped(spark, FIXTURES, tmp_path / "golden")
 
 
 def test_stale_breaker_cannot_remove_fresh_lock(spark, tmp_path):

@@ -100,12 +100,7 @@ import os
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
 
-@pytest.mark.skipif(
-    not os.path.isdir(FIXTURES), reason="reference fixtures unavailable"
-)
-def test_restructure_job_times_phases(spark, tmp_path):
-    """The avro restructure job attributes driver time to its phases when
-    the process-wide timer is enabled (and stays silent when not)."""
+def _job_times_phases(spark, src: str, out) -> None:
     from restructure_hdfs_topic_spark.config import RestructureConfig, WorkerConfig
     from restructure_hdfs_topic_spark.plans.avro_job import (
         run_avro_restructure_job,
@@ -113,8 +108,8 @@ def test_restructure_job_times_phases(spark, tmp_path):
     from restructure_hdfs_topic_spark.progress import timer
 
     config = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
+        target_dir=str(out / "out"),
+        state_dir=str(out / "state"),
         format="csv",
         worker=WorkerConfig(minimum_file_age_s=0),
     )
@@ -122,7 +117,7 @@ def test_restructure_job_times_phases(spark, tmp_path):
     timer.reset()
     timer.enabled = True
     try:
-        counters = run_avro_restructure_job(spark, FIXTURES, config)
+        counters = run_avro_restructure_job(spark, src, config)
     finally:
         timer.enabled = False
     assert counters["records_written"] > 0
@@ -135,6 +130,18 @@ def test_restructure_job_times_phases(spark, tmp_path):
     ):
         assert snap.get(label, {}).get("invocations", 0) >= 1, (label, snap)
     timer.reset()
+
+
+def test_restructure_job_times_phases(spark, tmp_path):
+    """The avro restructure job attributes driver time to its phases when
+    the process-wide timer is enabled (and stays silent when not).  Over a
+    tree shaped like the reference's fixtures and, when present, the
+    fixtures themselves."""
+    from tests.avro_tree import reference_shaped_tree
+
+    _job_times_phases(spark, reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree")
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        _job_times_phases(spark, FIXTURES, tmp_path / "golden")
 
 
 def test_progress_bar_terminal_update_bypasses_rate_limit():

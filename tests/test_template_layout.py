@@ -19,11 +19,6 @@ from tests.avro_tree import reference_shaped_tree
 
 FIXTURES = "/root/reference/src/integrationTest/resources"
 
-needs_fixtures = pytest.mark.skipif(
-    not os.path.isdir(FIXTURES), reason="reference fixtures unavailable"
-)
-
-
 def _tree(root: str) -> list[str]:
     return sorted(
         os.path.relpath(p, root)
@@ -42,22 +37,17 @@ GOLDEN_CSV = (
 )
 
 
-@needs_fixtures
-def test_template_layout_matches_reference_golden_tree(spark, tmp_path):
-    """The exact file list of RestructureS3IntegrationTest.kt:71-80 (modulo
-    the acceleration topic's record volume, which spans two extra bins in
-    the full fixture), with schema-*.json placed NEXT to the data files and
-    the 20200128_1300 bin byte-identical to the golden CSV."""
+def _template_tree(spark, src: str, out, n_records: int) -> None:
     cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
+        target_dir=str(out / "out"),
+        state_dir=str(out / "state"),
         format="csv",
         worker=WorkerConfig(minimum_file_age_s=0),
         paths=PathConfig(layout="template"),
     )
     os.makedirs(cfg.state_dir, exist_ok=True)
-    result = run_avro_restructure_job(spark, FIXTURES, cfg)
-    assert result["records_written"] == 1006
+    result = run_avro_restructure_job(spark, src, cfg)
+    assert result["records_written"] == n_records
 
     files = _tree(cfg.target_dir)
     # The golden list from RestructureS3IntegrationTest.kt (the integration
@@ -78,9 +68,21 @@ def test_template_layout_matches_reference_golden_tree(spark, tmp_path):
         assert fh.read() == GOLDEN_CSV
 
     # Idempotent rerun: committed offsets prune everything, tree unchanged.
-    result2 = run_avro_restructure_job(spark, FIXTURES, cfg)
+    result2 = run_avro_restructure_job(spark, src, cfg)
     assert result2["records_written"] == 0
     assert _tree(cfg.target_dir) == files
+
+
+def test_template_layout_matches_reference_golden_tree(spark, tmp_path):
+    """The exact file list of RestructureS3IntegrationTest.kt:71-80 (modulo
+    the acceleration topic's record volume, which spans two extra bins in
+    the full fixture), with schema-*.json placed NEXT to the data files and
+    the 20200128_1300 bin byte-identical to the golden CSV.  Over a tree
+    shaped like the reference's fixtures and, when present, the fixtures
+    themselves."""
+    _template_tree(spark, reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree", 46)
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        _template_tree(spark, FIXTURES, tmp_path / "golden", 1006)
 
 
 def test_template_layout_append_merges_existing_bins(spark, tmp_path):
@@ -117,46 +119,60 @@ def test_template_layout_append_merges_existing_bins(spark, tmp_path):
         assert len(lines) == 1 + 4  # 2 rows per run
 
 
-@needs_fixtures
 def test_template_layout_gzip_extension(spark, tmp_path):
-    """Compression folds into the rendered filename: <bin>.csv.gz."""
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="csv",
-        compression="gzip",
-        worker=WorkerConfig(minimum_file_age_s=0),
-        paths=PathConfig(layout="template"),
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg)
-    path = os.path.join(cfg.target_dir, FIRST, "20200128_1300.csv.gz")
-    assert os.path.exists(path)
-    with gzip.open(path, "rt") as fh:
-        assert fh.read() == GOLDEN_CSV
+    """Compression folds into the rendered filename: <bin>.csv.gz.  Over a
+    tree shaped like the reference's fixtures and, when present, the
+    fixtures themselves."""
+
+    def gzip_bin(src: str, out) -> str:
+        cfg = RestructureConfig(
+            target_dir=str(out / "out"),
+            state_dir=str(out / "state"),
+            format="csv",
+            compression="gzip",
+            worker=WorkerConfig(minimum_file_age_s=0),
+            paths=PathConfig(layout="template"),
+        )
+        os.makedirs(cfg.state_dir, exist_ok=True)
+        run_avro_restructure_job(spark, src, cfg)
+        path = os.path.join(cfg.target_dir, FIRST, "20200128_1300.csv.gz")
+        assert os.path.exists(path)
+        with gzip.open(path, "rt") as fh:
+            return fh.read()
+
+    assert gzip_bin(reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree") == GOLDEN_CSV
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        assert gzip_bin(FIXTURES, tmp_path / "golden") == GOLDEN_CSV
 
 
-@needs_fixtures
 def test_template_cleaner_reads_template_tree(spark, tmp_path):
     """The cleaner's target timestamp index (O21) must work over the
-    template tree — project/user recovered from path segments."""
+    template tree — project/user recovered from path segments.  Over a
+    tree shaped like the reference's fixtures and, when present, the
+    fixtures themselves."""
     from restructure_hdfs_topic_spark.plans.avro_job import read_target_times
 
-    cfg = RestructureConfig(
-        target_dir=str(tmp_path / "out"),
-        state_dir=str(tmp_path / "state"),
-        format="csv",
-        worker=WorkerConfig(minimum_file_age_s=0),
-        paths=PathConfig(layout="template"),
-    )
-    os.makedirs(cfg.state_dir, exist_ok=True)
-    run_avro_restructure_job(spark, FIXTURES, cfg)
-    tt = read_target_times(spark, cfg, "application_server_status")
-    rows = tt.collect()
-    assert {(r["t_project"], r["t_user"]) for r in rows} == {
-        ("STAGING_PROJECT", "1543bc93-3c17-4381-89a5-c5d6272b827c")
-    }
-    assert any(abs(r["t_seconds"] - 1.58021982003e9) < 1e-3 for r in rows)
+    def target_times(src: str, out) -> list:
+        cfg = RestructureConfig(
+            target_dir=str(out / "out"),
+            state_dir=str(out / "state"),
+            format="csv",
+            worker=WorkerConfig(minimum_file_age_s=0),
+            paths=PathConfig(layout="template"),
+        )
+        os.makedirs(cfg.state_dir, exist_ok=True)
+        run_avro_restructure_job(spark, src, cfg)
+        return read_target_times(spark, cfg, "application_server_status").collect()
+
+    trees = [(reference_shaped_tree(str(tmp_path / "in")), tmp_path / "tree")]
+    if os.path.isdir(FIXTURES):  # the reference's golden tree
+        trees.append((FIXTURES, tmp_path / "golden"))
+    for src, out in trees:
+        rows = target_times(src, out)
+        assert {(r["t_project"], r["t_user"]) for r in rows} == {
+            ("STAGING_PROJECT", "1543bc93-3c17-4381-89a5-c5d6272b827c")
+        }
+        assert any(abs(r["t_seconds"] - 1.58021982003e9) < 1e-3 for r in rows)
 
 
 def test_physical_template_validation():
