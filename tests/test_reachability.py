@@ -76,23 +76,21 @@ def unreachable(repo: pathlib.Path, package: str, keep=()) -> set[str]:
     """``module:name`` of every top-level def in ``package`` that no root
     reaches under the rule in this module's docstring.  The ``keep`` defs
     (``module:name``) count as reached, and so does what they reach."""
-    modules = {}  # module name -> (path, defs, top-level statements)
+    modules = {}  # module name -> (its relative-import anchor, defs, top-level statements)
     for path in sorted((repo / package).rglob("*.py")):
-        defs, top = _split(ast.parse(path.read_text(), str(path)).body)
-        modules[_module_name(repo, path)] = (path, defs, top)
+        name = _module_name(repo, path)
+        anchor = name if path.name == "__init__.py" else name.rpartition(".")[0]
+        modules[name] = (anchor, *_split(ast.parse(path.read_text(), str(path)).body))
 
     imported, live, names = set(), set(), set()
 
     def import_module(name):
         parts = name.split(".")
-        for i in range(1, len(parts) + 1):
-            prefix = ".".join(parts[:i])
-            if prefix in modules:
-                imported.add(prefix)
+        imported.update(p for p in (".".join(parts[:i]) for i in range(1, len(parts) + 1)) if p in modules)
 
-    def scan(nodes, module, is_root=False):
-        """Add the names and imports of ``nodes``, code of ``module``."""
-        pkg = module if module in modules and modules[module][0].name == "__init__.py" else module.rpartition(".")[0]
+    def scan(nodes, anchor, is_root=False):
+        """Add the names ``nodes`` reference and the modules they import;
+        ``anchor`` is the package their relative imports resolve in."""
         for tree in nodes:
             for node in ast.walk(tree):
                 if isinstance(node, ast.Name):
@@ -106,8 +104,8 @@ def unreachable(repo: pathlib.Path, package: str, keep=()) -> set[str]:
                 elif isinstance(node, ast.ImportFrom):
                     base = node.module or ""
                     if node.level:
-                        anchor = pkg.split(".")[: len(pkg.split(".")) - node.level + 1]
-                        base = ".".join([*anchor, *([base] if base else [])])
+                        up = anchor.split(".")[: len(anchor.split(".")) - node.level + 1]
+                        base = ".".join([*up, *([base] if base else [])])
                     import_module(base)
                     for alias in node.names:
                         import_module(f"{base}.{alias.name}")
@@ -118,29 +116,29 @@ def unreachable(repo: pathlib.Path, package: str, keep=()) -> set[str]:
 
     roots = {_module_name(repo, p): p for p in _root_files(repo, package) if p.exists()}
     for name, path in roots.items():
-        scan([ast.parse(path.read_text(), str(path))], name, is_root=True)
+        scan([ast.parse(path.read_text(), str(path))], name.rpartition(".")[0], is_root=True)
     for entry in keep:
         module, name = entry.split(":")
         module = f"{package}.{module}"
         import_module(module)
         live.add((module, name))
-        scan([modules[module][1][name]], module)
-    scanned = set()
+        scan([modules[module][1][name]], modules[module][0])
+    scanned = set(roots)
     while True:
-        for module in sorted(imported - scanned - set(roots)):
+        for module in sorted(imported - scanned):
             scanned.add(module)
-            scan(modules[module][2], module)
+            scan(modules[module][2], modules[module][0])
         fresh = [
             (module, name, node)
             for module in sorted(imported - set(roots))
             for name, node in modules[module][1].items()
             if name in names and (module, name) not in live
         ]
-        if not fresh and imported <= scanned | set(roots):
+        if not fresh and imported <= scanned:
             break
         for module, name, node in fresh:
             live.add((module, name))
-            scan([node], module)
+            scan([node], modules[module][0])
     return {
         f"{module.removeprefix(package + '.')}:{name}"
         for module, (_p, defs, _t) in modules.items()
