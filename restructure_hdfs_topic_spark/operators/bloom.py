@@ -462,12 +462,13 @@ def filter_novel_documents_bloom(
     return definite.unionByName(cleared)
 
 
-# One live broadcast per (application, state_dir): filter_novel_documents_bloom
-# probes once per ingested batch, and without memoization every call would
-# re-collect the full sidecar AND leave a fresh ≤64 MB broadcast behind
-# for the application's lifetime.  The key carries the state version + parameters, so
-# a moved state swaps (and unpersists) the stale entry instead of reusing
-# it — staleness here would be a correctness bug, not just cost.
+# One live broadcast per (application, state_dir):
+# filter_novel_documents_bloom probes once per ingested batch, and without
+# memoization every call would re-collect the full sidecar AND leave a
+# fresh ≤64 MB broadcast behind for the application's lifetime.  The key
+# carries the state version + parameters, so a moved state swaps (and
+# unpersists) the stale entry instead of reusing it — staleness here
+# would be a correctness bug, not just cost.
 _BC_CACHE: dict = {}
 
 

@@ -49,8 +49,8 @@ _PACK_BITS = 21
 
 
 def _normalize_batch(texts_iter, max_chars: int | None = None) -> list[str]:
-    """The ONE normalization both langid kernels share: optional prefix cap, lower, Unicode-``\\s`` runs → one
-    space.  NULL → ''."""
+    """The ONE normalization both langid kernels share: optional prefix
+    cap, lower, Unicode-``\\s`` runs → one space.  NULL → ''."""
     import re
 
     ws = re.compile(r"\s+")

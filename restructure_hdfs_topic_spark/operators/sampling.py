@@ -312,11 +312,11 @@ def grouped_holdout_split(
     Frozen-members-never-move also bounds what pinning can fix: a group
     merge that already spans pinned members of two splits stays
     straddled (moving either member would break the freeze); retire or
-    re-assign such groups explicitly.  ``pinned`` split names must all appear in ``fractions``
-    and must be non-NULL (a renamed split would silently freeze rows
-    into a nonexistent split; a NULL pin would silently degrade to
-    unpinned) — validated EAGERLY with one narrow column-scan job, the
-    only action this otherwise-lazy builder runs.
+    re-assign such groups explicitly.  ``pinned`` split names must all
+    appear in ``fractions`` and must be non-NULL (a renamed split would
+    silently freeze rows into a nonexistent split; a NULL pin would
+    silently degrade to unpinned) — validated EAGERLY with one narrow
+    column-scan job, the only action this otherwise-lazy builder runs.
 
     Shape: one left join of the corpus against the slim group table
     (AQE-sided; broadcast while the group table is small) + the same

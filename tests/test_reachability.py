@@ -86,7 +86,8 @@ def unreachable(repo: pathlib.Path, package: str, keep=()) -> set[str]:
 
     def import_module(name):
         parts = name.split(".")
-        imported.update(p for p in (".".join(parts[:i]) for i in range(1, len(parts) + 1)) if p in modules)
+        prefixes = (".".join(parts[:i]) for i in range(1, len(parts) + 1))
+        imported.update(p for p in prefixes if p in modules)
 
     def scan(nodes, anchor, is_root=False):
         """Add the names ``nodes`` reference and the modules they import;
